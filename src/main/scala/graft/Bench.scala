@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
-/** Benchmark main (driver contract): run every SparkEntry query against
+import graft.registry.{Pinned, Query, Registry}
+
+/** Benchmark main: run every registry query against
   * SPARK_GRAFT_SF_DIR and print one JSON line with per-query seconds.
   *
   * Queries are materialized through the noop sink (not `.count()`, which
@@ -232,7 +234,7 @@ object Bench {
     // session (RangeJoin.sizeSweepFold) — it must not re-plan neighbors
     def materialize(name: String, dir: String): Unit =
       graft.tools.SessionConf.restoring(spark) {
-        try SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+        try Registry(name).build(spark, dir).write.format("noop").mode("overwrite").save()
         finally {
           spark.sharedState.cacheManager.clearCache()
           spark.sparkContext.getPersistentRDDs.values
@@ -254,7 +256,7 @@ object Bench {
           spark.sparkContext, 5000L))
         Thread.sleep(100)
 
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = Registry.all.map(_.name).sorted
       .filter(n => only.forall(_.contains(n)))
 
     // SPARK_GRAFT_BENCH_SCALE=N (opt-in; never set by the driver): sweep
@@ -263,7 +265,7 @@ object Bench {
     // noise floor, so round-over-round grading of plan changes needs a
     // scale where plan differences exceed that floor. The mode restricts
     // the sweep to the queries with a scale-table mapping
-    // (ScaleProbe.tablesFor — the heavy family), builds/reuses the
+    // (the registry's heavy family), builds/reuses the
     // probe's salted scratch corpus (same growth model, so these numbers
     // are comparable to docs/SCALING.md points), keeps the calibration
     // scan on the BASE sf (the pinned 0.70s nominal stays meaningful),
@@ -275,9 +277,8 @@ object Bench {
     val (sweepNames, queryDir) = benchScale match {
       case None => (names, sfDir)
       case Some(n) =>
-        val mapped = names.filter(graft.tools.ScaleProbe.tablesFor.contains)
-        val tables =
-          mapped.flatMap(graft.tools.ScaleProbe.tablesFor).distinct
+        val mapped = names.filter(n => Registry(n).heavy.nonEmpty)
+        val tables = graft.tools.ScaleProbe.tablesFor(mapped)
         graft.tools.ScaleProbe.assertStrides(spark, sfDir, tables)
         val dir = graft.tools.ScaleProbe.ensureScaled(spark, sfDir, n,
           sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale"),
@@ -394,7 +395,7 @@ object Bench {
     }
 
     // Isolated-band gate (full nominal-sf sweep only; see
-    // sf01IsolatedBands): an in-sweep min over its pinned band hi is
+    // pinnedBand): an in-sweep min over its pinned band hi is
     // re-measured in a fresh child JVM and reported from there —
     // accumulated sweep-JVM JIT/GC state inflated exactly these entries
     // up to ~50× at identical task metrics (r14's j13d, 275 s in-sweep
@@ -423,7 +424,7 @@ object Bench {
       if (bandGateEnabled && sf01BandExceeded(name, r._2)) {
         System.err.println(
           f"[bench] $name in-sweep ${r._2}%.2fs exceeds its isolated band" +
-            f" (hi ${sf01IsolatedBands(name)._2}%.1fs): re-measuring in a" +
+            f" (hi ${pinnedBand(name).get.hi}%.1fs): re-measuring in a" +
             " fresh JVM")
         val out = java.nio.file.Files.createTempFile("graft_iso_" + name, ".json")
         val child =
@@ -611,30 +612,31 @@ object Bench {
           graft.streaming.StreamOps.hourlyRollup(ds.toDF()), chunks = 3))
       catch { case _: Throwable => -1.0 }
 
-    val streamDefs: Seq[(String, () => Unit)] = Seq(
-      ("e3_stream_sessionize",
-        () => replay("e3_stream_sessionize", eventRows,
+    def streamRun(name: String): () => Unit = name match {
+      case "e3_stream_sessionize" =>
+        () => replay(name, eventRows,
           (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.sessionize(ds))),
-      ("e4_stream_rollup",
-        () => replay("e4_stream_rollup", eventRows,
+            graft.streaming.StreamOps.sessionize(ds))
+      case "e4_stream_rollup" =>
+        () => replay(name, eventRows,
           (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.hourlyRollup(ds.toDF()))),
-      ("e5_stream_neardedup",
-        () => replay("e5_stream_neardedup", docRows,
+            graft.streaming.StreamOps.hourlyRollup(ds.toDF()))
+      case "e5_stream_neardedup" =>
+        () => replay(name, docRows,
           (ds: Dataset[graft.streaming.StreamOps.Doc]) =>
-            graft.streaming.StreamOps.streamingNearDedup(ds))),
-      ("e6_stream_interval_join",
-        () => replay2("e6_stream_interval_join", clickRows, buyRows,
+            graft.streaming.StreamOps.streamingNearDedup(ds))
+      case "e6_stream_interval_join" =>
+        () => replay2(name, clickRows, buyRows,
           (clicks: Dataset[(Long, java.sql.Timestamp)],
            buys: Dataset[(Long, java.sql.Timestamp, Double)]) =>
-            graft.streaming.StreamBenchShapes.intervalJoinQuery(clicks, buys)))
-    ).filter { case (n, _) =>
+            graft.streaming.StreamBenchShapes.intervalJoinQuery(clicks, buys))
+    }
+    val streamDefs: Seq[(String, () => Unit)] = streamEntries.filter { n =>
       // scale mode sweeps the batch heavy family only — the streaming
       // scale axes live in StreamScaleProbe, and the scaled scratch
       // dirs carry no events table
       benchScale.isEmpty && only.forall(_.contains(n))
-    }
+    }.map(n => n -> streamRun(n))
     // the end calibration probe bookends the BATCH sweep — taken before
     // the streaming section so RocksDB native state from the replays
     // cannot masquerade as batch-sweep drift in the start/end pair
@@ -662,7 +664,7 @@ object Bench {
           !jvmIsolated.contains(name)) {
         System.err.println(
           f"[bench] $name in-sweep $v%.2fs exceeds its QUIET-window hi" +
-            f" (${sf01QuietBands(name)._1}%.1fs) at calib_ratio" +
+            f" (${pinnedBand(name).get.quiet.get._1}%.1fs) at calib_ratio" +
             f" ${quietRatio.get}%.2f: re-measuring in a fresh JVM")
         val out =
           java.nio.file.Files.createTempFile("graft_quiet_" + name, ".json")
@@ -1286,218 +1288,57 @@ object Bench {
       }
   }
 
-  /** Pinned ISOLATED bands at sf0.1 — [lo, hi] seconds each entry reads
-    * when measured alone on this host class (sources: j13d post-codegen
-    * isolated runs, round 15; j13b/j13f isolated min-of-2 runs, round
-    * 15; d9 isolated REPS=3, round 16; hi ≈ 2–2.5× the isolated steady
-    * state to absorb host scatter without absorbing a JVM-state
-    * collapse). The sweep's BAND GATE
-    * (see [[sf01BandExceeded]] and the main loop): an entry whose
-    * in-sweep min exceeds its band hi is re-run in a FRESH CHILD JVM
-    * and reported from there, because a long-lived sweep JVM's
-    * accumulated JIT/GC state inflated exactly these entries up to ~50×
-    * at identical task metrics (round 14: j13d 275 s in-sweep vs 5.5 s
-    * isolated) — a totals comparison poisoned by one entry. Entries
-    * still over band AFTER isolation surface in `band_exceeded` (a real
-    * regression or a genuinely contended host, never silent). Bands are
-    * pinned DATA, not tolerances: re-measure and re-pin when the
-    * operator's implementation or the host class changes.
+  /** Bench-only streaming entries: MemoryStream replays with no oracle,
+    * outside the query registry. Their names are valid
+    * SPARK_GRAFT_QUERIES values, and they need no isolated band: their
+    * wall is commit-protocol-bound and is compared round over round
+    * through stream_calib_ratio instead (BASELINE.md r13).
     */
-  private[graft] val sf01IsolatedBands: Map[String, (Double, Double)] = Map(
-    "j13d_range_join_sweep" -> (2.5, 10.0),
-    "j13b_range_join_topk" -> (1.5, 8.0),
-    "j13f_range_join_topk_shuffled" -> (1.5, 9.0),
-    // d9 is not the JIT class (per-document interpreted work only —
-    // docs/SCALING.md round-16 audit) but it is the sweep's most
-    // fixed-overhead-heavy dedup entry, and round 16 measured its
-    // ISOLATED value itself as host-window sensitive at identical task
-    // metrics (1.6 MB shuffle, zero spill): REPS=3 on a quiet window
-    // read 2.36–3.04 s, while a later sweep's gate-triggered fresh-JVM
-    // re-run read 8.44 s with the in-sweep value at 6.2 s — fresh-JVM
-    // isolation does NOT normalize this entry, so the band must span
-    // the host windows. Round 17 fused the candidate barriers (23→19
-    // end-to-end jobs, pinned by OperatorsSpec's job-count test) and
-    // the isolated REPS=3 read [3.65, 2.60, 1.76] — the wall rides
-    // per-job overhead, so round 17 re-pinned the band proportionally
-    // (hi = the old 8.44 counter-datum scaled by the job reduction,
-    // ≈ 7.0) — an ESTIMATE the round-17 verdict asked to replace with
-    // a fused-code measurement. Round 18 collected it: targeted
-    // REPS=3 during a genuinely busy window (calib_ratio 1.17 — a
-    // 100M-edge probe-graph generation saturating the host) read
-    // [4.21, 8.79, 2.59] at the same task-metric signature, i.e. the
-    // fused 19-job shape STILL reaches the r16-class ~8.8 s tail under
-    // contention (writeback rides the host, not the job count), while
-    // the quiet window reads [2.26, 1.76, 1.60] at calib 0.72. hi
-    // therefore returns to the measured 9.0; both edges now trace to
-    // fused-code data. Still the widest per-second band in the table
-    // because the short-job shape itself is what rides host writeback.
-    // The 9.0 hi exists for BUSY windows only — the quiet-window fused
-    // steady state is 1.6-2.6 s, so a d9 read above ~3.7 s on a quiet
-    // host (calib_ratio ≤ ~0.9) is suspicious even though it passes
-    // this band. Since round 20 that rule is MECHANIZED: the
-    // quiet-window gate ([[sf01QuietBands]], applied post-sweep where
-    // the calibration exists) re-runs such a read in a fresh JVM and
-    // surfaces a persistent excess in `band_exceeded`.
-    "d9_incremental_neardup" -> (1.5, 9.0),
-    // d6c/d6d force the DISTRIBUTED CC branches on d6's deliberately
-    // tiny pair graph (the graded entries exist to price the iterative
-    // star / hybrid machinery, not the data): their wall is pure
-    // fixed-cost iteration overhead — a handful of shuffle jobs per
-    // star round / propagation level — which is exactly the d9
-    // short-job class. Bands pinned AT BIRTH (the round-16 audit rule,
-    // now enforced by BenchFormatSpec): isolated REPS=3 on a quiet
-    // host read d6c [8.89, 6.73, 6.13] (in-sweep r15 7.40, r16 5.70)
-    // and d6d [6.75, 7.38, 7.02]; hi gives the same host-window
-    // headroom ratio the d9 spread measured (~2.3× the quiet min).
-    "d6c_dedup_clusters_star" -> (4.5, 10.0),
-    // d6d/d6e re-pinned at birth in ROUND 20: both graded paths changed
-    // implementation — the propagation loop is now one join + one
-    // aggregate per pass over a self-loop-augmented edge frame (was
-    // neighbor-min + join-back), and d6e's auto path fuses its birth
-    // telemetry into the finisher's edge-frame materialization (no
-    // dedicated canonical persist, no hand-off re-checkpoint). Isolated
-    // REPS=3 in two windows: quiet (calib 0.78) d6d [3.37, 3.92, 3.79],
-    // d6e [2.47, 1.95, 1.89] — roughly half their r19 quiet reads, as
-    // the removed per-pass join and removed materializations predict —
-    // and busy (a concurrent 30M-edge CcProbe mixture run saturating
-    // the host) d6d [5.90, 4.72, 5.09], d6e [3.82, 2.87, 3.38]. lo
-    // under the quiet min; hi ≈ 1.4-1.5x the busy max, the same
-    // headroom convention the d9/d6c busy-window pins used.
-    "d6d_dedup_clusters_hybrid" -> (2.5, 9.0),
-    "d6e_dedup_clusters_auto" -> (1.5, 5.5))
+  private[graft] val streamEntries: Seq[String] = Seq("e3_stream_sessionize",
+    "e4_stream_rollup", "e5_stream_neardedup", "e6_stream_interval_join")
+
+  /** `name`'s pinned sf0.1 isolated band, if its registry record has
+    * one ([[graft.registry.Pinned]]). The sweep's BAND GATE (see the main
+    * loop): an entry whose in-sweep min exceeds its band hi is re-run in
+    * a FRESH CHILD JVM and reported from there, because a long-lived
+    * sweep JVM's accumulated JIT/GC state inflated exactly these entries
+    * at identical task metrics (docs/SCALING.md, "Pinned bands"). Entries
+    * still over band AFTER isolation surface in `band_exceeded` (a real
+    * regression or a genuinely contended host, never silent).
+    */
+  private[graft] def pinnedBand(name: String): Option[Pinned] =
+    Registry.find(name).map(_.band).collect { case p: Pinned => p }
 
   /** True iff `sec` (an in-sweep min) exceeds `name`'s pinned isolated
     * band — the gate that triggers the fresh-JVM re-run. Failed entries
     * (sec < 0) never gate: a crash is an error, not an inflation.
     */
   private[graft] def sf01BandExceeded(name: String, sec: Double): Boolean =
-    sec >= 0 && sf01IsolatedBands.get(name).exists(sec > _._2)
+    sec >= 0 && pinnedBand(name).exists(sec > _.hi)
 
-  /** Per-entry (quietHi, calibCeiling) pairs for the QUIET-WINDOW gate
-    * (round 20, mechanizing the r19 d9 rule): when the sweep's own
-    * calib_ratio is at or under `calibCeiling` — the host was quiet —
-    * an in-sweep min over `quietHi` is treated like a primary band
-    * violation (fresh-JVM re-run; persistent excess → `band_exceeded`)
-    * even though it sits inside the busy-window band in
-    * [[sf01IsolatedBands]]. Values are pinned DATA, sourced from the
-    * same isolated-REPS protocol as the primary bands: d9's quiet
-    * fused steady state measured 1.6-2.6 s at calib ≤ 0.9 (rounds
-    * 17-18), so 3.7 (≈ the quiet max + the short-job scatter seen at
-    * that calib) flags a quiet-host read the busy-window 9.0 hi would
-    * swallow.
-    */
-  private[graft] val sf01QuietBands: Map[String, (Double, Double)] =
-    Map("d9_incremental_neardup" -> (3.7, 0.9))
-
-  /** True iff `sec` exceeds `name`'s quiet-window hi while the sweep's
-    * calibration ratio says the host was quiet (see [[sf01QuietBands]]).
+  /** The QUIET-WINDOW gate: when the sweep's calib_ratio is at or under
+    * the band's calibCeiling (the host was quiet), an in-sweep min over
+    * its quiet hi is treated like a primary band violation (fresh-JVM
+    * re-run; persistent excess → `band_exceeded`) even though it sits
+    * inside the busy-window band.
     */
   private[graft] def sf01QuietExceeded(name: String, sec: Double,
       calibRatio: Double): Boolean =
-    sec >= 0 && sf01QuietBands.get(name).exists {
+    sec >= 0 && pinnedBand(name).flatMap(_.quiet).exists {
       case (hi, ceil) => calibRatio <= ceil && sec > hi
     }
 
-  /** The band-at-birth rule, mechanized (round 17): every entry that is
-    * EITHER in the heavy family (ScaleProbe.tablesFor — the 10x-swept
-    * set) OR over 5 s in the committed sf0.1 artifact must carry an
-    * isolated band in [[sf01IsolatedBands]] or an entry HERE naming why
-    * no band is needed. BenchFormatSpec enforces the coverage, so a new
-    * heavy or slow entry fails the suite until its author either
-    * measures an isolated band (the r10 protocol: SPARK_GRAFT_QUERIES=
-    * <entry> SPARK_GRAFT_REPS=3 on sf0.1) or argues the exemption in a
-    * reason string a judge can audit. Exemption classes, from the
-    * round-16 band-gate coverage audit (docs/SCALING.md): the gate
-    * exists for JVM-state inflation, which needs an INTERPRETED per-row
-    * hot path fed by join fan-out (the j13b/d/f class) or a
-    * dozens-of-short-jobs shape riding host writeback (the d9 class);
-    * pure-codegen entries measured position-independent across the
-    * r10-r16 sweeps don't develop it, and streaming entries are
-    * adjudicated by the stream_calib_ratio protocol instead (their wall
-    * is commit-protocol-bound, compared round-over-round through the
-    * streaming calibration, BASELINE.md r13).
-    */
-  private[graft] val sf01BandExemptions: Map[String, String] = {
-    val codegen = "pure-codegen hot path; position-independent across " +
-      "r10-r16 sweeps (round-16 band-gate coverage audit)"
-    val streaming = "streaming entry: commit-protocol-bound, adjudicated " +
-      "via stream_calib_ratio, not isolated bands (BASELINE.md r13)"
-    Map(
-      "e3_stream_sessionize" -> streaming,
-      "e4_stream_rollup" -> streaming,
-      "e5_stream_neardedup" -> streaming,
-      "e6_stream_interval_join" -> streaming,
-      "d3_dedup_minhash" -> codegen,
-      "d5_dedup_embcos" -> codegen,
-      "d5b_neardup_embcos" -> codegen,
-      "d5c_neardup_wideband" -> codegen,
-      "d6_dedup_clusters" -> codegen,
-      "x6_pack_sequences" -> codegen,
-      "w5_covar_chunked" -> codegen,
-      "w5_rolling_covar" -> codegen,
-      "w6_rolling_ols_native" -> codegen,
-      "w13_ranking_suite" -> codegen,
-      "a13_trimmed_stats" -> codegen,
-      "l5_qp_weights" -> codegen,
-      "l5_qp_certificate" -> codegen,
-      "j13_range_join" -> codegen,
-      "j13c_interval_coalesce" -> codegen,
-      "j13e_range_join_agg" -> codegen,
-      "t12_repetition" -> codegen,
-      "t13_heavy_hitters" -> codegen,
-      "f2_fuzzy_pairs" -> codegen,
-      "n5_ann_pq" -> codegen,
-      "q7_nation_volume" -> codegen,
-      "q11_important_stock" -> codegen,
-      "q21_late_supplier" -> codegen)
-  }
-
-  /** Pinned 10× variance bands for the scale artifact — [lo, hi]
-    * seconds across complete per-entry-JVM measurements at IDENTICAL
-    * task metrics on this host class. j13b is disk-bound (12.7 GB sort
-    * spill through /tmp; four r14 runs: 54.7/77.0/86.6/129.4 s); j13f
-    * is the same sort plus the candidate stream crossing the wire
-    * (four r15 measurements at identical task metrics — 5.9 GB
-    * shuffle, 12.3 GB spill — read 158.7/196.7/320.6/~370 s: the
-    * probe pair ran during a writeback-contended window the sweep's
-    * own mid-calib also caught at 13.5 s); j13d's post-codegen fold is
-    * CPU-bound and much tighter (round-15 runs: 36.4/42.6/47.5 s).
-    * Emitted as the artifact's `bands` field
-    * so a future round's move INSIDE the band is adjudicated by code;
-    * `BenchFormatSpec` requires a band for every committed entry over
-    * 60 s. Re-pin from fresh multi-run data whenever an entry's
-    * implementation changes.
-    */
-  private[graft] val scaleBands10x: Map[String, (Double, Double)] = Map(
-    // lo edges widened round 16 (two independent quiet-disk sweeps:
-    // j13b 34.6/28.4 s, j13f 53.8/45.5 s at BYTE-IDENTICAL task
-    // metrics to r15 — shuffle 114.4 / 5880.5 MB, spill 12.7 /
-    // 12.3 GB) and again round 20, when the quietest window yet
-    // recorded (the r20 10x sweep at calib_ratio 0.47, the lowest in
-    // any committed artifact) read j13b 22.7 / j13d 23.2 / j13f 34.1 —
-    // still the same task metrics, the same disk class, one rung
-    // quieter; hi edges (the gate and adjudication threshold)
-    // unchanged through both widenings
-    // re-pinned at birth for the round-20 dominance prune (the top-k
-    // candidate stream halved; spill 12.7 -> 5.3 GB): two full targeted
-    // runs on final code read j13b 20.8/20.2 (calib 0.71/~1), j13d
-    // 19.7/27.7 (1.04/1.72), j13f 24.8/55.6 (1.08/0.87 — the usual
-    // disk-class spread). lo edges scaled for the quietest recorded
-    // window class (calib ~0.47 read the OLD code at 22.7/23.2/34.1);
-    // hi edges (the gate) halved with the candidate volume.
-    "j13b_range_join_topk" -> (10.0, 90.0),
-    "j13f_range_join_topk_shuffled" -> (15.0, 280.0),
-    "j13d_range_join_sweep" -> (8.0, 50.0))
-
   /** The scale artifact's `bands` field (leading comma; empty when no
     * swept entry has a pinned band): `{"query":[lo,hi], ...}` for the
-    * sweep's entries present in [[scaleBands10x]].
+    * sweep's entries whose heavy-family record carries a 10x band, so a
+    * move INSIDE the band is adjudicated by code. BenchFormatSpec
+    * requires a band for every committed entry over 60 s.
     */
   private[graft] def scaleBandsJson(names: Seq[String]): String = {
-    val withBand = names.filter(scaleBands10x.contains)
+    val withBand = names.flatMap(n =>
+      Registry.find(n).flatMap(_.heavy).flatMap(_.band10x).map(n -> _))
     if (withBand.isEmpty) ""
-    else withBand.map { n =>
-      val (lo, hi) = scaleBands10x(n)
+    else withBand.map { case (n, (lo, hi)) =>
       "\"" + n + "\":[" + f"$lo%.1f" + "," + f"$hi%.1f" + "]"
     }.mkString(""","bands":{""", ",", "}")
   }
@@ -1515,8 +1356,9 @@ object Bench {
       jvmIsolated: Seq[String], bandExceeded: Seq[String]): String =
     if (!enabled) ""
     else {
-      val bands = sf01IsolatedBands.toSeq.sortBy(_._1).map { case (n, (lo, hi)) =>
-        "\"" + n + "\":[" + f"$lo%.1f" + "," + f"$hi%.1f" + "]"
+      val bands = Registry.all.sortBy(_.name).collect {
+        case Query(n, _, _, Pinned(lo, hi, _), _) =>
+          "\"" + n + "\":[" + f"$lo%.1f" + "," + f"$hi%.1f" + "]"
       }.mkString("{", ",", "}")
       def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
       s""","isolated_bands":$bands,"jvm_isolated":${arr(jvmIsolated)},"band_exceeded":${arr(bandExceeded)}"""
@@ -1546,9 +1388,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = SparkEntry.querySubset(sys.env.get("SPARK_GRAFT_QUERIES"))
-    val sweepNames = SparkEntry.queries.keys.toSeq.sorted
+    val sweepNames = Registry.heavy.map(_.name).sorted
       .filter(n => only.forall(_.contains(n)))
-      .filter(graft.tools.ScaleProbe.tablesFor.contains)
     val detailFile =
       sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
@@ -1571,7 +1412,7 @@ object Bench {
     val calibName = "s1_scan_project"
     def mat(s: SparkSession, dir: String): Unit =
       graft.tools.SessionConf.restoring(s) {
-        try SparkEntry.queries(calibName)(s, dir)
+        try Registry(calibName).build(s, dir)
           .write.format("noop").mode("overwrite").save()
         finally s.sharedState.cacheManager.clearCache()
       }
@@ -1595,8 +1436,7 @@ object Bench {
     // read calib_ratio 1.91 against warm bracketing probes of 1.2-1.7,
     // which would have over-normalized every query in the artifact).
     val spark = open()
-    val tables =
-      sweepNames.flatMap(graft.tools.ScaleProbe.tablesFor).distinct
+    val tables = graft.tools.ScaleProbe.tablesFor(sweepNames)
     graft.tools.ScaleProbe.assertStrides(spark, sfDir, tables)
     val scaledDir = graft.tools.ScaleProbe.ensureScaled(spark, sfDir, scale,
       sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale"),

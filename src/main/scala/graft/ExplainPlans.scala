@@ -2,15 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev utility: print formatted physical plans for the headline queries
-  * so shuffle/broadcast/pushdown shape can be reviewed per round.
+import graft.registry.Registry
+
+/** Dev utility: print formatted physical plans for the named queries
+  * (every registry query when none are named) so shuffle/broadcast/
+  * pushdown shape can be reviewed and diffed (tools/plan_diff.py).
+  * Usage: ExplainPlans [sfDir] [name ...]
   */
 object ExplainPlans {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
-      else Seq("q5_star_join", "q1_agg", "w6_rolling_ols", "d3_dedup_minhash",
-        "d5_dedup_embcos", "n3_ann_ivf", "l5_qp_weights")
+      else Registry.all.map(_.name)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
       .config("spark.sql.shuffle.partitions", "4")
@@ -22,7 +25,7 @@ object ExplainPlans {
       // threshold); without restoring, every LATER query in the dump is
       // planned under the leaked conf and the printed plan lies
       graft.tools.SessionConf.restoring(spark) {
-        SparkEntry.queries(n)(spark, dir).explain("formatted")
+        Registry(n).build(spark, dir).explain("formatted")
       }
     }
     spark.stop()

@@ -1,3407 +1,37 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.algo.{PortfolioOpt, RollingOls, Universe}
-import graft.catalog.Tables
-import graft.expr.{Ewma, Windows}
-import graft.operators.{Bloom, Dedup, Fuzzy, KMeans, Multimodal, Packing, Pq, RangeJoin, Sampling, Similarity, Sketch, TextAnalysis}
+import graft.registry.Registry
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The entry points into the query registry (SURVEY.md §7).
   *
-  * Each entry in `queries` exercises one operator from SURVEY.md §2 against
-  * the driver testdata; `oracleSql` holds the equivalent DuckDB SQL.
-  *
-  * Cross-engine determinism policy (Spark vs DuckDB must hash-match):
-  *  - Money/value doubles in the testdata are exactly 2-decimal. Sums are
-  *    computed over integer cents (`round(x*100)::bigint`) so aggregation is
-  *    exact and order-independent, then divided by 100.0 at the end.
-  *  - Small-window (<=252 rows) floating aggregates are rounded to 6 d.p.
-  *    on both sides; accumulated error is ~1e-12, far below the rounding.
-  *  - Timestamps are emitted as epoch microseconds (BIGINT) to avoid
-  *    tz/precision representation differences.
+  * The queries live in [[graft.registry]]: one [[graft.registry.Query]]
+  * record per query (build function, oracle or rows-only reason, sweep
+  * band, heavy-family entry), one file per query family.
   */
 object SparkEntry {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(spark, dir, name)
-
-  /** sum over exact integer cents: order-independent, bit-equal to DuckDB. */
-  private def sumCents(c: String): org.apache.spark.sql.Column =
-    sum(round(col(c) * 100).cast("long"))
+  /** Every query's build function by name, derived from [[Registry.all]]. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> q.build).toMap
 
   /** The SPARK_GRAFT_QUERIES iteration knob, parsed identically by Bench
-    * and Verify: comma-separated names, whitespace-tolerant.
+    * and Verify: comma-separated names, whitespace-tolerant. A name that
+    * is neither a registry query nor a Bench streaming entry fails the
+    * parse — dropping a typo silently would dump or sweep nothing.
     */
   def querySubset(env: Option[String]): Option[Set[String]] =
-    env.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-
-  /** n5's FIXED query-panel pin: the ADC scan is Θ(panel·corpus) by
-    * design, so the panel must NOT grow with the corpus (the r11 entry's
-    * did, and went quadratic → OOM at the 100x probe). The pin only
-    * delivers that contract while every graded SF's vec_id stays BELOW
-    * it (then `vec_id < pin` selects the whole id range identically in
-    * Spark and the DuckDB oracle); if a larger SF were ever added with
-    * max vec_id ≥ the pin, both engines would silently shrink the panel
-    * relative to the corpus and the oracle could not catch the workload
-    * change — PlanAuditSpec asserts the invariant against the actual
-    * testdata so growth fails loudly (r12 advice).
-    */
-  private[graft] val n5PanelPin = 2000L
-
-  /** Discounted-revenue in exact integer units (cents x (100-disc_pct));
-    * divide by 1e4 after aggregation. Shared by q7/q14/q19.
-    */
-  private def revCents: org.apache.spark.sql.Column =
-    round(col("l_extendedprice") * 100).cast("long") *
-      (lit(100) - round(col("l_discount") * 100).cast("long"))
+    env.map { v =>
+      val names = v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(n =>
+        queries.contains(n) || Bench.streamEntries.contains(n))
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_QUERIES names unknown entries: ${unknown.toSeq.sorted.mkString(", ")}")
+      names
+    }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q5_star_join")(spark, "/root/testdata/sf0.001")
-
-  /** Queries whose missing oracleSql entry is a DESIGN decision, not a
-    * gap, with the reason and the artifact that pins their correctness
-    * instead. Verify dumps this as rows_only_by_design.json next to
-    * oracle_sql.json so a correctness report's `no_oracle` cell reads
-    * as the designed rows-only check it is, not as breakage.
-    */
-  def rowsOnlyByDesign: Map[String, String] = Map(
-    "l5_qp_weights" ->
-      ("iterative per-date QP solve, not SQL-expressible; optimality is " +
-        "hash-pinned by the green l5_qp_certificate (KKT stationarity + " +
-        "complementary slackness + feasibility, oracle-recomputed universe)"))
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A2/A4-style grouped aggregation (SURVEY §2.4) — TPC-H Q1 shape.
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          (sumCents("l_quantity") / 100.0).as("sum_qty"),
-          (sumCents("l_extendedprice") / 100.0).as("sum_base_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // S1/P1 scan + projection + cast + rename (SURVEY §2.1 S1, §2.2 P1).
-    "s1_scan_project" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(
-          col("l_orderkey").as("okey"),
-          col("l_linenumber").cast("long").as("line_no"),
-          to_date(col("l_shipdate")).as("ship_date"))
-        .orderBy("okey", "line_no")
-    }),
-
-    // J1 broadcast left equi-join big fact x small dim (SURVEY §2.3 J1).
-    "j1_broadcast_join" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
-      orders
-        .join(broadcast(cust), orders("o_custkey") === cust("c_custkey"), "left")
-        .groupBy(col("c_mktsegment").as("mktsegment"))
-        .agg(
-          count(lit(1)).as("n_orders"),
-          (sumCents("o_totalprice") / 100.0).as("sum_total"))
-        .orderBy("mktsegment")
-    }),
-
-    // Multi-join star aggregation (SURVEY §2.3 J3-J8 shape at scale).
-    "q5_star_join" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
-      val nat = t(s, dir, "nation")
-      val reg = t(s, dir, "region")
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(cust, ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(nat), cust("c_nationkey") === nat("n_nationkey"))
-        .join(broadcast(reg), nat("n_regionkey") === reg("r_regionkey"))
-        .groupBy(col("r_name").as("region_name"), col("n_name").as("nation_name"))
-        .agg(
-          (sumCents("l_extendedprice") / 100.0).as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy("region_name", "nation_name")
-    }),
-
-    // W1 pct_change per key over time order (SURVEY §2.5 W1).
-    "w1_pct_change" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      t(s, dir, "events")
-        .select(
-          col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("event_id"),
-          // try_divide: ANSI-mode / throws on a 0 previous value; DuckDB
-          // (and this query's oracle) yields NULL there instead.
-          round(try_divide(col("value"), lag("value", 1).over(w)) - 1, 6).as("pct_change"))
-        .orderBy("user_id", "ts_us", "event_id")
-    }),
-
-    // A3 distinct on a projection (SURVEY §2.4 A3).
-    "a3_distinct" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .select(col("l_suppkey"), col("l_returnflag")).distinct()
-    }),
-
-    // A4/A5 global min/max aggregate (SURVEY §2.4 A4-A5).
-    "a4_global_minmax" -> ((s, dir) => {
-      t(s, dir, "orders").agg(
-        min(to_date(col("o_orderdate"))).as("min_date"),
-        max(to_date(col("o_orderdate"))).as("max_date"),
-        count(lit(1)).as("n"))
-    }),
-
-    // W2 masked rolling log1p-sum, negated — the reversal-signal shape.
-    "w2_reversal_signal" -> ((s, dir) => {
-      val w = Windows.series(Seq("user_id"), Seq("ts", "event_id"))
-      t(s, dir, "events").select(
-        col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
-        round(Windows.rollingLog1pSum("value", w, 21), 6).as("signal"))
-    }),
-
-    // W3 masked rolling sample stddev.
-    "w3_rolling_std" -> ((s, dir) => {
-      val w = Windows.series(Seq("user_id"), Seq("ts", "event_id"))
-      t(s, dir, "events").select(
-        col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
-        round(Windows.rollingStd("value", w, 21), 6).as("roll_std"))
-    }),
-
-    // W5 masked rolling pairwise sample covariance.
-    "w5_rolling_covar" -> ((s, dir) => {
-      val w = Windows.series(Seq("l_returnflag"),
-        Seq("l_shipdate", "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity"))
-      t(s, dir, "lineitem").select(
-        col("l_returnflag"), col("l_orderkey"), col("l_linenumber"),
-        round(Windows.rollingCovar("l_quantity", "l_extendedprice", w, 21), 4).as("roll_cov"))
-    }),
-
-    // W5 again via overlapping-chunk parallelization: partitionBy on a
-    // 3-value key caps parallelism at 3; chunking restores it. Same
-    // oracle as w5_rolling_covar (row-identical output).
-    "w5_covar_chunked" -> ((s, dir) => {
-      Windows.chunkedRolling(
-        t(s, dir, "lineitem").select("l_returnflag", "l_shipdate", "l_orderkey",
-          "l_linenumber", "l_extendedprice", "l_quantity"),
-        Seq("l_returnflag"),
-        Seq("l_shipdate", "l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity"),
-        21, 20000, "roll_cov")(f =>
-          round(Windows.masked(covar_samp(col("l_quantity"), col("l_extendedprice")).over(f), f, 21), 4))
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"), col("roll_cov"))
-    }),
-
-    // W4 EWMA (half-life 60, adjust=true) — custom per-key streaming fold.
-    "w4_ewma" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-      Ewma.ewmaMean(ev, Seq("user_id"), Seq("ts", "event_id"), "value", 60.0, "ewma")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
-          round(col("ewma"), 6).as("ewma"))
-    }),
-
-    // W4 again through the native Catalyst window aggregate (SURVEY §7 v2):
-    // same recurrence, executed inside the window operator via
-    // SparkSessionExtensions-registered `ewma(x, halfLife)`.
-    "w4_ewma_native" -> ((s, dir) => {
-      graft.expr.catalyst.GraftExtensions.register(s)
-      t(s, dir, "events")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"),
-          col("value"))
-        .withColumn("ewma", round(expr(
-          "ewma(value, 60.0) OVER (PARTITION BY user_id ORDER BY ts_us, event_id " +
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"), 6))
-        .drop("value")
-    }),
-
-    // W7 rolling single-factor OLS (window 63) on integer-scaled values.
-    "w7_rolling_beta" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_suppkey"), col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-        round(col("l_quantity")).cast("long").as("x"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
-      RollingOls.fit(li, Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber", "y", "x"), "y", Seq("x"), 63)
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          round(col("alpha") / 100.0, 6).as("alpha"),
-          round(col("beta_x") / 100.0, 6).as("beta"))
-    }),
-
-    // W6 rolling multivariate OLS (2 regressors + intercept, window 252).
-    "w6_rolling_ols" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(
-        col("l_suppkey"), col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-        round(col("l_quantity")).cast("long").as("x"),
-        round(col("l_discount") * 100).cast("long").as("z"),
-        round(col("l_extendedprice") * 100).cast("long").as("y"))
-      RollingOls.fit(li, Seq("l_suppkey"),
-          Seq("l_shipdate", "l_orderkey", "l_linenumber", "y", "x"), "y", Seq("x", "z"), 252)
-        .select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-          round(col("alpha") / 100.0, 6).as("alpha"),
-          round(col("beta_x") / 100.0, 6).as("beta_x"),
-          round(col("beta_z") / 100.0, 6).as("beta_z"))
-    }),
-
-    // W6 again as pure window algebra: integer-exact window sums +
-    // parenthesized Cramer's rule as column expressions — no
-    // flatMapGroups, the whole plan stays in whole-stage codegen. Same
-    // oracle as w6_rolling_ols. Spark's bounded sliding frames re-
-    // aggregate all 252 rows per output row (O(W)/row), so each sliding
-    // sum is expressed as a cumulative-sum DIFFERENCE instead:
-    // sum[i-251..i] = cum[i] - cum[i-252], with the running sum and the
-    // lag both O(1)/row. This is exact — the moments are longs, and long
-    // cum-minus-lag is bit-identical to summing the 252 values directly
-    // (doubles would NOT be: float subtraction loses what the narrow sum
-    // never added) — and both window passes share one partitioning+sort,
-    // so the plan is one exchange, one sort, two O(1)/row Window nodes.
-    // At a 252-row frame this removes a 252x CPU multiplier versus the
-    // bounded-frame form; the O(1)/row streaming fold in RollingOls.fit
-    // remains the mapPartitions-free-of-shuffle comparison point.
-    //
-    // Overflow domain (the exactness claim above is conditional and
-    // GUARDED, not assumed): cum sums run over the whole partition, so
-    // a long can overflow once per-row-magnitude x rows-per-key exceeds
-    // 2^63 — silently, producing wrong coefficients. The guards pin
-    // |x|,|z| < 2^16 and |y| < 2^24 (every moment then < 2^40/row;
-    // TPC-H domains are far inside: x ≤ 50, z ≤ 100, y ≤ ~2e7 cents)
-    // and rows-per-key ≤ 2^22 (~4.2M; TPC-H is ~600/suppkey at every
-    // SF, constant in scale), so |cum| < 2^62 < Long.Max. An input
-    // outside either bound raises at runtime instead of silently
-    // wrapping; the codegen'd per-row branch is noise next to the
-    // window sort.
-    "w6_rolling_ols_native" -> ((s, dir) => {
-      // assert-then-pass-through: assert_true yields null on success, so
-      // coalesce evaluates the check per row and returns the value; the
-      // raise_error branch keeps the optimizer from pruning the check
-      def bounded(c: Column, bound: Long, nm: String): Column =
-        coalesce(
-          assert_true(abs(c) < lit(bound),
-            lit(s"w6_native overflow guard: |$nm| >= $bound")).cast("long"),
-          c)
-      val ord = Seq(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-        col("y"), col("x"))
-      val wCum = Window.partitionBy("l_suppkey").orderBy(ord: _*)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wRow = Window.partitionBy("l_suppkey").orderBy(ord: _*)
-      val n = lit(252.0)
-      val base = t(s, dir, "lineitem").select(
-        col("l_suppkey"), col("l_shipdate"), col("l_orderkey"), col("l_linenumber"),
-        bounded(round(col("l_quantity")).cast("long"), 1L << 16, "x").as("x"),
-        bounded(round(col("l_discount") * 100).cast("long"), 1L << 16, "z").as("z"),
-        bounded(round(col("l_extendedprice") * 100).cast("long"), 1L << 24, "y").as("y"))
-      val moments = Seq[(String, Column)](
-        "sx0" -> col("x"), "sx1" -> col("z"), "b0" -> col("y"),
-        "s00" -> col("x") * col("x"), "s01" -> col("x") * col("z"),
-        "s11" -> col("z") * col("z"), "b1" -> col("x") * col("y"),
-        "b2" -> col("z") * col("y"))
-      // the ordering columns survive the cum projection so the lag pass
-      // can declare the IDENTICAL sort — ordering by the (equivalent) rn
-      // instead makes Catalyst insert a second Sort it cannot prove away
-      // (PlanAuditSpec pins one exchange + one sort)
-      val cums = base.select(
-        col("l_suppkey") +: col("l_shipdate") +: col("l_orderkey") +:
-          col("l_linenumber") +: col("y") +: col("x") +:
-          row_number().over(wRow).as("rn") +:
-          moments.map { case (a, c) => sum(c).over(wCum).as(s"c_$a") }: _*)
-      val sums = cums.select(
-        col("l_suppkey") +: col("l_orderkey") +: col("l_linenumber") +:
-          // the bounded-frame count capped at 252; least() preserves the
-          // downstream cnt === 252 full-frame predicate exactly. rn doubles
-          // as the per-key cardinality guard: past 2^22 rows/key the 2^40
-          // per-row moment bound no longer proves the cum sums fit a long
-          coalesce(
-            assert_true(col("rn") <= lit(1L << 22),
-              lit("w6_native overflow guard: rows-per-key > 2^22"))
-              .cast("long"),
-            least(col("rn"), lit(252)).cast("long")).as("cnt") +:
-          moments.map { case (a, _) =>
-            (col(s"c_$a") - coalesce(lag(col(s"c_$a"), 252).over(wRow), lit(0L)))
-              .cast("double").as(a)
-          }: _*)
-      // identical parenthesization to RollingOls.solve and the SQL oracle
-      val det = n * (col("s00") * col("s11") - col("s01") * col("s01")) -
-        col("sx0") * (col("sx0") * col("s11") - col("s01") * col("sx1")) +
-        col("sx1") * (col("sx0") * col("s01") - col("s00") * col("sx1"))
-      val det0 = col("b0") * (col("s00") * col("s11") - col("s01") * col("s01")) -
-        col("sx0") * (col("b1") * col("s11") - col("s01") * col("b2")) +
-        col("sx1") * (col("b1") * col("s01") - col("s00") * col("b2"))
-      val det1 = n * (col("b1") * col("s11") - col("s01") * col("b2")) -
-        col("b0") * (col("sx0") * col("s11") - col("s01") * col("sx1")) +
-        col("sx1") * (col("sx0") * col("b2") - col("b1") * col("sx1"))
-      val det2 = n * (col("s00") * col("b2") - col("b1") * col("s01")) -
-        col("sx0") * (col("sx0") * col("b2") - col("b1") * col("sx1")) +
-        col("b0") * (col("sx0") * col("s01") - col("s00") * col("sx1"))
-      // try_divide: an exactly singular window (det=0) must yield null
-      // like DuckDB's x/0, not an ANSI runtime error
-      sums.select(col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        when(col("cnt") === 252, round(try_divide(det0, det) / 100.0, 6)).as("alpha"),
-        when(col("cnt") === 252, round(try_divide(det1, det) / 100.0, 6)).as("beta_x"),
-        when(col("cnt") === 252, round(try_divide(det2, det) / 100.0, 6)).as("beta_z"))
-    }),
-
-    // A6 global (whole-frame) z-score, exact integer-cents moments.
-    "a6_global_zscore" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .withColumn("cents", round(col("o_totalprice") * 100).cast("decimal(19,0)"))
-      val stats = o.agg(
-        sum(col("cents")).cast("double").as("_s"),
-        sum(col("cents") * col("cents")).cast("double").as("_ss"),
-        count(lit(1)).cast("double").as("_n"))
-      o.crossJoin(broadcast(stats))
-        .select(col("o_orderkey"),
-          round((col("cents").cast("double") - col("_s") / col("_n")) /
-            sqrt((col("_ss") - col("_s") * col("_s") / col("_n")) / (col("_n") - 1)), 6)
-            .as("zscore"))
-    }),
-
-    // A7/W9 cross-sectional equal weight 1/N per date partition.
-    "a7_equal_weight" -> ((s, dir) => {
-      t(s, dir, "orders").select(
-        col("o_orderkey"), to_date(col("o_orderdate")).as("odate"),
-        Windows.equalWeight(Seq("o_orderdate")).as("weight"))
-    }),
-
-    // W11/O2 sort desc + head(n) with deterministic tie-breaks.
-    "w11_topk" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(10)
-        .select(col("o_orderkey"), col("o_totalprice"))
-    }),
-
-    // P3-P6 predicate suite: eq, between, isin, isNotNull conjunction.
-    "p_filter_suite" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .filter(to_date(col("l_shipdate")).between("1995-01-01", "1998-12-31"))
-        .filter(col("l_linenumber").isin(1, 2, 3))
-        .filter(col("l_quantity").isNotNull)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          to_date(col("l_shipdate")).as("ship_date"))
-    }),
-
-    // J2-shape left join that PRESERVES unmatched-null rows.
-    "j2_left_join_nulls" -> ((s, dir) => {
-      val orders = t(s, dir, "orders")
-      val richCust = t(s, dir, "customer").filter(col("c_acctbal") > 5000)
-      orders.join(broadcast(richCust), orders("o_custkey") === richCust("c_custkey"), "left")
-        .select(col("o_orderkey"), col("c_name"), col("c_acctbal"))
-    }),
-
-    // P7 drop_nulls on the same left join.
-    "p7_dropnulls" -> ((s, dir) => {
-      queries("j2_left_join_nulls")(s, dir).na.drop(Seq("c_name"))
-    }),
-
-    // P8-P11 rename / drop / lit constants / typed null literal.
-    "p10_lit_null" -> ((s, dir) => {
-      t(s, dir, "part")
-        .withColumnRenamed("p_name", "part_name")
-        .drop("p_brand", "p_retailprice")
-        .withColumn("signal", lit("reversal"))
-        .withColumn("ic", lit(0.05))
-        .withColumn("placeholder", lit(null).cast("double"))
-        .select(col("p_partkey"), col("part_name"), col("signal"), col("ic"),
-          col("placeholder"))
-    }),
-
-    // A1 group + collect list (canonicalized by sorting -> string).
-    "a1_collect_sorted" -> ((s, dir) => {
-      t(s, dir, "customer")
-        .groupBy(col("c_nationkey").cast("int").as("nationkey"))
-        .agg(concat_ws("|", sort_array(collect_list(col("c_name")))).as("members"),
-          count(lit(1)).as("n"))
-    }),
-
-    // A8 horizontal (row-wise) expression fold over columns, exact cents.
-    "a8_horizontal_sum" -> ((s, dir) => {
-      val cents = round(col("l_extendedprice") * 100).cast("long")
-      val disc = round(col("l_discount") * 100).cast("long")
-      val tax = round(col("l_tax") * 100).cast("long")
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"),
-        (cents * (lit(100) - disc) / 10000.0).as("disc_price"),
-        (cents * (lit(100) - disc) * (lit(100) + tax) / 1000000.0).as("charge"))
-    }),
-
-    // R1 vertical concat (unionByName) of two filtered subsets.
-    "r1_union" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val a = li.filter(col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
-      val b = li.filter(col("l_returnflag") === "A")
-        .select(col("l_returnflag"), col("l_orderkey"), col("l_linenumber"))
-      a.unionByName(b.select("l_orderkey", "l_linenumber", "l_returnflag"))
-    }),
-
-    // R2 pivot long->wide with known pivot values.
-    "r2_pivot" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_linestatus")
-        .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(sum(round(col("l_quantity") * 100).cast("long")) / 100.0)
-    }),
-
-    // R3 unpivot wide->long of the pivoted frame.
-    "r3_unpivot" -> ((s, dir) => {
-      queries("r2_pivot")(s, dir)
-        .unpivot(Array(col("l_linestatus")), Array(col("A"), col("N"), col("R")),
-          "returnflag", "sum_qty")
-    }),
-
-    // R4 explode/flatten a split list column + regroup.
-    "r4_explode_words" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("n"))
-    }),
-
-    // R5 dict recode of a categorical column.
-    "r5_recode" -> ((s, dir) => {
-      t(s, dir, "events").select(
-        col("event_id"),
-        when(col("event_type") === "click", "CLICK")
-          .when(col("event_type") === "view", "VIEW")
-          .when(col("event_type") === "purchase", "BUY")
-          .otherwise("OTHER").as("kind"))
-    }),
-
-    // F1-F8 scalar function suite.
-    "f_scalar_suite" -> ((s, dir) => {
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        upper(col("p_type")).as("type_upper"),
-        lower(col("p_brand")).as("brand_lower"),
-        substring(col("p_name"), 1, 5).as("name5"),
-        length(col("p_name")).cast("long").as("name_len"),
-        concat(col("p_brand"), lit("-"), col("p_type")).as("brand_type"),
-        abs(round(col("p_retailprice") * 100).cast("long")).as("cents_abs"),
-        pow(col("p_size").cast("double"), 2.0).as("size_sq"),
-        coalesce(nullif(col("p_brand"), lit("Brand#13")), lit("OTHER")).as("brand_or_other"))
-    }),
-
-    // Fuzzy (edit-distance <= 1) self-match on supplier names via
-    // deletion-neighborhood (FastSS/SymSpell) blocking + banded
-    // levenshtein verification — the entity-resolution shape, never an
-    // all-pairs scan. Content-keyed blocking, because supplier names are
-    // FIXED-FORMAT (all 18 chars): length-band blocking degenerates to
-    // one bucket there and candidates grow quadratically — measured in
-    // docs/SCALING.md (band plan 53s vs this plan 7.7s at 30x; 16s at
-    // 100x, fit exponent 0.54).
-    "f2_fuzzy_pairs" -> ((s, dir) => {
-      Fuzzy.deletePairs(t(s, dir, "supplier"), "s_suppkey", "s_name", 1)
-        .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"),
-          col("dist").cast("long").as("dist"))
-        .orderBy("a", "b")
-    }),
-
-    // Statistical aggregate suite (corr / covariance / variance) from
-    // exact integer-cents moments — the a6 recipe: decimal partial sums
-    // are bit-exact under any partitioning, the double math happens once
-    // per group with fixed parenthesization, so an independent engine
-    // reproduces every digit (built-in corr/covar_samp stream doubles in
-    // partition order and drift in the last ulps at this row count).
-    "a12_stats_suite" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").select(col("l_returnflag"),
-        round(col("l_quantity")).cast("decimal(38,0)").as("q"),
-        round(col("l_extendedprice") * 100).cast("decimal(38,0)").as("p"))
-      val m = li.groupBy("l_returnflag").agg(
-        count(lit(1)).cast("double").as("n"),
-        sum("q").cast("double").as("sq"),
-        sum("p").cast("double").as("sp"),
-        sum(col("q") * col("q")).cast("double").as("sqq"),
-        sum(col("p") * col("p")).cast("double").as("spp"),
-        sum(col("q") * col("p")).cast("double").as("sqp"))
-      m.select(col("l_returnflag"), col("n").cast("long").as("n_rows"),
-          round((col("n") * col("sqp") - col("sq") * col("sp")) /
-            (sqrt(col("n") * col("sqq") - col("sq") * col("sq")) *
-             sqrt(col("n") * col("spp") - col("sp") * col("sp"))), 6).as("corr_qp"),
-          round((col("sqp") - col("sq") * col("sp") / col("n")) /
-            (col("n") - 1) / 100.0, 6).as("covar_samp"),
-          round((col("sqp") - col("sq") * col("sp") / col("n")) /
-            col("n") / 100.0, 6).as("covar_pop"),
-          round((col("sqq") - col("sq") * col("sq") / col("n")) /
-            (col("n") - 1), 6).as("var_qty"),
-          round(sqrt((col("spp") - col("sp") * col("sp") / col("n")) /
-            (col("n") - 1)) / 100.0, 6).as("stddev_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Rank-based trimmed (winsorized-by-count) group stats: drop exactly
-    // floor(0.05·n) rows from EACH tail by rank — whole-row logic, so
-    // both engines agree bit-for-bit, unlike value-interpolated
-    // percentile clipping — then aggregate the surviving cents exactly.
-    //
-    // Scale form (round 12): every output depends only on the per-group
-    // MULTISET of cents — the rank tie-break on (orderkey, linenumber)
-    // decides WHICH boundary rows are kept, but all rows tied at the
-    // boundary share one cents value, so n_kept/lo/hi/sum are tie-
-    // independent. That licenses computing the trim from per-
-    // (group, cents) partial aggregates plus a cumulative window over
-    // DISTINCT cents: kept-per-bucket = overlap of the bucket's rank
-    // span (cum-cnt, cum] with the kept span (k, n-k]. The heavy phase
-    // is a map-side-combinable groupBy ∝ rows; the per-group window
-    // runs over the VALUE DOMAIN (distinct prices — near-constant as
-    // rows grow). The row-rank form this replaces put every group's
-    // full row set through one window task (parallelism = 3 return
-    // flags) and measured ~1.2-superlinear at the probe's top segment
-    // (docs/SCALING.md); the oracle (still the row-rank SQL) pins the
-    // rewrite's equivalence.
-    "a13_trimmed_stats" -> ((s, dir) => {
-      val k = floor(col("n") * 5 / 100)
-      Windows.valueSpine(
-          t(s, dir, "lineitem")
-            .select(col("l_returnflag"),
-              round(col("l_extendedprice") * 100).cast("long").as("cents")),
-          Seq("l_returnflag"), "cents", ascending = true)
-        .select(col("l_returnflag"), col("cents"),
-          greatest(lit(0L),
-            least(col("cum_prev") + col("cnt"), col("n") - k) -
-              greatest(col("cum_prev"), k)).as("kept"))
-        .filter(col("kept") > 0)
-        .groupBy("l_returnflag")
-        .agg(sum("kept").as("n_kept"),
-          (min("cents") / 100.0).as("lo"),
-          (max("cents") / 100.0).as("hi"),
-          round(sum(col("cents") * col("kept")) / 100.0 / sum("kept"), 6)
-            .as("trimmed_mean"))
-        .orderBy("l_returnflag")
-    }),
-
-    // JSON path extraction from the semi-structured props column,
-    // aggregated per event type — get_json_object stays a codegen'd
-    // per-row expression on the scan (no UDF, no shuffle beyond the agg).
-    "f_json_props" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type")
-    }),
-
-    // F1/F2 date part extraction.
-    "f_date_parts" -> ((s, dir) => {
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        year(col("l_shipdate")).as("y"),
-        month(col("l_shipdate")).as("m"),
-        dayofmonth(col("l_shipdate")).as("d"),
-        to_date(col("l_shipdate")).as("ship_date"))
-    }),
-
-    // Streaming-shaped tumbling-window rollup (batch form; the same
-    // expressions run under readStream with a watermark).
-    "e1_hourly_rollup" -> ((s, dir) => {
-      t(s, dir, "events")
-        .groupBy(date_trunc("hour", col("ts")).as("hour_start"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          (sum(round(col("value") * 100).cast("long")) / 100.0).as("sum_value"))
-        .select(unix_micros(col("hour_start")).as("hour_us"), col("n_events"),
-          col("n_users"), col("sum_value"))
-    }),
-
-    // Gap-based sessionization (30-min inactivity), pure window algebra.
-    "e2_sessionize" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-      val ev = t(s, dir, "events").select(
-        col("user_id"), col("event_id"),
-        unix_micros(col("ts")).as("ts_us"),
-        round(col("value") * 100).cast("long").as("cents"))
-      ev.withColumn("is_new",
-          when(col("ts_us") - lag("ts_us", 1).over(w) > 1800000000L, 1)
-            .when(lag("ts_us", 1).over(w).isNull, 1).otherwise(0))
-        .withColumn("session_id", sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-        .groupBy("user_id", "session_id")
-        .agg(count(lit(1)).as("n_events"),
-          min("ts_us").as("start_us"), max("ts_us").as("end_us"),
-          (sum("cents") / 100.0).as("sum_value"))
-    }),
-
-    // As-of (point-in-time) join: each click picks up the latest purchase
-    // value at-or-before its timestamp per user — union+window form, one
-    // shuffle, no range-join explosion. DuckDB's native ASOF JOIN is the
-    // oracle.
-    "j12_asof_join" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("event_id"))
-      val wDedup = Window.partitionBy("user_id", "pts_us").orderBy(col("event_id").desc)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), unix_micros(col("ts")).as("pts_us"), col("event_id"),
-          col("value").as("purchase_value"))
-        .withColumn("rn", row_number().over(wDedup)).filter(col("rn") === 1)
-        .select("user_id", "pts_us", "purchase_value")
-      graft.operators.AsOf.join(clicks, purchases, Seq("user_id"),
-        "ts_us", "pts_us", Seq("purchase_value"))
-    }),
-
-    // W10 point-in-time membership reconstruction (distributed window form).
-    "w10_point_in_time" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val chg = ev.filter(col("event_type").isin("signup", "error"))
-        .select(col("user_id"), to_date(col("ts")).as("d"), col("ts"), col("event_id"),
-          when(col("event_type") === "signup", "Added").otherwise("Removed").as("action"))
-      val wLast = Window.partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
-      val current = chg
-        .withColumn("rn", row_number().over(wLast))
-        .filter(col("rn") === 1 && col("action") === "Added")
-        .select("user_id")
-      val dates = ev.select(to_date(col("ts")).as("d")).distinct()
-      Universe.pointInTime(chg, "user_id", "d", Seq("ts", "event_id"), "action",
-          current, dates)
-        .select(col("d"), col("user_id"))
-    }),
-
-    // Q3-shape: selective filters on both fact and dims, grouped revenue,
-    // top-k — exercises pushdown + broadcast + partial aggregation.
-    "q3_shipping_priority" -> ((s, dir) => {
-      val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = t(s, dir, "orders")
-        .filter(to_date(col("o_orderdate")) < "1998-06-15")
-      val li = t(s, dir, "lineitem")
-        .filter(to_date(col("l_shipdate")) > "1998-06-15")
-      val revenue = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(100) - round(col("l_discount") * 100).cast("long"))
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .groupBy(col("l_orderkey"), to_date(col("o_orderdate")).as("odate"))
-        .agg((sum(revenue) / 10000.0).as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // Q6-shape: tight scan + pushable range predicates + single aggregate —
-    // the canonical predicate-pushdown/column-pruning exercise.
-    "q6_forecast_revenue" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .filter(to_date(col("l_shipdate")).between("1996-01-01", "1996-12-31"))
-        .filter(round(col("l_discount") * 100).cast("long").between(3, 7))
-        .filter(col("l_quantity") < 500)
-        .agg((sum(round(col("l_extendedprice") * 100).cast("long") *
-          round(col("l_discount") * 100).cast("long")) / 10000.0).as("revenue"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // Q18-shape: grouped aggregate filtered on its own result (HAVING),
-    // then top-k — partial aggregation + post-aggregate filter.
-    "q18_big_orders" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg((sum(round(col("l_quantity") * 100).cast("long")) / 100.0).as("total_qty"),
-          count(lit(1)).as("n_lines"))
-        .filter(col("total_qty") > 250)
-        .orderBy(col("total_qty").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // Q4-shape: left-semi join (EXISTS) — orders with at least one
-    // returned lineitem, counted by priority.
-    "q4_semi_join" -> ((s, dir) => {
-      val ord = t(s, dir, "orders")
-      val returned = t(s, dir, "lineitem")
-        .filter(col("l_returnflag") === "R")
-        .select("l_orderkey")
-      ord.join(returned, ord("o_orderkey") === returned("l_orderkey"), "left_semi")
-        .groupBy(col("o_orderpriority").as("priority"))
-        .agg(count(lit(1)).as("n_orders"))
-        .orderBy("priority")
-    }),
-
-    // Anti-join (NOT EXISTS): customers who never placed an urgent order.
-    "q16_anti_join" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val urgent = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT").select("o_custkey")
-      cust.join(urgent, cust("c_custkey") === urgent("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    }),
-
-    // Ranking-function suite: rank / dense_rank / ntile / lead over a
-    // per-segment value order with deterministic tie-breaks.
-    //
-    // Scale form (round 12, same defect class as a13): the direct
-    // window partitions by c_mktsegment — 5 groups, so 5 tasks carry
-    // every row's sort regardless of cluster size. The ORDER BY
-    // (acctbal DESC, custkey ASC) is a TOTAL order (custkey is unique),
-    // which collapses every ranking function to arithmetic on the
-    // global row_number rn: rank = dense_rank = rn (no two rows tie on
-    // the full tuple), ntile/percent_rank/cume_dist are formulas of
-    // (rn, n), and lead/lag are order-neighbors. rn itself decomposes
-    // into per-(segment, acctbal) windows (high-cardinality partitions,
-    // tie-group-sized sorts) plus a SPINE window over the DISTINCT
-    // acctbal values per segment (value-domain-sized, near-constant as
-    // rows grow): rn = (rows in strictly-greater values) + (position
-    // among this value's ties). Order-neighbors cross value-group
-    // boundaries via the spine's lead/lag of each group's first/last
-    // key. The unchanged direct-window oracle pins equivalence;
-    // PropertySpec pins it on random tie-heavy data.
-    "w13_ranking_suite" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-      val wVal = Window.partitionBy("c_mktsegment", "c_acctbal")
-        .orderBy(col("c_custkey").asc)
-      val wValAll = Window.partitionBy("c_mktsegment", "c_acctbal")
-      val rows = cust.select(
-        col("c_custkey"), col("c_mktsegment"), col("c_acctbal"),
-        row_number().over(wVal).cast("long").as("rv"),
-        count(lit(1)).over(wValAll).as("cv"),
-        lead("c_custkey", 1).over(wVal).as("next_in"),
-        lag("c_custkey", 1).over(wVal).as("prev_in"))
-      val wSpine = Window.partitionBy("c_mktsegment")
-        .orderBy(col("c_acctbal").desc)
-      val spine = Windows.valueSpine(cust, Seq("c_mktsegment"), "c_acctbal",
-          ascending = false,
-          Seq("min_ck" -> min(col("c_custkey")),
-            "max_ck" -> max(col("c_custkey"))))
-        .select(col("c_mktsegment"), col("c_acctbal"),
-          col("cum_prev"), col("n"),
-          lead("min_ck", 1).over(wSpine).as("next_grp_first"),
-          lag("max_ck", 1).over(wSpine).as("prev_grp_last"))
-      val rn = col("cum_prev") + col("rv")
-      // Spark/DuckDB ntile: n%k buckets of size n/k+1 first, n/k after
-      val bs = floor(col("n") / 4)
-      val rem = col("n") % 4
-      val cut = rem * (bs + 1)
-      rows.join(spine, Seq("c_mktsegment", "c_acctbal"))
-        .select(
-          col("c_custkey"), col("c_mktsegment"),
-          rn.as("rnk"), rn.as("drnk"),
-          when(rn <= cut, floor((rn - 1) / (bs + 1)) + 1)
-            .otherwise(rem + floor((rn - 1 - cut) / bs) + 1)
-            .cast("long").as("quartile"),
-          when(col("rv") < col("cv"), col("next_in"))
-            .otherwise(col("next_grp_first")).as("next_custkey"),
-          when(col("rv") > 1, col("prev_in"))
-            .otherwise(col("prev_grp_last")).as("prev_custkey"),
-          round(when(col("n") === 1, lit(0.0))
-            .otherwise((rn - 1).cast("double") / (col("n") - 1)), 6)
-            .as("pct_rank"),
-          round(rn.cast("double") / col("n"), 6).as("cume"))
-    }),
-
-    // Time-RANGE window frame (vs the row frames everywhere else): each
-    // order's trailing-30-day spend for its customer — the frame is
-    // defined by event-time distance, not row count, so gapped/tied dates
-    // are handled by value. Ordering key is epoch seconds on both
-    // engines; the sum is exact cents, so ties inside the range are
-    // order-independent.
-    "w14_range_window" -> ((s, dir) => {
-      // o_orderdate is TIMESTAMP_NTZ: hop through TIMESTAMP (UTC session)
-      // for the epoch-seconds ordering key
-      val epochS = col("o_orderdate").cast("timestamp").cast("long")
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("order_epoch"))
-        .rangeBetween(-29L * 86400L, 0L)
-      t(s, dir, "orders").select(
-          col("o_orderkey"), col("o_custkey"),
-          epochS.as("order_epoch"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
-        .withColumn("trail30", (sum(col("cents")).over(w) / 100.0))
-        .select(col("o_orderkey"), col("o_custkey"), col("order_epoch"),
-          col("trail30"))
-    }),
-
-    // TPC-H Q2 shape: groupwise min — for each part shipped out of a
-    // chosen region, the supplier(s) achieving the minimum exact unit
-    // price (cent-sums ratio), kept via a window-min comparison instead
-    // of a correlated subquery re-scan. Dims broadcast; one shuffle per
-    // aggregate + one for the window.
-    "q2_min_cost" -> ((s, dir) => {
-      val unit = t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")
-            .filter(col("r_name") === "AMERICA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(sumCents("l_extendedprice").as("extc"),
-          sumCents("l_quantity").as("qtyc"))
-        .select(col("l_partkey"), col("l_suppkey"),
-          round(col("extc").cast("double") / col("qtyc"), 6).as("unit_cost"))
-      val w = Window.partitionBy("l_partkey")
-      unit.withColumn("mn", min(col("unit_cost")).over(w))
-        .filter(col("unit_cost") === col("mn"))
-        .select(col("l_partkey"), col("l_suppkey"), col("unit_cost"))
-        .orderBy("l_partkey", "l_suppkey")
-    }),
-
-    // Q10-shape: returned-item revenue per customer, top 20.
-    "q10_returned_items" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-      val ord = t(s, dir, "orders")
-      val li = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
-      val revenue = round(col("l_extendedprice") * 100).cast("long") *
-        (lit(100) - round(col("l_discount") * 100).cast("long"))
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(cust, ord("o_custkey") === cust("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"))
-        .agg((sum(revenue) / 10000.0).as("revenue"), count(lit(1)).as("n_items"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-
-    // ---- LLM-training-data operators (documents / embeddings tables) ----
-
-    // Language ID via stopword-dictionary argmax.
-    "t1_langid" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang_pred"))
-    }),
-
-    // Deterministic language-stratified hash sample: en 25%, de 50%,
-    // everything else 80% — membership from the md5 hash of doc_id, so
-    // the exact row set is engine-portable and rerun-stable.
-    "x1_stratified_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .withColumn("lang", TextAnalysis.langId(col("text")))
-      Sampling.stratifiedSample(docs, "doc_id", col("lang"),
-          Map("en" -> 0.25, "de" -> 0.5), 0.8)
-        .select(col("doc_id"), col("lang"))
-    }),
-
-    // Deterministic weighted sample (A-Res): 100 docs, probability
-    // proportional to text length, reproducible across engines.
-    "x2_weighted_sample" -> ((s, dir) => {
-      Sampling.weightedSample(t(s, dir, "documents"), "doc_id",
-          length(col("text")), 100)
-        .select(col("doc_id"), length(col("text")).cast("long").as("wt"),
-          col("rank"))
-        .orderBy("rank")
-    }),
-
-    // Deterministic 80/10/10 train/val/test split by doc_id hash — a
-    // row's split is a function of its key alone (never migrates when
-    // upstream filters change), summarized per split.
-    "x3_hash_split" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("split", Sampling.splitAssign(col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("split")
-    }),
-
-    // Per-source document cap (the per-domain cap of corpus curation):
-    // at most 15 docs per source survive, chosen by a stable hash
-    // lottery so the kept set is engine-portable and rerun-stable.
-    "x4_source_cap" -> ((s, dir) => {
-      Sampling.capPerGroup(t(s, dir, "documents"), "doc_id", "source", 15)
-        .select(col("doc_id"), col("source"))
-        .orderBy("source", "doc_id")
-    }),
-
-    // Temperature-based source rebalance (τ=2): per-source keep
-    // thresholds ∝ p^(1/τ−1) normalized to the rarest source, applied as
-    // a deterministic hash lottery; summarized per source.
-    "x5_temperature_sample" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val kept = Sampling.temperatureSample(docs, "doc_id", "source", 2.0)
-        .groupBy("source").agg(count(lit(1)).as("n_kept"))
-      Sampling.temperatureThresholds(docs, "source", 2.0)
-        .join(kept, Seq("source"), "left")
-        .select(col("source"), col("n_total"), col("thr"),
-          coalesce(col("n_kept"), lit(0L)).as("n_kept"))
-        .orderBy("source")
-    }),
-
-    // GPT-style sequence packing: concatenate the corpus in doc_id order
-    // and cut into 512-token blocks via a distributed two-phase prefix
-    // sum; one row per block with its document span.
-    "x6_pack_sequences" -> ((s, dir) => {
-      Packing.packSequences(t(s, dir, "documents"), "doc_id",
-        TextAnalysis.tokenCount(col("text")), 512)
-    }),
-
-    // Inverted index: posting lists for terms below the 80%-of-corpus
-    // stopword cut — df-filter applied before any list materializes.
-    "t15_inverted_index" -> ((s, dir) => {
-      TextAnalysis.invertedIndex(t(s, dir, "documents"), "doc_id", "text", 3, 0.8)
-        .select(col("term"), col("df"),
-          // pipe-joined for the cross-engine hash (the checker can't sort
-          // array cells); numeric order is preserved by sort_array upstream
-          concat_ws("|", col("postings").cast("array<string>")).as("postings"))
-        .orderBy("term")
-    }),
-
-    // Per-language exact length percentiles (linear interpolation — the
-    // same definition as DuckDB's quantile_cont).
-    // Scale form (round 12, fourth valueSpine application): Spark's
-    // percentile() buffers EVERY group value in its aggregation buffer —
-    // per-group memory ∝ rows, the aggregate-shaped cousin of the
-    // row_number-over-few-groups defect. The exact interpolated
-    // percentile is an order statistic plus a linear blend, and order
-    // statistics decompose over the value spine: rank r's value is the
-    // first spine row whose cumulative count reaches r. Values are
-    // document lengths (bounded integral domain), so the spine is
-    // value-domain-sized and the heavy phase is a partial-agg ∝ rows.
-    // The unchanged quantile_cont oracle pins the interpolation.
-    "t6_length_percentiles" -> ((s, dir) => {
-      val qs = Seq(0.5, 0.9, 0.99)
-      val base = t(s, dir, "documents")
-        .withColumn("lang", TextAnalysis.langId(col("text")))
-        .select(col("lang"), length(col("text")).cast("long").as("len"))
-      Windows.valueSpine(base, Seq("lang"), "len", ascending = true)
-        .select(col("lang"), col("len"),
-          (col("cum_prev") + col("cnt")).as("cum"), col("n"),
-          explode(array(qs.map(lit(_)): _*)).as("q"))
-        // p = (N-1)·q; the blend runs between the values at 1-based
-        // ranks floor(p)+1 and floor(p)+2 (clamped to N)
-        .withColumn("p", (col("n") - 1).cast("double") * col("q"))
-        .withColumn("i0", floor(col("p")).cast("long") + 1)
-        .withColumn("i1", least(floor(col("p")).cast("long") + 2, col("n")))
-        .groupBy("lang", "q")
-        .agg(max("n").as("n_docs"), max("p").as("pp"),
-          min(when(col("cum") >= col("i0"), col("len"))).as("xlo"),
-          min(when(col("cum") >= col("i1"), col("len"))).as("xhi"))
-        .select(col("lang"), col("n_docs"), col("q"),
-          round(col("xlo") +
-            (col("pp") - floor(col("pp"))) * (col("xhi") - col("xlo")), 6)
-            .as("res"))
-        .groupBy("lang")
-        .agg(max("n_docs").as("n_docs"),
-          max(when(col("q") === 0.5, col("res"))).as("p50"),
-          max(when(col("q") === 0.9, col("res"))).as("p90"),
-          max(when(col("q") === 0.99, col("res"))).as("p99"))
-    }),
-
-    // Quality scoring: length/punct/stopword features + composite score.
-    "t2_text_quality" -> ((s, dir) => {
-      TextAnalysis.qualityFeatures(t(s, dir, "documents"), "text")
-        .select(col("doc_id"), col("n_chars"), col("n_words"),
-          round(col("avg_word_len"), 6).as("avg_word_len"),
-          round(col("punct_ratio"), 6).as("punct_ratio"),
-          round(col("stopword_ratio"), 6).as("stopword_ratio"),
-          round(col("quality_score"), 6).as("quality_score"))
-    }),
-
-    // Token counting: whitespace + BPE-ish regex proxy.
-    "t3_token_count" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.tokenCount(col("text")).as("n_ws_tokens"),
-        TextAnalysis.bpeishTokenCount(col("text")).as("n_bpeish_tokens"))
-    }),
-
-    // Document fingerprint (md5 of normalized text).
-    "t4_fingerprint" -> ((s, dir) => {
-      t(s, dir, "documents").select(col("doc_id"),
-        TextAnalysis.fingerprint(col("text")).as("fp"))
-    }),
-
-    // Corpus-level rollup: per-language doc counts, token totals, and
-    // exact-duplicate counts — the summary pass a training-data pipeline
-    // runs over a crawl before filtering.
-    "t5_corpus_stats" -> ((s, dir) => {
-      val enriched = t(s, dir, "documents").select(
-        col("doc_id"),
-        TextAnalysis.langId(col("text")).as("lang"),
-        TextAnalysis.tokenCount(col("text")).as("toks"),
-        md5(col("text")).as("h"))
-      val withDup = enriched.withColumn("is_dup",
-        (col("doc_id") =!= min("doc_id").over(Window.partitionBy("h"))).cast("long"))
-      withDup.groupBy("lang").agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("toks")).as("n_tokens"),
-        sum(col("is_dup")).as("n_dups"))
-    }),
-
-    // Exact dedup: canonical id per identical text.
-    "d1_dedup_exact" -> ((s, dir) => {
-      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
-    }),
-
-    // Exact all-pairs 3-gram Jaccard near-dups (quadratic ground truth).
-    "d2_dedup_jaccard" -> ((s, dir) => {
-      Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text", 3, 0.5)
-    }),
-
-    // MinHash + banded LSH near-dups, exact-verified (the 100 TB path).
-    "d3_dedup_minhash" -> ((s, dir) => {
-      Dedup.minHashLsh(t(s, dir, "documents"), "doc_id", "text", 3, 64, 16, 0.5)
-    }),
-
-    // Near-dup pairs -> connected components -> one canonical doc per
-    // cluster: the decision step of the dedup pipeline. Min-label
-    // propagation on Spark; the oracle replays it as a recursive CTE.
-    "d6_dedup_clusters" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
-      Dedup.canonicalize(docs, "doc_id", pairs)
-    }),
-
-    // The PINNED min-label propagation strategy under the same oracle:
-    // localEdgeLimit=0 forces the distributed branch, and since round 20
-    // (when canonicalize's distributed default became the measured auto
-    // hybrid, graded by d6e) this entry pins the pure-propagation
-    // strategy explicitly so it stays under the per-round gate. Same
-    // unique fixpoint, same recursive-CTE oracle; the at-scale cost of
-    // the propagation loop is measured by graft.tools.CcProbe
-    // (docs/SCALING.md).
-    "d6b_dedup_clusters_dist" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
-      Dedup.canonicalizePropagation(docs, "doc_id", pairs, localEdgeLimit = 0L)
-    }),
-
-    // The O(log n)-round alternating star contraction (large-star/
-    // small-star) on the same pair graph — the high-diameter-graph
-    // strategy, graded on the same fixpoint oracle; its scale/diameter
-    // price lives on CcProbe's axes next to the propagation loop's.
-    // localEdgeLimit = 0 FORCES the distributed star rounds (the way d6b
-    // forces propagation): the operator's size gate would otherwise
-    // route this few-hundred-edge sf pair graph to the driver union-find
-    // and the graded entry would stop exercising the star branch.
-    "d6c_dedup_clusters_star" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
-      Dedup.canonicalizeStar(docs, "doc_id", pairs, localEdgeLimit = 0L)
-    }),
-
-    // The HYBRID strategy on the same pair graph and fixpoint oracle:
-    // starRounds alternating contraction rounds to collapse component
-    // diameter, then min-label propagation to finish — the strategy for
-    // pair graphs that are high-diameter AND high-volume at once, where
-    // propagation pays a full-edge-set pass per hop and pure star pays
-    // its 3.6x shuffle volume to the very end (CcProbe's deep axis
-    // prices the trade; docs/SCALING.md round 17). localEdgeLimit = 0
-    // forces the distributed path and starRounds = 1 makes the graded
-    // entry exercise the HAND-OFF (one real contraction round, then the
-    // propagation finisher on the rewired edges) rather than converging
-    // inside the star budget and skipping propagation.
-    "d6d_dedup_clusters_hybrid" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
-      Dedup.canonicalizeHybrid(docs, "doc_id", pairs, starRounds = 1,
-        localEdgeLimit = 0L)
-    }),
-
-    // The hybrid's DEFAULT path — the measured auto star budget — under
-    // the same fixpoint oracle: no starRounds argument, so the birth
-    // telemetry pass sizes the schedule itself (on this near-dup-shaped
-    // pair graph the estimate reads shallow and the path is telemetry →
-    // zero rounds → propagation finisher). d6d stays pinned at
-    // starRounds = 1 for round-over-round comparability; THIS entry is
-    // the one that puts the code path every default caller gets under
-    // the per-round DuckDB gate (it was previously verified only by
-    // ScalaTest and CcProbe). localEdgeLimit = 0 forces the distributed
-    // branch as in d6b/d6c/d6d.
-    "d6e_dedup_clusters_auto" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
-      Dedup.canonicalizeHybrid(docs, "doc_id", pairs, localEdgeLimit = 0L)
-    }),
-
-    // C4-style corpus-wide duplicate-segment removal: non-overlapping
-    // 10-word segments, first corpus occurrence wins, documents rebuilt
-    // from their surviving segments.
-    "d7_dedup_segments" -> ((s, dir) => {
-      Dedup.segmentDedup(t(s, dir, "documents"), "doc_id", "text", 10)
-        .select(col("id").as("doc_id"), col("n_segments"), col("n_kept"),
-          col("kept_text"))
-        .orderBy("doc_id")
-    }),
-
-    // Incremental dedup: sources src0-src9 arrive as a new batch and are
-    // checked against the digest store of the accepted corpus (src10-19)
-    // and against themselves — the rolling-ingestion pattern where the
-    // accepted corpus is never rescanned, only its digest store.
-    "d8_dedup_incremental" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val inStore = col("source").rlike("^src1[0-9]$")
-      Dedup.incrementalExact(docs.filter(!inStore), "doc_id", "text",
-        docs.filter(inStore).select(md5(col("text")).as("digest")))
-    }),
-
-    // Incremental NEAR-dup: the new batch (src0-9) is probed against the
-    // accepted corpus's persisted MinHash band-key artifact (src10-19) and
-    // against itself — the store is never re-signatured, and its text is
-    // read only to verify actual candidates.
-    "d9_incremental_neardup" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val inStore = col("source").rlike("^src1[0-9]$")
-      val store = docs.filter(inStore)
-      val incoming = docs.filter(!inStore)
-      Dedup.incrementalNearDup(incoming, "doc_id", "text", 3, 64, 16, 0.5,
-        Dedup.bandKeys(store, "doc_id", "text", 3, 64, 16), store)
-    }),
-
-    // SimHash near-dups via banded Hamming blocking.
-    "d4_dedup_simhash" -> ((s, dir) => {
-      Dedup.simHashPairs(t(s, dir, "documents"), "doc_id", "text", 3)
-    }),
-
-    // Embedding-cosine near-dup pairs: SRP-LSH banded candidates (4 bands
-    // x 8 sign bits), exact cosine >= 0.4 verification on candidates.
-    "d5_dedup_embcos" -> ((s, dir) => {
-      Dedup.embCosinePairs(
-        t(s, dir, "embeddings").select("vec_id", "embedding"),
-        "vec_id", "embedding", 64, 4, 8, 0.4)
-    }),
-
-    // Embedding near-dup at NEAR-DUP parameters (threshold 0.9, 3 bands
-    // x 16 bits) — the scale path d5's 4x8-bit blocking does not have.
-    // With 16-bit band keys the random-collision floor is 3/2^16 ≈
-    // 4.6e-5 of all pairs — below any real near-dup density — so
-    // candidates track true near-dups instead of the corpus's pair
-    // count squared (d5's floor is 4/2^8 ≈ 1.6e-2, measured quadratic
-    // in docs/SCALING.md). The base corpus is isotropic Gaussian and
-    // has no cosine-0.9 pairs at any probed size, so the query PLANTS
-    // them deterministically: every 50th vector re-enters the corpus
-    // under id + 2e9 with coordinate (vec_id mod 64) sign-flipped —
-    // cos = 1 - 2*v_j^2/|v|^2 ≈ 0.97, so planted pairs sit above the
-    // threshold (a ~7% chi-squared tail falls below and is correctly
-    // excluded by the exact verification on both engines).
-    "d5b_neardup_embcos" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = emb.unionByName(
-        emb.filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select((col("vec_id") + lit(2000000000L)).as("vec_id"),
-            expr("transform(embedding, (x, j) -> IF(j = vec_id % 64, -x, x))")
-              .as("embedding")))
-      Dedup.embCosinePairs(planted, "vec_id", "embedding", 64, 3, 16, 0.9)
-    }),
-
-    // WIDE-band SRP near-dup (3 bands x 28 bits = 84 plane bits, past
-    // the 63-bit packed-long ceiling): the same planted corpus and
-    // threshold as d5b through embCosinePairs' per-band-key branch —
-    // the configuration the corpus-sizing rule (suggestedBandBits)
-    // prescribes for ~10^8-vector deployments, where 16-bit bands'
-    // N²·bands/2^bits collision floor goes super-linear (measured:
-    // d5b's shuffle 8→70→545 MB at 10/30/100×). At 28 bits the floor
-    // is ~2^12 smaller, so candidate shuffle tracks N, not N² — the
-    // probe line next to d5b's in docs/SCALING.md is the point of this
-    // entry. Recall per planted pair is lower at this width (the
-    // documented widen-costs-recall trade); the oracle mirrors the
-    // same bands, so the comparison stays exact.
-    "d5c_neardup_wideband" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = emb.unionByName(
-        emb.filter(pmod(col("vec_id"), lit(50)) === 0)
-          .select((col("vec_id") + lit(2000000000L)).as("vec_id"),
-            expr("transform(embedding, (x, j) -> IF(j = vec_id % 64, -x, x))")
-              .as("embedding")))
-      Dedup.embCosinePairs(planted, "vec_id", "embedding", 64, 3, 28, 0.9)
-    }),
-
-    // Brute-force cosine top-5 neighbors for query vectors vec_id < 20.
-    "n1_ann_cosine_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.cosineTopK(
-        emb.filter(col("vec_id") < 20).select("vec_id", "embedding"),
-        emb.select("vec_id", "embedding"), 5)
-    }),
-
-    // SRP-LSH bucketed approximate neighbors (recall tested in specs).
-    "n2_ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(
-        emb.filter(col("vec_id") < 20).select("vec_id", "embedding"),
-        emb.select("vec_id", "embedding"), 64, 8, 5)
-    }),
-
-    // IVF coarse-quantized approximate neighbors: corpus vectors inverted
-    // by nearest centroid (vec_id < 16 as deterministic coarse centroids),
-    // queries probe their 4 nearest lists, exact cosine rank within.
-    "n3_ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(
-        emb.filter(col("vec_id") < 20).select("vec_id", "embedding"),
-        emb.select("vec_id", "embedding"),
-        emb.filter(col("vec_id") < 16).select("vec_id", "embedding"), 4, 5)
-    }),
-
-    // L1-L8 per-date mean-variance QP fan-out: market segments as assets,
-    // factor-model covariance assembled per date, lambda calibrated to the
-    // 5% active-risk target. The solve is not SQL-expressible -> rows-only
-    // check here; l5_qp_certificate below is the hash-checked oracle form.
-    "l5_qp_weights" -> ((s, dir) => {
-      val in = qpInputs(s, dir)
-      PortfolioOpt
-        .optimalWeights(in.alphas, in.loadings, in.fcov, in.ivol, in.bench)
-        .select(col("date"), col("ticker"), round(col("weight"), 9).as("weight"),
-          round(col("lambda"), 6).as("lambda"),
-          round(col("active_risk"), 6).as("active_risk"))
-    }),
-
-    // Solution certificate for the QP chain (see PortfolioOpt.certificate):
-    // the per-date universe is recomputed by DuckDB from orders x customer,
-    // and feasibility/risk-consistency pin the constants (1, true, 0) —
-    // SQL-checkable even though the solve itself is not.
-    "l5_qp_certificate" -> ((s, dir) => {
-      val in = qpInputs(s, dir)
-      val w = PortfolioOpt
-        .optimalWeights(in.alphas, in.loadings, in.fcov, in.ivol, in.bench)
-      PortfolioOpt.certificate(w, in.alphas, in.loadings, in.fcov, in.ivol,
-        in.bench)
-    }),
-
-    // Hierarchical aggregation: ROLLUP grouping sets — subtotals and a
-    // grand total in one pass (partial-aggregated like any groupBy; the
-    // expand adds one row per grouping set, not one job per level).
-    "a10_rollup" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg((sumCents("l_extendedprice") / 100.0).as("revenue"),
-          count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("revenue"), col("n"))
-        .orderBy("flag", "status")
-    }),
-
-    // Full cube over the same two dimensions: all four grouping sets in
-    // one pass (partial-aggregated before the shuffle, like rollup).
-    "a11_cube" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .cube("l_returnflag", "l_linestatus")
-        .agg((sumCents("l_quantity") / 100.0).as("sum_qty"),
-          count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("ALL")).as("flag"),
-          coalesce(col("l_linestatus"), lit("ALL")).as("status"),
-          col("sum_qty"), col("n"))
-        .orderBy("flag", "status")
-    }),
-
-    // TPC-H Q15 shape: supplier(s) achieving the maximum quarterly
-    // revenue — a correlated max folded into a one-row broadcast join.
-    // Revenue stays in exact integer cents x (100 - disc_pct).
-    "q15_top_supplier" -> ((s, dir) => {
-      val rev = t(s, dir, "lineitem")
-        .filter(col("l_shipdate").between("1996-01-01", "1996-03-31"))
-        .groupBy(col("l_suppkey"))
-        .agg(sum(revCents).as("total_revc"))
-      val mx = rev.agg(max("total_revc").as("mx"))
-      rev.join(broadcast(mx), col("total_revc") === col("mx"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"), col("total_revc"))
-        .orderBy("s_suppkey")
-    }),
-
-    // TPC-H Q9 shape: profit by nation and ship year over a part-name
-    // substring filter. The testdata has no partsupp table, so supply
-    // cost is a deterministic 60% of p_retailprice; profit stays in
-    // exact integer 1e-6-dollar units until the final division
-    // (rev6 = cents x (100-disc_pct) x 100; cost6 = p_cents x q_cents x 60).
-    "q9_profit" -> ((s, dir) => {
-      val cost6 = round(col("p_retailprice") * 100).cast("long") *
-        round(col("l_quantity") * 100).cast("long") * 60L
-      t(s, dir, "lineitem")
-        .join(broadcast(t(s, dir, "part").filter(col("p_name").contains("bolt"))),
-          col("l_partkey") === col("p_partkey"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation")),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("l_shipdate")).cast("long").as("o_year"))
-        .agg((sum(revCents * 100L - cost6) / 1e6).as("profit"))
-        .orderBy(col("nation").asc, col("o_year").desc)
-    }),
-
-    // TPC-H Q11 shape: (supplier, part) positions whose value exceeds a
-    // fraction (1/10000) of the GLOBAL total — a scalar-subquery
-    // threshold realized as a one-row broadcast cross join. Exact integer
-    // value units throughout; the long x 10000 comparison is overflow-safe
-    // at bench scale and order-independent.
-    "q11_important_stock" -> ((s, dir) => {
-      val v = t(s, dir, "lineitem")
-        .groupBy("l_suppkey", "l_partkey")
-        .agg(sum(revCents).as("valc"))
-      val tot = v.agg(sum(col("valc")).as("totc"))
-      v.crossJoin(broadcast(tot))
-        .filter(col("valc") * 10000L > col("totc"))
-        .select(col("l_suppkey"), col("l_partkey"),
-          (col("valc") / 1e4).as("value"))
-        .orderBy(col("value").desc, col("l_suppkey"), col("l_partkey"))
-    }),
-
-    // TPC-H Q20 shape: suppliers that shipped MORE THAN HALF of a part's
-    // total 1995 quantity — a correlated half-sum threshold expressed as
-    // two partial aggregates joined on the part key (no subquery
-    // re-scan). Quantities aggregate in exact integer cents.
-    "q20_half_supply" -> ((s, dir) => {
-      val li95 = t(s, dir, "lineitem")
-        .filter(year(col("l_shipdate")) === 1995)
-      val sp = li95.groupBy("l_partkey", "l_suppkey")
-        .agg(sumCents("l_quantity").as("qtyc"))
-      val tp = sp.groupBy("l_partkey").agg(sum(col("qtyc")).as("totqc"))
-      sp.join(tp, "l_partkey")
-        .filter(col("qtyc") * 2 > col("totqc"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy("s_suppkey", "s_name")
-        .agg(count(lit(1)).as("n_dominated_parts"))
-        .orderBy("s_suppkey")
-    }),
-
-    // Two-dimension-table star join with two roles for one dim (nation as
-    // both supplier and customer side) — TPC-H Q7 shape. All dims
-    // broadcast; the only big-big join is lineitem x orders.
-    "q7_nation_volume" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val cust = t(s, dir, "customer")
-      val supp = t(s, dir, "supplier")
-      val nat = t(s, dir, "nation")
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .join(broadcast(nat.select(col("n_nationkey").as("cnk"),
-          col("n_name").as("cust_nation"))), col("c_nationkey") === col("cnk"))
-        .join(broadcast(nat.select(col("n_nationkey").as("snk"),
-          col("n_name").as("supp_nation"))), col("s_nationkey") === col("snk"))
-        .filter(col("supp_nation") =!= col("cust_nation"))
-        .groupBy(col("supp_nation"), col("cust_nation"),
-          year(col("l_shipdate")).cast("long").as("ship_year"))
-        .agg((sum(revCents) / 1e4).as("volume"), count(lit(1)).as("n_lines"))
-        .orderBy("supp_nation", "cust_nation", "ship_year")
-    }),
-
-    // Conditional-aggregate ratio over a dim attribute — TPC-H Q14 shape.
-    // Revenue stays in exact integer (cents x (100-disc)) until the final
-    // division, so the promo share is engine-deterministic.
-    "q14_promo_share" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val part = t(s, dir, "part")
-      li.join(broadcast(part), li("l_partkey") === part("p_partkey"))
-        .groupBy(year(col("l_shipdate")).cast("long").as("ship_year"))
-        .agg(
-          (sum(when(col("p_type") === "PROMO", revCents).otherwise(lit(0L))) / 1e4)
-            .as("promo_revenue"),
-          (sum(revCents) / 1e4).as("total_revenue"),
-          round(lit(100.0) * sum(when(col("p_type") === "PROMO", revCents)
-            .otherwise(lit(0L))) / sum(revCents), 6).as("promo_pct"))
-        .orderBy("ship_year")
-    }),
-
-    // Disjunctive multi-attribute predicate pushed through a dim join —
-    // TPC-H Q19 shape (OR of brand/size/quantity bands).
-    "q19_or_filters" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val part = t(s, dir, "part")
-      val qty = round(col("l_quantity")).cast("long")
-      li.join(broadcast(part), li("l_partkey") === part("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 15)
-            && qty.between(1, 11)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(1, 25)
-            && qty.between(10, 20)) ||
-          (col("p_brand") === "Brand#4" && col("p_size").between(1, 35)
-            && qty.between(20, 30)))
-        .agg((sum(revCents) / 1e4).as("revenue"), count(lit(1)).as("n_lines"))
-    }),
-
-    // TF-IDF / BM25 salient-term extraction: top-3 terms per document.
-    "t7_tfidf" -> ((s, dir) => {
-      TextAnalysis.tfIdfTopTerms(t(s, dir, "documents"), "doc_id", "text", 3)
-    }),
-
-    // HLL cardinality sketch (deterministic md5 registers) per language,
-    // alongside the exact distinct count the sketch approximates.
-    "t8_hll_cardinality" -> ((s, dir) => {
-      // two consumers (sketch + exact count) land in the ONE final job —
-      // an eager localCheckpoint materializes the exploded words exactly
-      // once, where a lazy cache would race-compute the scan/split/explode
-      // on both branches; the bench/verify drivers release the persisted
-      // RDD between queries
-      val words = t(s, dir, "documents")
-        .select(col("lang"), explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "")
-        .localCheckpoint(true)
-      val est = Sketch.hllCardinality(words, Seq("lang"), col("w"))
-      val exact = words.groupBy("lang")
-        .agg(countDistinct(col("w")).as("n_exact"))
-      exact.join(est, "lang")
-        .select(col("lang"), col("n_exact"), col("n_present"), col("hll_est"))
-        .orderBy("lang")
-    }),
-
-    // Count-min-sketch heavy hitters: estimated vs exact occurrence
-    // counts for the corpus's top-20 words — est >= exact always (CMS
-    // over-estimates only, via bucket collisions).
-    "t13_heavy_hitters" -> ((s, dir) => {
-      // three consumers (sketch build, estimate probe, exact counts) in
-      // one job — eager localCheckpoint, not a lazy cache (same
-      // race-compute rule as t8 above)
-      val words = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "")
-        .localCheckpoint(true)
-      val sketch = Sketch.countMin(words, col("w"))
-      val est = Sketch.countMinEstimate(words.distinct(), "w", sketch)
-      val exact = words.groupBy("w").agg(count(lit(1)).as("exact"))
-      // top-20 cut FIRST (TakeOrderedAndProject: per-partition heads, no
-      // global sort), then the rank window runs over 20 rows — a global
-      // row_number before the cut would single-partition every distinct
-      // word in the corpus
-      val top = est.join(exact, "w")
-        .orderBy(col("est").desc, col("w").asc).limit(20)
-      top.withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("est").desc, col("w").asc)).cast("long"))
-        .select(col("w").as("word"), col("est"), col("exact"), col("rank"))
-        .orderBy("rank")
-    }),
-
-    // Histogram-sketch approximate quantiles: per-language p50/p90/p99 of
-    // document length from 16-char fixed bins — the mergeable one-pass
-    // counterpart to t6's exact percentiles (error bounded by bin width).
-    "t14_hist_quantile" -> ((s, dir) => {
-      Sketch.histQuantile(t(s, dir, "documents"), col("lang"), col("n_chars"),
-          16.0, Seq(0.5, 0.9, 0.99))
-        .select(col("g").as("lang"), col("q"), col("est"))
-        .orderBy("lang", "q")
-    }),
-
-    // Point-in-interval (non-equi) join via bin bucketing: lineitems
-    // shipped inside each sampled order's follow-up window. The oracle is
-    // the naive BETWEEN join; the Spark plan is the binned equi-join.
-    // Since the round-20 optimization phase the per-interval reduction
-    // runs through RangeJoin.pointInIntervalPrefixAgg (per-date point
-    // prefix sums + two broadcast lookups per interval) instead of
-    // enumerating the containment join: the aggregates (count, sum of
-    // integer cents) decompose exactly over date prefix sums, so the
-    // result is bit-identical (oracle re-proved at sf0.001/0.01/0.1)
-    // while work drops from ∝ matches to ∝ points + intervals + dates
-    // (10×: 16.5 → 2.6 s). The inner-join semantics (intervals with no
-    // contained point are absent) survive as the n_lines > 0 filter.
-    "j13_range_join" -> ((s, dir) => {
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 199 === 0)
-        .select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("lo"),
-          date_add(to_date(col("o_orderdate")),
-            (col("o_orderkey") % 61).cast("int")).as("hi"))
-      val pts = t(s, dir, "lineitem")
-        .select(to_date(col("l_shipdate")).as("sd"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      RangeJoin.pointInIntervalPrefixAgg(pts, iv, "sd", "lo", "hi",
-          Seq("cents"))
-        .groupBy("o_orderkey")
-        .agg(sum(col("n_points")).as("n_lines"),
-          (sum(col("sum_cents")) / 100.0).as("revenue"))
-        .filter(col("n_lines") > 0)
-        .select(col("o_orderkey"), col("n_lines"), col("revenue"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Densification-capped range join (RangeJoin cure (b), oracle-backed):
-    // same intervals as j13, but each lineitem point keeps only its 3
-    // most-recent containing intervals — output ≤ 3·|points| by
-    // construction no matter how densely intervals pile into the window
-    // (the regime docs/SCALING.md measured at exponent 2.09 uncapped).
-    // The rank is a STRUCT (recency, interval id) so the per-point
-    // ordering is total and both engines cap identically; the rank≤k
-    // filter engages Catalyst's partial window-group limit (spec-pinned)
-    // so per-point sorts stay partition-local. The point key includes
-    // (sd, cents) because this testdata DUPLICATES (l_orderkey,
-    // l_linenumber) (~12k keys at sf0.01) — a non-unique cap key makes
-    // which-duplicate-gets-which-rank engine-order-dependent (the trap
-    // pointInIntervalTopK's doc names); with the value columns in the
-    // key, any residual duplicates are value-identical and the kept
-    // AGGREGATE is deterministic in both engines.
-    "j13b_range_join_topk" -> ((s, dir) => {
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 199 === 0)
-        .select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("lo"),
-          date_add(to_date(col("o_orderdate")),
-            (col("o_orderkey") % 61).cast("int")).as("hi"))
-      val pts = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("pk"), col("l_linenumber").as("pl"),
-          to_date(col("l_shipdate")).as("sd"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      RangeJoin.pointInIntervalTopK(pts, iv, "sd", "lo", "hi", 30,
-          Seq("pk", "pl", "sd", "cents"),
-          struct((-datediff(col("lo"), to_date(lit("1970-01-01")))).as("r"),
-            col("o_orderkey").as("t")), 3)
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_lines"),
-          (sum(col("cents")) / 100.0).as("revenue"))
-        .orderBy("o_orderkey")
-    }),
-
-    // j13b's SHUFFLED-FALLBACK branch, pinned as its own graded entry:
-    // the same query with the interval side's broadcast budget forced to
-    // 0 (and Catalyst's own auto-broadcast off, so the bin equi-join
-    // genuinely shuffles) — the plan a user gets when the interval side
-    // outgrows any broadcast budget. Same oracle as j13b: the size gate
-    // changes cost, never the answer. Exists so the fallback branch has
-    // a standing scale datum next to the broadcast branch's
-    // (docs/SCALING.md) instead of only a plan pin.
-    "j13f_range_join_topk_shuffled" -> ((s, dir) => {
-      // session conf applies at materialization; harnesses run queries
-      // under SessionConf.restoring so this never re-plans neighbors
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 199 === 0)
-        .select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("lo"),
-          date_add(to_date(col("o_orderdate")),
-            (col("o_orderkey") % 61).cast("int")).as("hi"))
-      val pts = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("pk"), col("l_linenumber").as("pl"),
-          to_date(col("l_shipdate")).as("sd"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      RangeJoin.pointInIntervalTopK(pts, iv, "sd", "lo", "hi", 30,
-          Seq("pk", "pl", "sd", "cents"),
-          struct((-datediff(col("lo"), to_date(lit("1970-01-01")))).as("r"),
-            col("o_orderkey").as("t")), 3, broadcastBudgetBytes = 0L)
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_lines"),
-          (sum(col("cents")) / 100.0).as("revenue"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Interval coalescing (RangeJoin cure (c), oracle-backed): merge each
-    // customer's overlapping order-coverage intervals into distinct spans
-    // — the pre-join normalization that turns a densified interval side
-    // into O(distinct spans). Dates emitted as epoch-day ints so the
-    // hash compare never depends on engine date formatting.
-    "j13c_interval_coalesce" -> ((s, dir) => {
-      val iv = t(s, dir, "orders")
-        .select(col("o_custkey"),
-          to_date(col("o_orderdate")).as("lo"),
-          date_add(to_date(col("o_orderdate")),
-            (col("o_orderkey") % 61).cast("int")).as("hi"))
-      RangeJoin.coalesceIntervals(iv, Seq("o_custkey"), "lo", "hi")
-        .select(col("o_custkey"),
-          datediff(col("lo"), to_date(lit("1970-01-01"))).cast("long").as("lo_d"),
-          datediff(col("hi"), to_date(lit("1970-01-01"))).cast("long").as("hi_d"),
-          col("n_merged"))
-        .orderBy("o_custkey", "lo_d", "hi_d")
-    }),
-
-    // Densification cure (b), sweep form (oracle-backed): the SAME query
-    // as j13b — same intervals, same rank, same k=3 cap, same final
-    // aggregate — computed through RangeJoin.pointInIntervalTopKSweep's
-    // k-bounded streaming aggregate instead of enumerate-then-cap. Two
-    // independent engine paths (window row_number vs topk_structs fold)
-    // against ONE oracle pins the cap semantics from both sides; the
-    // sweep is the no-broadcast-premise path for interval sides that
-    // grow with the corpus (probed 1x-100x in docs/SCALING.md). The
-    // query applies the operator's own fold sizing rule (sizeSweepFold:
-    // an unsized fold demotes to a sort of the candidate stream — 7.8
-    // GB of spill at 10x); harnesses restore the conf between queries
-    // (SessionConf.restoring).
-    "j13d_range_join_sweep" -> ((s, dir) => {
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 199 === 0)
-        .select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("lo"),
-          date_add(to_date(col("o_orderdate")),
-            (col("o_orderkey") % 61).cast("int")).as("hi"))
-      val pts = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("pk"), col("l_linenumber").as("pl"),
-          to_date(col("l_shipdate")).as("sd"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      RangeJoin.sizeSweepFold(pts)
-      RangeJoin.pointInIntervalTopKSweep(pts, iv, "sd", "lo", "hi", 30,
-          Seq("pk", "pl", "sd", "cents"),
-          struct((-datediff(col("lo"), to_date(lit("1970-01-01")))).as("r"),
-            col("o_orderkey").as("t")), 3)
-        .groupBy("o_orderkey")
-        .agg(count(lit(1)).as("n_lines"),
-          (sum(col("cents")) / 100.0).as("revenue"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Densification cure (a), executable (oracle-backed): per-POINT
-    // aggregates over the matching intervals. Since the round-20
-    // optimization phase this query computes its three stats — all
-    // functions of the point DATE alone — through
-    // RangeJoin.pointInIntervalStabStats (endpoint prefix sums over the
-    // date grid + a broadcast per-date stats join): the candidate
-    // enumeration is GONE, work is |points| + |intervals| + |dates| at
-    // any density (10×: 17.8 → 2.9 s), and the arithmetic is exact
-    // integers so the result is bit-identical to the enumerate-then-
-    // reduce form (oracle re-proved at sf0.001/0.01/0.1; the generic
-    // pointInIntervalAgg — cure (a) for aggregates that DO need the
-    // interval rows — stays spec-covered in OperatorsSpec). Dates
-    // emitted as epoch-day ints so the hash compare never depends on
-    // engine date formatting.
-    "j13e_range_join_agg" -> ((s, dir) => {
-      val iv = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 199 === 0)
-        .select(col("o_orderkey"),
-          to_date(col("o_orderdate")).as("lo"),
-          date_add(to_date(col("o_orderdate")),
-            (col("o_orderkey") % 61).cast("int")).as("hi"))
-      val pts = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("pk"), col("l_linenumber").as("pl"),
-          to_date(col("l_shipdate")).as("sd"),
-          round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      val epoch0 = to_date(lit("1970-01-01"))
-      RangeJoin.pointInIntervalStabStats(pts, iv, "sd", "lo", "hi")
-        .select(col("pk"), col("pl"),
-          datediff(col("sd"), epoch0).cast("long").as("sd_d"), col("cents"),
-          col("n_iv"),
-          col("lo_min_days").cast("long").as("lo_min_d"),
-          col("hi_max_days").cast("long").as("hi_max_d"))
-        .orderBy("pk", "pl", "sd_d", "cents")
-    }),
-
-    // Bloom-pruned selective join: a bloom filter over the filtered dim's
-    // keys prunes fact rows before the join; false positives are removed
-    // by the exact join, so the oracle is the plain join — the bloom
-    // changes cost, never the answer.
-    "j14_bloom_join" -> ((s, dir) => {
-      val dim = t(s, dir, "part").filter(col("p_size") <= 2)
-      Bloom.prunedJoin(t(s, dir, "lineitem"), dim,
-          "l_partkey", "p_partkey", expectedItems = 20000L)
-        .groupBy("p_brand")
-        .agg((sumCents("l_extendedprice") / 100.0).as("revenue"),
-          count(lit(1)).as("n_lines"))
-        .orderBy("p_brand")
-    }),
-
-    // Deterministic Lloyd k-means (k=8, one update round) on embeddings;
-    // the oracle replays init/assign/update/assign as SQL CTEs.
-    "n4_kmeans" -> ((s, dir) => {
-      KMeans.lloyd(t(s, dir, "embeddings"), "vec_id", "embedding", 8, 1)
-    }),
-
-    // Product-quantization ANN: 4 subspaces x 16 Lloyd-trained codewords,
-    // asymmetric-distance top-10 per query (every 97th vector queries).
-    "n5_ann_pq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      // FIXED query panel (ids < 2000 covers every vector at the graded
-      // SFs — bit-identical output there — and pins the panel on scaled
-      // corpora): ADC is a per-query corpus scan by design (the PQ
-      // paper's Θ(panel·corpus) cost model), so a panel that grows with
-      // the corpus makes TOTAL work quadratic — measured to 27.7s at
-      // 30× and a heap OOM at 100× before this pin (docs/SCALING.md).
-      // Corpus growth belongs to the per-query axis; panel growth is a
-      // serving-rate axis, priced per query.
-      Pq.adcTopK(emb,
-          emb.filter(col("vec_id") % 97 === 0 && col("vec_id") < n5PanelPin),
-          "vec_id", "embedding", 4, 16, 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Train/eval decontamination: 5-gram leakage of each held-out doc
-    // (doc_id % 10 == 0) against the training split's n-gram vocabulary.
-    "t10_decontaminate" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.contamination(
-        docs.filter(col("doc_id") % 10 =!= 0),
-        docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", "text", 5)
-        .orderBy("doc_id")
-    }),
-
-    // Unigram LM quality score: mean token log-prob under the corpus's
-    // own add-one-smoothed unigram distribution.
-    "t11_lm_score" -> ((s, dir) => {
-      TextAnalysis.unigramLogProb(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Gopher-style repetition filters: duplicate-word, top-bigram, and
-    // duplicate-trigram fractions plus the filter verdict.
-    "t12_repetition" -> ((s, dir) => {
-      TextAnalysis.repetitionMetrics(t(s, dir, "documents"), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // Conditional two-way counts across a big-big join — TPC-H Q12 shape
-    // (adapted: this schema has no ship mode, so priority bands play the
-    // high/low role).
-    "q12_priority_lines" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      li.join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          // when(high, 0).otherwise(1), NOT when(!high, ...): a NULL
-          // priority must land in the low bucket exactly like the
-          // oracle's CASE ... ELSE 1
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Distribution query — TPC-H Q13: orders per customer, then customers
-    // per order count (left join keeps zero-order customers).
-    "q13_custdist" -> ((s, dir) => {
-      val cnt = t(s, dir, "orders").groupBy("o_custkey")
-        .agg(count(lit(1)).as("c_count"))
-      t(s, dir, "customer")
-        .join(cnt, col("c_custkey") === col("o_custkey"), "left")
-        .select(coalesce(col("c_count"), lit(0L)).as("c_count"))
-        .groupBy("c_count").agg(count(lit(1)).as("custdist"))
-        .orderBy(desc("custdist"), desc("c_count"))
-    }),
-
-    // Small-quantity-order revenue — TPC-H Q17 shape: lineitems under 20%
-    // of their part's average quantity. The per-part average joins back to
-    // the fact (aggregate-then-join, partial-aggregated on both sides);
-    // quantities compare in exact integer cents.
-    "q17_small_qty" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val qc = round(col("l_quantity") * 100).cast("long")
-      val avgq = li.groupBy("l_partkey")
-        .agg((sum(qc).cast("double") / count(lit(1))).as("avg_qc"))
-      li.join(avgq, "l_partkey")
-        .filter(qc.cast("double") < lit(0.2) * col("avg_qc"))
-        .agg((sumCents("l_extendedprice") / 700.0).as("avg_yearly"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // TPC-H Q8 shape: NATION_3's supplier-side share of discounted volume
-    // sold to EUROPE-region customers, by order year. Six-table join —
-    // the fact scan shuffles only for the two big equi-joins; nation /
-    // region / supplier dims are broadcast. Volume stays in exact integer
-    // cents x (100 - disc_pct) until the final share division.
-    "q8_market_share" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val ord = t(s, dir, "orders")
-        .filter(col("o_orderdate").between("1996-01-01", "1997-12-31"))
-      val n1 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nk"), col("n_regionkey"))
-      val n2 = t(s, dir, "nation")
-        .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation"))
-      val reg = t(s, dir, "region").filter(col("r_name") === "EUROPE")
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("c_custkey") === col("o_custkey"))
-        .join(broadcast(n1), col("c_nationkey") === col("c_nk"))
-        .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
-        .join(broadcast(t(s, dir, "supplier")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
-        .select(year(col("o_orderdate")).as("o_year"),
-          revCents.as("volc"), col("supp_nation"))
-        .groupBy("o_year")
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_3", col("volc"))
-            .otherwise(0L)).cast("double") /
-            sum(col("volc")).cast("double"), 6).as("mkt_share"))
-        .orderBy("o_year")
-    }),
-
-    // Set operators over derived key sets: customers active in 1996 vs
-    // 1997 — intersect (both), except (one side only). Distinct-key
-    // semantics, one hash shuffle each, counted per bucket.
-    "r7_set_ops" -> ((s, dir) => {
-      val ord = t(s, dir, "orders")
-      def yr(y: Int) = ord.filter(year(col("o_orderdate")) === y)
-        .select("o_custkey").distinct()
-      val y96 = yr(1996); val y97 = yr(1997)
-      val tagged = y96.intersect(y97).withColumn("bucket", lit("both"))
-        .unionByName(y96.except(y97).withColumn("bucket", lit("only_1996")))
-        .unionByName(y97.except(y96).withColumn("bucket", lit("only_1997")))
-      tagged.groupBy("bucket").agg(count(lit(1)).as("n_cust"))
-        .orderBy("bucket")
-    }),
-
-    // TPC-H Q21 shape (adapted: "late" = shipped >60 days after the order
-    // date, since this dataset has no receipt/commit dates): suppliers who
-    // were the SOLE late supplier on a multi-supplier finished order.
-    // Composes a semi join (another supplier exists on the order) with an
-    // anti join (no OTHER supplier was late) — both shuffle on l_orderkey,
-    // so AQE reuses one exchange; supplier/nation dims are broadcast.
-    "q21_late_supplier" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val late = li
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
-          col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .select("l_orderkey", "l_suppkey").distinct()
-      val others = li.select(col("l_orderkey").as("o_k"), col("l_suppkey").as("o_s"))
-      val cand = late
-        .join(others,
-          col("l_orderkey") === col("o_k") && col("l_suppkey") =!= col("o_s"),
-          "left_semi")
-        .join(late.select(col("l_orderkey").as("b_k"), col("l_suppkey").as("b_s")),
-          col("l_orderkey") === col("b_k") && col("l_suppkey") =!= col("b_s"),
-          "left_anti")
-      cand
-        .join(broadcast(t(s, dir, "supplier")), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(t(s, dir, "nation").filter(col("n_nationkey") < 13)),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy("s_name", "n_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name")).limit(100)
-    }),
-
-    // Dormant-rich-customer rollup — TPC-H Q22 shape: customers with
-    // above-average (positive) balance and no RECENT orders (none since
-    // 1998; every customer in this data has SOME order), counted per
-    // nation. Balance sums/averages stay in integer cents; the
-    // no-recent-orders check is an anti-join against the filtered orders.
-    "q22_dormant" -> ((s, dir) => {
-      val cust = t(s, dir, "customer")
-        .withColumn("bal_c", round(col("c_acctbal") * 100).cast("long"))
-      val avgPos = cust.filter(col("bal_c") > 0)
-        .agg((sum(col("bal_c")).cast("double") / count(lit(1))).as("avg_bal"))
-      cust.crossJoin(broadcast(avgPos))
-        .filter(col("bal_c").cast("double") > col("avg_bal"))
-        .join(t(s, dir, "orders").filter(col("o_orderdate") >= "1998-01-01"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("numcust"),
-          (sum(col("bal_c")) / 100.0).as("totacctbal"))
-        .orderBy("c_nationkey")
-    }),
-
-    // Corpus scrubbing: PII-ish patterns (emails, long digit runs) are
-    // counted and redacted; the digest of the redacted text is compared so
-    // the oracle certifies the full rewritten string, not just the counts.
-    "t9_redact" -> ((s, dir) => {
-      val emailPat = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+"
-      val numPat = "[0-9]{3,}"
-      val redacted = regexp_replace(
-        regexp_replace(col("text"), emailPat, "<EMAIL>"), numPat, "<NUM>")
-      t(s, dir, "documents").select(
-        col("doc_id"),
-        size(regexp_extract_all(col("text"), lit(emailPat), lit(0)))
-          .cast("long").as("n_email"),
-        size(regexp_extract_all(col("text"), lit(numPat), lit(0)))
-          .cast("long").as("n_num"),
-        md5(redacted).as("redacted_md5"))
-    }),
-
-    // Multimodal payload plumbing: bytes/sha/chunks + frame samples.
-    "m1_multimodal_stats" -> ((s, dir) => {
-      val assets = Multimodal.asAssets(t(s, dir, "documents"), "doc_id",
-        encode(col("text"), "UTF-8"), "text")
-      val withText = assets.join(
-        t(s, dir, "documents").select(col("doc_id").as("asset_id"), col("text")), "asset_id")
-      Multimodal.frameSamples(withText, "text", Seq(1, 101), 16)
-        .select(col("asset_id"), col("modality"), col("n_bytes"), col("sha"),
-          col("n_chunks"), col("frame_1"), col("frame_101"))
-    }),
-
-    // Multimodal decode path end-to-end: payload -> mapPartitions feature
-    // head (deterministic byte histogram standing in for the codec) ->
-    // per-bin corpus means. The oracle recomputes the histogram from
-    // characters, so the whole binary/batch/encoder plumbing is
-    // cross-engine-verified, not just spec'd.
-    "m2_decode_features" -> ((s, dir) => {
-      val assets = Multimodal.asAssets(t(s, dir, "documents"), "doc_id",
-        encode(col("text"), "UTF-8"), "text")
-      Multimodal.decodeFeatures(assets, 16)
-        .select(col("asset_id"), posexplode(col("features")).as(Seq("bin", "v")))
-        .groupBy("bin")
-        .agg(round(avg("v"), 6).as("mean_share"), count(lit(1)).as("n_assets"))
-        .orderBy("bin")
-    })
-  )
-
-  private final case class QpInputs(alphas: DataFrame, loadings: DataFrame,
-      fcov: DataFrame, ivol: DataFrame, bench: DataFrame)
-
-  /** The five QP-chain inputs, all derived from one eagerly-materialized
-    * orders x customer segment aggregate. Five union branches consume
-    * `base` inside a single job, so a lazy persist race-computes the
-    * join + aggregation up to five times (two consumers racing one cache
-    * fill never share the first fill); the eager localCheckpoint
-    * materializes it exactly once and truncates the lineage every branch
-    * re-plans over — same fix as minHashLsh's candidate frame and
-    * PortfolioOpt.certificate. The equal-weight benchmark reads the
-    * per-date segment count off the `tot` rollup rather than a window
-    * — one shuffle fewer in an already stage-latency-bound query.
-    */
-  private def qpInputs(s: SparkSession, dir: String): QpInputs = {
-    val o = t(s, dir, "orders")
-      .withColumn("date", to_date(col("o_orderdate")))
-      .withColumn("cents", round(col("o_totalprice") * 100).cast("long"))
-    val cust = t(s, dir, "customer")
-    val seg = o.join(broadcast(cust), o("o_custkey") === cust("c_custkey"))
-      .groupBy(col("date"), col("c_mktsegment").as("ticker"))
-      .agg((sum(col("cents")) / 1e10).as("alpha"), count(lit(1)).as("n"))
-    val tot = seg.groupBy("date").agg(
-      sum(col("alpha")).as("tot_alpha"), sum(col("n")).as("tot_n"),
-      count(lit(1)).as("n_seg"))
-    val base = seg.join(tot, "date").localCheckpoint(true)
-    val alphas = base.select(col("date"), col("ticker"), col("alpha"))
-    val loadings = base.select(col("date"), col("ticker"),
-        (col("alpha") / col("tot_alpha")).as("F1"),
-        (col("n") / col("tot_n")).as("F2"))
-      .unpivot(Array(col("date"), col("ticker")), Array(col("F1"), col("F2")),
-        "factor", "loading")
-    val fcovDim = s.createDataFrame(Seq(("F1", "F1", 0.04), ("F1", "F2", 0.01),
-        ("F2", "F1", 0.01), ("F2", "F2", 0.09)))
-      .toDF("factor_1", "factor_2", "covariance")
-    val fcov = base.select("date").distinct().crossJoin(broadcast(fcovDim))
-    val ivol = base.select(col("date"), col("ticker"),
-      (lit(0.05) + col("alpha")).as("idio_vol"))
-    val bench = base.select(col("date"), col("ticker"),
-      (lit(1.0) / col("n_seg")).as("weight"))
-    QpInputs(alphas, loadings, fcov, ivol, bench)
-  }
-
-  /** SQL fragment: the langId scoring CASE, mirrored from
-    * [[TextAnalysis.langId]].
-    */
-  private def langIdSql: String = {
-    val scores = TextAnalysis.stopwords.toSeq.sortBy(_._1).map { case (lang, dict) =>
-      val in = dict.map(w => s"'$w'").mkString(", ")
-      s"CAST(len(list_filter(string_split(lower(text),' '), t -> t IN ($in))) AS BIGINT) AS s_$lang"
-    }.mkString(",\n    ")
-    val zh = "CAST(len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) AS BIGINT) AS s_zh"
-    val langs = (TextAnalysis.stopwords.keys.toSeq.sorted :+ "zh")
-    val g = langs.map(l => s"s_$l").mkString("greatest(", ", ", ")")
-    val cases = langs.map(l => s"WHEN s_$l = g AND g > 0 THEN '$l'").mkString(" ")
-    s"""WITH sc AS (
-       |  SELECT doc_id, $scores,
-       |    $zh
-       |  FROM documents),
-       |gg AS (SELECT doc_id, sc.*, $g AS g FROM sc)
-       |SELECT doc_id, CASE $cases ELSE 'und' END AS lang_pred FROM gg""".stripMargin
-  }
-
-  /** SQL mirror of [[Dedup.minHashLsh]]: same universal-hash constants
-    * (embedded as literals from [[Dedup.hashParams]]), same banding, same
-    * exact-Jaccard verification.
-    */
-  private def minHashSql: String = {
-    val sigCols = (0 until 64).map { i =>
-      val (a, b) = Dedup.hashParams(i)
-      s"min(($a*base + $b) % ${Dedup.P}) AS mh$i"
-    }.mkString(",\n  ")
-    val bandSelects = (0 until 16).map { bnd =>
-      val cols = (0 until 4).map(j => s"CAST(mh${bnd * 4 + j} AS VARCHAR)").mkString(", ")
-      s"SELECT id, $bnd AS band, md5(concat_ws(',', $cols)) AS bkey FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH tok AS (SELECT doc_id AS id, string_split(text, ' ') AS ts FROM documents),
-       |idx AS (SELECT id, ts, unnest(range(0, greatest(len(ts)-2, 0))) AS i FROM tok),
-       |sh AS (SELECT DISTINCT id, array_to_string(ts[i+1:i+3], ' ') AS s FROM idx),
-       |bs AS (SELECT id, s,
-       |         CAST(concat('0x', substr(md5(concat('mh:', s)), 1, 15)) AS BIGINT) % ${Dedup.P} AS base
-       |       FROM sh),
-       |sig AS (SELECT id,
-       |  $sigCols
-       |  FROM bs GROUP BY 1),
-       |bands AS (
-       |  $bandSelects),
-       |cand AS (SELECT DISTINCT x.id AS a, y.id AS b FROM bands x
-       |         JOIN bands y ON x.band = y.band AND x.bkey = y.bkey AND x.id < y.id),
-       |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY 1),
-       |inter AS (SELECT c.a, c.b, count(*) AS cnt FROM cand c
-       |          JOIN sh sa ON sa.id = c.a JOIN sh sb ON sb.id = c.b AND sb.s = sa.s
-       |          GROUP BY 1, 2)
-       |SELECT a, b, round(CAST(cnt AS DOUBLE) / (sa.n + sb.n - cnt), 6) AS jaccard
-       |FROM inter JOIN sizes sa ON a = sa.id JOIN sizes sb ON b = sb.id
-       |WHERE round(CAST(cnt AS DOUBLE) / (sa.n + sb.n - cnt), 6) >= 0.5""".stripMargin
-  }
-
-  /** Shared oracle for d6/d6b: the same pair graph as d3, closed into
-    * components by a recursive CTE — label l reaches id if a path
-    * exists, so min(l) per id is exactly the min-label fixpoint BOTH of
-    * [[Dedup.canonicalize]]'s execution strategies (driver union-find
-    * and distributed min-label propagation) converge to.
-    */
-  private def d6ClustersSql: String =
-    s"""WITH RECURSIVE pairs AS (
-       |$minHashSql
-       |),
-       |edges AS (SELECT a AS src, b AS dst FROM pairs
-       |          UNION ALL SELECT b, a FROM pairs),
-       |lbl(id, l) AS (
-       |  SELECT doc_id, doc_id FROM documents
-       |  UNION
-       |  SELECT e.src, lbl.l FROM edges e JOIN lbl ON lbl.id = e.dst
-       |)
-       |SELECT id AS doc_id, min(l) AS canon_id, (min(l) <> id) AS is_dup
-       |FROM lbl GROUP BY id""".stripMargin
-
-  /** SQL mirror of [[Dedup.incrementalNearDup]] on the d8/d9 source
-    * split: both sides' signatures from the same universal-hash family,
-    * banded; in-batch pairs via the self-join (a < b), store matches via
-    * the cross join; exact-Jaccard verification on all candidates.
-    */
-  private def incNearDupSql: String = {
-    val sigCols = (0 until 64).map { i =>
-      val (a, b) = Dedup.hashParams(i)
-      s"min(($a*base + $b) % ${Dedup.P}) AS mh$i"
-    }.mkString(",\n  ")
-    val bandSelects = (0 until 16).map { bnd =>
-      val cols = (0 until 4).map(j => s"CAST(mh${bnd * 4 + j} AS VARCHAR)").mkString(", ")
-      s"SELECT id, in_store, $bnd AS band, md5(concat_ws(',', $cols)) AS bkey FROM sig"
-    }.mkString("\n  UNION ALL ")
-    s"""WITH tok AS (SELECT doc_id AS id,
-       |         regexp_matches(source, '^src1[0-9]$$') AS in_store,
-       |         string_split(text, ' ') AS ts FROM documents),
-       |idx AS (SELECT id, in_store, ts, unnest(range(0, greatest(len(ts)-2, 0))) AS i FROM tok),
-       |sh AS (SELECT DISTINCT id, in_store, array_to_string(ts[i+1:i+3], ' ') AS s FROM idx),
-       |bs AS (SELECT id, in_store, s,
-       |         CAST(concat('0x', substr(md5(concat('mh:', s)), 1, 15)) AS BIGINT) % ${Dedup.P} AS base
-       |       FROM sh),
-       |sig AS (SELECT id, in_store,
-       |  $sigCols
-       |  FROM bs GROUP BY 1, 2),
-       |bands AS (
-       |  $bandSelects),
-       |cand AS (
-       |  SELECT DISTINCT x.id AS a, y.id AS b, 'batch' AS vs FROM bands x
-       |    JOIN bands y ON x.band = y.band AND x.bkey = y.bkey AND x.id < y.id
-       |  WHERE NOT x.in_store AND NOT y.in_store
-       |  UNION
-       |  SELECT DISTINCT x.id, y.id, 'store' FROM bands x
-       |    JOIN bands y ON x.band = y.band AND x.bkey = y.bkey
-       |  WHERE NOT x.in_store AND y.in_store),
-       |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY 1),
-       |inter AS (SELECT c.a, c.b, c.vs, count(*) AS cnt FROM cand c
-       |          JOIN sh sa ON sa.id = c.a JOIN sh sb ON sb.id = c.b AND sb.s = sa.s
-       |          GROUP BY 1, 2, 3)
-       |SELECT a, b, vs, round(CAST(cnt AS DOUBLE) / (sa.n + sb.n - cnt), 6) AS jaccard
-       |FROM inter JOIN sizes sa ON a = sa.id JOIN sizes sb ON b = sb.id
-       |WHERE round(CAST(cnt AS DOUBLE) / (sa.n + sb.n - cnt), 6) >= 0.5""".stripMargin
-  }
-
-  /** SQL fragment: 60-bit SimHash pairs, mirrored from [[Dedup.simHashPairs]]. */
-  private def simHashSql: String = {
-    val bitSums = (0 until 60).map(j => s"sum(((wh >> $j) & 1)*2 - 1) AS b$j").mkString(", ")
-    val sig = (0 until 60).map(j => s"CASE WHEN b$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END")
-      .mkString(" + ")
-    s"""WITH wds AS (
-       |  SELECT DISTINCT doc_id AS id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |wh AS (SELECT id, CAST(concat('0x', substr(md5(concat('w:', w)), 1, 15)) AS BIGINT) AS wh FROM wds),
-       |bits AS (SELECT id, $bitSums FROM wh GROUP BY 1),
-       |sig AS (SELECT id, $sig AS simhash FROM bits),
-       |ch AS (SELECT id, simhash, unnest(range(0,4)) AS c FROM sig),
-       |ck AS (SELECT id, simhash, c, (simhash >> (15*c)) & 32767 AS ckey FROM ch),
-       |cand AS (SELECT DISTINCT x.id AS a, x.simhash AS ha, y.id AS b, y.simhash AS hb
-       |         FROM ck x JOIN ck y ON x.c = y.c AND x.ckey = y.ckey AND x.id < y.id)
-       |SELECT a, b, CAST(bit_count(xor(ha, hb)) AS BIGINT) AS hamming
-       |FROM cand WHERE bit_count(xor(ha, hb)) <= 3""".stripMargin
-  }
-
-  /** SQL fragment: the SRP bucket-code expression over a DOUBLE[] column
-    * `e`, mirrored from [[Similarity.srpCode]] (same md5-derived sign
-    * literals, same 9-d.p. rounding before the sign test).
-    */
-  private def srpCodeSql(numPlanes: Int, dim: Int = 64): String =
-    (0 until numPlanes).map { p =>
-      val signs = Similarity.planeSigns(p, dim).map(s => s"$s.0").mkString("[", ",", "]")
-      s"(CASE WHEN round(list_dot_product(e, $signs::DOUBLE[]), 9) > 0 THEN CAST(${1L << p} AS BIGINT) ELSE 0 END)"
-    }.mkString("\n    + ")
-
-  /** SQL mirror of [[Dedup.embCosinePairs]] (64-dim, 4 bands x 8 bits,
-    * cosine >= 0.4): same banded candidates, same exact verification.
-    */
-  private def embCosSql: String =
-    s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |code AS (SELECT id, ${srpCodeSql(32)} AS code FROM v),
-       |x AS (SELECT vec_id AS id, CAST(unnest(embedding) AS DOUBLE) AS v,
-       |        generate_subscripts(embedding, 1) AS i FROM embeddings),
-       |nrm AS (SELECT id, sqrt(sum(v*v)) AS n FROM x GROUP BY 1),
-       |ch AS (SELECT id, code, unnest(range(0, 4)) AS band FROM code),
-       |ck AS (SELECT id, band, (code >> (8*band)) & 255 AS ckey FROM ch),
-       |cand AS (SELECT DISTINCT xk.id AS a, yk.id AS b FROM ck xk
-       |         JOIN ck yk ON xk.band = yk.band AND xk.ckey = yk.ckey AND xk.id < yk.id),
-       |dots AS (SELECT c.a, c.b, sum(xa.v*xb.v) AS dot FROM cand c
-       |         JOIN x xa ON xa.id = c.a JOIN x xb ON xb.id = c.b AND xb.i = xa.i
-       |         GROUP BY 1, 2),
-       |cos AS (SELECT a, b, round(dot/(na.n*nb.n), 6) AS cos
-       |        FROM dots JOIN nrm na ON na.id = a JOIN nrm nb ON nb.id = b
-       |        WHERE na.n > 0 AND nb.n > 0)
-       |SELECT a, b, cos FROM cos WHERE cos >= 0.4""".stripMargin
-
-  /** SQL mirror of the d5b planted near-dup query (64-dim, 3 bands x 16
-    * bits, cosine >= 0.9): same deterministic planting (every 50th
-    * vector cloned under id + 2e9 with coordinate id%64 sign-flipped),
-    * same banded candidates, same exact verification.
-    */
-  private def embCosNearDupSql: String =
-    s"""WITH base AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |x0 AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-       |        generate_subscripts(embedding, 1) AS i FROM embeddings),
-       |clone AS (SELECT vec_id + 2000000000 AS id,
-       |          list(CASE WHEN i - 1 = vec_id % 64 THEN -v ELSE v END ORDER BY i) AS e
-       |          FROM x0 WHERE vec_id % 50 = 0 GROUP BY vec_id),
-       |v AS (SELECT id, e FROM base UNION ALL SELECT id, e FROM clone),
-       |code AS (SELECT id, ${srpCodeSql(48)} AS code FROM v),
-       |x AS (SELECT id, unnest(e) AS v, generate_subscripts(e, 1) AS i FROM v),
-       |nrm AS (SELECT id, sqrt(sum(v*v)) AS n FROM x GROUP BY 1),
-       |ch AS (SELECT id, code, unnest(range(0, 3)) AS band FROM code),
-       |ck AS (SELECT id, band, (code >> (16*band)) & 65535 AS ckey FROM ch),
-       |cand AS (SELECT DISTINCT xk.id AS a, yk.id AS b FROM ck xk
-       |         JOIN ck yk ON xk.band = yk.band AND xk.ckey = yk.ckey AND xk.id < yk.id),
-       |dots AS (SELECT c.a, c.b, sum(xa.v*xb.v) AS dot FROM cand c
-       |         JOIN x xa ON xa.id = c.a JOIN x xb ON xb.id = c.b AND xb.i = xa.i
-       |         GROUP BY 1, 2),
-       |cos AS (SELECT a, b, round(dot/(na.n*nb.n), 6) AS cos
-       |        FROM dots JOIN nrm na ON na.id = a JOIN nrm nb ON nb.id = b
-       |        WHERE na.n > 0 AND nb.n > 0)
-       |SELECT a, b, cos FROM cos WHERE cos >= 0.9""".stripMargin
-
-  /** One band's SRP key for the oracle (mirrors
-    * [[graft.operators.Similarity.srpBandCode]]): bit j of the band is
-    * plane `planeOffset + j` from the same globally-indexed family
-    * srpCodeSql draws on, weighted 2^j.
-    */
-  private def srpBandCodeSql(planeOffset: Int, bits: Int, dim: Int = 64): String =
-    (0 until bits).map { j =>
-      val signs = Similarity.planeSigns(planeOffset + j, dim)
-        .map(s => s"$s.0").mkString("[", ",", "]")
-      s"(CASE WHEN round(list_dot_product(e, $signs::DOUBLE[]), 9) > 0 THEN CAST(${1L << j} AS BIGINT) ELSE 0 END)"
-    }.mkString("\n    + ")
-
-  /** SQL mirror of the d5c wide-band query (64-dim, 3 bands x 28 bits,
-    * cosine >= 0.9): same planting as d5b, band keys computed PER BAND
-    * from the global plane family (84 plane bits cannot pack one long),
-    * same exact verification.
-    */
-  private def embCosWideBandSql: String =
-    s"""WITH base AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |x0 AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-       |        generate_subscripts(embedding, 1) AS i FROM embeddings),
-       |clone AS (SELECT vec_id + 2000000000 AS id,
-       |          list(CASE WHEN i - 1 = vec_id % 64 THEN -v ELSE v END ORDER BY i) AS e
-       |          FROM x0 WHERE vec_id % 50 = 0 GROUP BY vec_id),
-       |v AS (SELECT id, e FROM base UNION ALL SELECT id, e FROM clone),
-       |ck AS (SELECT id, 0 AS band, ${srpBandCodeSql(0, 28)} AS ckey FROM v
-       |       UNION ALL SELECT id, 1, ${srpBandCodeSql(28, 28)} FROM v
-       |       UNION ALL SELECT id, 2, ${srpBandCodeSql(56, 28)} FROM v),
-       |x AS (SELECT id, unnest(e) AS v, generate_subscripts(e, 1) AS i FROM v),
-       |nrm AS (SELECT id, sqrt(sum(v*v)) AS n FROM x GROUP BY 1),
-       |cand AS (SELECT DISTINCT xk.id AS a, yk.id AS b FROM ck xk
-       |         JOIN ck yk ON xk.band = yk.band AND xk.ckey = yk.ckey AND xk.id < yk.id),
-       |dots AS (SELECT c.a, c.b, sum(xa.v*xb.v) AS dot FROM cand c
-       |         JOIN x xa ON xa.id = c.a JOIN x xb ON xb.id = c.b AND xb.i = xa.i
-       |         GROUP BY 1, 2),
-       |cos AS (SELECT a, b, round(dot/(na.n*nb.n), 6) AS cos
-       |        FROM dots JOIN nrm na ON na.id = a JOIN nrm nb ON nb.id = b
-       |        WHERE na.n > 0 AND nb.n > 0)
-       |SELECT a, b, cos FROM cos WHERE cos >= 0.9""".stripMargin
-
-  /** SQL mirror of [[Similarity.lshTopK]] (8 planes, top-5): bucket-equal
-    * candidates, exact cosine rank within the bucket.
-    */
-  private def annLshSql: String =
-    s"""WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-       |code AS (SELECT vec_id, ${srpCodeSql(8)} AS code FROM v),
-       |x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-       |        generate_subscripts(embedding, 1) AS i FROM embeddings),
-       |nrm AS (SELECT vec_id, sqrt(sum(v*v)) AS n FROM x GROUP BY 1),
-       |pairs AS (SELECT q.vec_id AS qid, c.vec_id AS cid FROM code q
-       |          JOIN code c ON q.code = c.code AND q.vec_id <> c.vec_id
-       |          WHERE q.vec_id < 20),
-       |dots AS (SELECT p.qid, p.cid, sum(xq.v*xc.v) AS dot FROM pairs p
-       |         JOIN x xq ON xq.vec_id = p.qid JOIN x xc ON xc.vec_id = p.cid AND xc.i = xq.i
-       |         GROUP BY 1, 2),
-       |cos AS (SELECT qid, cid, round(dot/(a.n*b.n), 6) AS cos
-       |        FROM dots JOIN nrm a ON a.vec_id = qid JOIN nrm b ON b.vec_id = cid
-       |        WHERE a.n > 0 AND b.n > 0),
-       |r AS (SELECT qid, cid, cos,
-       |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-       |      FROM cos)
-       |SELECT qid, cid, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""".stripMargin
-
-  /** SQL mirror of [[Similarity.ivfTopK]] (centroids = vec_id < 16,
-    * nprobe 4, top-5): nearest-centroid inverted lists, probed exactly as
-    * the Spark plan does, same rounded-cosine rank orderings.
-    */
-  private def annIvfSql: String =
-    s"""WITH x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-       |        generate_subscripts(embedding, 1) AS i FROM embeddings),
-       |nrm AS (SELECT vec_id, sqrt(sum(v*v)) AS n FROM x GROUP BY 1),
-       |cx AS (SELECT vec_id, v, i FROM x WHERE vec_id < 16),
-       |ad AS (SELECT t.vec_id AS vid, c.vec_id AS cenid, sum(t.v*c.v) AS dot
-       |       FROM x t JOIN cx c ON c.i = t.i GROUP BY 1, 2),
-       |acos AS (SELECT vid, cenid, round(dot/(a.n*b.n), 6) AS cos FROM ad
-       |         JOIN nrm a ON a.vec_id = vid JOIN nrm b ON b.vec_id = cenid
-       |         WHERE a.n > 0 AND b.n > 0),
-       |ranked AS (SELECT vid, cenid,
-       |             row_number() OVER (PARTITION BY vid ORDER BY cos DESC, cenid) AS rn
-       |           FROM acos),
-       |assign AS (SELECT vid AS cid, cenid FROM ranked WHERE rn = 1),
-       |probes AS (SELECT vid AS qid, cenid FROM ranked WHERE rn <= 4 AND vid < 20),
-       |cand AS (SELECT p.qid, a.cid FROM probes p
-       |         JOIN assign a ON a.cenid = p.cenid AND a.cid <> p.qid),
-       |dots AS (SELECT c.qid, c.cid, sum(xq.v*xc.v) AS dot FROM cand c
-       |         JOIN x xq ON xq.vec_id = c.qid JOIN x xc ON xc.vec_id = c.cid AND xc.i = xq.i
-       |         GROUP BY 1, 2),
-       |cos2 AS (SELECT qid, cid, round(dot/(a.n*b.n), 6) AS cos
-       |         FROM dots JOIN nrm a ON a.vec_id = qid JOIN nrm b ON b.vec_id = cid),
-       |r AS (SELECT qid, cid, cos,
-       |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-       |      FROM cos2)
-       |SELECT qid, cid, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""".stripMargin
-
-  /** Shared by `w5_rolling_covar` (single window per key) and
-    * `w5_covar_chunked` (overlapping-chunk parallel form) — both must
-    * produce exactly this.
-    */
-  private def w5CovarSql: String =
-    """SELECT l_returnflag, l_orderkey, l_linenumber,
-      |  round(CASE WHEN count(*) OVER win >= 21 THEN covar_samp(l_quantity, l_extendedprice) OVER win END, 4) AS roll_cov
-      |FROM lineitem
-      |WINDOW win AS (PARTITION BY l_returnflag ORDER BY l_shipdate, l_orderkey, l_linenumber, l_extendedprice, l_quantity ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)""".stripMargin
-
-  /** Shared by `w6_rolling_ols` (flatMapGroups fold) and
-    * `w6_rolling_ols_native` (pure window algebra) — both must produce
-    * exactly this.
-    */
-  private def w6OlsSql: String =
-    """WITH s AS (
-      |  SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
-      |    CAST(round(l_quantity) AS BIGINT) AS x,
-      |    CAST(round(l_discount*100) AS BIGINT) AS z,
-      |    CAST(round(l_extendedprice*100) AS BIGINT) AS y
-      |  FROM lineitem),
-      |w AS (
-      |  SELECT l_suppkey, l_orderkey, l_linenumber,
-      |    count(*) OVER win AS cnt,
-      |    CAST(sum(x) OVER win AS DOUBLE) AS sx0,
-      |    CAST(sum(z) OVER win AS DOUBLE) AS sx1,
-      |    CAST(sum(y) OVER win AS DOUBLE) AS b0,
-      |    CAST(sum(x*x) OVER win AS DOUBLE) AS s00,
-      |    CAST(sum(x*z) OVER win AS DOUBLE) AS s01,
-      |    CAST(sum(z*z) OVER win AS DOUBLE) AS s11,
-      |    CAST(sum(x*y) OVER win AS DOUBLE) AS b1,
-      |    CAST(sum(z*y) OVER win AS DOUBLE) AS b2
-      |  FROM s
-      |  WINDOW win AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, y, x ROWS BETWEEN 251 PRECEDING AND CURRENT ROW)),
-      |c AS (
-      |  SELECT l_suppkey, l_orderkey, l_linenumber, cnt,
-      |    252.0*(s00*s11 - s01*s01) - sx0*(sx0*s11 - s01*sx1) + sx1*(sx0*s01 - s00*sx1) AS det,
-      |    b0*(s00*s11 - s01*s01) - sx0*(b1*s11 - s01*b2) + sx1*(b1*s01 - s00*b2) AS det0,
-      |    252.0*(b1*s11 - s01*b2) - b0*(sx0*s11 - s01*sx1) + sx1*(sx0*b2 - b1*sx1) AS det1,
-      |    252.0*(s00*b2 - b1*s01) - sx0*(sx0*b2 - b1*sx1) + b0*(sx0*s01 - s00*sx1) AS det2
-      |  FROM w)
-      |SELECT l_suppkey, l_orderkey, l_linenumber,
-      |  CASE WHEN cnt = 252 THEN round((det0/det)/100.0, 6) END AS alpha,
-      |  CASE WHEN cnt = 252 THEN round((det1/det)/100.0, 6) END AS beta_x,
-      |  CASE WHEN cnt = 252 THEN round((det2/det)/100.0, 6) END AS beta_z
-      |FROM c""".stripMargin
-
-  /** DuckDB mirror of Spark's `round(x, n)`: Spark rounds the SHORTEST
-    * DECIMAL REPR of the double half-away-from-zero (BigDecimal.valueOf),
-    * DuckDB's plain round(double) rounds the exact binary value — they
-    * disagree when the shortest repr lands on an n-decimal halfway point.
-    * Round-tripping through VARCHAR reproduces the repr; scale 20 holds
-    * every repr digit at these magnitudes (see the w1_pct_change note).
-    */
-  private def roundSql(e: String, n: Int): String =
-    s"CAST(round(CAST(CAST($e AS VARCHAR) AS DECIMAL(38,20)), $n) AS DOUBLE)"
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(cast(round(l_quantity*100) AS BIGINT))/100.0 AS sum_qty,
-        |  sum(cast(round(l_extendedprice*100) AS BIGINT))/100.0 AS sum_base_price,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "s1_scan_project" ->
-      """SELECT l_orderkey AS okey, CAST(l_linenumber AS BIGINT) AS line_no,
-        |  CAST(l_shipdate AS DATE) AS ship_date
-        |FROM lineitem ORDER BY 1, 2""".stripMargin,
-    "j1_broadcast_join" ->
-      """SELECT c_mktsegment AS mktsegment, count(*) AS n_orders,
-        |  sum(cast(round(o_totalprice*100) AS BIGINT))/100.0 AS sum_total
-        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q5_star_join" ->
-      """SELECT r_name AS region_name, n_name AS nation_name,
-        |  sum(cast(round(l_extendedprice*100) AS BIGINT))/100.0 AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // pct_change rounding mirrors Spark's Round exactly: Spark rounds the
-    // SHORTEST DECIMAL REPR of the double (BigDecimal.valueOf =
-    // Double.toString) half-away-from-zero, while DuckDB's round(double)
-    // rounds the exact binary value — they disagree when the shortest
-    // repr lands on a 6-decimal halfway point (found at sf0.1:
-    // 8.0046875 → Spark 8.004688, plain DuckDB 8.004687). Round-tripping
-    // through VARCHAR reproduces the shortest repr; DECIMAL round is
-    // half-away-from-zero; the final DOUBLE cast restores the dtype.
-    // DECIMAL(38,20) holds every shortest-repr digit of these magnitudes
-    // — a narrower scale re-rounds the repr and flips near-halfway cases
-    // the other way (measured with DECIMAL(30,15): 9 cells).
-    "w1_pct_change" ->
-      """SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |  CAST(round(CAST(CAST(
-        |    value / lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1
-        |  AS VARCHAR) AS DECIMAL(38,20)), 6) AS DOUBLE) AS pct_change
-        |FROM events ORDER BY 1, 2, 3""".stripMargin,
-    "a3_distinct" ->
-      "SELECT DISTINCT l_suppkey, l_returnflag FROM lineitem",
-    "a4_global_minmax" ->
-      """SELECT CAST(min(o_orderdate) AS DATE) AS min_date,
-        |  CAST(max(o_orderdate) AS DATE) AS max_date, count(*) AS n
-        |FROM orders""".stripMargin,
-    "w2_reversal_signal" ->
-      """SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |  round((CASE WHEN count(*) OVER win >= 21 THEN sum(ln(1+value)) OVER win END) * -1, 6) AS signal
-        |FROM events
-        |WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "w3_rolling_std" ->
-      """SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |  round(CASE WHEN count(*) OVER win >= 21 THEN stddev_samp(value) OVER win END, 6) AS roll_std
-        |FROM events
-        |WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDING AND CURRENT ROW)""".stripMargin,
-    "w5_rolling_covar" -> w5CovarSql,
-    "w5_covar_chunked" -> w5CovarSql,
-    "w4_ewma" ->
-      """WITH s AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS DOUBLE) AS rn
-        |  FROM events)
-        |SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |  round(sum(value * power(0.9885140203528962, -rn)) OVER win
-        |        / sum(power(0.9885140203528962, -rn)) OVER win, 6) AS ewma
-        |FROM s
-        |WINDOW win AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-    "w4_ewma_native" ->
-      """WITH s AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    CAST(row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS DOUBLE) AS rn
-        |  FROM events)
-        |SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id,
-        |  round(sum(value * power(0.9885140203528962, -rn)) OVER win
-        |        / sum(power(0.9885140203528962, -rn)) OVER win, 6) AS ewma
-        |FROM s
-        |WINDOW win AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin,
-    "w7_rolling_beta" ->
-      """WITH s AS (
-        |  SELECT l_suppkey, l_shipdate, l_orderkey, l_linenumber,
-        |    CAST(round(l_quantity) AS BIGINT) AS x,
-        |    CAST(round(l_extendedprice*100) AS BIGINT) AS y
-        |  FROM lineitem),
-        |w AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber,
-        |    count(*) OVER win AS cnt,
-        |    CAST(sum(x) OVER win AS DOUBLE) AS sx,
-        |    CAST(sum(y) OVER win AS DOUBLE) AS sy,
-        |    CAST(sum(x*x) OVER win AS DOUBLE) AS sxx,
-        |    CAST(sum(x*y) OVER win AS DOUBLE) AS sxy
-        |  FROM s
-        |  WINDOW win AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber, y, x ROWS BETWEEN 62 PRECEDING AND CURRENT ROW)),
-        |c AS (
-        |  SELECT l_suppkey, l_orderkey, l_linenumber, cnt, sx, sy,
-        |    (63.0*sxy - sx*sy) / (63.0*sxx - sx*sx) AS beta
-        |  FROM w)
-        |SELECT l_suppkey, l_orderkey, l_linenumber,
-        |  CASE WHEN cnt = 63 THEN round(((sy - beta*sx)/63.0)/100.0, 6) END AS alpha,
-        |  CASE WHEN cnt = 63 THEN round(beta/100.0, 6) END AS beta
-        |FROM c""".stripMargin,
-    "w6_rolling_ols" -> w6OlsSql,
-    "w6_rolling_ols_native" -> w6OlsSql,
-    "a6_global_zscore" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, CAST(round(o_totalprice*100) AS HUGEINT) AS cents FROM orders),
-        |st AS (
-        |  SELECT CAST(sum(cents) AS DOUBLE) AS s, CAST(sum(cents*cents) AS DOUBLE) AS ss,
-        |    CAST(count(*) AS DOUBLE) AS n
-        |  FROM o)
-        |SELECT o_orderkey,
-        |  round((CAST(cents AS DOUBLE) - s/n) / sqrt((ss - s*s/n)/(n - 1)), 6) AS zscore
-        |FROM o, st""".stripMargin,
-    "a7_equal_weight" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS odate,
-        |  1.0/count(*) OVER (PARTITION BY o_orderdate) AS weight
-        |FROM orders""".stripMargin,
-    "w11_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-    "p_filter_suite" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, CAST(l_shipdate AS DATE) AS ship_date
-        |FROM lineitem
-        |WHERE l_returnflag = 'R'
-        |  AND CAST(l_shipdate AS DATE) BETWEEN DATE '1995-01-01' AND DATE '1998-12-31'
-        |  AND l_linenumber IN (1, 2, 3)
-        |  AND l_quantity IS NOT NULL""".stripMargin,
-    "j2_left_join_nulls" ->
-      """SELECT o_orderkey, c_name, c_acctbal
-        |FROM orders LEFT JOIN (SELECT * FROM customer WHERE c_acctbal > 5000) c
-        |  ON o_custkey = c_custkey""".stripMargin,
-    "p7_dropnulls" ->
-      """SELECT o_orderkey, c_name, c_acctbal
-        |FROM orders LEFT JOIN (SELECT * FROM customer WHERE c_acctbal > 5000) c
-        |  ON o_custkey = c_custkey
-        |WHERE c_name IS NOT NULL""".stripMargin,
-    "p10_lit_null" ->
-      """SELECT p_partkey, p_name AS part_name, 'reversal' AS signal, 0.05 AS ic,
-        |  CAST(NULL AS DOUBLE) AS placeholder
-        |FROM part""".stripMargin,
-    "a1_collect_sorted" ->
-      """SELECT CAST(c_nationkey AS INTEGER) AS nationkey,
-        |  string_agg(c_name, '|' ORDER BY c_name) AS members, count(*) AS n
-        |FROM customer GROUP BY 1""".stripMargin,
-    "a8_horizontal_sum" ->
-      """SELECT l_orderkey, l_linenumber, l_extendedprice,
-        |  (CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT))) / 10000.0 AS disc_price,
-        |  (CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)) * (100 + CAST(round(l_tax*100) AS BIGINT))) / 1000000.0 AS charge
-        |FROM lineitem""".stripMargin,
-    "r1_union" ->
-      """SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem WHERE l_returnflag = 'R'
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, l_returnflag FROM lineitem WHERE l_returnflag = 'A'""".stripMargin,
-    "r2_pivot" ->
-      """SELECT l_linestatus,
-        |  sum(CASE WHEN l_returnflag='A' THEN CAST(round(l_quantity*100) AS BIGINT) END)/100.0 AS "A",
-        |  sum(CASE WHEN l_returnflag='N' THEN CAST(round(l_quantity*100) AS BIGINT) END)/100.0 AS "N",
-        |  sum(CASE WHEN l_returnflag='R' THEN CAST(round(l_quantity*100) AS BIGINT) END)/100.0 AS "R"
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "r3_unpivot" ->
-      """WITH p AS (
-        |  SELECT l_linestatus,
-        |    sum(CASE WHEN l_returnflag='A' THEN CAST(round(l_quantity*100) AS BIGINT) END)/100.0 AS a,
-        |    sum(CASE WHEN l_returnflag='N' THEN CAST(round(l_quantity*100) AS BIGINT) END)/100.0 AS n,
-        |    sum(CASE WHEN l_returnflag='R' THEN CAST(round(l_quantity*100) AS BIGINT) END)/100.0 AS r
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_linestatus, 'A' AS returnflag, a AS sum_qty FROM p
-        |UNION ALL SELECT l_linestatus, 'N', n FROM p
-        |UNION ALL SELECT l_linestatus, 'R', r FROM p""".stripMargin,
-    "r4_explode_words" ->
-      """SELECT doc_id, word, count(*) AS n FROM (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents) t
-        |GROUP BY 1, 2""".stripMargin,
-    "r5_recode" ->
-      """SELECT event_id,
-        |  CASE event_type WHEN 'click' THEN 'CLICK' WHEN 'view' THEN 'VIEW'
-        |    WHEN 'purchase' THEN 'BUY' ELSE 'OTHER' END AS kind
-        |FROM events""".stripMargin,
-    "f_scalar_suite" ->
-      """SELECT p_partkey,
-        |  upper(p_type) AS type_upper,
-        |  lower(p_brand) AS brand_lower,
-        |  substr(p_name, 1, 5) AS name5,
-        |  CAST(length(p_name) AS BIGINT) AS name_len,
-        |  concat(p_brand, '-', p_type) AS brand_type,
-        |  abs(CAST(round(p_retailprice*100) AS BIGINT)) AS cents_abs,
-        |  power(CAST(p_size AS DOUBLE), 2.0) AS size_sq,
-        |  coalesce(nullif(p_brand, 'Brand#13'), 'OTHER') AS brand_or_other
-        |FROM part""".stripMargin,
-    "f2_fuzzy_pairs" ->
-      """SELECT CAST(x.s_suppkey AS BIGINT) AS a, CAST(y.s_suppkey AS BIGINT) AS b,
-        |  CAST(levenshtein(x.s_name, y.s_name) AS BIGINT) AS dist
-        |FROM supplier x JOIN supplier y ON x.s_suppkey < y.s_suppkey
-        |WHERE levenshtein(x.s_name, y.s_name) <= 1
-        |ORDER BY a, b""".stripMargin,
-    "a12_stats_suite" ->
-      """WITH m AS (
-        |  SELECT l_returnflag,
-        |    CAST(count(*) AS DOUBLE) AS n,
-        |    CAST(sum(CAST(round(l_quantity) AS HUGEINT)) AS DOUBLE) AS sq,
-        |    CAST(sum(CAST(round(l_extendedprice*100) AS HUGEINT)) AS DOUBLE) AS sp,
-        |    CAST(sum(CAST(round(l_quantity) AS HUGEINT)
-        |           * CAST(round(l_quantity) AS HUGEINT)) AS DOUBLE) AS sqq,
-        |    CAST(sum(CAST(round(l_extendedprice*100) AS HUGEINT)
-        |           * CAST(round(l_extendedprice*100) AS HUGEINT)) AS DOUBLE) AS spp,
-        |    CAST(sum(CAST(round(l_quantity) AS HUGEINT)
-        |           * CAST(round(l_extendedprice*100) AS HUGEINT)) AS DOUBLE) AS sqp
-        |  FROM lineitem GROUP BY 1)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n_rows,
-        |  round((n * sqp - sq * sp) /
-        |    (sqrt(n * sqq - sq * sq) * sqrt(n * spp - sp * sp)), 6) AS corr_qp,
-        |  round((sqp - sq * sp / n) / (n - 1) / 100.0, 6) AS covar_samp,
-        |  round((sqp - sq * sp / n) / n / 100.0, 6) AS covar_pop,
-        |  round((sqq - sq * sq / n) / (n - 1), 6) AS var_qty,
-        |  round(sqrt((spp - sp * sp / n) / (n - 1)) / 100.0, 6) AS stddev_price
-        |FROM m ORDER BY l_returnflag""".stripMargin,
-    "a13_trimmed_stats" ->
-      """WITH b AS (
-        |  SELECT l_returnflag,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
-        |    row_number() OVER (PARTITION BY l_returnflag
-        |      ORDER BY CAST(round(l_extendedprice * 100) AS BIGINT),
-        |        l_orderkey, l_linenumber) AS rn,
-        |    count(*) OVER (PARTITION BY l_returnflag) AS n
-        |  FROM lineitem)
-        |SELECT l_returnflag, count(*) AS n_kept,
-        |  min(cents) / 100.0 AS lo, max(cents) / 100.0 AS hi,
-        |  round(sum(cents) / 100.0 / count(*), 6) AS trimmed_mean
-        |FROM b WHERE rn > floor(n * 5 / 100) AND rn <= n - floor(n * 5 / 100)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "f_json_props" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-        |  min(CAST(json_extract(props, '$.k') AS BIGINT)) AS min_k,
-        |  max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "f_date_parts" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(year(l_shipdate) AS INTEGER) AS y,
-        |  CAST(month(l_shipdate) AS INTEGER) AS m,
-        |  CAST(day(l_shipdate) AS INTEGER) AS d,
-        |  CAST(l_shipdate AS DATE) AS ship_date
-        |FROM lineitem""".stripMargin,
-    "e1_hourly_rollup" ->
-      """SELECT epoch_us(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS hour_us,
-        |  count(*) AS n_events, count(DISTINCT user_id) AS n_users,
-        |  sum(CAST(round(value*100) AS BIGINT))/100.0 AS sum_value
-        |FROM events GROUP BY 1""".stripMargin,
-    "e2_sessionize" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |    CAST(round(value*100) AS BIGINT) AS cents
-        |  FROM events),
-        |g AS (
-        |  SELECT *, CASE
-        |      WHEN ts_us - lag(ts_us) OVER w > 1800000000 THEN 1
-        |      WHEN lag(ts_us) OVER w IS NULL THEN 1 ELSE 0 END AS is_new
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-        |sid AS (
-        |  SELECT *, CAST(sum(is_new) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM g)
-        |SELECT user_id, session_id, count(*) AS n_events,
-        |  min(ts_us) AS start_us, max(ts_us) AS end_us, sum(cents)/100.0 AS sum_value
-        |FROM sid GROUP BY 1, 2""".stripMargin,
-    "j12_asof_join" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us, event_id, value, event_type
-        |  FROM events),
-        |clicks AS (SELECT user_id, ts_us, event_id FROM ev WHERE event_type = 'click'),
-        |p0 AS (SELECT user_id, ts_us AS pts_us, value AS purchase_value,
-        |         row_number() OVER (PARTITION BY user_id, ts_us ORDER BY event_id DESC) AS rn
-        |       FROM ev WHERE event_type = 'purchase'),
-        |p AS (SELECT user_id, pts_us, purchase_value FROM p0 WHERE rn = 1)
-        |SELECT c.user_id, c.ts_us, c.event_id, p.purchase_value
-        |FROM clicks c ASOF LEFT JOIN p
-        |  ON c.user_id = p.user_id AND p.pts_us <= c.ts_us""".stripMargin,
-    "w10_point_in_time" ->
-      """WITH chg AS (
-        |  SELECT user_id AS k, CAST(ts AS DATE) AS d, ts, event_id,
-        |    CASE WHEN event_type = 'signup' THEN 'Added' ELSE 'Removed' END AS action
-        |  FROM events WHERE event_type IN ('signup', 'error')),
-        |cur AS (
-        |  SELECT k FROM (
-        |    SELECT k, action,
-        |      row_number() OVER (PARTITION BY k ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM chg) x
-        |  WHERE rn = 1 AND action = 'Added'),
-        |u AS (
-        |  SELECT k, d, 0 AS is_probe, ts, event_id, action FROM chg
-        |  UNION ALL
-        |  SELECT keys.k, days.d, 1, NULL, NULL, NULL
-        |  FROM (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events) days
-        |  CROSS JOIN (SELECT DISTINCT k FROM chg) keys),
-        |nx AS (
-        |  SELECT k, d, is_probe,
-        |    first_value(action IGNORE NULLS) OVER (PARTITION BY k
-        |      ORDER BY d, is_probe, ts, event_id
-        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_action
-        |  FROM u)
-        |SELECT d, k AS user_id FROM nx
-        |WHERE is_probe = 1
-        |  AND (next_action = 'Removed'
-        |       OR (next_action IS NULL AND k IN (SELECT k FROM cur)))""".stripMargin,
-    "q3_shipping_priority" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS odate,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)))/10000.0 AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND CAST(o_orderdate AS DATE) < DATE '1998-06-15'
-        |  AND CAST(l_shipdate AS DATE) > DATE '1998-06-15'
-        |GROUP BY 1, 2
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q4_semi_join" ->
-      """SELECT o_orderpriority AS priority, count(*) AS n_orders
-        |FROM orders
-        |WHERE EXISTS (
-        |  SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey AND l_returnflag = 'R')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q16_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment
-        |FROM customer
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM orders
-        |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')""".stripMargin,
-    "w13_ranking_suite" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  CAST(rank() OVER w AS BIGINT) AS rnk,
-        |  CAST(dense_rank() OVER w AS BIGINT) AS drnk,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  lead(c_custkey) OVER w AS next_custkey,
-        |  lag(c_custkey) OVER w AS prev_custkey,
-        |  round(percent_rank() OVER w, 6) AS pct_rank,
-        |  round(cume_dist() OVER w, 6) AS cume
-        |FROM customer
-        |WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)""".stripMargin,
-    "w14_range_window" ->
-      """SELECT o_orderkey, o_custkey,
-        |  CAST(epoch(o_orderdate) AS BIGINT) AS order_epoch,
-        |  sum(CAST(round(o_totalprice*100) AS BIGINT)) OVER (
-        |    PARTITION BY o_custkey ORDER BY CAST(epoch(o_orderdate) AS BIGINT)
-        |    RANGE BETWEEN 2505600 PRECEDING AND CURRENT ROW) / 100.0
-        |    AS trail30
-        |FROM orders""".stripMargin,
-    "q2_min_cost" ->
-      """WITH unit AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    round(CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)) AS DOUBLE)
-        |      / sum(CAST(round(l_quantity*100) AS BIGINT)), 6) AS unit_cost
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'AMERICA'
-        |  GROUP BY 1, 2)
-        |SELECT l_partkey, l_suppkey, unit_cost
-        |FROM (SELECT *, min(unit_cost) OVER (PARTITION BY l_partkey) AS mn
-        |      FROM unit) u
-        |WHERE unit_cost = mn
-        |ORDER BY l_partkey, l_suppkey""".stripMargin,
-    "q6_forecast_revenue" ->
-      """SELECT sum(CAST(round(l_extendedprice*100) AS BIGINT) * CAST(round(l_discount*100) AS BIGINT))/10000.0 AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |WHERE CAST(l_shipdate AS DATE) BETWEEN DATE '1996-01-01' AND DATE '1996-12-31'
-        |  AND CAST(round(l_discount*100) AS BIGINT) BETWEEN 3 AND 7
-        |  AND l_quantity < 500""".stripMargin,
-    "q18_big_orders" ->
-      """SELECT l_orderkey,
-        |  sum(CAST(round(l_quantity*100) AS BIGINT))/100.0 AS total_qty,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |GROUP BY 1
-        |HAVING sum(CAST(round(l_quantity*100) AS BIGINT))/100.0 > 250
-        |ORDER BY total_qty DESC, l_orderkey LIMIT 10""".stripMargin,
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT) * (100 - CAST(round(l_discount*100) AS BIGINT)))/10000.0 AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE l_returnflag = 'R'
-        |GROUP BY 1, 2
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "t1_langid" -> langIdSql,
-    "t2_text_quality" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(string_split(text, ' '), t -> length(t))) AS DOUBLE) AS sum_len,
-        |    CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS BIGINT) AS n_punct,
-        |    CAST(len(list_filter(list_transform(string_split(text, ' '), t -> lower(t)),
-        |      t -> t IN ('the', 'a', 'and', 'of', 'to', 'in', 'is', 'for'))) AS BIGINT) AS en_hits
-        |  FROM documents)
-        |SELECT doc_id, n_chars, n_words,
-        |  round(sum_len / n_words, 6) AS avg_word_len,
-        |  round(CAST(n_punct AS DOUBLE) / n_chars, 6) AS punct_ratio,
-        |  round(CAST(en_hits AS DOUBLE) / n_words, 6) AS stopword_ratio,
-        |  round((CAST(en_hits AS DOUBLE) / n_words) * 0.5 +
-        |    (CASE WHEN n_words >= 20 THEN 0.5 ELSE 0.0 END), 6) AS quality_score
-        |FROM f""".stripMargin,
-    "t3_token_count" ->
-      """SELECT doc_id,
-        |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9 ]')) AS BIGINT) AS n_bpeish_tokens
-        |FROM documents""".stripMargin,
-    "x1_stratified_sample" ->
-      s"""WITH lp AS (SELECT * FROM ($langIdSql) t),
-         |b AS (SELECT doc_id, lang_pred AS lang,
-         |        CAST(concat('0x', substr(md5(concat('sample:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-         |          % 1000000 AS bkt
-         |      FROM lp)
-         |SELECT doc_id, lang FROM b
-         |WHERE bkt < (CASE lang WHEN 'en' THEN 250000 WHEN 'de' THEN 500000
-         |             ELSE 800000 END)""".stripMargin,
-    "x2_weighted_sample" ->
-      s"""WITH d AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS wt FROM documents),
-        |k AS (SELECT doc_id, wt,
-        |    ${roundSql(
-            "ln((CAST(CAST(concat('0x', substr(md5(concat('ws:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) AS DOUBLE) + 1.0) " +
-            "/ 1152921504606846976.0) / CAST(wt AS DOUBLE)", 9)} AS wskey
-        |  FROM d WHERE wt > 0),
-        |r AS (SELECT doc_id, wt,
-        |    row_number() OVER (ORDER BY wskey DESC, doc_id ASC) AS rank
-        |  FROM k)
-        |SELECT doc_id, wt, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 100 ORDER BY rank""".stripMargin,
-    "x3_hash_split" ->
-      """WITH b AS (SELECT doc_id, n_chars,
-        |    CAST(concat('0x', substr(md5(concat('sample:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-        |      % 1000000 AS bkt
-        |  FROM documents)
-        |SELECT CASE WHEN bkt < 800000 THEN 'train'
-        |            WHEN bkt < 900000 THEN 'val' ELSE 'test' END AS split,
-        |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM b GROUP BY 1 ORDER BY 1""".stripMargin,
-    "x4_source_cap" ->
-      """WITH r AS (SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source
-        |      ORDER BY CAST(concat('0x', substr(md5(concat('cap:', CAST(doc_id AS VARCHAR))), 1, 15)) AS BIGINT) ASC,
-        |        doc_id ASC) AS rk
-        |  FROM documents)
-        |SELECT doc_id, source FROM r WHERE rk <= 15
-        |ORDER BY source, doc_id""".stripMargin,
-    "x5_temperature_sample" ->
-      """WITH c AS (SELECT source, count(*) AS n_total FROM documents GROUP BY 1),
-        |r AS (SELECT source, n_total,
-        |    pow(CAST(n_total AS DOUBLE) / CAST((SELECT sum(n_total) FROM c) AS DOUBLE),
-        |      1.0/2.0 - 1.0) AS raw
-        |  FROM c),
-        |n AS (SELECT source, n_total,
-        |    CAST(round(raw / (SELECT max(raw) FROM r) * 1000000, 0) AS BIGINT) AS thr
-        |  FROM r),
-        |k AS (SELECT d.source, count(*) AS n_kept
-        |  FROM documents d JOIN n USING (source)
-        |  WHERE CAST(concat('0x', substr(md5(concat('temp:', CAST(d.doc_id AS VARCHAR))), 1, 15)) AS BIGINT)
-        |      % 1000000 < n.thr
-        |  GROUP BY 1)
-        |SELECT n.source, n.n_total, n.thr, COALESCE(k.n_kept, 0) AS n_kept
-        |FROM n LEFT JOIN k USING (source) ORDER BY n.source""".stripMargin,
-    "x6_pack_sequences" ->
-      """WITH tok AS (SELECT doc_id AS id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n FROM documents),
-        |cum AS (SELECT id, n, sum(n) OVER (ORDER BY id) AS c FROM tok),
-        |spans AS (SELECT id, n, c,
-        |    CAST(floor((c - n) / 512.0) AS BIGINT) AS b0,
-        |    CAST(floor((c - 1) / 512.0) AS BIGINT) AS b1
-        |  FROM cum WHERE n > 0),
-        |x AS (SELECT id, n, c, unnest(generate_series(b0, b1)) AS seq_id FROM spans)
-        |SELECT seq_id, count(*) AS n_docs,
-        |  CAST(sum(LEAST(c, (seq_id + 1) * 512) - GREATEST(c - n, seq_id * 512)) AS BIGINT) AS n_tokens,
-        |  min(id) AS first_doc, max(id) AS last_doc
-        |FROM x GROUP BY 1 ORDER BY 1""".stripMargin,
-    "t15_inverted_index" ->
-      """WITH p AS (SELECT DISTINCT doc_id, w AS term
-        |    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |          FROM documents) u
-        |    WHERE w <> ''),
-        |d AS (SELECT term, count(*) AS df FROM p GROUP BY 1
-        |      HAVING count(*) >= 3 AND count(*) <=
-        |        0.8 * (SELECT count(DISTINCT doc_id) FROM documents))
-        |SELECT term, df,
-        |  string_agg(CAST(doc_id AS VARCHAR), '|' ORDER BY doc_id) AS postings
-        |FROM p JOIN d USING (term)
-        |GROUP BY term, df ORDER BY term""".stripMargin,
-    "t6_length_percentiles" ->
-      s"""WITH lp AS (SELECT * FROM ($langIdSql) t),
-         |ln AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n FROM documents)
-         |SELECT lang_pred AS lang, count(*) AS n_docs,
-         |  round(quantile_cont(n, 0.5), 6) AS p50,
-         |  round(quantile_cont(n, 0.9), 6) AS p90,
-         |  round(quantile_cont(n, 0.99), 6) AS p99
-         |FROM ln JOIN lp USING (doc_id) GROUP BY 1""".stripMargin,
-    "t4_fingerprint" ->
-      """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-        |FROM documents""".stripMargin,
-    "t5_corpus_stats" ->
-      s"""WITH lp AS (SELECT * FROM ($langIdSql) t),
-         |tk AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS toks,
-         |         md5(text) AS h
-         |       FROM documents),
-         |dup AS (SELECT doc_id, toks,
-         |          CASE WHEN doc_id <> min(doc_id) OVER (PARTITION BY h) THEN 1 ELSE 0 END AS d
-         |        FROM tk)
-         |SELECT lang_pred AS lang, count(*) AS n_docs,
-         |  CAST(sum(toks) AS BIGINT) AS n_tokens, CAST(sum(d) AS BIGINT) AS n_dups
-         |FROM dup JOIN lp USING (doc_id) GROUP BY 1""".stripMargin,
-    "d1_dedup_exact" ->
-      """WITH c AS (
-        |  SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(text)) AS canon_id
-        |  FROM documents)
-        |SELECT doc_id, canon_id, doc_id <> canon_id AS is_dup FROM c""".stripMargin,
-    "d8_dedup_incremental" ->
-      """WITH seen AS (
-        |  SELECT DISTINCT md5(text) AS digest FROM documents
-        |  WHERE regexp_matches(source, '^src1[0-9]$')),
-        |inc AS (
-        |  SELECT doc_id, md5(text) AS digest FROM documents
-        |  WHERE NOT regexp_matches(source, '^src1[0-9]$')),
-        |el AS (
-        |  SELECT doc_id, digest,
-        |    min(doc_id) OVER (PARTITION BY digest) AS first_id FROM inc)
-        |SELECT el.doc_id, el.digest,
-        |  CASE WHEN seen.digest IS NOT NULL THEN 'dup_of_store'
-        |       WHEN el.doc_id <> el.first_id THEN 'dup_in_batch'
-        |       ELSE 'kept' END AS status
-        |FROM el LEFT JOIN seen ON el.digest = seen.digest""".stripMargin,
-    "d9_incremental_neardup" -> incNearDupSql,
-    "d2_dedup_jaccard" ->
-      """WITH tok AS (SELECT doc_id AS id, string_split(text, ' ') AS ts FROM documents),
-        |idx AS (SELECT id, ts, unnest(range(0, greatest(len(ts)-2, 0))) AS i FROM tok),
-        |sh AS (SELECT DISTINCT id, array_to_string(ts[i+1:i+3], ' ') AS s FROM idx),
-        |sizes AS (SELECT id, count(*) AS n FROM sh GROUP BY 1),
-        |inter AS (SELECT x.id AS a, y.id AS b, count(*) AS c FROM sh x
-        |          JOIN sh y ON x.s = y.s AND x.id < y.id GROUP BY 1, 2)
-        |SELECT a, b, round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 6) AS jaccard
-        |FROM inter JOIN sizes sa ON a = sa.id JOIN sizes sb ON b = sb.id
-        |WHERE round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 6) >= 0.5""".stripMargin,
-    "d3_dedup_minhash" -> minHashSql,
-    "d6_dedup_clusters" -> d6ClustersSql,
-    // The distributed-branch twin and the star-contraction variant both
-    // compute the SAME unique fixpoint, so they share d6's recursive-CTE
-    // oracle verbatim.
-    "d6b_dedup_clusters_dist" -> d6ClustersSql,
-    "d6c_dedup_clusters_star" -> d6ClustersSql,
-    "d6d_dedup_clusters_hybrid" -> d6ClustersSql,
-    "d6e_dedup_clusters_auto" -> d6ClustersSql,
-    "d7_dedup_segments" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |i AS (SELECT doc_id, ws,
-        |    unnest(range(0, CAST(ceil(len(ws) / 10.0) AS BIGINT))) AS ci FROM w),
-        |c AS (SELECT doc_id, ci,
-        |    array_to_string(list_slice(ws, ci*10 + 1, ci*10 + 10), ' ') AS seg
-        |  FROM i),
-        |k AS (SELECT doc_id, ci, seg,
-        |    row_number() OVER (PARTITION BY seg ORDER BY doc_id, ci) AS rn
-        |  FROM c)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segments,
-        |  CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-        |  coalesce(array_to_string(
-        |    list(seg ORDER BY ci) FILTER (WHERE rn = 1), ' '), '') AS kept_text
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "d4_dedup_simhash" -> simHashSql,
-    "d5_dedup_embcos" -> embCosSql,
-    "d5b_neardup_embcos" -> embCosNearDupSql,
-    "d5c_neardup_wideband" -> embCosWideBandSql,
-    "n2_ann_lsh" -> annLshSql,
-    "n3_ann_ivf" -> annIvfSql,
-    "n1_ann_cosine_topk" ->
-      """WITH x AS (SELECT vec_id, CAST(unnest(embedding) AS DOUBLE) AS v,
-        |             generate_subscripts(embedding, 1) AS i FROM embeddings),
-        |nrm AS (SELECT vec_id, sqrt(sum(v*v)) AS n FROM x GROUP BY 1),
-        |dots AS (SELECT q.vec_id AS qid, c.vec_id AS cid, sum(q.v*c.v) AS dot
-        |         FROM x q JOIN x c ON q.i = c.i
-        |         WHERE q.vec_id < 20 AND q.vec_id <> c.vec_id GROUP BY 1, 2),
-        |cos AS (SELECT qid, cid, round(dot/(a.n*b.n), 6) AS cos
-        |        FROM dots JOIN nrm a ON a.vec_id = qid JOIN nrm b ON b.vec_id = cid
-        |        WHERE a.n > 0 AND b.n > 0),
-        |r AS (SELECT qid, cid, cos,
-        |        row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rank
-        |      FROM cos)
-        |SELECT qid, cid, cos, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 5""".stripMargin,
-    "m1_multimodal_stats" ->
-      """SELECT doc_id AS asset_id, 'text' AS modality,
-        |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  sha256(text) AS sha,
-        |  CAST(ceil(octet_length(encode(text)) / 4096.0) AS BIGINT) AS n_chunks,
-        |  lower(hex(encode(substr(text, 1, 16)))) AS frame_1,
-        |  lower(hex(encode(substr(text, 101, 16)))) AS frame_101
-        |FROM documents""".stripMargin,
-    // the corpus is verified ASCII (octet_length(encode()) = length()
-    // for every row), so per-character codepoints equal the UTF-8 bytes
-    // the Spark decoder bins
-    "m2_decode_features" ->
-      """WITH bins AS (SELECT CAST(unnest(range(0, 16)) AS INT) AS bin),
-        |ch AS (SELECT doc_id, text,
-        |    CAST(unnest(range(1, length(text) + 1)) AS INT) AS i FROM documents),
-        |cnt AS (SELECT doc_id,
-        |    CAST(floor(ascii(substring(text, i, 1)) / 16) AS INT) AS bin,
-        |    count(*) AS k
-        |  FROM ch GROUP BY 1, 2),
-        |grid AS (SELECT d.doc_id, b.bin,
-        |    CAST(coalesce(c.k, 0) AS DOUBLE) / greatest(length(d.text), 1) AS v
-        |  FROM documents d CROSS JOIN bins b
-        |  LEFT JOIN cnt c ON c.doc_id = d.doc_id AND c.bin = b.bin)
-        |SELECT bin, round(avg(v), 6) AS mean_share, count(*) AS n_assets
-        |FROM grid GROUP BY 1 ORDER BY 1""".stripMargin,
-    // The QP *solve* has no SQL form; its solution certificate does. DuckDB
-    // independently rebuilds the per-date asset universe from the source
-    // tables and pins the feasibility/consistency/OPTIMALITY constants that
-    // a correct solver must produce: Σw = 1 (simplex), w >= 0, zero residual
-    // between the reported active risk and the risk recomputed Spark-side
-    // from the raw factor inputs via an independent algebraic path, zero
-    // KKT stationarity gap on held assets (g = α − λΣw constant where
-    // w > 0), and non-violated complementary slackness where w = 0 — a
-    // feasible-but-suboptimal weight vector now hash-mismatches.
-    "l5_qp_certificate" ->
-      """WITH seg AS (
-        |  SELECT CAST(o_orderdate AS DATE) AS date, c_mktsegment AS ticker
-        |  FROM orders JOIN customer ON o_custkey = c_custkey
-        |  GROUP BY 1, 2)
-        |SELECT date, count(*) AS n_assets,
-        |  string_agg(ticker, ',' ORDER BY ticker) AS tickers,
-        |  CAST(1.0 AS DOUBLE) AS sum_w,
-        |  TRUE AS min_w_nonneg,
-        |  CAST(0.0 AS DOUBLE) AS risk_resid,
-        |  CAST(0.0 AS DOUBLE) AS stat_resid,
-        |  TRUE AS comp_ok
-        |FROM seg GROUP BY 1""".stripMargin,
-    "a10_rollup" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |  coalesce(l_linestatus, 'ALL') AS status,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT))/100.0 AS revenue,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |ORDER BY 1, 2""".stripMargin,
-    "a11_cube" ->
-      """SELECT coalesce(l_returnflag, 'ALL') AS flag,
-        |  coalesce(l_linestatus, 'ALL') AS status,
-        |  sum(CAST(round(l_quantity*100) AS BIGINT))/100.0 AS sum_qty,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY 1, 2""".stripMargin,
-    "q15_top_supplier" ->
-      """WITH rev AS (SELECT l_suppkey,
-        |    CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT) *
-        |      (100 - CAST(round(l_discount*100) AS BIGINT))) AS BIGINT)
-        |      AS total_revc
-        |  FROM lineitem
-        |  WHERE l_shipdate BETWEEN '1996-01-01' AND '1996-03-31'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_revc
-        |FROM supplier JOIN rev ON s_suppkey = l_suppkey
-        |WHERE total_revc = (SELECT max(total_revc) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q9_profit" ->
-      """SELECT n_name AS nation, CAST(year(l_shipdate) AS BIGINT) AS o_year,
-        |  CAST(sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |        * (100 - CAST(round(l_discount*100) AS BIGINT)) * 100
-        |      - CAST(round(p_retailprice*100) AS BIGINT)
-        |        * CAST(round(l_quantity*100) AS BIGINT) * 60) AS DOUBLE)
-        |    / 1000000.0 AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE '%bolt%'
-        |GROUP BY 1, 2 ORDER BY nation ASC, o_year DESC""".stripMargin,
-    "q11_important_stock" ->
-      """WITH v AS (SELECT l_suppkey, l_partkey,
-        |    sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount*100) AS BIGINT))) AS valc
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT l_suppkey, l_partkey, CAST(valc AS DOUBLE)/10000.0 AS value
-        |FROM v, (SELECT sum(valc) AS totc FROM v) t
-        |WHERE valc * 10000 > totc
-        |ORDER BY value DESC, l_suppkey, l_partkey""".stripMargin,
-    "q20_half_supply" ->
-      """WITH sp AS (SELECT l_partkey, l_suppkey,
-        |    sum(CAST(round(l_quantity*100) AS BIGINT)) AS qtyc
-        |  FROM lineitem WHERE year(l_shipdate) = 1995 GROUP BY 1, 2),
-        |tp AS (SELECT l_partkey, sum(qtyc) AS totqc FROM sp GROUP BY 1)
-        |SELECT s_suppkey, s_name, count(*) AS n_dominated_parts
-        |FROM sp JOIN tp USING (l_partkey)
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE qtyc * 2 > totqc
-        |GROUP BY 1, 2 ORDER BY s_suppkey""".stripMargin,
-    "q7_nation_volume" ->
-      """SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-        |  CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount*100) AS BIGINT)))/10000.0 AS volume,
-        |  count(*) AS n_lines
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation cn ON c_nationkey = cn.n_nationkey
-        |JOIN nation sn ON s_nationkey = sn.n_nationkey
-        |WHERE sn.n_name <> cn.n_name
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q14_promo_share" ->
-      """WITH r AS (
-        |  SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year, p_type,
-        |    CAST(round(l_extendedprice*100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount*100) AS BIGINT)) AS rev
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey)
-        |SELECT ship_year,
-        |  sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END)/10000.0 AS promo_revenue,
-        |  sum(rev)/10000.0 AS total_revenue,
-        |  round(100.0 * sum(CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END)
-        |        / sum(rev), 6) AS promo_pct
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q19_or_filters" ->
-      """SELECT
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT)
-        |      * (100 - CAST(round(l_discount*100) AS BIGINT)))/10000.0 AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-        |       AND CAST(round(l_quantity) AS BIGINT) BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-        |       AND CAST(round(l_quantity) AS BIGINT) BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#4' AND p_size BETWEEN 1 AND 35
-        |       AND CAST(round(l_quantity) AS BIGINT) BETWEEN 20 AND 30)""".stripMargin,
-    // BM25 constants are interpolated from the SAME Scala doubles the
-    // Spark plan evaluates: (1.2 + 1.0) is NOT the double literal 2.2,
-    // and a hand-written 2.2 in the SQL would diverge at the last ulp.
-    "t7_tfidf" ->
-      s"""WITH terms AS (
-        |  SELECT doc_id AS id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT id, term, count(*) AS tf FROM terms WHERE term <> '' GROUP BY 1, 2),
-        |dl AS (SELECT id, sum(tf) AS len FROM tf GROUP BY 1),
-        |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-        |g AS (SELECT count(*) AS n, CAST(sum(len) AS DOUBLE)/count(*) AS avglen FROM dl),
-        |scored AS (
-        |  SELECT id, term, tf,
-        |    round(tf * (ln((n + 1.0)/(df + 1.0)) + 1.0), 6) AS score,
-        |    round(ln(1.0 + (n - df + 0.5)/(df + 0.5))
-        |      * ((tf * ${1.2 + 1.0}) / (tf + ${1.2} * (${1.0 - 0.75} + ${0.75} * (len/avglen)))), 6) AS bm25
-        |  FROM tf JOIN dl USING(id) JOIN dfq USING(term) CROSS JOIN g),
-        |r AS (SELECT id, term, tf, score, bm25,
-        |  row_number() OVER (PARTITION BY id ORDER BY score DESC, term) AS rank FROM scored)
-        |SELECT id AS doc_id, term, tf, score, bm25, CAST(rank AS BIGINT) AS rank
-        |FROM r WHERE rank <= 3""".stripMargin,
-    "t8_hll_cardinality" ->
-      s"""WITH w AS (SELECT lang, unnest(string_split(text, ' ')) AS w FROM documents),
-        |ww AS (SELECT lang, w FROM w WHERE w <> ''),
-        |h AS (SELECT lang, w,
-        |  CAST(concat('0x', substr(md5(concat('hll:', w)), 1, 15)) AS BIGINT) AS h FROM ww),
-        |r AS (SELECT lang, h % 256 AS bucket, ${Sketch.rho52Sql("(h >> 8)")} AS rho FROM h),
-        |reg AS (SELECT lang, bucket, max(rho) AS m_b FROM r GROUP BY 1, 2),
-        |g AS (SELECT lang, count(*) AS n_present,
-        |  sum(CAST(1 AS BIGINT) << (53 - m_b)) AS s_present FROM reg GROUP BY 1),
-        |e AS (SELECT lang, n_present, 256 - n_present AS zeros,
-        |  ${Sketch.alphaNumeratorRepr}
-        |    / CAST(s_present + (256 - n_present) * (CAST(1 AS BIGINT) << 53) AS DOUBLE) AS raw
-        |  FROM g),
-        |est AS (SELECT lang, n_present,
-        |  round(CASE WHEN raw <= 640.0 AND zeros > 0
-        |        THEN 256.0 * ln(256.0 / zeros) ELSE raw END, 4) AS hll_est FROM e),
-        |ex AS (SELECT lang, count(DISTINCT w) AS n_exact FROM ww GROUP BY 1)
-        |SELECT ex.lang, n_exact, n_present, hll_est
-        |FROM ex JOIN est USING(lang) ORDER BY 1""".stripMargin,
-    "t13_heavy_hitters" -> {
-      val hashes = (0 until 4).map(r =>
-        s"SELECT w, $r AS r, CAST(concat('0x', substr(md5(concat('cm$r:', w)), 1, 15)) AS BIGINT) % 1024 AS b FROM wf")
-        .mkString("\n  UNION ALL ")
-      s"""WITH wd AS (SELECT unnest(string_split(text, ' ')) AS w FROM documents),
-        |wf AS (SELECT w FROM wd WHERE w <> ''),
-        |pairs AS (
-        |  $hashes),
-        |sk AS (SELECT r, b, count(*) AS cnt FROM pairs GROUP BY 1, 2),
-        |vp AS (SELECT DISTINCT w, r, b FROM pairs),
-        |est AS (SELECT vp.w, min(coalesce(cnt, 0)) AS est
-        |  FROM vp LEFT JOIN sk USING(r, b) GROUP BY 1),
-        |ex AS (SELECT w, count(*) AS exact FROM wf GROUP BY 1),
-        |j AS (SELECT est.w AS word, CAST(est.est AS BIGINT) AS est,
-        |    CAST(ex.exact AS BIGINT) AS exact,
-        |    row_number() OVER (ORDER BY est.est DESC, est.w ASC) AS rank
-        |  FROM est JOIN ex ON est.w = ex.w)
-        |SELECT word, est, exact, CAST(rank AS BIGINT) AS rank
-        |FROM j WHERE rank <= 20 ORDER BY rank""".stripMargin
-    },
-    "t14_hist_quantile" ->
-      s"""WITH h AS (SELECT lang AS g, CAST(floor(n_chars / 16.0) AS BIGINT) AS b,
-        |    count(*) AS cnt FROM documents GROUP BY 1, 2),
-        |c AS (SELECT g, b, cnt,
-        |    sum(cnt) OVER (PARTITION BY g ORDER BY b) AS cum FROM h),
-        |t AS (SELECT g, max(cum) AS n FROM c GROUP BY 1),
-        |x AS (SELECT c.g, b, cnt, cum, n, q FROM c JOIN t USING (g)
-        |  CROSS JOIN (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)),
-        |    (CAST(0.99 AS DOUBLE))) v(q))
-        |SELECT g AS lang, q,
-        |  ${roundSql("b*16.0 + 16.0*((q*n) - (cum - cnt))/cnt", 6)} AS est
-        |FROM x WHERE cum >= q*n AND (cum - cnt) < q*n
-        |ORDER BY lang, q""".stripMargin,
-    "j13_range_join" ->
-      """WITH iv AS (
-        |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo,
-        |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 61 AS INTEGER) AS hi
-        |  FROM orders WHERE o_orderkey % 199 = 0)
-        |SELECT o_orderkey, count(*) AS n_lines,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT))/100.0 AS revenue
-        |FROM iv JOIN lineitem ON CAST(l_shipdate AS DATE) BETWEEN lo AND hi
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "j13b_range_join_topk" ->
-      """WITH iv AS (
-        |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo,
-        |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 61 AS INTEGER) AS hi
-        |  FROM orders WHERE o_orderkey % 199 = 0),
-        |j AS (
-        |  SELECT l.l_orderkey, l.l_linenumber, iv.o_orderkey,
-        |    CAST(round(l.l_extendedprice*100) AS BIGINT) AS cents,
-        |    row_number() OVER (
-        |      PARTITION BY l.l_orderkey, l.l_linenumber,
-        |        CAST(l.l_shipdate AS DATE), CAST(round(l.l_extendedprice*100) AS BIGINT)
-        |      ORDER BY iv.lo DESC, iv.o_orderkey) AS rn
-        |  FROM iv JOIN lineitem l ON CAST(l.l_shipdate AS DATE) BETWEEN iv.lo AND iv.hi)
-        |SELECT o_orderkey, count(*) AS n_lines, sum(cents)/100.0 AS revenue
-        |FROM j WHERE rn <= 3 GROUP BY 1 ORDER BY 1""".stripMargin,
-    // the shuffled fallback computes j13b's exact query through the
-    // over-budget plan branch — one oracle, two plans, same answer
-    "j13f_range_join_topk_shuffled" ->
-      """WITH iv AS (
-        |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo,
-        |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 61 AS INTEGER) AS hi
-        |  FROM orders WHERE o_orderkey % 199 = 0),
-        |j AS (
-        |  SELECT l.l_orderkey, l.l_linenumber, iv.o_orderkey,
-        |    CAST(round(l.l_extendedprice*100) AS BIGINT) AS cents,
-        |    row_number() OVER (
-        |      PARTITION BY l.l_orderkey, l.l_linenumber,
-        |        CAST(l.l_shipdate AS DATE), CAST(round(l.l_extendedprice*100) AS BIGINT)
-        |      ORDER BY iv.lo DESC, iv.o_orderkey) AS rn
-        |  FROM iv JOIN lineitem l ON CAST(l.l_shipdate AS DATE) BETWEEN iv.lo AND iv.hi)
-        |SELECT o_orderkey, count(*) AS n_lines, sum(cents)/100.0 AS revenue
-        |FROM j WHERE rn <= 3 GROUP BY 1 ORDER BY 1""".stripMargin,
-    "j13c_interval_coalesce" ->
-      """WITH iv AS (
-        |  SELECT o_custkey, CAST(o_orderdate AS DATE) AS lo,
-        |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 61 AS INTEGER) AS hi
-        |  FROM orders),
-        |s AS (SELECT *, max(hi) OVER (PARTITION BY o_custkey ORDER BY lo, hi
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS reach FROM iv),
-        |f AS (SELECT *, CASE WHEN reach IS NULL OR lo > reach THEN 1 ELSE 0 END AS nw FROM s),
-        |g AS (SELECT *, sum(nw) OVER (PARTITION BY o_custkey ORDER BY lo, hi
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span FROM f)
-        |SELECT o_custkey, min(lo) - DATE '1970-01-01' AS lo_d,
-        |  max(hi) - DATE '1970-01-01' AS hi_d, count(*) AS n_merged
-        |FROM g GROUP BY o_custkey, span ORDER BY 1, 2, 3""".stripMargin,
-    // the sweep computes j13b's exact query through the other engine
-    // path (k-bounded aggregate vs window cap) — one oracle, two plans
-    "j13d_range_join_sweep" ->
-      """WITH iv AS (
-        |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo,
-        |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 61 AS INTEGER) AS hi
-        |  FROM orders WHERE o_orderkey % 199 = 0),
-        |j AS (
-        |  SELECT l.l_orderkey, l.l_linenumber, iv.o_orderkey,
-        |    CAST(round(l.l_extendedprice*100) AS BIGINT) AS cents,
-        |    row_number() OVER (
-        |      PARTITION BY l.l_orderkey, l.l_linenumber,
-        |        CAST(l.l_shipdate AS DATE), CAST(round(l.l_extendedprice*100) AS BIGINT)
-        |      ORDER BY iv.lo DESC, iv.o_orderkey) AS rn
-        |  FROM iv JOIN lineitem l ON CAST(l.l_shipdate AS DATE) BETWEEN iv.lo AND iv.hi)
-        |SELECT o_orderkey, count(*) AS n_lines, sum(cents)/100.0 AS revenue
-        |FROM j WHERE rn <= 3 GROUP BY 1 ORDER BY 1""".stripMargin,
-    "j13e_range_join_agg" ->
-      """WITH iv AS (
-        |  SELECT o_orderkey, CAST(o_orderdate AS DATE) AS lo,
-        |    CAST(o_orderdate AS DATE) + CAST(o_orderkey % 61 AS INTEGER) AS hi
-        |  FROM orders WHERE o_orderkey % 199 = 0)
-        |SELECT l_orderkey AS pk, l_linenumber AS pl,
-        |  CAST(l_shipdate AS DATE) - DATE '1970-01-01' AS sd_d,
-        |  CAST(round(l_extendedprice*100) AS BIGINT) AS cents,
-        |  count(*) AS n_iv,
-        |  min(lo - DATE '1970-01-01') AS lo_min_d,
-        |  max(hi - DATE '1970-01-01') AS hi_max_d
-        |FROM iv JOIN lineitem ON CAST(l_shipdate AS DATE) BETWEEN lo AND hi
-        |GROUP BY 1, 2, 3, 4 ORDER BY 1, 2, 3, 4""".stripMargin,
-    "j14_bloom_join" ->
-      """SELECT p_brand,
-        |  sum(CAST(round(l_extendedprice*100) AS BIGINT))/100.0 AS revenue,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_size <= 2
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "n4_kmeans" ->
-      s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |init AS (SELECT id AS cid, e AS c FROM v ORDER BY id LIMIT 8),
-        |a1 AS (SELECT v.id, i.cid,
-        |    ${roundSql("list_dot_product(v.e, v.e) - 2.0*list_dot_product(v.e, i.c) + list_dot_product(i.c, i.c)", 9)} AS d
-        |  FROM v CROSS JOIN init i),
-        |asg1 AS (SELECT id, cid FROM (
-        |    SELECT id, cid, row_number() OVER (PARTITION BY id ORDER BY d, cid) AS rn FROM a1)
-        |  WHERE rn = 1),
-        |comp AS (SELECT id, unnest(range(0, 64)) AS i, e FROM v),
-        |compv AS (SELECT id, i, e[i+1] AS x FROM comp),
-        |cen AS (SELECT cid, i, ${roundSql("sum(x)/count(*)", 9)} AS c
-        |  FROM compv JOIN asg1 USING(id) GROUP BY 1, 2),
-        |init_comp AS (SELECT cid, i, c[i+1] AS c
-        |  FROM (SELECT cid, unnest(range(0, 64)) AS i, c FROM init)),
-        |empty AS (SELECT cid FROM init EXCEPT SELECT DISTINCT cid FROM asg1),
-        |full_cen AS (SELECT * FROM cen
-        |  UNION ALL SELECT ic.cid, ic.i, ic.c FROM init_comp ic JOIN empty USING(cid)),
-        |ccs AS (SELECT cid, sum(c*c) AS cc FROM full_cen GROUP BY 1),
-        |vcs AS (SELECT compv.id, full_cen.cid, sum(x*c) AS vc
-        |  FROM compv JOIN full_cen USING(i) GROUP BY 1, 2),
-        |vvs AS (SELECT id, list_dot_product(e, e) AS vv FROM v),
-        |a2 AS (SELECT vvs.id, vcs.cid, ${roundSql("vv - 2.0*vc + cc", 9)} AS d
-        |  FROM vvs JOIN vcs USING(id) JOIN ccs USING(cid)),
-        |res AS (SELECT id, cid, d,
-        |  row_number() OVER (PARTITION BY id ORDER BY d, cid) AS rn FROM a2)
-        |SELECT id AS vec_id, cid AS cluster, d AS dist2 FROM res WHERE rn = 1""".stripMargin,
-    "n5_ann_pq" ->
-      s"""WITH v AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-        |comp AS (SELECT id, CAST(i // 16 AS INT) AS sub, CAST(i % 16 AS INT) AS j, e[i+1] AS x
-        |  FROM (SELECT id, e, unnest(range(0, 64)) AS i FROM v)),
-        |init AS (SELECT id AS cid, e FROM v ORDER BY id LIMIT 16),
-        |icomp AS (SELECT CAST(i // 16 AS INT) AS sub, cid, CAST(i % 16 AS INT) AS j, e[i+1] AS c
-        |  FROM (SELECT cid, e, unnest(range(0, 64)) AS i FROM init)),
-        |a1 AS (SELECT comp.id, comp.sub, icomp.cid,
-        |    ${roundSql("sum((x - c) * (x - c))", 9)} AS d
-        |  FROM comp JOIN icomp ON comp.sub = icomp.sub AND comp.j = icomp.j
-        |  GROUP BY 1, 2, 3),
-        |asg1 AS (SELECT id, sub, cid FROM (
-        |    SELECT id, sub, cid, row_number() OVER (PARTITION BY id, sub ORDER BY d, cid) AS rn FROM a1)
-        |  WHERE rn = 1),
-        |cen AS (SELECT comp.sub, asg1.cid, comp.j, ${roundSql("sum(x)/count(*)", 9)} AS c
-        |  FROM comp JOIN asg1 ON comp.id = asg1.id AND comp.sub = asg1.sub
-        |  GROUP BY 1, 2, 3),
-        |emptyc AS (SELECT DISTINCT sub, cid FROM icomp
-        |  EXCEPT SELECT DISTINCT sub, cid FROM cen),
-        |fcen AS (SELECT * FROM cen
-        |  UNION ALL SELECT ic.sub, ic.cid, ic.j, ic.c FROM icomp ic JOIN emptyc USING(sub, cid)),
-        |a2 AS (SELECT comp.id, comp.sub, fcen.cid,
-        |    ${roundSql("sum((x - c) * (x - c))", 9)} AS d
-        |  FROM comp JOIN fcen ON comp.sub = fcen.sub AND comp.j = fcen.j
-        |  GROUP BY 1, 2, 3),
-        |codes AS (SELECT id, sub, cid FROM (
-        |    SELECT id, sub, cid, row_number() OVER (PARTITION BY id, sub ORDER BY d, cid) AS rn FROM a2)
-        |  WHERE rn = 1),
-        |q AS (SELECT id FROM v WHERE id % 97 = 0 AND id < $n5PanelPin),
-        |lut AS (SELECT comp.id AS qid, comp.sub, fcen.cid,
-        |    ${roundSql("sum((x - c) * (x - c))", 9)} AS d
-        |  FROM comp JOIN q ON comp.id = q.id
-        |  JOIN fcen ON comp.sub = fcen.sub AND comp.j = fcen.j
-        |  GROUP BY 1, 2, 3),
-        |ad AS (SELECT qid, codes.id, ${roundSql("sum(d)", 6)} AS adist
-        |  FROM codes JOIN lut ON codes.sub = lut.sub AND codes.cid = lut.cid
-        |  WHERE qid <> codes.id GROUP BY 1, 2),
-        |r AS (SELECT qid, id, adist,
-        |    row_number() OVER (PARTITION BY qid ORDER BY adist, id) AS rn FROM ad)
-        |SELECT qid AS query_id, id AS vec_id, adist, CAST(rn AS BIGINT) AS rank
-        |FROM r WHERE rn <= 10 ORDER BY 1, 4""".stripMargin,
-    "t10_decontaminate" ->
-      """WITH tok AS (SELECT doc_id AS id, string_split(text, ' ') AS ts FROM documents),
-        |idx AS (SELECT id, ts, unnest(range(0, greatest(len(ts)-4, 0))) AS i FROM tok),
-        |sh AS (SELECT id, array_to_string(ts[i+1:i+5], ' ') AS s FROM idx),
-        |hg AS (SELECT id,
-        |  CAST(concat('0x', substr(md5(concat('ng:', s)), 1, 15)) AS BIGINT) AS g FROM sh),
-        |tr AS (SELECT DISTINCT g FROM hg WHERE id % 10 <> 0),
-        |ev AS (SELECT DISTINCT id, g FROM hg WHERE id % 10 = 0),
-        |hits AS (SELECT ev.id, count(*) AS n_grams,
-        |    sum(CASE WHEN tr.g IS NULL THEN 0 ELSE 1 END) AS n_hits
-        |  FROM ev LEFT JOIN tr ON ev.g = tr.g GROUP BY 1),
-        |ids AS (SELECT DISTINCT doc_id AS id FROM documents WHERE doc_id % 10 = 0)
-        |SELECT ids.id AS doc_id,
-        |  coalesce(n_grams, 0) AS n_grams,
-        |  CAST(coalesce(n_hits, 0) AS BIGINT) AS n_hits,
-        |  round(CAST(n_hits AS DOUBLE) / n_grams, 6) AS ratio
-        |FROM ids LEFT JOIN hits USING(id) ORDER BY 1""".stripMargin,
-    "t11_lm_score" ->
-      """WITH toks AS (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |tt AS (SELECT id, w FROM toks WHERE w <> ''),
-        |freq AS (SELECT w, count(*) AS c FROM tt GROUP BY 1),
-        |g AS (SELECT sum(c) AS t, count(*) AS v FROM freq)
-        |SELECT id AS doc_id, count(*) AS n_tokens,
-        |  round(sum(ln(CAST(c + 1 AS DOUBLE) / (t + v))) / count(*), 6) AS avg_logprob
-        |FROM tt JOIN freq USING(w) CROSS JOIN g
-        |GROUP BY id ORDER BY id""".stripMargin,
-    "t12_repetition" ->
-      """WITH tok AS (SELECT doc_id AS id, string_split(text, ' ') AS ts FROM documents),
-        |g1 AS (SELECT id, 1 AS n, unnest(ts) AS g FROM tok),
-        |i2 AS (SELECT id, ts, unnest(range(0, greatest(len(ts)-1, 0))) AS i FROM tok),
-        |g2 AS (SELECT id, 2 AS n, array_to_string(ts[i+1:i+2], ' ') AS g FROM i2),
-        |i3 AS (SELECT id, ts, unnest(range(0, greatest(len(ts)-2, 0))) AS i FROM tok),
-        |g3 AS (SELECT id, 3 AS n, array_to_string(ts[i+1:i+3], ' ') AS g FROM i3),
-        |c AS (SELECT id, n,
-        |  CAST(concat('0x', substr(md5(concat('rep:', g)), 1, 15)) AS BIGINT) AS g,
-        |  count(*) AS c FROM
-        |  (SELECT * FROM g1 UNION ALL SELECT * FROM g2 UNION ALL SELECT * FROM g3)
-        |  GROUP BY 1, 2, 3),
-        |a AS (SELECT id,
-        |  CAST(sum(CASE WHEN n=1 THEN c END) AS BIGINT) AS nw,
-        |  CAST(count(CASE WHEN n=1 THEN 1 END) AS BIGINT) AS ndw,
-        |  CAST(sum(CASE WHEN n=2 THEN c END) AS BIGINT) AS nbg,
-        |  CAST(max(CASE WHEN n=2 THEN c END) AS BIGINT) AS maxbg,
-        |  CAST(sum(CASE WHEN n=3 THEN c END) AS BIGINT) AS ntg,
-        |  CAST(coalesce(sum(CASE WHEN n=3 AND c>1 THEN c END), 0) AS BIGINT) AS duptg
-        |  FROM c GROUP BY 1),
-        |m AS (SELECT id AS doc_id, nw AS n_words,
-        |  round(CAST(nw - ndw AS DOUBLE) / nw, 6) AS dup_word_frac,
-        |  round(coalesce(CAST(maxbg AS DOUBLE) / nbg, 0.0), 6) AS top_bigram_frac,
-        |  round(coalesce(CAST(duptg AS DOUBLE) / ntg, 0.0), 6) AS dup_trigram_frac
-        |  FROM a)
-        |SELECT doc_id, n_words, dup_word_frac, top_bigram_frac, dup_trigram_frac,
-        |  (dup_word_frac > 0.8 OR top_bigram_frac > 0.18 OR dup_trigram_frac > 0.3)
-        |    AS repetitive
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "q12_priority_lines" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q13_custdist" ->
-      """WITH cnt AS (
-        |  SELECT o_custkey, count(*) AS c_count FROM orders GROUP BY 1)
-        |SELECT coalesce(c_count, 0) AS c_count, count(*) AS custdist
-        |FROM customer LEFT JOIN cnt ON c_custkey = o_custkey
-        |GROUP BY 1 ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q17_small_qty" ->
-      """WITH li AS (SELECT l_partkey, CAST(round(l_quantity*100) AS BIGINT) AS qc,
-        |    CAST(round(l_extendedprice*100) AS BIGINT) AS pc
-        |  FROM lineitem),
-        |av AS (SELECT l_partkey, CAST(sum(qc) AS DOUBLE)/count(*) AS avg_qc
-        |  FROM li GROUP BY 1)
-        |SELECT sum(pc)/700.0 AS avg_yearly, count(*) AS n_lines
-        |FROM li JOIN av USING(l_partkey)
-        |WHERE CAST(qc AS DOUBLE) < 0.2 * avg_qc""".stripMargin,
-    "q8_market_share" ->
-      s"""WITH vol AS (
-        |  SELECT year(o_orderdate) AS o_year,
-        |    CAST(round(l_extendedprice*100) AS BIGINT) *
-        |      (100 - CAST(round(l_discount*100) AS BIGINT)) AS volc,
-        |    n2.n_name AS supp_nation
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |  JOIN region ON n1.n_regionkey = r_regionkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |  WHERE r_name = 'EUROPE'
-        |    AND o_orderdate BETWEEN '1996-01-01' AND '1997-12-31')
-        |SELECT CAST(o_year AS INT) AS o_year,
-        |  ${roundSql(
-              "CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN volc ELSE 0 END) AS DOUBLE)" +
-              " / CAST(sum(volc) AS DOUBLE)", 6)} AS mkt_share
-        |FROM vol GROUP BY 1 ORDER BY 1""".stripMargin,
-    "r7_set_ops" ->
-      """WITH y96 AS (SELECT DISTINCT o_custkey FROM orders
-        |    WHERE year(o_orderdate) = 1996),
-        |y97 AS (SELECT DISTINCT o_custkey FROM orders
-        |    WHERE year(o_orderdate) = 1997),
-        |tagged AS (
-        |  SELECT o_custkey, 'both' AS bucket
-        |    FROM (SELECT * FROM y96 INTERSECT SELECT * FROM y97)
-        |  UNION ALL
-        |  SELECT o_custkey, 'only_1996'
-        |    FROM (SELECT * FROM y96 EXCEPT SELECT * FROM y97)
-        |  UNION ALL
-        |  SELECT o_custkey, 'only_1997'
-        |    FROM (SELECT * FROM y97 EXCEPT SELECT * FROM y96))
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_cust
-        |FROM tagged GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q21_late_supplier" ->
-      """WITH late AS (SELECT DISTINCT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY),
-        |cand AS (SELECT lt.l_orderkey, lt.l_suppkey FROM late lt
-        |  WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |      WHERE l2.l_orderkey = lt.l_orderkey
-        |        AND l2.l_suppkey <> lt.l_suppkey)
-        |    AND NOT EXISTS (SELECT 1 FROM late l3
-        |      WHERE l3.l_orderkey = lt.l_orderkey
-        |        AND l3.l_suppkey <> lt.l_suppkey))
-        |SELECT s_name, n_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM cand JOIN supplier ON s_suppkey = l_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE n_nationkey < 13
-        |GROUP BY 1, 2 ORDER BY numwait DESC, s_name LIMIT 100""".stripMargin,
-    "q22_dormant" ->
-      """WITH cust AS (SELECT c_custkey, c_nationkey,
-        |    CAST(round(c_acctbal*100) AS BIGINT) AS bal_c FROM customer),
-        |av AS (SELECT CAST(sum(bal_c) AS DOUBLE)/count(*) AS avg_bal
-        |  FROM cust WHERE bal_c > 0)
-        |SELECT c_nationkey, count(*) AS numcust, sum(bal_c)/100.0 AS totacctbal
-        |FROM cust CROSS JOIN av
-        |WHERE CAST(bal_c AS DOUBLE) > avg_bal
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey AND o_orderdate >= '1998-01-01')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "t9_redact" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+')) AS BIGINT) AS n_email,
-        |  CAST(len(regexp_extract_all(text, '[0-9]{3,}')) AS BIGINT) AS n_num,
-        |  md5(regexp_replace(regexp_replace(text,
-        |    '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+', '<EMAIL>', 'g'),
-        |    '[0-9]{3,}', '<NUM>', 'g')) AS redacted_md5
-        |FROM documents""".stripMargin
-  )
 }

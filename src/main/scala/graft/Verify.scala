@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.registry.{Oracle, Query, Registry, RowsOnly}
+/** Correctness dump: each registry query's result → parquet, plus
+  * oracle_sql.json and rows_only_by_design.json, for the DuckDB compare
+  * in tools/check.py. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -18,13 +20,10 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for fast iteration (same knob as Bench)
     val subset = SparkEntry.querySubset(sys.env.get("SPARK_GRAFT_QUERIES"))
-    val selected = subset match {
-      case Some(qs) => SparkEntry.queries.view.filterKeys(qs).toMap
-      case None     => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    val selected = Registry.all.filter(q => subset.forall(_.contains(q.name)))
+    selected.foreach { case Query(name, build, _, _, _) =>
       graft.tools.SessionConf.restoring(spark) {
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -54,16 +53,17 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    def obj(kv: Seq[(String, String)]): String =
+      kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = obj(Registry.all.collect { case Query(n, _, Oracle(sql), _, _) => n -> sql })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // self-describing marker for DESIGNED rows-only entries: the driver's
     // compare reports them as `no_oracle`, which reads as breakage in a
     // correctness table — this sidecar names each one and the artifact
     // that pins its correctness instead (for l5_qp_weights, the green
     // l5_qp_certificate)
-    val designed = SparkEntry.rowsOnlyByDesign
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val designed =
+      obj(Registry.all.collect { case Query(n, _, RowsOnly(why), _, _) => n -> why })
     Files.writeString(Paths.get(s"$outDir/rows_only_by_design.json"), designed)
     spark.stop()
   }

@@ -15,4 +15,17 @@ private[catalog] object Fs {
       finally s.close()
     }
   }
+
+  /** Replaces `p`'s content all at once: the text goes to a sibling
+    * `.tmp` file that is then moved over `p` atomically, so a crash
+    * leaves the old file or the new one, never a truncated one. A temp
+    * file left by an interrupted write is simply overwritten by the
+    * next write.
+    */
+  def writeAtomic(p: Path, text: String): Unit = {
+    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
+    Files.writeString(tmp, text)
+    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
 }

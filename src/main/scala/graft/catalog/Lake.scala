@@ -53,7 +53,7 @@ class Lake(spark: SparkSession, root: String) {
       "\"partitionKeys\":" + arrJson(meta.partitionKeys),
       "\"primaryKeys\":" + arrJson(meta.primaryKeys)
     ).mkString("{", ",", "}")
-    Files.writeString(metaPath(meta.name), json)
+    Fs.writeAtomic(metaPath(meta.name), json)
     // empty frame with declared schema so reads of a fresh table work
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
       .withColumn(SeqCol, lit(0L)).withColumn(SubCol, lit(0L))
@@ -72,10 +72,11 @@ class Lake(spark: SparkSession, root: String) {
     * input has no well-defined row order to preserve).
     *
     * Writer model: single writer per table, like the reference's nightly
-    * flow (bear-lake appends are sequential there too). The counter write
-    * is temp-file + atomic move so a crash never leaves a truncated file;
-    * if the file is ever unreadable, the counter recovers from
-    * max(SeqCol) in the data.
+    * flow (bear-lake appends are sequential there too). Every commit file
+    * (this counter, `_graft_meta.json`, `_graft_promote`, `_pending`) is
+    * written by temp file + atomic move ([[Fs.writeAtomic]]) so a crash
+    * never leaves a truncated one; if the counter is ever unreadable, it
+    * recovers from max(SeqCol) in the data.
     */
   private val SeqCol = "_graft_ingest_seq"
   private val SubCol = "_graft_ingest_sub"
@@ -91,10 +92,7 @@ class Lake(spark: SparkSession, root: String) {
       tableRaw(name).agg(coalesce(max(col(SeqCol)), lit(0L))).first().getLong(0)
     }
     val next = cur + 1
-    val tmp = Paths.get(s"${dir(name)}/_graft_seq.tmp")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Fs.writeAtomic(p, next.toString)
     next
   }
 
@@ -213,7 +211,7 @@ class Lake(spark: SparkSession, root: String) {
         .getOrElse(Set.empty[String])
     // the marker commits the batch: everything after this line is
     // idempotently resumable by recoverStaging
-    Files.writeString(stagingPath.resolve(PromoteMarker), dirty.mkString("\n"))
+    Fs.writeAtomic(stagingPath.resolve(PromoteMarker), dirty.mkString("\n"))
     promoteStaging(name, stagingPath)
   }
 
@@ -248,7 +246,7 @@ class Lake(spark: SparkSession, root: String) {
       .split("\n").toSet
     val p = Paths.get(s"${dir(name)}/_pending")
     val prev = if (Files.exists(p)) Files.readString(p).split("\n").toSet else Set.empty[String]
-    Files.writeString(p, (prev ++ dirty).filter(_.nonEmpty).mkString("\n"))
+    Fs.writeAtomic(p, (prev ++ dirty).filter(_.nonEmpty).mkString("\n"))
     deleteRecursively(stagingPath)
   }
 

@@ -559,59 +559,25 @@ object Dedup {
     * step that turns near-dup PAIRS (from [[minHashLsh]], [[simHashPairs]]
     * or [[embCosinePairs]]) into a dedup decision: every document gets
     * `canon_id` = the minimum id reachable through the pair graph, and
-    * `is_dup` marks everything but the cluster representative.
+    * `is_dup` marks everything but the cluster representative. The
+    * min-label fixpoint is unique, so every strategy returns the same
+    * frame (a DuckDB recursive CTE reproduces it exactly).
     *
-    * Two execution strategies behind one deterministic semantic (the
-    * min-label fixpoint is unique — a DuckDB recursive CTE reproduces it
-    * exactly):
-    *
-    *   - **Local union-find** when the edge set fits on the driver
-    *     (`localEdgeLimit`, default 500k pairs ≈ 8 MB). Near-dup edge
-    *     sets are tiny next to the corpus by LSH design, so this is the
-    *     common case at every scale; one job materializes the pairs, the
-    *     union-find runs in O(E α(E)) on the driver, and the resulting
-    *     label map joins back in as a broadcast — no iteration, no
-    *     per-level Spark actions. The same shape as AQE's
-    *     broadcast-threshold decision: size probe first, then the cheap
-    *     strategy when the data allows it. The default is pinned by
-    *     CcProbe's crossover axis (docs/SCALING.md round 15): local wins
-    *     below ~400k edges (1.5 s vs 4.0 s at 100k — the propagation
-    *     loop pays ~4–5 s of fixed per-iteration job overhead), the
-    *     strategies cross at ~0.5M, and above it the distributed loop
-    *     wins outright (4.3 s vs 6.9 s at 1M, 5.7 s vs 20.6 s at 3M) —
-    *     while at 10M the label-map broadcast-back measured 79.4 s in
-    *     one session and KILLED the SparkContext in another (GCLocker
-    *     starvation → executor OOM building the 12.5M-row broadcast;
-    *     the distributed loop ran the same point in 10.3 s), so the
-    *     default keeps a wide margin to both the slowdown and the wall.
-    *   - **The measured-budget auto hybrid** above the limit (round 20;
-    *     previously pinned min-label propagation): one structural
-    *     telemetry aggregate at birth estimates the residual diameter,
-    *     schedules `round(log2 D) − 2` star-contraction rounds (zero on
-    *     every near-dup shape), and finishes with min-label propagation
-    *     — see [[canonicalizeHybrid]], whose default this routes to.
-    *     The round-20 strategy matrix (docs/SCALING.md) is why: the
-    *     auto path now ties or beats pinned propagation on EVERY
-    *     measured cell — min-centered 10M/30M stars 6.4/24.2 s vs
-    *     9.8/36.5 (an already-star-forest graph reads its labels off
-    *     the telemetry, skipping propagation entirely), off-center 10M
-    *     stars (hashed ids, the honest near-dup shape) 11.8 vs 13.0,
-    *     the 10M skewed mixture 44.7 vs 91.9, and permuted deep chains
-    *     ~8x at diameter 64 — since the fused telemetry
-    *     ([[autoLabels]]) costs one in-cache aggregate and buys both
-    *     the read-off exit and the diameter-collapse schedule.
-    *     `maxIter` still bounds the propagation passes (the auto
-    *     hand-off derives a tighter finisher budget,
-    *     [[autoHandOffIter]], and a component past EITHER budget takes
-    *     the warm-start fallback: a star contraction of the
-    *     label-contracted residue, converged components never
-    *     re-processed — [[warmStartFallback]]; same fixpoint; loud
-    *     stderr note — so budgets tune cost, never correctness).
-    *     Callers who want a SPECIFIC strategy pin one explicitly:
-    *     [[canonicalizePropagation]] (pure min-label propagation — the
-    *     pre-r20 default, leanest per-pass machinery),
-    *     [[canonicalizeStar]] (pure alternating star contraction), or
-    *     [[canonicalizeHybrid]] with an explicit `starRounds`.
+    * Size first, then strategy — the shape of AQE's broadcast-threshold
+    * decision:
+    *   - an edge set at or under `localEdgeLimit` (default 500k pairs ≈
+    *     8 MB) goes to the driver union-find: one job materializes the
+    *     pairs, the union-find runs in O(E α(E)), and the label map joins
+    *     back as a broadcast — no iteration, no per-level Spark actions.
+    *     Near-dup edge sets are tiny next to the corpus by LSH design, so
+    *     this is the common case at every scale. The default sits at the
+    *     measured local/distributed crossover, well under the
+    *     broadcast-back wall (docs/SCALING.md, "Connected components past
+    *     the union-find gate"). Pass 0 to force `strategy`.
+    *   - above it, `strategy` runs (see [[CcStrategy]]). The default
+    *     [[CcStrategy.Auto]] ties or beats every pinned strategy on every
+    *     probed cell (docs/SCALING.md, "canonicalize's distributed
+    *     default: decided by the matrix").
     *
     * Either way the (typically expensive — LSH candidate generation +
     * verification) pair pipeline is evaluated exactly once: an eager
@@ -624,49 +590,11 @@ object Dedup {
     * drivers do between queries.
     */
   def canonicalize(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 25, localEdgeLimit: Long = 500000L): DataFrame =
-    canonicalized(df, idCol, pairs, localEdgeLimit, "canonicalize")(
-      autoLabels(_, maxIter))
-
-  /** Connected-components canonicalization by PINNED MIN-LABEL
-    * PROPAGATION — the strategy [[canonicalize]]'s distributed branch
-    * routed to before round 20, kept as an explicit pin (the graded d6b
-    * entry and CcProbe's dist mode measure exactly this) and for
-    * callers who know their graph is shallow and want the leanest
-    * per-pass machinery with no birth telemetry. Each pass joins the
-    * current labels across the self-loop-augmented edge frame and keeps
-    * the per-node minimum — one join + one aggregate, converging in
-    * O(cluster diameter) passes; convergence is detected by the
-    * label-sum fixpoint (labels only ever decrease), one tiny aggregate
-    * action per pass. Measured to 100M edges and diameter 64 (CcProbe:
-    * time ∝ E at fixed diameter, ∝ diameter at fixed E). A component
-    * whose diameter exceeds `maxIter` does not fail the job: the
-    * warm-start fallback re-solves the label-contracted residue
-    * ([[warmStartFallback]]), so `maxIter` bounds the propagation
-    * budget, never correctness. Same size-then-strategy gate and same
-    * unique min-label fixpoint as every other entry point.
-    */
-  def canonicalizePropagation(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxIter: Int = 25, localEdgeLimit: Long = 500000L): DataFrame =
-    canonicalized(df, idCol, pairs, localEdgeLimit, "canonicalizePropagation")(
-      propagatedLabels(_, maxIter))
-
-  /** The shared size-then-strategy skeleton of the three canonicalize
-    * entry points: validate the id type, checkpoint the edge list once,
-    * route edge sets at or under `localEdgeLimit` to the driver
-    * union-find (size probe only when the gate can actually select —
-    * count() runs over checkpointed blocks, no recompute of `pairs`, but
-    * it is still a full pass a forced-distributed caller with
-    * localEdgeLimit=0 should not pay), and join the labels back onto the
-    * full corpus. Only the distributed `strategy` differs per entry
-    * point.
-    */
-  private def canonicalized(df: DataFrame, idCol: String, pairs: DataFrame,
-      localEdgeLimit: Long, opName: String)(
-      strategy: DataFrame => DataFrame): DataFrame = {
+      strategy: CcStrategy = CcStrategy.Auto(),
+      localEdgeLimit: Long = 500000L): DataFrame = {
     require(Seq("long", "int", "bigint", "integer", "smallint", "short")
       .contains(df.schema(idCol).dataType.typeName),
-      s"$opName needs an integral id column; ${df.schema(idCol).dataType.sql} " +
+      s"canonicalize needs an integral id column; ${df.schema(idCol).dataType.sql} " +
         "ids would cast to null and silently collapse the corpus")
     val nodes = df.select(col(idCol).cast("long").as("id")).distinct()
     val undirected = pairs
@@ -690,9 +618,9 @@ object Dedup {
         // session default their per-pass fixed cost is ∝ the shuffle
         // partition count × iteration count REGARDLESS of data volume —
         // the graded sf0.1 graphs (~10^2-10^3 edges) paid 32-way task
-        // scheduling per pass and measured ANTI-scaling (8-core runs 2×
-        // faster than 32-core on identical code, r20 driver scaling
-        // block). Derive the loop's width from the measured edge count
+        // scheduling per pass and measured ANTI-scaling
+        // (docs/SCALING.md, "Numbers cited by code comments").
+        // Derive the loop's width from the measured edge count
         // instead (guide §2.2: fewer, larger partitions; the session
         // default stays the ceiling so at-scale CcProbe axes are
         // unchanged), restore the session conf after the strategy's
@@ -702,12 +630,21 @@ object Dedup {
         val before = spark.conf.get(key)
         spark.conf.set(key,
           ccLoopShufflePartitions(before.toInt, edgeCount).toString)
-        try strategy(undirected) finally spark.conf.set(key, before)
+        try distributedLabels(strategy, undirected) finally spark.conf.set(key, before)
       }
     nodes.join(lbl, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("lbl"), col("id")).as("canon_id"),
         (coalesce(col("lbl"), col("id")) =!= col("id")).as("is_dup"))
+  }
+
+  private def distributedLabels(strategy: CcStrategy,
+      undirected: DataFrame): DataFrame = strategy match {
+    case CcStrategy.Auto(maxIter) => autoLabels(undirected, maxIter)
+    case CcStrategy.Propagation(maxIter) => propagatedLabels(undirected, maxIter)
+    case CcStrategy.Star(maxRounds) => starLabels(undirected, maxRounds)
+    case CcStrategy.Hybrid(starRounds, maxIter) =>
+      hybridLabels(undirected, starRounds, maxIter)
   }
 
   /** Edges per shuffle partition inside the iterative CC loops: the
@@ -729,171 +666,6 @@ object Dedup {
       edges: Long): Int =
     math.max(1, math.min(sessionParts.toLong,
       (edges + ccLoopEdgesPerPartition - 1) / ccLoopEdgesPerPartition).toInt)
-
-  /** Connected-components canonicalization by ALTERNATING STAR
-    * CONTRACTION (the large-star/small-star algorithm of Kiveris,
-    * Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected Components
-    * in MapReduce and Beyond", SoCC 2014) — same output contract and
-    * same unique min-label fixpoint as [[canonicalize]], in O(log n)
-    * ROUNDS instead of O(diameter) iterations.
-    *
-    * Use this for pair graphs whose components can be long and thin —
-    * transitive entity-resolution chains, citation/link graphs —
-    * where min-label propagation pays one full-edge-set pass per HOP
-    * (measured ∝ diameter on CcProbe's chain axis). Near-dup document
-    * graphs are near-cliques (diameter ≤ ~3), so [[canonicalize]]'s
-    * strategies stay the right default there: a star round costs ~2
-    * shuffles + a distinct against propagation's 1 join + 1 aggregate,
-    * and at diameter ≤ 3 round count cannot be beaten.
-    *
-    * The same SIZE-THEN-STRATEGY gate as [[canonicalize]] applies first:
-    * an edge set at or under `localEdgeLimit` (default 500k, pinned by
-    * the same CcProbe crossover axis) routes to the driver union-find —
-    * diameter is irrelevant to a union-find, so a caller told "use star
-    * for high-diameter graphs" no longer pays ~4 alternating rounds × 2
-    * shuffles + the exact fixpoint confirmation (~6 s of fixed overhead
-    * at sf0.1) on a few-hundred-edge graph a union-find closes in
-    * milliseconds. Pass `localEdgeLimit = 0L` to force the distributed
-    * star rounds (the graded d6c entry and CcProbe's star axes do, the
-    * way d6b forces propagation).
-    *
-    * Each round applies two per-node rewirings, both expressed as ONE
-    * groupBy-min plus ONE join on the edge list — no per-node neighbor
-    * lists are ever materialized (a `collect_list` would concentrate a
-    * popular node's whole neighborhood in one task; the min-join form
-    * is skew-immune for the same reason the de-skewed dedup elections
-    * are):
-    *   - '''large-star''': every node u links each STRICTLY LARGER
-    *     neighbor v to m(u) = min(N(u) ∪ {u}) — larger nodes hop
-    *     toward their component's minimum;
-    *   - '''small-star''': every node u links each neighbor v ≤ u (and
-    *     itself) to the minimum among them — local stars flatten.
-    * Both preserve connectivity and only ever decrease the edge set's
-    * (node, neighbor-min) potential; the fixpoint is a star forest
-    * whose centers are exactly the component minima (paper, Thm 1-3).
-    * Convergence is detected by an (edge-count, xxhash64-sum) signature
-    * — one tiny aggregate per round, the same shape as propagation's
-    * label-sum — and CONFIRMED at the detected fixpoint by the
-    * STRUCTURAL star-forest test ([[isStarForest]]): no node appears as
-    * both a center and a leaf, and every leaf carries exactly one edge.
-    * That certifies the LABELING rather than invariance under one more
-    * op (an edge set can be large-star-invariant without being a
-    * min-centered star forest — {(1,3),(2,3)} — and set-equality under
-    * the ops only certifies an op fixpoint; the structural test plus the
-    * ops' unconditional connectivity preservation proves each star IS a
-    * whole component with its minimum at the center), so a 2^-64
-    * signature collision can only abort loudly, never mislabel; the
-    * check runs once.
-    *
-    * Rounds are plan-truncated and promptly released through the same
-    * [[residentLevel]] machinery as propagation (the probe-measured
-    * cure for the exponential-plan OOM class).
-    */
-  def canonicalizeStar(df: DataFrame, idCol: String, pairs: DataFrame,
-      maxRounds: Int = 50, localEdgeLimit: Long = 500000L): DataFrame =
-    canonicalized(df, idCol, pairs, localEdgeLimit, "canonicalizeStar")(
-      starLabels(_, maxRounds))
-
-  /** Connected-components canonicalization by the HYBRID strategy —
-    * `starRounds` alternating large-star/small-star rounds to COLLAPSE
-    * COMPONENT DIAMETER, then min-label propagation to FINISH on the
-    * flattened graph. Same output contract and same unique min-label
-    * fixpoint as [[canonicalize]] / [[canonicalizeStar]].
-    *
-    * This targets the one cell of the strategy matrix neither pure form
-    * prices well: HIGH-DIAMETER **and** HIGH-VOLUME pair graphs
-    * (transitive entity-resolution chains over a full corpus, link
-    * graphs). There, propagation pays one full-edge-set pass per HOP
-    * (CcProbe's chain axis: ∝ diameter), while the star contraction pays
-    * its heavy per-round machinery — ~2 shuffles + a distinct per round,
-    * with a rewired edge set whose shuffle volume measured 3.6× the
-    * propagation loop's at 100M edges (docs/SCALING.md round 16:
-    * 30.8 GB vs 8.6 GB, OOM at the 16 GB heap propagation completed in)
-    * — all the way to the fixpoint. The hybrid buys diameter collapse at
-    * star prices only while diameter is the binding cost: each
-    * alternating round at least halves every component's effective
-    * diameter (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
-    * SoCC 2014 — large-star alone halves the height of any BFS tree
-    * path, small-star flattens the local stars it leaves), so `k` rounds
-    * turn a diameter-`D` graph into a ≤ ~`D/2^k`-diameter one and the
-    * propagation finisher needs that many cheap passes instead of `D`.
-    *
-    * `starRounds` defaults to [[AutoStarRounds]]: the star budget is
-    * SIZED FROM THE GRAPH instead of guessed. The fixed-knob rule
-    * (`starRounds ~ log2(expected diameter) - 2`, the round-17
-    * deployment rule) requires knowing the diameter in advance — a fact
-    * a 100 TB pair-graph owner rarely has, and the price of guessing
-    * low is real (the old default of 2 measured 90.5 s on the
-    * diameter-64/4M-edge probe chain vs 44.5 s correctly tuned). The
-    * auto budget measures instead of asking: a one-pass structural
-    * telemetry aggregate over the edge set ([[forestStats]] — per node,
-    * its count of smaller and of larger neighbors) yields a
-    * residual-diameter ESTIMATE D as the max of two complementary
-    * proxies — internal nodes per local-minimum (exact on
-    * monotone-id chains, blind on permuted ids) and degree-2 nodes
-    * per path-endpoint pair (exact on ANY path forest regardless of
-    * id ordering — the signal that matters in production, where ids
-    * are hashes — over-reading only when cycles carry the degree-2
-    * mass; see [[ForestStats.diameterEstimate]] for why max is the
-    * right combiner). Both proxies read component SIZE rather than
-    * depth on contracted trees (measured: after 2 rounds a 16-chain
-    * reads 13 by the internal-node proxy at true depth ~4), which is
-    * why the estimate is taken at BIRTH, where components are raw,
-    * not mid-contraction. The loop then schedules `round(log2 D) - 2`
-    * star rounds — the deployment rule applied to a measurement; each
-    * round at least halves diameter (SoCC'14), so the schedule lands
-    * the residue at the ~4-hop collapse target, the measured crossover
-    * where a star round stops paying for itself (one round costs ~2-3
-    * propagation passes and halving a ≤4-hop residue saves at most 2)
-    * — and hands off. An unchanged edge signature inside the schedule
-    * exits through the structural forest test early, so an
-    * overestimated D (cliques and cycle-heavy mixtures collapse in 1-2
-    * rounds) costs at most a couple of idle rounds, and a graph
-    * already at or under the target (D ≤ 4, every near-dup shape)
-    * hands off with ZERO rounds. Because both proxies are
-    * per-component MEANS, a skewed mixture (a million shallow path
-    * components hiding one deep chain) or a high-degree deep tree (a
-    * caterpillar — its hairs dilute both proxies with no mixture
-    * needed) can still hand off early — the propagation finisher's own
-    * exhaustion fallback (→ [[warmStartFallback]]: a star contraction
-    * of the label-contracted residue only, never a re-run over the
-    * converged majority) still bounds that worst case, so the estimate
-    * tunes cost, never correctness. The auto hand-off also DERIVES its
-    * finisher budget from the collapse target ([[autoHandOffIter]] =
-    * 10, capped by the caller's `maxIter`) instead of inheriting the
-    * full propagation default: a correct schedule needs ≤ ~5 passes, so
-    * a finisher still unconverged at 10 proves the estimate wrong and
-    * switches to the fallback without paying the other 15 — measured
-    * on CcProbe's 10M-edge mixture axis as the difference between a
-    * 3.6× and 2.6× worst-case recovery in round 19, re-priced with the
-    * warm-started fallback in docs/SCALING.md round 20. Pass an
-    * explicit `starRounds >= 0` to pin the budget by hand (the graded
-    * d6d entry pins 1 to force the hand-off path).
-    *
-    * If the graph reaches the star-forest fixpoint DURING the star
-    * rounds (small diameter, or a generous explicit `starRounds`),
-    * labels are read off directly — structurally confirmed the same way
-    * [[canonicalizeStar]] confirms convergence (the auto path's
-    * telemetry IS that structural test, so its forest exit is exact by
-    * construction) — and propagation never runs. The same
-    * SIZE-THEN-STRATEGY gate as the other entry points applies first:
-    * ≤ `localEdgeLimit` edges route to the driver union-find (pass 0 to
-    * force the distributed hybrid, as the graded d6d entry and
-    * CcProbe's deep axis do).
-    */
-  def canonicalizeHybrid(df: DataFrame, idCol: String, pairs: DataFrame,
-      starRounds: Int = AutoStarRounds, maxIter: Int = 25,
-      localEdgeLimit: Long = 500000L): DataFrame = {
-    require(starRounds >= 0 || starRounds == AutoStarRounds,
-      s"starRounds must be non-negative or AutoStarRounds, got $starRounds")
-    canonicalized(df, idCol, pairs, localEdgeLimit, "canonicalizeHybrid")(
-      hybridLabels(_, starRounds, maxIter))
-  }
-
-  /** Sentinel `starRounds` value selecting [[canonicalizeHybrid]]'s
-    * measured adaptive star budget (the default).
-    */
-  val AutoStarRounds: Int = -1
 
   /** CC strategy-decision trace sink. Defaults to stderr; tests inject
     * a capturing sink here instead of swapping the process-global
@@ -917,7 +689,7 @@ object Dedup {
 
   /** Large-star: m(u) over the FULL neighborhood (both directions), each
     * strictly larger neighbor re-linked to it. One groupBy-min plus one
-    * join — no neighbor lists, skew-immune (see [[canonicalizeStar]]).
+    * join — no neighbor lists, skew-immune (see [[contract]]).
     */
   private def largeStar(edges: DataFrame): DataFrame = {
     val directed = edges.select(col("a").as("u"), col("b").as("v"))
@@ -976,34 +748,53 @@ object Dedup {
       e.groupBy(col("b")).agg(count(lit(1)).as("_n"))
         .filter(col("_n") > 1).isEmpty
 
-  /** Alternating large-star/small-star rounds to the star-forest
-    * fixpoint (see [[canonicalizeStar]]); returns a resident (id, lbl)
-    * frame over edge-touched nodes.
+  /** Up to `budget` alternating contraction rounds over a resident
+    * canonical level (`prev0` = its signature), shared by every star
+    * path. Each round applies two per-node rewirings, both ONE
+    * groupBy-min plus ONE join on the edge list — no per-node neighbor
+    * lists (a `collect_list` would concentrate a popular node's whole
+    * neighborhood in one task; the min-join form is skew-immune):
+    *   - '''large-star''': every node u links each STRICTLY LARGER
+    *     neighbor v to m(u) = min(N(u) ∪ {u});
+    *   - '''small-star''': every node u links each neighbor v ≤ u (and
+    *     itself) to the minimum among them.
+    * Both preserve connectivity and only ever decrease the edge set's
+    * potential; the fixpoint is a star forest whose centers are exactly
+    * the component minima (Kiveris et al., SoCC 2014, Thm 1-3). Each
+    * round at least halves every component's diameter.
+    *
+    * Convergence is detected by an unchanged [[edgeSignature]] — one
+    * tiny aggregate per round — and CONFIRMED by the structural
+    * [[isStarForest]] test, which certifies the labeling itself. On a
+    * 2^-64 signature collision the test reads false: `strict` callers
+    * abort loudly instead of mislabeling, the others keep contracting
+    * (propagation finishes their job regardless). Returns the last
+    * level, its release hook, the rounds run, and whether the forest
+    * was reached.
     */
-  private def starLabels(undirected: DataFrame, maxRounds: Int): DataFrame = {
-    var (edges, freeEdges) = residentLevel(starNorm(
-      undirected.select(col("src"), col("dst"))), truncate = false)
-    var prev = edgeSignature(edges)
+  private def contract(edges0: DataFrame, free0: () => Unit,
+      prev0: (Long, java.math.BigDecimal), budget: Int,
+      strict: Boolean): (DataFrame, () => Unit, Int, Boolean) = {
+    var edges = edges0
+    var freeEdges = free0
+    var prev = prev0
     var it = 0
-    var done = false
+    var forest = false
     // star rounds truncate every 2 levels, not [[truncateLevels]]: one
     // round's plan references its input edge set ~12 times (directed
     // view twice per star op, each joined against a min-aggregate of
     // itself, twice per round), so the per-round tree fan-out is ~12x
     // against propagation's 2x — untruncated, 7 rounds already built a
     // ~12^7-node plan string and OOM'd the 22-chain spec
-    while (!done && it < maxRounds) {
+    while (!forest && it < budget) {
       val (next, freeNext) = residentLevel(
         starRound(edges), truncate = (it + 1) % 2 == 0)
       val cur = edgeSignature(next) // fully materializes `next`
       if (cur == prev) {
-        // structural fixpoint confirmation (see [[isStarForest]]): runs
-        // over the already-resident `next`, certifies the labeling
-        // itself, and turns the 2^-64 signature-collision event into a
-        // loud abort instead of a silent mislabel
-        done = isStarForest(next)
-        require(done, "edge-set hash signature converged on a non-star-forest " +
-          "(hash collision): raise maxRounds or report — this is a 2^-64 event")
+        forest = isStarForest(next)
+        require(forest || !strict, "edge-set hash signature converged on a " +
+          "non-star-forest (hash collision): raise maxRounds or report — " +
+          "this is a 2^-64 event")
       }
       freeEdges()
       edges = next
@@ -1011,53 +802,47 @@ object Dedup {
       prev = cur
       it += 1
     }
-    require(done,
-      s"star contraction did not converge within $maxRounds rounds")
-    // fixpoint edge set is a star forest (a = component min, b = member):
-    // members label to their center, centers to themselves (via the
-    // caller's coalesce); groupBy-min rather than a bare projection so a
-    // hypothetical non-star residue could still only tighten labels
-    edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+    (edges, freeEdges, it, forest)
   }
 
-  /** The hybrid strategy's label computation (see [[canonicalizeHybrid]]):
-    * alternating contraction rounds — each at least halving component
-    * diameter — then min-label propagation on the flattened edge set.
-    * The round budget is either pinned (`starRounds >= 0`) or measured
-    * per graph ([[AutoStarRounds]] → [[autoLabels]]). Converging to the
-    * star forest DURING the star budget short-circuits propagation
-    * entirely (labels read off the forest, structurally confirmed);
-    * otherwise the contracted edges are handed to [[propagatedLabels]],
-    * whose own exhaustion fallback (→ [[warmStartFallback]]) still
-    * bounds the worst case, so `starRounds` and `maxIter` tune cost,
-    * never correctness.
+  /** Labels read off a star forest (a = component min, b = member):
+    * members label to their center, centers to themselves (via the
+    * caller's coalesce); groupBy-min rather than a bare projection so a
+    * hypothetical non-star residue could still only tighten labels.
+    */
+  private def forestLabels(edges: DataFrame): DataFrame =
+    edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+
+  /** The resident canonical level the pinned star paths start from. */
+  private def canonicalLevel(undirected: DataFrame): (DataFrame, () => Unit) =
+    residentLevel(starNorm(undirected.select(col("src"), col("dst"))),
+      truncate = false)
+
+  /** [[CcStrategy.Star]]: contraction rounds to the star-forest
+    * fixpoint; returns a resident (id, lbl) frame over edge-touched
+    * nodes.
+    */
+  private def starLabels(undirected: DataFrame, maxRounds: Int): DataFrame = {
+    val (e0, f0) = canonicalLevel(undirected)
+    val (edges, _, _, done) =
+      contract(e0, f0, edgeSignature(e0), maxRounds, strict = true)
+    require(done,
+      s"star contraction did not converge within $maxRounds rounds")
+    forestLabels(edges)
+  }
+
+  /** [[CcStrategy.Hybrid]]: `starRounds` contraction rounds, then
+    * min-label propagation on the flattened edge set. Reaching the star
+    * forest inside the budget skips propagation; otherwise the
+    * contracted edges go to [[propagatedLabels]], whose exhaustion
+    * fallback (→ [[warmStartFallback]]) bounds the worst case.
     */
   private def hybridLabels(undirected: DataFrame, starRounds: Int,
-      maxIter: Int): DataFrame =
-    if (starRounds == AutoStarRounds) autoLabels(undirected, maxIter)
-    else {
-    var (edges, freeEdges) = residentLevel(starNorm(
-      undirected.select(col("src"), col("dst"))), truncate = false)
-    var prev = edgeSignature(edges)
-    var it = 0
-    var forest = false
-    while (!forest && it < starRounds) {
-      val (next, freeNext) = residentLevel(
-        starRound(edges), truncate = (it + 1) % 2 == 0) // see starLabels
-      val cur = edgeSignature(next) // fully materializes `next`
-      // an unchanged signature inside the star budget is a candidate
-      // early fixpoint; the structural test makes it exact (and a
-      // collision simply keeps contracting — propagation would finish
-      // the job regardless, so no abort is needed on this path)
-      forest = cur == prev && isStarForest(next)
-      freeEdges()
-      edges = next
-      freeEdges = freeNext
-      prev = cur
-      it += 1
-    }
-    if (forest)
-      edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+      maxIter: Int): DataFrame = {
+    val (e0, f0) = canonicalLevel(undirected)
+    val (edges, freeEdges, _, forest) =
+      contract(e0, f0, edgeSignature(e0), starRounds, strict = false)
+    if (forest) forestLabels(edges)
     else finishWithPropagation(edges, freeEdges, maxIter)
   }
 
@@ -1065,8 +850,8 @@ object Dedup {
     * a FLAT LogicalRDD leaf: after an odd (or zero) round budget the
     * frame is cache-resident but its plan is still the nested
     * star-round tree, and every propagation level's AQE plan
-    * description would re-render that whole nest — measured 2.5x the
-    * finisher's wall on the lollipop spec before the truncation. The
+    * description would re-render that whole nest (its measured cost:
+    * docs/SCALING.md, "Numbers cited by code comments"). The
     * propagation loop runs entirely inside the call (every level
     * action included), so the contracted frame is released as soon as
     * it returns.
@@ -1120,9 +905,9 @@ object Dedup {
     * component under-reads with no mixture needed (PropertySpec pins
     * the caterpillar route). Both cases are fallback-bounded
     * (correctness never depends on the estimate), their recovery cost
-    * is priced on CcProbe's mixture axis, and since round 20 the
-    * fallback warm-starts from the partial labels
-    * ([[warmStartFallback]]) instead of re-contracting the whole graph.
+    * is priced on CcProbe's mixture axis, and the fallback warm-starts
+    * from the partial labels ([[warmStartFallback]]) instead of
+    * re-contracting the whole graph.
     */
   private[operators] final case class ForestStats(
       violations: Long, roots: Long, badLeaves: Long,
@@ -1186,22 +971,16 @@ object Dedup {
     * [[autoCollapseTarget]] hops, which propagation closes in target+1
     * passes — so `2 + 2 × target` gives the correct case over 2×
     * headroom while capping what the ESTIMATOR'S failure mode can
-    * waste. Priced on CcProbe's 10M-edge mixture axis (docs/SCALING.md
-    * round 19): with the caller-default budget of 25 the under-read
-    * recovery (exhaust, then the then-from-scratch star fallback) cost
-    * 212.3 s vs the pinned-correct hybrid's 59.2 s (3.6×); the derived
-    * budget removed ~10 wasted passes at ~6 s each and measured the
-    * recovery at 153.0 s — a 2.6× worst case, 2.3× at 30M edges. Since
-    * round 20 the exhaustion fallback itself warm-starts
-    * ([[warmStartFallback]]), shrinking the recovery further (fresh
-    * numbers in docs/SCALING.md round 20). A caller's explicit smaller
-    * `maxIter` still caps from below.
+    * waste: an under-read hand-off exhausts after 10 passes instead of
+    * the caller's 25 and goes straight to the fallback (priced on
+    * CcProbe's mixture axis — docs/SCALING.md, "Numbers cited by code comments").
+    * A caller's explicit smaller `maxIter` still caps from below.
     */
   private val autoHandOffIter = 2 + 2 * autoCollapseTarget.toInt
 
-  /** The measured-budget hybrid (see [[canonicalizeHybrid]]): ONE
-    * [[forestStats]] telemetry aggregate at birth — FUSED since round
-    * 20 with the propagation finisher's own edge-frame materialization,
+  /** [[CcStrategy.Auto]], the measured-budget hybrid: ONE
+    * [[forestStats]] telemetry aggregate at birth — FUSED with the
+    * propagation finisher's own edge-frame materialization,
     * so the common zero-round hand-off pays no dedicated telemetry
     * chain — yields the residual-diameter estimate D (max of the
     * ordered and degree proxies —
@@ -1209,7 +988,7 @@ object Dedup {
     * star rounds are scheduled from it and then propagation finishes
     * unconditionally — re-measuring mid-flight is deliberately absent
     * because both proxies read SIZE, not depth, on contracted trees
-    * (measured: 13.0 after 2 rounds on a 16-chain at true depth ~4),
+    * (docs/SCALING.md, "Numbers cited by code comments"),
     * while the per-round halving the schedule leans on is the SoCC'14
     * guarantee. Rounds materialize through the same cheap
     * [[edgeSignature]] aggregate as the fixed path, with the
@@ -1221,20 +1000,15 @@ object Dedup {
     * (stderr by default) — the observable the no-knob spec pins.
     */
   private def autoLabels(undirected: DataFrame, maxIter: Int): DataFrame = {
-    // FUSED birth telemetry (round 20; VERDICT r19 item 3): the
-    // telemetry no longer has a materialization chain of its own. The
-    // auto path builds the SAME [[propagationEdges]] frame the
-    // propagation finisher consumes (canonical dedup + self-loops,
-    // bidirectional, dst-partitioned, persisted), and [[forestStats]]'
-    // dst-aligned aggregate is the action that populates it. The
-    // r18/r19 shape paid a dedicated canonical persist, a union-shaped
-    // two-direction telemetry scan, and an extra eager checkpoint on
-    // the hand-off; on a shallow graph (the common near-dup case, where
-    // the answer is "zero rounds") that premium measured 1.8x pure
-    // propagation (star_perm at 10M: 17.9 vs 10.2 s). Fused, the
-    // zero-round hand-off passes the frame to [[propagateOver]] as-is,
-    // so the default caller's premium shrinks to one in-cache
-    // aggregate.
+    // FUSED birth telemetry: the telemetry has no materialization
+    // chain of its own. The auto path builds the SAME
+    // [[propagationEdges]] frame the propagation finisher consumes
+    // (canonical dedup + self-loops, bidirectional, dst-partitioned,
+    // persisted), and [[forestStats]]' dst-aligned aggregate is the
+    // action that populates it, so the zero-round hand-off (the common
+    // near-dup case) passes the frame to [[propagateOver]] as-is and
+    // the default caller's premium over pure propagation is one
+    // in-cache aggregate (docs/SCALING.md, "Numbers cited by code comments").
     val bidir = propagationEdges(undirected)
     val stats = forestStats(bidir) // the action that populates the cache
     trace(
@@ -1264,35 +1038,20 @@ object Dedup {
     // frame; the birth signature doubles as the action that
     // materializes the canonical level, after which the bidirectional
     // frame is released
-    var (edges, freeEdges) = residentLevel(
+    val (e0, f0) = residentLevel(
       bidir.filter(col("src") < col("dst"))
         .select(col("src").as("a"), col("dst").as("b")), truncate = false)
-    var rounds = 0
-    var forest = false
     // seeded with the BIRTH signature so a round-1 fixpoint is
     // detectable by the same two-consecutive-reads comparison as every
     // later round
-    var prevSig: (Long, java.math.BigDecimal) = edgeSignature(edges)
+    val birth = edgeSignature(e0)
     bidir.unpersist()
-    while (!forest && rounds < scheduled) {
-      val (next, freeNext) = residentLevel(
-        starRound(edges), truncate = (rounds + 1) % 2 == 0) // see starLabels
-      val cur = edgeSignature(next) // fully materializes `next`
-      // an unchanged signature is a candidate early fixpoint; the
-      // structural test makes it exact (on a 2^-64 collision the test
-      // reads false and the schedule simply CONTINUES contracting —
-      // propagation finishes the job regardless, so no abort is needed)
-      forest = cur == prevSig && isStarForest(next)
-      prevSig = cur
-      freeEdges()
-      edges = next
-      freeEdges = freeNext
-      rounds += 1
-    }
+    val (edges, freeEdges, rounds, forest) =
+      contract(e0, f0, birth, scheduled, strict = false)
     if (forest) {
       trace(
         s"[graft] hybrid auto: star-forest fixpoint after $rounds star round(s)")
-      edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
+      forestLabels(edges)
     } else {
       trace(
         s"[graft] hybrid auto: hand-off to propagation after $rounds star " +
@@ -1422,7 +1181,7 @@ object Dedup {
       // A diameter past maxIter is a GRAPH-SHAPE surprise, not a reason
       // to kill a 100 TB pipeline: the switch is loud on stderr because
       // hitting it usually means the caller's pair graph is chain-shaped
-      // and should use canonicalizeStar/canonicalizeHybrid directly.
+      // and should pass CcStrategy.Star or CcStrategy.Hybrid instead.
       trace(s"[graft] min-label propagation did not converge " +
         s"within $maxIter iterations (component diameter exceeds it); " +
         "falling back to star contraction of the label-contracted residue")
@@ -1438,13 +1197,13 @@ object Dedup {
     */
   private val warmStartLocalEdges = 500000L
 
-  /** WARM-START exhaustion fallback (round 20; VERDICT r19 item 1):
-    * when the propagation budget exhausts, the passes already paid are
-    * not discarded — the graph is CONTRACTED BY THE PARTIAL LABELS and
-    * only the residue is re-solved. Until round 19 the fallback
-    * restarted [[starLabels]] on the WHOLE edge set: on CcProbe's
-    * 10M-edge mixture (one 64-chain hiding in 5M two-edge paths) that
-    * re-contracted 5M already-converged components to fix one chain.
+  /** WARM-START exhaustion fallback: when the propagation budget
+    * exhausts, the passes already paid are not discarded — the graph is
+    * CONTRACTED BY THE PARTIAL LABELS and only the residue is re-solved.
+    * Restarting [[starLabels]] on the WHOLE edge set would re-contract
+    * every converged component to fix one deep chain (CcProbe's mixture
+    * axis: one 64-chain hiding in 5M two-edge paths; docs/SCALING.md
+    * round 20).
     *
     * Why the quotient is exact: labels only flow along edges, so two
     * nodes sharing a partial label are provably connected, and mapping
@@ -1516,11 +1275,12 @@ object Dedup {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
 
   /** Level residency for the iterative component algorithms
-    * ([[propagatedLabels]], [[starLabels]]), measured on CcProbe's axes
-    * (docs/SCALING.md round 15) — each level is made resident one of two
-    * ways, and the returned thunk releases it; callers free level k−1 as
-    * soon as level k is material (the earlier retain-until-exit shape
-    * persisted every level of a deep propagation at once):
+    * ([[propagatedLabels]], [[contract]]), measured on CcProbe's axes
+    * (docs/SCALING.md, "Numbers cited by code comments") — each level
+    * is made resident one of two ways, and the returned thunk releases
+    * it; callers free level k−1 as soon as level k is material (the
+    * earlier retain-until-exit shape persisted every level of a deep
+    * propagation at once):
     *   - persist(): columnar, compact, partitioning-aware — the common
     *     case. But caching does not truncate the plan TREE: level k's
     *     analyzed plan embeds its (multiple) references to level k−1's,
@@ -1533,16 +1293,15 @@ object Dedup {
     *     ~2^truncateLevels copies of a flat segment base, constant in
     *     the iteration count. Checkpointing EVERY level instead was
     *     measured strictly worse on both big-graph axes: the row-object
-    *     block store is ~3x fatter than the columnar cache (executor OOM
-    *     at 30M edges where persist() ran in 26 s) and the LogicalRDD's
-    *     lost hash partitioning re-shuffles the label frame every
-    *     iteration (10M-edge star: 24.1 s vs 12.1).
+    *     block store is ~3x fatter than the columnar cache and the
+    *     LogicalRDD's lost hash partitioning re-shuffles the label frame
+    *     every iteration.
     * Both block stores spill to disk, so "released level while a
     * survivor's partition was evicted" cannot strand a recompute: blocks
     * are never silently dropped. The checkpoint store is
     * MEMORY_AND_DISK_SER, not the default deserialized level — the
-    * round-17 deep-cell runs (100M edges × diameter 16) OOM'd a 32 GB
-    * heap through the DESERIALIZED store: on a deep graph the star
+    * deep-cell runs (100M edges × diameter 16) OOM'd a 32 GB heap
+    * through the DESERIALIZED store: on a deep graph the star
     * rounds' outputs stay near-full-size (contraction halves diameter
     * long before it shrinks the edge count), and unrolling ~200M-row
     * levels as row OBJECTS both triples the resident bytes and allocates
@@ -1695,5 +1454,55 @@ object Dedup {
       .filter(col("a") < col("b"))
       .select(("a" +: "b" +: carry.flatMap(c => Seq(c._2, c._3))).map(col): _*)
       .distinct()
+  }
+}
+
+/** The distributed strategy [[Dedup.canonicalize]] runs above its
+  * `localEdgeLimit`. Every strategy reaches the same unique min-label
+  * fixpoint, and the budgets tune cost, never correctness: a component
+  * past a propagation budget takes the warm-start fallback (a star
+  * contraction of the label-contracted residue), and a pure star run
+  * that exhausts `maxRounds` fails loudly. The strategy matrix that
+  * prices them is docs/SCALING.md rounds 15-20.
+  */
+sealed trait CcStrategy
+
+object CcStrategy {
+
+  /** The measured-budget hybrid, and the default: one structural
+    * telemetry aggregate at birth estimates the residual diameter D and
+    * schedules `round(log2 D) - 2` star rounds (zero on every near-dup
+    * shape; an already-star-forest graph reads its labels straight off
+    * the telemetry), then propagation finishes with a budget derived
+    * from the collapse target, capped by `maxIter`.
+    */
+  final case class Auto(maxIter: Int = 25) extends CcStrategy
+
+  /** Pinned min-label propagation: each pass joins the current labels
+    * across a self-loop-augmented edge frame and keeps the per-node
+    * minimum — one join + one aggregate, O(diameter) passes, no birth
+    * telemetry. The leanest per-pass machinery for graphs known to be
+    * shallow.
+    */
+  final case class Propagation(maxIter: Int = 25) extends CcStrategy
+
+  /** Alternating large-star/small-star contraction to the star forest
+    * (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii, "Connected
+    * Components in MapReduce and Beyond", SoCC 2014): O(log n) rounds
+    * instead of O(diameter) passes, for long, thin components
+    * (entity-resolution chains, link graphs). A round costs ~2 shuffles
+    * + a distinct against propagation's 1 join + 1 aggregate, so it does
+    * not pay on shallow near-dup graphs.
+    */
+  final case class Star(maxRounds: Int = 50) extends CcStrategy
+
+  /** `starRounds` contraction rounds to collapse diameter (each at least
+    * halves it), then propagation to finish — for graphs that are deep
+    * AND large, where propagation pays a full pass per hop and pure star
+    * pays its heavier shuffle volume to the end. [[Auto]] sizes the
+    * rounds from the graph; pin them here only to force a schedule.
+    */
+  final case class Hybrid(starRounds: Int, maxIter: Int = 25) extends CcStrategy {
+    require(starRounds >= 0, s"starRounds must be non-negative, got $starRounds")
   }
 }

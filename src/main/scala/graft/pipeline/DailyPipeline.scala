@@ -85,34 +85,48 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
 
   /** Full-history backfill from price tables already in the lake. */
   def backfill(stockPrices: DataFrame, etfPrices: DataFrame): Unit = {
-    val sr = Stages.returns(stockPrices).cache()
-    val er = Stages.returns(etfPrices).cache()
-    replace("stock_returns", sr)
-    replace("etf_returns", er)
+    withCache { cache =>
+      val sr = cache(Stages.returns(stockPrices))
+      val er = cache(Stages.returns(etfPrices))
+      replace("stock_returns", sr)
+      replace("etf_returns", er)
 
-    val reg = Stages.factorRegression(sr, er).cache()
-    replace("factor_loadings", Stages.factorLoadings(reg))
-    replace("idio_vol", Stages.idioVol(reg))
-    replace("factor_covariances", Stages.factorCovariances(er))
+      val reg = cache(Stages.factorRegression(sr, er))
+      replace("factor_loadings", Stages.factorLoadings(reg))
+      replace("idio_vol", Stages.idioVol(reg))
+      replace("factor_covariances", Stages.factorCovariances(er))
 
-    val sig = Stages.reversalSignals(sr).cache()
-    replace("signals", sig)
-    val sc = Stages.scores(sig)
-    replace("scores", sc)
-    replace("alphas", Stages.alphas(sc, lake.table("idio_vol")))
+      val sig = cache(Stages.reversalSignals(sr))
+      replace("signals", sig)
+      val sc = Stages.scores(sig)
+      replace("scores", sc)
+      replace("alphas", Stages.alphas(sc, lake.table("idio_vol")))
 
-    val bw = Stages.benchmarkWeights(sr.select("ticker", "date"))
-    replace("benchmark_weights", bw)
-    val br = Stages.benchmarkReturns(bw, sr)
-    replace("benchmark_returns", br)
-    replace("betas", Stages.betas(sr, br))
+      val bw = Stages.benchmarkWeights(sr.select("ticker", "date"))
+      replace("benchmark_weights", bw)
+      val br = Stages.benchmarkReturns(bw, sr)
+      replace("benchmark_returns", br)
+      replace("betas", Stages.betas(sr, br))
 
-    val (w, m) = Stages.portfolio(
-      lake.table("alphas"), lake.table("factor_loadings"),
-      lake.table("factor_covariances"), lake.table("idio_vol"),
-      lake.table("benchmark_weights"))
-    replace("portfolio_weights", w)
-    replace("portfolio_metrics", m)
+      val (w, m) = Stages.portfolio(
+        lake.table("alphas"), lake.table("factor_loadings"),
+        lake.table("factor_covariances"), lake.table("idio_vol"),
+        lake.table("benchmark_weights"))
+      replace("portfolio_weights", w)
+      replace("portfolio_metrics", m)
+    }
+  }
+
+  /** Runs one step with a `cache` that registers each frame it caches;
+    * every one is released when the step ends, dependents first (dropping
+    * a frame another cached plan reads would make Spark re-plan that
+    * one). Without this every step of a long-lived session leaves its
+    * frames in the cache, and each later query's cache lookup walks them.
+    */
+  private def withCache(step: (DataFrame => DataFrame) => Unit): Unit = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try step { df => cached += df; df.cache() }
+    finally cached.reverseIterator.foreach(_.unpersist())
   }
 
   private def replace(name: String, df: DataFrame): Unit = {
@@ -133,41 +147,43 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
 
     def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
 
-    val sr = Stages.returns(trailing(stockPrices)).cache()
-    val er = Stages.returns(trailing(etfPrices)).cache()
-    upsert("stock_returns", sr.filter(col("date") === asOfD))
-    upsert("etf_returns", er.filter(col("date") === asOfD))
+    withCache { cache =>
+      val sr = cache(Stages.returns(trailing(stockPrices)))
+      val er = cache(Stages.returns(trailing(etfPrices)))
+      upsert("stock_returns", sr.filter(col("date") === asOfD))
+      upsert("etf_returns", er.filter(col("date") === asOfD))
 
-    val reg = Stages.factorRegression(sr, er).cache()
-    upsert("factor_loadings", Stages.factorLoadings(reg).filter(col("date") === asOfD))
-    upsert("idio_vol", Stages.idioVol(reg).filter(col("date") === asOfD))
-    upsert("factor_covariances",
-      Stages.factorCovariances(er).filter(col("date") === asOfD))
+      val reg = cache(Stages.factorRegression(sr, er))
+      upsert("factor_loadings", Stages.factorLoadings(reg).filter(col("date") === asOfD))
+      upsert("idio_vol", Stages.idioVol(reg).filter(col("date") === asOfD))
+      upsert("factor_covariances",
+        Stages.factorCovariances(er).filter(col("date") === asOfD))
 
-    // daily scores are a single-date cross-section (SURVEY §2.4 A6 fork)
-    val sig = Stages.reversalSignals(sr).cache()
-    upsert("signals", sig.filter(col("date") === asOfD))
-    val sc = Stages.scores(sig.filter(col("date") === asOfD))
-    upsert("scores", sc)
-    upsert("alphas",
-      Stages.alphas(sc, lake.table("idio_vol").filter(col("date") === asOfD)))
+      // daily scores are a single-date cross-section (SURVEY §2.4 A6 fork)
+      val sig = cache(Stages.reversalSignals(sr))
+      upsert("signals", sig.filter(col("date") === asOfD))
+      val sc = Stages.scores(sig.filter(col("date") === asOfD))
+      upsert("scores", sc)
+      upsert("alphas",
+        Stages.alphas(sc, lake.table("idio_vol").filter(col("date") === asOfD)))
 
-    val bw = Stages.benchmarkWeights(
-      sr.filter(col("date") === asOfD).select("ticker", "date"))
-    upsert("benchmark_weights", bw)
-    upsert("benchmark_returns",
-      Stages.benchmarkReturns(bw, sr.filter(col("date") === asOfD)))
-    upsert("betas", Stages.betas(sr, lake.table("benchmark_returns"))
-      .filter(col("date") === asOfD))
+      val bw = Stages.benchmarkWeights(
+        sr.filter(col("date") === asOfD).select("ticker", "date"))
+      upsert("benchmark_weights", bw)
+      upsert("benchmark_returns",
+        Stages.benchmarkReturns(bw, sr.filter(col("date") === asOfD)))
+      upsert("betas", Stages.betas(sr, lake.table("benchmark_returns"))
+        .filter(col("date") === asOfD))
 
-    val (w, m) = Stages.portfolio(
-      lake.table("alphas").filter(col("date") === asOfD),
-      lake.table("factor_loadings").filter(col("date") === asOfD),
-      lake.table("factor_covariances").filter(col("date") === asOfD),
-      lake.table("idio_vol").filter(col("date") === asOfD),
-      lake.table("benchmark_weights").filter(col("date") === asOfD))
-    upsert("portfolio_weights", w)
-    upsert("portfolio_metrics", m)
+      val (w, m) = Stages.portfolio(
+        lake.table("alphas").filter(col("date") === asOfD),
+        lake.table("factor_loadings").filter(col("date") === asOfD),
+        lake.table("factor_covariances").filter(col("date") === asOfD),
+        lake.table("idio_vol").filter(col("date") === asOfD),
+        lake.table("benchmark_weights").filter(col("date") === asOfD))
+      upsert("portfolio_weights", w)
+      upsert("portfolio_metrics", m)
+    }
   }
 
   private def upsert(name: String, df: DataFrame): Unit = {

@@ -3,6 +3,9 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Dedup
+import graft.operators.CcStrategy.{Auto, Hybrid, Propagation, Star}
+
 /** Connected-components probe: measures [[graft.operators.Dedup.canonicalize]]'s
   * DISTRIBUTED min-label propagation branch on edge sets far past the
   * 1M-edge gate that selects the driver union-find in the common case —
@@ -37,12 +40,12 @@ import org.apache.spark.sql.functions._
   *
   * The edge and diameter axes run the iterative strategies — min-label
   * propagation ("dist"), alternating large-star/small-star contraction
-  * ("star", [[graft.operators.Dedup.canonicalizeStar]]), and the
+  * ("star", [[graft.operators.CcStrategy.Star]]), and the
   * star-then-propagation hybrid ("hybrid" at the pinned
   * SPARK_GRAFT_CC_HYBRID_ROUNDS budget, "hybrid_auto" under the
-  * measured adaptive budget —
-  * [[graft.operators.Dedup.canonicalizeHybrid]]) — so the
-  * O(diameter)-vs-O(log n) trade is priced on the same graphs. A fourth
+  * measured adaptive budget — [[graft.operators.CcStrategy.Hybrid]] /
+  * [[graft.operators.CcStrategy.Auto]]) — so the O(diameter)-vs-O(log n)
+  * trade is priced on the same graphs. A fourth
   * **deep axis** prices the strategy matrix's hardest cell — ONE graph
   * that is high-volume AND high-diameter (`SPARK_GRAFT_CC_DEEP_EDGES`
   * chain edges of length `SPARK_GRAFT_CC_DEEP_LEN`, defaults 100M × 16)
@@ -275,18 +278,16 @@ object CcProbe {
     // collapse diameter, then the propagation finisher
     def canon(nodes: DataFrame, pairs: DataFrame, mode: String,
         maxIter: Int): DataFrame = mode match {
-      case "local" => graft.operators.Dedup.canonicalize(nodes, "doc_id",
-        pairs, maxIter = maxIter, localEdgeLimit = Long.MaxValue)
-      case "dist" => graft.operators.Dedup.canonicalizePropagation(nodes,
-        "doc_id", pairs, maxIter = maxIter, localEdgeLimit = 0L)
-      case "star" => graft.operators.Dedup.canonicalizeStar(nodes, "doc_id",
-        pairs, maxRounds = 50, localEdgeLimit = 0L)
-      case "hybrid" => graft.operators.Dedup.canonicalizeHybrid(nodes,
-        "doc_id", pairs, starRounds = hybridRounds, maxIter = maxIter,
-        localEdgeLimit = 0L)
-      case "hybrid_auto" => graft.operators.Dedup.canonicalizeHybrid(nodes,
-        "doc_id", pairs, starRounds = graft.operators.Dedup.AutoStarRounds,
-        maxIter = maxIter, localEdgeLimit = 0L)
+      case "local" => Dedup.canonicalize(nodes, "doc_id", pairs,
+        Auto(maxIter), localEdgeLimit = Long.MaxValue)
+      case "dist" => Dedup.canonicalize(nodes, "doc_id", pairs,
+        Propagation(maxIter), localEdgeLimit = 0L)
+      case "star" => Dedup.canonicalize(nodes, "doc_id", pairs,
+        Star(maxRounds = 50), localEdgeLimit = 0L)
+      case "hybrid" => Dedup.canonicalize(nodes, "doc_id", pairs,
+        Hybrid(hybridRounds, maxIter), localEdgeLimit = 0L)
+      case "hybrid_auto" => Dedup.canonicalize(nodes, "doc_id", pairs,
+        Auto(maxIter), localEdgeLimit = 0L)
       case other => sys.error(s"unknown cc mode $other")
     }
     // one timed canonicalize run: read parquet -> canonicalize -> noop

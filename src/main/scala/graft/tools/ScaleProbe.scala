@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.registry.Registry
+
 /** Dynamic scaling probe: measures how the heaviest BATCH paths behave
   * as data grows past the largest driver-provided scale factor, turning
   * the engine's "scales by design" plan assertions into observed data.
@@ -11,7 +13,7 @@ import org.apache.spark.sql.functions._
   * SYNTHESIZED from it deterministically — each scaled table is the
   * union of N transformed copies of the sf0.1 original written once to
   * a scratch parquet dir (never under /root/testdata), and the probe
-  * then runs the UNCHANGED `SparkEntry.queries` entries against that
+  * then runs the UNCHANGED registry queries against that
   * dir, so the measured plan is byte-identical to the graded one.
   *
   * Copy transforms preserve per-copy structure so the workload scales
@@ -208,64 +210,15 @@ object ScaleProbe {
     }
   }
 
-  /** Tables each probe-able query reads — the definition of the "heavy
-    * family" for both this probe and Bench's SPARK_GRAFT_BENCH_SCALE
-    * mode (which sweeps exactly the queries mapped here against the
-    * same scaled scratch corpus).
+  /** The distinct tables the named queries read, from their
+    * heavy-family registry records ([[graft.registry.Heavy]]) — the
+    * family this probe and Bench's SPARK_GRAFT_BENCH_SCALE mode sweep
+    * against the same scaled scratch corpus. A name outside the family
+    * is an error.
     */
-  private[graft] val tablesFor: Map[String, Seq[String]] = Map(
-    "d3_dedup_minhash" -> Seq("documents"),
-    "d6_dedup_clusters" -> Seq("documents"),
-    "d9_incremental_neardup" -> Seq("documents"),
-    "x6_pack_sequences" -> Seq("documents"),
-    "w6_rolling_ols_native" -> Seq("lineitem"),
-    "l5_qp_weights" -> Seq("orders", "customer"),
-    // round-12 additions: the remaining heavy shapes without a
-    // dynamic datum (r11 verdict item 5). Note the l_returnflag-
-    // partitioned windows (w5 chunked, a13 trimmed): the group COUNT
-    // is constant (3 flags) while rows-per-group grow xN — the
-    // chunking/trim designs exist exactly for that regime, so these
-    // probes measure the worst case, not the friendly one.
-    "l5_qp_certificate" -> Seq("orders", "customer"),
-    "w5_covar_chunked" -> Seq("lineitem"),
-    "a13_trimmed_stats" -> Seq("lineitem"),
-    "j13_range_join" -> Seq("orders", "lineitem"),
-    // the round-13 densification cures, probed against the SAME growth
-    // model that measured j13's uncapped 2.09: the cap must hold output
-    // ≤ k·points (near-linear) where the uncapped join went quadratic
-    "j13b_range_join_topk" -> Seq("orders", "lineitem"),
-    // round-15: the fallback branch a user hits when the interval side
-    // genuinely outgrows any broadcast budget — priced next to j13b so
-    // the size gate's cost matrix is measured on both sides
-    "j13f_range_join_topk_shuffled" -> Seq("orders", "lineitem"),
-    "j13c_interval_coalesce" -> Seq("orders"),
-    // round-14: the sweep (cure b without the broadcast premise) and the
-    // per-point aggregate (cure a), probed on the same growth model
-    "j13d_range_join_sweep" -> Seq("orders", "lineitem"),
-    "j13e_range_join_agg" -> Seq("orders", "lineitem"),
-    // round-14: the wide-band SRP datum — 3x28-bit bands hold the
-    // collision floor (shuffle ∝ N) where d5b's 16-bit bands measured
-    // the N²·bands/2^bits super-linear shuffle growth
-    "d5c_neardup_wideband" -> Seq("embeddings"),
-    "t13_heavy_hitters" -> Seq("documents"),
-    "w13_ranking_suite" -> Seq("customer"),
-    // round-12 late additions: the remaining >=1s bench entries
-    // without a dynamic datum. f2's blocking is probed before AND
-    // after the deletion-neighborhood rewrite; d5/n5 ride the
-    // orthogonal embedding scramble above.
-    "f2_fuzzy_pairs" -> Seq("supplier"),
-    "t12_repetition" -> Seq("documents"),
-    "d5_dedup_embcos" -> Seq("embeddings"),
-    "d5b_neardup_embcos" -> Seq("embeddings"),
-    "n5_ann_pq" -> Seq("embeddings"),
-    // the last >=1s stragglers: the classic TPC-H join suite (facts
-    // scale xN over once-copied dims) and the plain windowed
-    // covariance (the documented non-scale-path twin of w5_covar_
-    // chunked — probed to show WHY the chunked form exists)
-    "q21_late_supplier" -> Seq("supplier", "lineitem", "orders", "nation"),
-    "q7_nation_volume" -> Seq("supplier", "lineitem", "orders", "customer", "nation"),
-    "q11_important_stock" -> Seq("lineitem"),
-    "w5_rolling_covar" -> Seq("lineitem"))
+  private[graft] def tablesFor(names: Seq[String]): Seq[String] =
+    names.flatMap(n => Registry.find(n).flatMap(_.heavy).map(_.tables)
+      .getOrElse(sys.error(s"no table mapping for query $n"))).distinct
 
   /** Key ranges of the BASE data must fit under the copy strides, or
     * copies silently collide (see offsetCols). One agg per table, once.
@@ -379,9 +332,7 @@ object ScaleProbe {
       "d3_dedup_minhash,d6_dedup_clusters,d9_incremental_neardup," +
         "w6_rolling_ols_native,l5_qp_weights,x6_pack_sequences")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-    val neededTables =
-      queryNames.flatMap(n => tablesFor.getOrElse(n,
-        sys.error(s"no table mapping for query $n"))).distinct
+    val neededTables = tablesFor(queryNames)
 
     // SPARK_GRAFT_MASTER=local-cluster[n,cores,memMB] puts REAL
     // executor JVMs and socket exchanges under the same probe (the
@@ -439,7 +390,7 @@ object ScaleProbe {
     // dropped so no query inherits a neighbor's blocks
     def materialize(name: String, dir: String): Unit =
       SessionConf.restoring(spark) {
-        try graft.SparkEntry.queries(name)(spark, dir)
+        try Registry(name).build(spark, dir)
           .write.format("noop").mode("overwrite").save()
         finally {
           spark.sharedState.cacheManager.clearCache()

@@ -4,6 +4,8 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.registry.{Exempt, Pinned, Query, Registry, Unbanded}
+
 /** Pins the one stdout line the driver actually parses.
   *
   * The driver keeps the LAST ~2000 chars of Bench stdout (with sbt's
@@ -314,9 +316,9 @@ class BenchFormatSpec extends AnyFunSuite {
     // BENCH_SCALE10.json is the heavy-family grading basis (BASELINE.md,
     // r13): a sweep that silently shrank — a renamed query dropping out
     // of the membership filter, or a stale artifact committed after
-    // tablesFor grew — would quietly narrow what gets graded. This pin
+    // the heavy family grew — would quietly narrow what gets graded. This pin
     // makes both fail loudly: the committed artifact's entry set must
-    // EQUAL ScaleProbe.tablesFor's key set (re-run
+    // EQUAL the registry's heavy family (re-run
     // SPARK_GRAFT_BENCH_SCALE=10 and commit the fresh line whenever the
     // heavy family changes), and the artifact must self-describe as
     // scale-mode.
@@ -335,7 +337,7 @@ class BenchFormatSpec extends AnyFunSuite {
     assert((j \ "scale_isolation") == JString("per_entry_jvm"),
       "10x artifact was not produced by the per-entry-JVM protocol")
     val entries = (j \ "queries").asInstanceOf[JObject].obj.map(_._1).toSet
-    val family = graft.tools.ScaleProbe.tablesFor.keySet
+    val family = Registry.heavy.map(_.name).toSet
     assert(entries == family,
       s"10x artifact is stale vs the heavy family: missing=" +
         s"${(family -- entries).toSeq.sorted} extra=" +
@@ -347,7 +349,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // BASELINE.md carried the j13b (disk-bound) and j13d (JIT-bound)
     // variance bands as PROSE through r14 — a future round's move inside
     // the band needed judge archaeology to adjudicate. The bands are now
-    // structured artifact data (`bands`, from Bench.scaleBands10x), and
+    // structured artifact data (`bands`, from the Heavy records), and
     // this pin forces coverage: any committed heavy-family entry whose
     // 10x time exceeds 60s without a band would re-open exactly that
     // archaeology, so it fails here instead.
@@ -366,7 +368,7 @@ class BenchFormatSpec extends AnyFunSuite {
     val missing = needing.filterNot(bands)
     assert(missing.isEmpty,
       s"entries over 60s without a variance band: $missing — pin a band " +
-        "in Bench.scaleBands10x from committed multi-run data and " +
+        "on the entry's Heavy record from committed multi-run data and " +
         "regenerate the artifact")
     // and the pinned source map emits exactly what the artifact carries
     val emitted = Bench.scaleBandsJson(Seq("j13b_range_join_topk", "nope"))
@@ -380,8 +382,8 @@ class BenchFormatSpec extends AnyFunSuite {
     // the gate predicate: only PINNED entries gate, only past band hi,
     // and failed entries (-1) never gate (a crash is an error, not an
     // inflation to re-measure)
-    val (lo, hi) = Bench.sf01IsolatedBands("j13d_range_join_sweep")
-    assert(lo > 0 && hi > lo)
+    val hi = Bench.pinnedBand("j13d_range_join_sweep").get.hi
+    intercept[IllegalArgumentException](Pinned(2.0, 1.0)) // empty band
     assert(Bench.sf01BandExceeded("j13d_range_join_sweep", hi + 0.01))
     assert(!Bench.sf01BandExceeded("j13d_range_join_sweep", hi))
     assert(!Bench.sf01BandExceeded("j13d_range_join_sweep", -1.0))
@@ -395,7 +397,8 @@ class BenchFormatSpec extends AnyFunSuite {
     assert((jd \ "jvm_isolated") == JArray(List(JString("j13d_range_join_sweep"))))
     assert((jd \ "band_exceeded") == JArray(Nil))
     val JObject(bandFields) = (jd \ "isolated_bands"): @unchecked
-    assert(bandFields.map(_._1).toSet == Bench.sf01IsolatedBands.keySet)
+    assert(bandFields.map(_._1).toSet ==
+      Registry.all.collect { case Query(n, _, _, _: Pinned, _) => n }.toSet)
     // compact line: the outcome names travel only when non-empty
     val entries = Seq(("q1_agg", 0.5), ("j13d_range_join_sweep", 3.2))
     val quiet = Bench.compactArtifact(entries, 3.7, 0.0, "rocksdb", calib,
@@ -419,7 +422,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // <= 0.9 a read over 3.7 s gates (fresh-JVM re-run; persistent
     // excess -> band_exceeded), while a busy window defers to the
     // primary band untouched
-    val (qHi, ceil) = Bench.sf01QuietBands("d9_incremental_neardup")
+    val (qHi, ceil) = Bench.pinnedBand("d9_incremental_neardup").get.quiet.get
     assert(qHi == 3.7 && ceil == 0.9)
     // quiet host, over the quiet hi: gates
     assert(Bench.sf01QuietExceeded("d9_incremental_neardup", 4.0, 0.85))
@@ -433,29 +436,22 @@ class BenchFormatSpec extends AnyFunSuite {
     // failed entries and unpinned entries never gate
     assert(!Bench.sf01QuietExceeded("d9_incremental_neardup", -1.0, 0.5))
     assert(!Bench.sf01QuietExceeded("q1_agg", 1e9, 0.5))
-    // every quiet band refines a PINNED primary band, under its hi
-    Bench.sf01QuietBands.foreach { case (name, (hi, _)) =>
-      val primary = Bench.sf01IsolatedBands.get(name)
-      assert(primary.nonEmpty, s"$name quiet band without a primary band")
-      assert(hi < primary.get._2,
-        s"$name quiet hi must sit under the busy-window hi")
-    }
+    // a quiet band refines its primary band, under its hi: a record
+    // that breaks this cannot be built
+    intercept[IllegalArgumentException](Pinned(1.0, 3.0, quiet = Some((3.0, 0.9))))
   }
 
   test("band-at-birth: heavy-family and >5s sweep entries carry a band " +
       "or an audited exemption") {
-    // The round-16 band-gate coverage audit closed with a PROSE rule —
-    // "an interpreted per-row path fed by join fan-out, or a
-    // dozens-of-short-jobs shape, gets a variance band pinned at birth"
-    // — which nothing enforced: a round-17 author adding a heavy or
-    // slow entry could forget, and the next inflated sweep value would
-    // re-open the adjudication archaeology the bands exist to prevent.
-    // This pin mechanizes the rule: every entry that is EITHER in the
-    // heavy family (the 10x-graded set) OR over 5 s in the committed
-    // sf0.1 detail artifact must appear in sf01IsolatedBands (measured,
-    // gates the sweep) or in sf01BandExemptions (a reason string a
-    // judge can audit). New entries fail here until their author
-    // measures or argues.
+    // The round-16 band-gate coverage audit's rule — "an interpreted
+    // per-row path fed by join fan-out, or a dozens-of-short-jobs shape,
+    // gets a variance band pinned at birth" — mechanized: every entry
+    // that is EITHER in the heavy family (the 10x-graded set) OR over
+    // 5 s in the committed sf0.1 detail artifact must carry a Pinned
+    // band (measured, gates the sweep) or an Exempt reason a judge can
+    // audit. Bench's streaming entries are exempt by construction (they
+    // are adjudicated through stream_calib_ratio). New entries fail
+    // here until their author measures or argues.
     val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
     assert(java.nio.file.Files.exists(p), "BENCH_DETAIL.json missing")
     val j = JsonMethods.parse(java.nio.file.Files.readString(p))
@@ -464,31 +460,22 @@ class BenchFormatSpec extends AnyFunSuite {
       case (k, JInt(v)) => k -> v.toDouble
     }
     val slow = qs.collect { case (k, v) if v > 5.0 => k }.toSet
-    val family = graft.tools.ScaleProbe.tablesFor.keySet
-    val banded = Bench.sf01IsolatedBands.keySet
-    val exempt = Bench.sf01BandExemptions.keySet
-    val missing = ((family ++ slow) -- banded -- exempt).toSeq.sorted
+    val family = Registry.heavy.map(_.name).toSet
+    val missing = ((family ++ slow) -- Bench.streamEntries).toSeq.sorted
+      .filter(n => Registry.find(n).forall(_.band == Unbanded))
     assert(missing.isEmpty,
       s"entries without a band or exemption: $missing — measure the r10 " +
         "isolated protocol (SPARK_GRAFT_QUERIES=<entry> " +
-        "SPARK_GRAFT_REPS=3 on sf0.1) and pin sf01IsolatedBands, or " +
-        "argue the exemption in sf01BandExemptions")
-    // hygiene: banded XOR exempt (an entry in both would make the gate's
-    // behavior ambiguous to a reader), and every exemption names one of
-    // the two audited classes so a bare "skip me" can't slip in
-    assert((banded & exempt).isEmpty,
-      s"entries both banded and exempt: ${(banded & exempt).toSeq.sorted}")
-    Bench.sf01BandExemptions.foreach { case (k, reason) =>
-      assert(reason.contains("codegen") || reason.contains("streaming"),
-        s"exemption for $k cites neither audited class: $reason")
+        "SPARK_GRAFT_REPS=3 on sf0.1) and pin a band on the registry " +
+        "record, or argue an exemption there")
+    // every exemption names one of the audited classes so a bare
+    // "skip me" can't slip in
+    Registry.all.foreach {
+      case Query(n, _, _, Exempt(reason), _) =>
+        assert(reason.contains("codegen"),
+          s"exemption for $n cites no audited class: $reason")
+      case _ =>
     }
-    // typo-rot guard: every pinned or exempt name must be a real entry
-    // (a renamed query would otherwise leave a dead pin that LOOKS like
-    // coverage while the live entry goes ungated)
-    val known = SparkEntry.queries.keySet ++ Set("e3_stream_sessionize",
-      "e4_stream_rollup", "e5_stream_neardedup", "e6_stream_interval_join")
-    val unknown = ((banded ++ exempt) -- known).toSeq.sorted
-    assert(unknown.isEmpty, s"pinned/exempt names matching no entry: $unknown")
   }
 
   test("minUnconfirmed matches noisyRepCount and skips corroborated mins") {

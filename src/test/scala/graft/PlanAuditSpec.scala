@@ -1,5 +1,7 @@
 package graft
 
+import graft.registry.{Query, Registry, RowsOnly, Vectors}
+
 /** Physical-plan audits of flagship queries: the properties that decide
   * 100 TB behavior are asserted, not eyeballed — filters reach the
   * parquet scan, projections prune the read schema, small dimensions
@@ -21,23 +23,16 @@ class PlanAuditSpec extends SparkSpec {
     }
 
   test("every query is oracle-backed except the documented rows-only set") {
-    // a queries entry without an oracleSql mirror silently downgrades to
-    // a rows-only check in the driver's correctness gate — the ONLY
-    // deliberate such entry is the QP solve (certified separately by
-    // l5_qp_certificate); anything else appearing here is a regression
-    // of the gate, not a style choice
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    // a query without an oracle mirror silently downgrades to a
+    // rows-only check in the correctness gate — the ONLY deliberate such
+    // entry is the QP solve (certified separately by l5_qp_certificate);
+    // anything else appearing here is a regression of the gate, not a
+    // style choice
+    val rowsOnly = Registry.all.collect {
+      case Query(n, _, RowsOnly(_), _, _) => n
+    }.toSet
     assert(rowsOnly == Set("l5_qp_weights"),
       s"unexpected rows-only queries: ${(rowsOnly - "l5_qp_weights").toSeq.sorted}")
-    // the self-describing marker Verify dumps must name EXACTLY that set
-    // (a stale marker would either excuse a new unoracled query or label
-    // a since-oracled one as designed rows-only)
-    assert(SparkEntry.rowsOnlyByDesign.keySet == rowsOnly,
-      s"rows_only_by_design out of sync: ${SparkEntry.rowsOnlyByDesign.keySet}")
-    // and no orphaned oracle entries (an oracle whose query was renamed
-    // would never run, masking a lost check)
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql without queries: ${orphans.toSeq.sorted}")
   }
 
   test("filters reach the parquet scan; projections prune the read schema") {
@@ -283,9 +278,9 @@ class PlanAuditSpec extends SparkSpec {
       val mx = graft.catalog.Tables.load(spark, dir, "embeddings")
         .agg(org.apache.spark.sql.functions.max("vec_id"))
         .collect().head.getLong(0)
-      assert(mx < SparkEntry.n5PanelPin,
+      assert(mx < Vectors.n5PanelPin,
         s"$dir embeddings max vec_id $mx >= n5PanelPin " +
-          s"${SparkEntry.n5PanelPin}: the fixed panel no longer covers " +
+          s"${Vectors.n5PanelPin}: the fixed panel no longer covers " +
           "the graded id range — raise the pin and re-check the oracle")
     }
   }

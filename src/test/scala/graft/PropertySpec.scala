@@ -4,6 +4,7 @@ import breeze.linalg.{DenseMatrix, DenseVector}
 
 import graft.algo.Qp
 import graft.expr.Ewma
+import graft.operators.CcStrategy.{Auto, Hybrid, Propagation, Star}
 
 /** Property-based invariants (SURVEY §5 item 4), checked over seeded
   * randomized cases (the scalatest/scalacheck bridge isn't on the
@@ -280,29 +281,29 @@ class PropertySpec extends SparkSpec {
       // canonicalize's own distributed branch (the auto hybrid since
       // round 20) is pinned by the no-knob spec and the d6e oracle entry
       val viaLoop = graft.operators.Dedup
-        .canonicalizePropagation(ids, "doc_id", pairs, localEdgeLimit = 0L)
+        .canonicalize(ids, "doc_id", pairs, Propagation(), localEdgeLimit = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaLoop == out)
       // ... and the alternating star contraction agrees with both
       // (localEdgeLimit = 0 forces the distributed star rounds — the
       // default gate would route this tiny graph to the union-find)
       val viaStar = graft.operators.Dedup
-        .canonicalizeStar(ids, "doc_id", pairs, localEdgeLimit = 0L)
+        .canonicalize(ids, "doc_id", pairs, Star(), localEdgeLimit = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaStar == out)
-      // ... and canonicalizeStar's DEFAULT size gate (this graph is far
+      // ... and the Star strategy's DEFAULT size gate (this graph is far
       // under 500k edges, so it routes to the driver union-find) returns
       // the same fixpoint as its forced-star branch
       val viaStarGated = graft.operators.Dedup
-        .canonicalizeStar(ids, "doc_id", pairs)
+        .canonicalize(ids, "doc_id", pairs, Star())
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaStarGated == viaStar)
       // ... and the hybrid (star rounds, then the propagation finisher)
       // agrees too, on its forced hand-off path: one contraction round on
       // a random graph leaves a non-star residue, so propagation finishes
       val viaHybrid = graft.operators.Dedup
-        .canonicalizeHybrid(ids, "doc_id", pairs, starRounds = 1,
-          localEdgeLimit = 0L)
+        .canonicalize(ids, "doc_id", pairs,
+          Hybrid(starRounds = 1), localEdgeLimit = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaHybrid == out)
       // idempotence: feeding the canonical mapping back as pairs changes nothing
@@ -327,8 +328,8 @@ class PropertySpec extends SparkSpec {
     val ids = (0L to len.toLong).toDF("doc_id")
     val pairs = (0L until len.toLong).map(j => (j, j + 1)).toDF("a", "b")
     val out = graft.operators.Dedup
-      .canonicalizePropagation(ids, "doc_id", pairs, maxIter = len + 3,
-        localEdgeLimit = 0L)
+      .canonicalize(ids, "doc_id", pairs,
+        Propagation(maxIter = len + 3), localEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(out.length == len + 1)
     out.foreach { case (id, canon, isDup) =>
@@ -338,7 +339,7 @@ class PropertySpec extends SparkSpec {
     // (forced past the size gate — a 22-edge chain would otherwise
     // union-find on the driver and pin nothing about star rounds)
     val star = graft.operators.Dedup
-      .canonicalizeStar(ids, "doc_id", pairs, maxRounds = 10, localEdgeLimit = 0L)
+      .canonicalize(ids, "doc_id", pairs, Star(maxRounds = 10), localEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(star.length == len + 1)
     star.foreach { case (id, canon, isDup) =>
@@ -348,8 +349,8 @@ class PropertySpec extends SparkSpec {
     // propagation detects exhaustion and falls back to the star
     // contraction, returning the same fixpoint
     val fellBack = graft.operators.Dedup
-      .canonicalizePropagation(ids, "doc_id", pairs, maxIter = 5,
-        localEdgeLimit = 0L)
+      .canonicalize(ids, "doc_id", pairs,
+        Propagation(maxIter = 5), localEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(fellBack.length == len + 1)
     fellBack.foreach { case (id, canon, isDup) =>
@@ -377,8 +378,8 @@ class PropertySpec extends SparkSpec {
       var out: Array[(Long, Long, Boolean)] = Array.empty
       val err = capturingTrace {
         out = graft.operators.Dedup
-          .canonicalizeHybrid(ids, "doc_id", pairs, starRounds = rounds,
-            maxIter = 8, localEdgeLimit = 0L)
+          .canonicalize(ids, "doc_id", pairs,
+            Hybrid(starRounds = rounds, maxIter = 8), localEdgeLimit = 0L)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
       }
       (out, err)
@@ -414,7 +415,7 @@ class PropertySpec extends SparkSpec {
       var out: Array[(Long, Long)] = Array.empty
       val err = capturingTrace {
         out = graft.operators.Dedup
-          .canonicalizeHybrid(ids, "doc_id", pairs, localEdgeLimit = 0L)
+          .canonicalize(ids, "doc_id", pairs, Auto(), localEdgeLimit = 0L)
           .collect().map(r => (r.getLong(0), r.getLong(1)))
       }
       (out, err)
@@ -495,8 +496,8 @@ class PropertySpec extends SparkSpec {
     var mixOut: Array[(Long, Long)] = Array.empty
     val mixErr = capturingTrace {
       mixOut = graft.operators.Dedup
-        .canonicalizeHybrid(mixIds, "doc_id", mixPairs, maxIter = 8,
-          localEdgeLimit = 0L)
+        .canonicalize(mixIds, "doc_id", mixPairs,
+          Auto(maxIter = 8), localEdgeLimit = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
     assert(mixErr.contains("hand-off to propagation after 0 star round(s)"),
@@ -523,7 +524,7 @@ class PropertySpec extends SparkSpec {
     var capOut: Array[(Long, Long)] = Array.empty
     val capErr = capturingTrace {
       capOut = graft.operators.Dedup
-        .canonicalizeHybrid(capIds, "doc_id", capPairs, localEdgeLimit = 0L)
+        .canonicalize(capIds, "doc_id", capPairs, Auto(), localEdgeLimit = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
     assert(capErr.contains("hand-off to propagation after 0 star round(s)"),
@@ -550,8 +551,8 @@ class PropertySpec extends SparkSpec {
     var triOut: Array[(Long, Long)] = Array.empty
     val triErr = capturingTrace {
       triOut = graft.operators.Dedup
-        .canonicalizeHybrid(mixIds, "doc_id", triPairs, maxIter = 8,
-          localEdgeLimit = 0L)
+        .canonicalize(mixIds, "doc_id", triPairs,
+          Auto(maxIter = 8), localEdgeLimit = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
     assert(triErr.contains("residual-diameter estimate 180.0 at birth"),
@@ -587,7 +588,7 @@ class PropertySpec extends SparkSpec {
     var catOut: Array[(Long, Long)] = Array.empty
     val catErr = capturingTrace {
       catOut = graft.operators.Dedup
-        .canonicalizeHybrid(catIds, "doc_id", catPairs, localEdgeLimit = 0L)
+        .canonicalize(catIds, "doc_id", catPairs, Auto(), localEdgeLimit = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
     }
     assert(catErr.contains("hand-off to propagation after 0 star round(s)"),
@@ -629,14 +630,14 @@ class PropertySpec extends SparkSpec {
     def collect(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     run("union-find", collect(Dedup.canonicalize(nodes, "doc_id", pairs)))
-    run("propagation", collect(Dedup.canonicalizePropagation(nodes,
-      "doc_id", pairs, maxIter = tailLen + 5, localEdgeLimit = 0L)))
-    run("star", collect(Dedup.canonicalizeStar(nodes, "doc_id", pairs,
-      localEdgeLimit = 0L)))
-    run("star-gated", collect(Dedup.canonicalizeStar(nodes, "doc_id", pairs)))
+    run("propagation", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Propagation(maxIter = tailLen + 5), localEdgeLimit = 0L)))
+    run("star", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Star(), localEdgeLimit = 0L)))
+    run("star-gated", collect(Dedup.canonicalize(nodes, "doc_id", pairs, Star())))
     // exhausted propagation falls back to star on this shape too
-    run("fallback", collect(Dedup.canonicalizePropagation(nodes, "doc_id",
-      pairs, maxIter = 3, localEdgeLimit = 0L)))
+    run("fallback", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Propagation(maxIter = 3), localEdgeLimit = 0L)))
     // the hybrid across ITS code paths: the hand-off (2 rounds collapse
     // the 14-hop tail to <= ~4 hops, propagation finishes inside a
     // budget the RAW graph's diameter would exhaust), the early
@@ -646,21 +647,21 @@ class PropertySpec extends SparkSpec {
     // form is pinned by the dedicated branch-selection test above —
     // repeating it here would re-pay a full-diameter propagation loop
     // for no extra coverage.
-    run("hybrid", collect(Dedup.canonicalizeHybrid(nodes, "doc_id", pairs,
-      starRounds = 2, maxIter = 8, localEdgeLimit = 0L)))
-    run("hybrid-forest", collect(Dedup.canonicalizeHybrid(nodes, "doc_id",
-      pairs, starRounds = 20, localEdgeLimit = 0L)))
-    run("hybrid-gated", collect(Dedup.canonicalizeHybrid(nodes, "doc_id",
-      pairs)))
+    run("hybrid", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Hybrid(starRounds = 2, maxIter = 8), localEdgeLimit = 0L)))
+    run("hybrid-forest", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Hybrid(starRounds = 20), localEdgeLimit = 0L)))
+    run("hybrid-gated", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Auto())))
     // ... and the no-knob AUTO budget on the same topology mix (the
     // K12 hub inflates the mean estimate, the 14-hop tail needs real
     // rounds — the auto path must land the same fixpoint regardless of
     // what it schedules)
-    run("hybrid-auto", collect(Dedup.canonicalizeHybrid(nodes, "doc_id",
-      pairs, localEdgeLimit = 0L)))
+    run("hybrid-auto", collect(Dedup.canonicalize(nodes, "doc_id", pairs,
+      Auto(), localEdgeLimit = 0L)))
   }
 
-  test("canonicalizeStar's size gate: small graphs take the union-find, same fixpoint") {
+  test("Star strategy's size gate: small graphs take the union-find, same fixpoint") {
     // a graph that is NOT yet a star forest (a 6-hop chain needs ~3
     // alternating rounds), far under the 500k default edge budget
     val ids = (0L to 6L).toDF("doc_id")
@@ -669,7 +670,7 @@ class PropertySpec extends SparkSpec {
     // impossible ("did not converge within 0 rounds"), so the default
     // gate succeeding here proves the driver union-find ran
     val gated = graft.operators.Dedup
-      .canonicalizeStar(ids, "doc_id", pairs, maxRounds = 0)
+      .canonicalize(ids, "doc_id", pairs, Star(maxRounds = 0))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(gated.length == 7)
     gated.foreach { case (id, canon, isDup) =>
@@ -679,13 +680,13 @@ class PropertySpec extends SparkSpec {
     // reach the star rounds and exhaust them
     val ex = intercept[IllegalArgumentException] {
       graft.operators.Dedup
-        .canonicalizeStar(ids, "doc_id", pairs, maxRounds = 0, localEdgeLimit = 0L)
+        .canonicalize(ids, "doc_id", pairs, Star(maxRounds = 0), localEdgeLimit = 0L)
         .collect()
     }
     assert(ex.getMessage.contains("did not converge"))
     // EQUALITY pin: the gated result matches the forced-star fixpoint
     val forced = graft.operators.Dedup
-      .canonicalizeStar(ids, "doc_id", pairs, localEdgeLimit = 0L)
+      .canonicalize(ids, "doc_id", pairs, Star(), localEdgeLimit = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(gated.sortBy(_._1).sameElements(forced.sortBy(_._1)))
   }

@@ -157,4 +157,37 @@ class LakeSpec extends SparkSpec {
       Seq("ticker", "date", "year", "v", "seq"))
     assert(lake.meta("prices").primaryKeys == Seq("ticker", "date"))
   }
+
+  test("leftover temp files from interrupted commit writes break neither append nor optimize") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(meta, "replace")
+    def batch(date: String, y: Int, v: Double) =
+      Seq(("AAPL", date, y, v, 1L), ("MSFT", date, y, v + 1, 1L))
+        .toDF("ticker", "date", "year", "v", "seq")
+    lake.append("prices", batch("2023-06-01", 2023, 1.0))
+    val t = root.resolve("prices")
+    // every commit file's write was interrupted once: each temp file
+    // holds a truncated prefix of its content
+    Files.writeString(t.resolve("_pending.tmp"), "20")
+    Files.writeString(t.resolve("_graft_seq.tmp"), "")
+    Files.writeString(t.resolve("_graft_meta.json.tmp"), "{\"name\":")
+    // ... and an append died while writing its promote marker: staged
+    // data, a partial marker temp, no marker — an uncommitted batch
+    Files.createDirectories(t.resolve("_append_tmp/year=2025"))
+    Files.writeString(t.resolve("_append_tmp/year=2025/part-00000-x.parquet"), "x")
+    Files.writeString(t.resolve("_append_tmp/_graft_promote.tmp"), "20")
+    lake.append("prices", batch("2024-01-02", 2024, 5.0))
+    // the ledger lists every partition appended since the last optimize,
+    // and the commit writes went through their temp files
+    assert(Files.readString(t.resolve("_pending")).split("\n").toSet ==
+      Set("2023", "2024"))
+    assert(!Files.exists(t.resolve("_pending.tmp")) &&
+      !Files.exists(t.resolve("_graft_seq.tmp")))
+    lake.optimize("prices")
+    val got = lake.table("prices").orderBy("year", "ticker").collect()
+      .map(r => (r.getAs[Int]("year"), r.getAs[String]("ticker"), r.getAs[Double]("v")))
+    assert(got.toSeq == Seq((2023, "AAPL", 1.0), (2023, "MSFT", 2.0),
+      (2024, "AAPL", 5.0), (2024, "MSFT", 6.0)))
+  }
 }

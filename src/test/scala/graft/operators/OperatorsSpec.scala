@@ -3,6 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
+import CcStrategy.Propagation
+
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -464,8 +466,8 @@ class OperatorsSpec extends SparkSpec {
     val before = spark.conf.get(key)
     val ids = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L)).toDF("a", "b")
-    val out = Dedup.canonicalizePropagation(ids, "doc_id", pairs,
-        localEdgeLimit = 0L).collect()
+    val out = Dedup.canonicalize(ids, "doc_id", pairs,
+        Propagation(), localEdgeLimit = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 6L, 7L -> 6L))

@@ -130,20 +130,16 @@ class ScaleProbeSpec extends SparkSpec {
     }
   }
 
-  test("tablesFor stays in sync with the query registry and the transforms") {
-    // tablesFor defines the heavy family for BOTH the probe and Bench's
-    // SPARK_GRAFT_BENCH_SCALE mode: a renamed query would silently drop
-    // out of the 10x sweep (scale mode filters by membership, it does
-    // not error), shrinking the graded artifact without any failure
-    val missing = ScaleProbe.tablesFor.keySet -- graft.SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"tablesFor names unknown queries: $missing")
+  test("every heavy-family table has a copy transform") {
     // every mapped table must have a growth transform (offset/salt) or
     // be a once-copied dim — anything else would sys.error mid-build
-    val tables = ScaleProbe.tablesFor.values.flatten.toSet
+    val tables = ScaleProbe.tablesFor(graft.registry.Registry.heavy.map(_.name)).toSet
     val untransformable =
       tables -- ScaleProbe.offsetCols.keySet -- ScaleProbe.dimTables
     assert(untransformable.isEmpty,
       s"mapped tables without a copy transform: $untransformable")
+    // a name outside the heavy family has no table mapping
+    intercept[RuntimeException](ScaleProbe.tablesFor(Seq("q1_agg")))
   }
 
   test("ensureScaled builds xN tables, copies dims once, and completes incrementally") {
