@@ -4,9 +4,16 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.registry.{Pinned, Query, Registry}
+import graft.streaming.{StreamBenchShapes, StreamOps}
 
 /** Benchmark main: run every registry query against
   * SPARK_GRAFT_SF_DIR and print one JSON line with per-query seconds.
+  *
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_QUERIES (comma-
+  * separated subset), SPARK_GRAFT_REPS (timed reps per query, default 2),
+  * SPARK_GRAFT_BENCH_SCALE (scale mode, below), SPARK_GRAFT_SCALE_OUT
+  * (scale mode's scratch corpus root) and SPARK_GRAFT_DETAIL_OUT (the
+  * detail file). Nothing else is read.
   *
   * Queries are materialized through the noop sink (not `.count()`, which
   * lets Spark prune every column and under-measures scans/projections).
@@ -23,10 +30,13 @@ import graft.registry.{Pinned, Query, Registry}
   *   - after every query, `System.gc()` + a short settle, so reference-
   *     queue-driven cleanup (shuffle deps, broadcasts) runs BETWEEN
   *     timed regions instead of inside a later query's clock;
-  *   - every SPARK_GRAFT_CHUNK queries the SparkSession is recycled
+  *   - every [[sessionChunk]] queries the SparkSession is recycled
   *     (stopped and rebuilt, outside any timed region), dropping
   *     accumulated executor/driver state wholesale. Codegen caches are
   *     JVM-static, so no re-warmup is needed.
+  * What a session recycle cannot shed (JIT/GC history) is handled by
+  * re-measuring in a fresh child JVM: every entry in scale mode, and an
+  * entry over its pinned band in the sf0.1 sweep (see [[forkChild]]).
   */
 object Bench {
 
@@ -66,112 +76,27 @@ object Bench {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // iteration knobs (local profiling only; the driver sets none):
-    // comma-separated query subset, timed repetitions per query, queries
-    // per session before a recycle, settle pause after each query
     val only = SparkEntry.querySubset(sys.env.get("SPARK_GRAFT_QUERIES"))
     // Default 2 reps, reporting the per-query MINIMUM: the r4 sweep showed a
     // contiguous band of queries 3-13x slower purely from transient machine
     // contention (all at/below prior-round times when re-run in isolation).
     // A single-shot sweep cannot tell that apart from a real regression;
     // the min over >=2 reps discards one-off contention windows.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
-    // SPARK_GRAFT_BENCH_SCALE=N (opt-in; never set by the driver): sweep
-    // the HEAVY family at N x the base sf — parsed up here because the
-    // recycle cadence below depends on the mode. Full rationale at the
-    // (sweepNames, queryDir) selection.
-    val benchScale: Option[Int] = sys.env.get("SPARK_GRAFT_BENCH_SCALE")
-      .map(t => t.trim.toIntOption.filter(_ > 1).getOrElse(sys.error(
-        s"SPARK_GRAFT_BENCH_SCALE must be an int > 1, got '$t'")))
-    // Session-recycle cadence. The sf0.1 sweep recycles every 25 entries
-    // (bounds session-state growth without paying 100+ session opens).
-    // SCALE MODE recycles before EVERY entry — the streaming sweep's
-    // per-entry fresh-session protocol, for the same reason it was
-    // adopted there (r13): long allocation-heavy entries pay their
-    // neighbors' accumulated session state as wall-clock. Measured at
-    // 10x (round 14): j13d_range_join_sweep runs 247.6s when 21 entries
-    // deep in a shared session vs 97.5s on a fresh one — 2.6x of pure
-    // neighbor-state cost, invisible to the 1s calibration scan.
-    val chunk = sys.env.get("SPARK_GRAFT_CHUNK").map(_.toInt)
-      .getOrElse(if (benchScale.nonEmpty) 1 else 25)
-    // Per-entry fresh-session recycling closed only PART of that gap:
-    // j13b recovered (209 s shared-session → 86.6 s per-entry-session,
-    // matching its isolated number) but j13d still ran 241/207 s against
-    // 88.8/97.5 s in a fresh JVM — identical task metrics, so the
-    // residue is JVM-level state (codegen class load + JIT/GC history
-    // from 11 prior heavy entries), which no session recycle can shed.
-    // Scale mode therefore defaults to PER-ENTRY FRESH JVMS: the parent
-    // builds the scaled corpus and calibrates, then forks one child
-    // process per entry (same JVM args/classpath, SPARK_GRAFT_QUERIES
-    // pinned to the entry) and merges the children's detail artifacts.
-    // That is also the protocol that transfers to deployment: cluster
-    // executors are separate JVMs, so a single-JVM local sweep is the
-    // only place this contamination class exists at all.
-    // SPARK_GRAFT_SCALE_ISOLATE=0 opts back into the one-JVM sweep.
-    if (benchScale.nonEmpty &&
-        sys.env.getOrElse("SPARK_GRAFT_SCALE_ISOLATE", "1") != "0") {
-      isolatedScaleSweep(benchScale.get)
-      return
-    }
-    val settleMs = sys.env.getOrElse("SPARK_GRAFT_SETTLE_MS", "250").toLong
-    // streaming entries run on the RocksDB state store (the 100 TB
-    // deployment shape: per-key state off-heap, changelog checkpointing
-    // instead of full-snapshot uploads); "hdfs" opts back into the
-    // default in-memory/HDFS-backed provider for comparison runs
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    // State partitions for the streaming replays — a DIFFERENT knob from
-    // the batch sweep's shuffle partitions, because state partitioning is
-    // a per-query deployment decision sized to STATE VOLUME, not core
-    // count: every micro-batch pays a fixed load+commit per state
-    // partition (changelog create+sync+rename per store per batch), so
-    // over-partitioned state turns tiny batches into pure commit
-    // overhead. Probe data (StreamProbe, e4 rollup, sf0.1, this host):
-    // 32 partitions = 125s (changelog commit ~2s/store — super-linear
-    // ext4 contention from 32 concurrent create/sync/rename), 8
-    // partitions = 17s, and at 8 partitions RocksDB matches the HDFS
-    // store (~14s) — i.e. the store itself was never the bottleneck,
-    // the per-store-per-batch fixed cost was. Full per-batch attribution
-    // (round 10, docs/STREAM_ATTRIBUTION.md): the commit protocol's
-    // changelog fsync is 65-75% of every streaming entry's wall-clock,
-    // fsync latency scales with CONCURRENT committers (journal
-    // serialization), and parts=16 replicates at ~1.7x parts=8 (the
-    // linear per-store model) — r09's single-rep 37.7s/4.25x datum was
-    // a contention artifact, retired. Round 11 closed the model's one
-    // gap: e6's non-sync commit half is the un-instrumented file-
-    // protocol portion of the SAME per-store commit (engine-independent
-    // — the HDFS provider costs the same; concurrency-bound like the
-    // sync), so commit cost counts STORES, and a stream-stream join
-    // (4 stores/partition) should size its state partitions at ~1/4 of
-    // a single-store operator's for the same commit budget (e6 at
-    // parts=2: 18.0s vs 21-22s at this parts=8 default, kept as the
-    // deployment-shaped choice). At cluster scale the same rule
-    // holds per executor: a
-    // handful of stores per executor core, scaled out by executor
-    // count, not 4x-oversubscribed per core.
-    // validated at startup like partsProbeValues: the value is
-    // interpolated unquoted into both JSON artifacts, so a malformed
-    // env var must fail HERE, not corrupt the lines after a full sweep
-    val streamParts: Int = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"SPARK_GRAFT_STREAM_PARTS must be a positive int, got '$t'")))
-      .getOrElse(deploymentStreamParts)
-    // State-partition sensitivity probe values (detail-file only; see the
-    // probe block after the streaming sweep). Default "16": one extra e4
-    // rollup run per sweep, so every round's BENCH_DETAIL carries at
-    // least one sensitivity point alongside the streamParts=8 e4 entry
-    // and the 8-partition sizing rule stays empirically pinned as
-    // data/host evolve. "4,8,16,32" = full sweep; "" = off. Parsed HERE,
-    // before any work: a malformed token must fail loudly at startup (or
-    // be skipped with a note), never throw after the whole sweep has run
-    // and discard its results.
-    val partsProbeValues: Seq[Int] =
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS_PROBE", "16")
-        .split(',').toSeq.map(_.trim).filter(_.nonEmpty).flatMap { t =>
-          val v = t.toIntOption.filter(_ > 0)
-          if (v.isEmpty) System.err.println(
-            s"[bench] ignoring non-positive-int SPARK_GRAFT_STREAM_PARTS_PROBE token '$t'")
-          v
-        }
+    val reps = intAtLeast(sys.env, "SPARK_GRAFT_REPS", 1).getOrElse(2)
+    // SPARK_GRAFT_BENCH_SCALE=N (opt-in): sweep the HEAVY family at N x
+    // the base sf — see the (sweepNames, queryDir) selection
+    val benchScale = intAtLeast(sys.env, "SPARK_GRAFT_BENCH_SCALE", 2)
+    val detailFile = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
+    // A child measures one entry for the parent that forked it
+    // ([[forkChild]]) and never forks or gates itself. Scale mode's parent
+    // runs EVERY entry in a fresh child JVM: per-entry fresh sessions
+    // recovered j13b at 10x (209 s shared-session → 86.6 s) but j13d
+    // still ran 241/207 s against 88.8/97.5 s in a fresh JVM at
+    // identical task metrics — JVM-level state (codegen class load,
+    // JIT/GC history from the prior heavy entries) that no session
+    // recycle sheds (docs/SCALING.md, "The 10× artifact's protocol").
+    val isChild = args.contains(ChildArg)
+    val forkPerEntry = benchScale.nonEmpty && !isChild
 
     var spark: SparkSession = null
     var metrics: MetricsListener = null
@@ -185,32 +110,28 @@ object Bench {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
-      if (stateStore == "rocksdb") {
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // measurement-only override (default = the deployment shape):
-        // SPARK_GRAFT_CHANGELOG=false reverts to full-snapshot-upload
-        // commits — the e6 lever-table axis (docs/STREAM_ATTRIBUTION.md
-        // round 17); levers Bench does NOT set explicitly
-        // (minDeltasForSnapshot, compactOnCommit) ride run_main.sh's
-        // SPARK_GRAFT_JVM_OPTS -D route instead of code knobs
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
-        // every put otherwise pays a read-modify of the row counter —
-        // pure overhead for throughput benchmarking (the count is a
-        // progress-metrics nicety, not a correctness input)
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-          "false")
-        // one capped block cache shared across ALL store instances on
-        // the executor: without it each of the N state partitions keeps
-        // its own unbounded native memtable/cache, the classic
-        // many-partition executor OOM at cluster scale — benching the
-        // bounded shape prices what a deployment would actually run
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      }
+      // streaming entries run on the RocksDB state store (the 100 TB
+      // deployment shape: per-key state off-heap, changelog checkpointing
+      // instead of full-snapshot uploads; docs/STREAM_ATTRIBUTION.md
+      // prices both levers)
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true")
+      // every put otherwise pays a read-modify of the row counter —
+      // pure overhead for throughput benchmarking (the count is a
+      // progress-metrics nicety, not a correctness input)
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+        "false")
+      // one capped block cache shared across ALL store instances on
+      // the executor: without it each of the N state partitions keeps
+      // its own unbounded native memtable/cache, the classic
+      // many-partition executor OOM at cluster scale — benching the
+      // bounded shape prices what a deployment would actually run
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
       metrics = new MetricsListener
       spark.sparkContext.addSparkListener(metrics)
     }
@@ -259,21 +180,18 @@ object Bench {
     val names = Registry.all.map(_.name).sorted
       .filter(n => only.forall(_.contains(n)))
 
-    // SPARK_GRAFT_BENCH_SCALE=N (opt-in; never set by the driver): sweep
-    // the HEAVY family at N x the base sf. Rationale (r12 verdict item
-    // 4): at sf0.1 the sweep's sub-second majority sits under the host-
-    // noise floor, so round-over-round grading of plan changes needs a
-    // scale where plan differences exceed that floor. The mode restricts
-    // the sweep to the queries with a scale-table mapping
-    // (the registry's heavy family), builds/reuses the
-    // probe's salted scratch corpus (same growth model, so these numbers
-    // are comparable to docs/SCALING.md points), keeps the calibration
-    // scan on the BASE sf (the pinned 0.70s nominal stays meaningful),
-    // and skips the streaming section + parts probe (their scale axes
-    // live in StreamScaleProbe). The artifact carries "bench_scale":N;
-    // its `value` sums only the heavy family and must never be compared
-    // against a full-sweep value. (benchScale itself is parsed with the
-    // knobs at the top — the recycle cadence depends on it.)
+    // Scale mode (r12 verdict item 4): at sf0.1 the sweep's sub-second
+    // majority sits under the host-noise floor, so round-over-round
+    // grading of plan changes needs a scale where plan differences
+    // exceed that floor. The mode restricts the sweep to the registry's
+    // heavy family, builds/reuses the probe's salted scratch corpus
+    // (same growth model, so these numbers are comparable to
+    // docs/SCALING.md points; a child reuses the parent's versioned
+    // marker), keeps the calibration scan on the BASE sf (the pinned
+    // nominal stays meaningful), and skips warm-up, the streaming section
+    // and the parts probe (their scale axes live in StreamScaleProbe).
+    // The artifact carries "bench_scale":N; its `value` sums only the
+    // heavy family and must never be compared against a full-sweep value.
     val (sweepNames, queryDir) = benchScale match {
       case None => (names, sfDir)
       case Some(n) =>
@@ -286,9 +204,12 @@ object Bench {
         (mapped, dir)
     }
 
-    // JVM/codegen warmup on the smallest scale factor (not timed)
+    // JVM/codegen warmup on the smallest scale factor (not timed). The
+    // scale-mode parent times no entry itself, so it warms only the
+    // calibration scan its probes time.
+    val calibName = "s1_scan_project"
     val warmDir = "/root/testdata/sf0.001"
-    sweepNames.foreach { name =>
+    (if (forkPerEntry) Seq(calibName) else sweepNames).foreach { name =>
       try materialize(name, warmDir) catch { case _: Throwable => () }
     }
 
@@ -297,16 +218,20 @@ object Bench {
     // per-query times by the calibration pair to factor out machine load
     // (the r2 driver bench showed unchanged trivial queries 3-7x slower —
     // pure contention, indistinguishable from regressions without this).
+    // The scale-mode parent's session stays open across all its children
+    // and idles while they run: a probe on a fresh session would time
+    // session startup + cold file listing, the cold-start class
+    // warmCalibMean excludes.
     def timeIt(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val calibName = "s1_scan_project"
-    val calibStart =
+    def calibProbe(): Double =
       try timeIt(materialize(calibName, sfDir)) catch { case _: Throwable => -1.0 }
-    // scale mode's per-entry fresh-session protocol (see `chunk`) must
-    // cover the FIRST entry too — without this it alone inherits the
-    // warmup+scaled-dir-build session
-    if (benchScale.nonEmpty) recycleSession()
+    val calibStart = calibProbe()
+    // a scale-mode child times its entry on a fresh session, not on the
+    // warmup + scaled-dir-build one (long allocation-heavy entries pay
+    // accumulated session state as wall-clock)
+    if (benchScale.nonEmpty && isChild) recycleSession()
 
     // A crashed query must be distinguishable from a fast success: a query
     // whose every rep fails is reported as -1 in `queries` plus an entry in
@@ -322,15 +247,11 @@ object Bench {
     val repTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     // Mid-sweep calibration probes: re-time the calibration scan every N
     // queries so a contention window that opens DURING the sweep (invisible
-    // to the start/end pair alone) shows up in the artifact.
+    // to the start/end pair alone) shows up in the artifact. The scale-mode
+    // parent probes between every pair of children: a per-entry host-state
+    // trace with the same warm semantics as the nominal.
     val midCalib = scala.collection.mutable.ArrayBuffer[Double]()
-    val calibEvery = 20
-
-    def jsonSafe(e: Throwable): String =
-      Option(e.getMessage).getOrElse(e.getClass.getName)
-        // JSON-safe: quotes/backslashes and ALL control chars
-        // (any char < 0x20 is illegal in a JSON string) -> spaces
-        .replaceAll("[\"\\\\]|[^\\x20-\\x7e]", " ").take(200)
+    val calibEvery = if (forkPerEntry) 1 else 20
 
     /** reps of `run`, recording min time over successful reps plus that
       * rep's task-metric deltas; -1 + errors entry iff every rep failed.
@@ -366,10 +287,7 @@ object Bench {
       }
       val first = (1 to reps).map(_ => oneRep())
       // exactly the noisyRepCount rule: run the extra rep iff the min
-      // would be counted UNCONFIRMED as it stands. The old max/min > 2
-      // trigger fired even when a second rep already corroborated the
-      // min (e.g. [1.0, 1.1, 5.0] under REPS=3), paying a re-run that
-      // could not change the noisy_reps outcome.
+      // would be counted UNCONFIRMED as it stands
       val outcomes =
         if (minUnconfirmed(first.map(_._1))) {
           settle() // the extra rep must not inherit the spike's debris
@@ -394,17 +312,38 @@ object Bench {
       }
     }
 
-    // Isolated-band gate (full nominal-sf sweep only; see
-    // pinnedBand): an in-sweep min over its pinned band hi is
-    // re-measured in a fresh child JVM and reported from there —
-    // accumulated sweep-JVM JIT/GC state inflated exactly these entries
-    // up to ~50× at identical task metrics (r14's j13d, 275 s in-sweep
-    // vs 5.5 s isolated), poisoning the totals comparison. The child
-    // disables its own gate (SPARK_GRAFT_JVM_ISOLATE=0 — recursion
-    // guard); scale mode already runs per-entry JVMs and never gates.
-    val bandGateEnabled = benchScale.isEmpty && isNominalSf(sfDir) &&
-      sys.env.getOrElse("SPARK_GRAFT_JVM_ISOLATE", "1") != "0"
+    // The one fresh-JVM re-measure (scale mode's every entry, and both
+    // band gates): on success the child's time, reps and task metrics
+    // replace the entry's, so the artifact stays internally consistent
+    // (metrics describe the reported rep).
+    def remeasure(name: String, timeoutMin: Long): ChildResult = {
+      val child = forkChild(name, timeoutMin)
+      if (child.sec >= 0) {
+        repTimes(name) = child.reps
+        child.metrics.foreach(m => taskMetrics(name) = m)
+      }
+      child
+    }
+
+    // Band gates (full nominal-sf sweep only; see pinnedBand): an entry
+    // over its band is re-measured in a fresh child JVM and reported from
+    // there — accumulated sweep-JVM JIT/GC state inflated exactly these
+    // entries up to ~50× at identical task metrics (r14's j13d, 275 s
+    // in-sweep vs 5.5 s isolated), poisoning the totals comparison. A
+    // failed re-run keeps the in-sweep value.
+    val bandGateEnabled = benchScale.isEmpty && isNominalSf(sfDir) && !isChild
     val jvmIsolated = scala.collection.mutable.ArrayBuffer[String]()
+    def gate(name: String, sec: Double, why: String): Double = {
+      System.err.println(
+        f"[bench] $name in-sweep $sec%.2fs exceeds $why: re-measuring in a fresh JVM")
+      val child = remeasure(name, gateChildTimeoutMin)
+      if (child.sec >= 0) { jvmIsolated += name; child.sec }
+      else {
+        System.err.println(s"[bench] $name fresh-JVM re-run failed" +
+          s" (${child.error.getOrElse("unknown")}); keeping the in-sweep value")
+        sec
+      }
+    }
 
     val results = sweepNames.zipWithIndex.map { case (name, i) =>
       // calibration probe BEFORE any recycle at indices where both fire
@@ -414,39 +353,28 @@ object Bench {
       // setup (file listing, first-job startup) and read as a phantom
       // mid-sweep contention window
       if (i > 0 && i % calibEvery == 0) {
-        val c = try timeIt(materialize(calibName, sfDir))
-                catch { case _: Throwable => -1.0 }
-        midCalib += c
+        midCalib += calibProbe()
         settle()
       }
-      if (i > 0 && i % chunk == 0) recycleSession()
-      var r = timedReps(name)(() => materialize(name, queryDir))
-      if (bandGateEnabled && sf01BandExceeded(name, r._2)) {
-        System.err.println(
-          f"[bench] $name in-sweep ${r._2}%.2fs exceeds its isolated band" +
-            f" (hi ${pinnedBand(name).get.hi}%.1fs): re-measuring in a" +
-            " fresh JVM")
-        val out = java.nio.file.Files.createTempFile("graft_iso_" + name, ".json")
-        val child =
-          forkChild(name, out, Map("SPARK_GRAFT_JVM_ISOLATE" -> "0"), 20L)
-        if (child.sec >= 0) {
-          // report the position-independent measurement: time, reps, and
-          // task metrics all come from the child so the artifact stays
-          // internally consistent (metrics describe the reported rep)
-          jvmIsolated += name
-          repTimes(name) = child.reps
-          child.metrics.foreach(m => taskMetrics(name) = m)
-          r = name -> child.sec
-        } else System.err.println(s"[bench] $name fresh-JVM re-run failed" +
-          s" (${child.error.getOrElse("unknown")}); keeping the in-sweep value")
-        settle()
-      }
+      val r =
+        if (forkPerEntry) {
+          System.err.println(s"[bench] forking fresh JVM for $name")
+          val child = remeasure(name, scaleChildTimeoutMin)
+          if (child.sec < 0) {
+            errors(name) = child.error.getOrElse("unknown child failure")
+            repTimes(name) = child.reps
+          }
+          name -> child.sec
+        } else {
+          if (i > 0 && i % sessionChunk == 0) recycleSession()
+          val (_, sec) = timedReps(name)(() => materialize(name, queryDir))
+          name -> (if (bandGateEnabled && sf01BandExceeded(name, sec))
+            gate(name, sec, f"its isolated band (hi ${pinnedBand(name).get.hi}%.1fs)")
+          else sec)
+        }
       settle()
       r
     }
-    // (bandExceeded is computed after the quiet-window gate below — the
-    // second gate needs the sweep's own calibration, which exists only
-    // once the end probe has run)
 
     // Per-entry streaming attribution (detail-file only): summed
     // per-batch StreamingQueryProgress for each successful rep —
@@ -476,118 +404,45 @@ object Bench {
           .map(s => Option(s.customMetrics.get("rocksdbCommitFileSyncLatencyMs"))
             .map(_.longValue).getOrElse(0L)).sum)
     }
-    // appended ONLY after a rep's try/finally fully completed: if
-    // q.stop() or checkpoint cleanup throws, timedReps records the rep
-    // as failed (-1), and an already-appended metrics entry would break
-    // the "i-th metrics entry = i-th successful rep" positional
-    // invariant streamMetricsJson's min-rep selection depends on
+    // recorded ONLY after a replay returned — its query stopped and its
+    // checkpoint deleted: if either throws, timedReps records the rep as
+    // failed (-1), and an already-appended metrics entry would break the
+    // "i-th metrics entry = i-th successful rep" positional invariant
+    // streamMetricsJson's min-rep selection depends on
     def recordRep(name: String, m: StreamRepMetrics): Unit =
       streamMetrics(name) = streamMetrics.getOrElse(name, Vector.empty) :+ m
 
     // Streaming wall-clock entries — StreamOps is batch-parity
-    // spec-verified for correctness; these time it end-to-end. The sf
-    // input table is replayed as a bounded MemoryStream in ~10 REAL
-    // micro-batches (each chunk drained before the next is added;
-    // watermarked operators trigger a second, no-new-data batch per
-    // chunk that advances the watermark and evicts state — it pays the
-    // full commit protocol and is part of the measurement) through
-    // keyed-state operators writing to the noop sink — so per-batch
-    // state-store load/commit and watermark advancement are inside the
-    // measurement, on the RocksDB provider by default (see `stateStore`
-    // above). Input collect happens outside the clock.
-    def replay[T](name: String, rows: IndexedSeq[T],
-        mk: Dataset[T] => Dataset[_], chunks: Int = 10)(
-        implicit enc: Encoder[T]): Unit = {
-      implicit val sc = spark.sqlContext
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt")
-      val q = mk(in.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      var snapped: StreamRepMetrics = null
-      try {
-        // feed-then-drain per chunk: adding everything before start()
-        // would collapse the replay into ONE micro-batch and skip the
-        // per-batch state-store load/commit and watermark advancement
-        // this entry exists to measure
-        rows.grouped(math.max(1, rows.length / chunks))
-          .foreach { b => in.addData(b); q.processAllAvailable() }
-        snapped = progressOf(q)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile) // a rep must not leak its state-store files
-      }
-      // reached only when BOTH try and finally completed: the rep is the
-      // same "success" timedReps records, keeping metrics positional
-      if (snapped != null) recordRep(name, snapped)
-    }
-    // two-input replay for stream-stream joins: both sides advance in
-    // lockstep (a left chunk + a right chunk per micro-batch drain), so
-    // both watermarks move together and join-state expiry — the thing a
-    // stream-stream interval join exists to bound — happens inside the
-    // measurement instead of buffering one whole side
-    def replay2[A, B](name: String, lRows: IndexedSeq[A], rRows: IndexedSeq[B],
-        mk: (Dataset[A], Dataset[B]) => org.apache.spark.sql.DataFrame)(
-        implicit ea: Encoder[A], eb: Encoder[B]): Unit = {
-      implicit val sc = spark.sqlContext
-      val li = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-      val ri = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_bench_ckpt")
-      val q = mk(li.toDS(), ri.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      var snapped: StreamRepMetrics = null
-      try {
-        // equal lengths are a hard precondition, not a convenience: if one
-        // side exhausted early its watermark would stop advancing, and
-        // under min-of-watermarks expiry the OTHER side's join state would
-        // stop expiring for the tail of the run — silently benching
-        // unbounded-state behavior
-        require(lRows.length == rRows.length,
-          s"replay2 drives both watermarks in lockstep; got ${lRows.length} vs ${rRows.length}")
-        val lc = lRows.grouped(math.max(1, lRows.length / 10)).toSeq
-        val rc = rRows.grouped(math.max(1, rRows.length / 10)).toSeq
-        lc.zip(rc).foreach {
-          case (lb, rb) =>
-            val _ = li.addData(lb)
-            val __ = ri.addData(rb)
-            q.processAllAvailable()
-        }
-        snapped = progressOf(q)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile)
-      }
-      if (snapped != null) recordRep(name, snapped)
-    }
+    // spec-verified for correctness; these time it end-to-end through
+    // StreamBenchShapes' replay (~10 real micro-batches into the noop
+    // sink, so per-batch state-store load/commit and watermark
+    // advancement are inside the measurement, on the RocksDB provider).
+    // Input collect happens outside the clock.
+    def replay[T: Encoder](name: String, rows: IndexedSeq[T],
+        mk: Dataset[T] => Dataset[_], chunks: Int = 10): Unit =
+      recordRep(name,
+        StreamBenchShapes.replay(spark, rows, chunks, mk)((q, _) => progressOf(q)))
     // replay inputs and e6 join parameters live in StreamBenchShapes —
     // the ONE definition site shared with tools.StreamProbe, so the
     // probe's per-batch attribution provably describes the query this
     // bench wall-clocks. Derivations run at lazy-val init, which the
     // pre-collect block below forces OUTSIDE the timed region.
-    lazy val eventRows: IndexedSeq[graft.streaming.StreamOps.Event] =
-      graft.streaming.StreamBenchShapes.loadEvents(spark, sfDir)
-    lazy val docRows: IndexedSeq[graft.streaming.StreamOps.Doc] =
-      graft.streaming.StreamBenchShapes.loadDocs(spark, sfDir)
-    implicit val eventEnc: Encoder[graft.streaming.StreamOps.Event] =
-      Encoders.product[graft.streaming.StreamOps.Event]
-    implicit val docEnc: Encoder[graft.streaming.StreamOps.Doc] =
-      Encoders.product[graft.streaming.StreamOps.Doc]
+    lazy val eventRows: IndexedSeq[StreamOps.Event] =
+      StreamBenchShapes.loadEvents(spark, sfDir)
+    lazy val docRows: IndexedSeq[StreamOps.Doc] =
+      StreamBenchShapes.loadDocs(spark, sfDir)
+    implicit val eventEnc: Encoder[StreamOps.Event] = Encoders.product[StreamOps.Event]
+    implicit val docEnc: Encoder[StreamOps.Doc] = Encoders.product[StreamOps.Doc]
     implicit val clickEnc: Encoder[(Long, java.sql.Timestamp)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP)
     implicit val buyEnc: Encoder[(Long, java.sql.Timestamp, Double)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaDouble)
     lazy val clickRows: IndexedSeq[(Long, java.sql.Timestamp)] =
-      graft.streaming.StreamBenchShapes.clicksOf(eventRows)
+      StreamBenchShapes.clicksOf(eventRows)
     lazy val buyRows: IndexedSeq[(Long, java.sql.Timestamp, Double)] =
-      graft.streaming.StreamBenchShapes.buysOf(eventRows)
+      StreamBenchShapes.buysOf(eventRows)
+    val rollup = (ds: Dataset[StreamOps.Event]) => StreamOps.hourlyRollup(ds.toDF())
     // Streaming calibration probe (r12 closure): the host-normalization
     // story for streaming rested on stream_compute_total being
     // host-insensitive, but r12 moved it +45% at identical code — summed
@@ -607,29 +462,20 @@ object Bench {
     // fixed compute; 10 chunks would measure the same thing at 3x the
     // sweep cost (the probe runs once per entry + a bookend)
     def streamCalibRun(): Double =
-      try timeIt(replay("stream_calib", streamCalibRows,
-        (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-          graft.streaming.StreamOps.hourlyRollup(ds.toDF()), chunks = 3))
+      try timeIt(replay("stream_calib", streamCalibRows, rollup, chunks = 3))
       catch { case _: Throwable => -1.0 }
 
     def streamRun(name: String): () => Unit = name match {
       case "e3_stream_sessionize" =>
         () => replay(name, eventRows,
-          (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.sessionize(ds))
-      case "e4_stream_rollup" =>
-        () => replay(name, eventRows,
-          (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-            graft.streaming.StreamOps.hourlyRollup(ds.toDF()))
+          (ds: Dataset[StreamOps.Event]) => StreamOps.sessionize(ds))
+      case "e4_stream_rollup" => () => replay(name, eventRows, rollup)
       case "e5_stream_neardedup" =>
         () => replay(name, docRows,
-          (ds: Dataset[graft.streaming.StreamOps.Doc]) =>
-            graft.streaming.StreamOps.streamingNearDedup(ds))
+          (ds: Dataset[StreamOps.Doc]) => StreamOps.streamingNearDedup(ds))
       case "e6_stream_interval_join" =>
-        () => replay2(name, clickRows, buyRows,
-          (clicks: Dataset[(Long, java.sql.Timestamp)],
-           buys: Dataset[(Long, java.sql.Timestamp, Double)]) =>
-            graft.streaming.StreamBenchShapes.intervalJoinQuery(clicks, buys))
+        () => recordRep(name, StreamBenchShapes.replay2(spark, clickRows,
+          buyRows, 10, StreamBenchShapes.intervalJoinQuery)((q, _) => progressOf(q)))
     }
     val streamDefs: Seq[(String, () => Unit)] = streamEntries.filter { n =>
       // scale mode sweeps the batch heavy family only — the streaming
@@ -640,8 +486,7 @@ object Bench {
     // the end calibration probe bookends the BATCH sweep — taken before
     // the streaming section so RocksDB native state from the replays
     // cannot masquerade as batch-sweep drift in the start/end pair
-    val calibEnd =
-      try timeIt(materialize(calibName, sfDir)) catch { case _: Throwable => -1.0 }
+    val calibEnd = calibProbe()
 
     // QUIET-WINDOW band gate (round 20, mechanizing the r19 rule that
     // lived in the d9 band comment): some bands carry a hi that exists
@@ -657,30 +502,15 @@ object Bench {
     val quietRatio: Option[Double] =
       if (bandGateEnabled) {
         val m = warmCalibMean(calibStart, midCalib.toSeq, calibEnd)
-        if (m > 0 && isNominalSf(sfDir)) Some(m / calibNominalSec) else None
+        if (m > 0) Some(m / calibNominalSec) else None
       } else None
     val gatedResults = results.map { case (name, v) =>
       if (quietRatio.exists(r => sf01QuietExceeded(name, v, r)) &&
-          !jvmIsolated.contains(name)) {
-        System.err.println(
-          f"[bench] $name in-sweep $v%.2fs exceeds its QUIET-window hi" +
-            f" (${pinnedBand(name).get.quiet.get._1}%.1fs) at calib_ratio" +
-            f" ${quietRatio.get}%.2f: re-measuring in a fresh JVM")
-        val out =
-          java.nio.file.Files.createTempFile("graft_quiet_" + name, ".json")
-        val child =
-          forkChild(name, out, Map("SPARK_GRAFT_JVM_ISOLATE" -> "0"), 20L)
-        if (child.sec >= 0) {
-          jvmIsolated += name
-          repTimes(name) = child.reps
-          child.metrics.foreach(m => taskMetrics(name) = m)
-          name -> child.sec
-        } else {
-          System.err.println(s"[bench] $name quiet-window re-run failed" +
-            s" (${child.error.getOrElse("unknown")}); keeping the in-sweep value")
-          name -> v
-        }
-      } else name -> v
+          !jvmIsolated.contains(name))
+        name -> gate(name, v,
+          f"its QUIET-window hi (${pinnedBand(name).get.quiet.get._1}%.1fs)" +
+            f" at calib_ratio ${quietRatio.get}%.2f")
+      else name -> v
     }
     // post-gate: entries STILL over a band (isolation didn't explain
     // the excess, or a re-run failed) — never silent in the artifact
@@ -712,7 +542,7 @@ object Bench {
       // streaming query (state partitioning is fixed at each query's
       // first run; every rep starts a fresh query + checkpoint).
       recycleSession()
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
+      spark.conf.set("spark.sql.shuffle.partitions", deploymentStreamParts)
       settle()
       if (i == 0) {
         // once per sweep: the first calib replay on a fresh JVM-warm
@@ -734,69 +564,43 @@ object Bench {
     }
 
     // State-partition sensitivity probe (detail-file only): re-run the e4
-    // rollup replay per value in `partsProbeValues` (validated at
-    // startup; default one point, 16) so the sizing rule documented at
-    // `streamParts` above stays empirically pinned as data/host evolve
-    // instead of fossilizing as a comment. Skipped when a query subset
-    // excludes e4 — a single-query profiling run should not pay a rollup.
-    // Min-of-2 reps, same discipline as every sweep entry: the r09 probe
-    // ran ONCE and its lone datum (parts=16 -> 37.7s vs parts=8 at 8.9s,
-    // a 4.25x blowup where a linear per-store-commit model predicts ~2x)
-    // was indistinguishable from a contention artifact; a sensitivity
-    // point that exists to pin a sizing rule cannot be a single
-    // measurement. Each rep gets a fresh session (streaming times inflate
-    // on a used session — the r6 e3 13.4s-vs-9.8s finding).
+    // rollup replay at [[partsProbeParts]] so the sizing rule documented
+    // at [[deploymentStreamParts]] stays empirically pinned as data/host
+    // evolve instead of fossilizing as a comment. Skipped when a query
+    // subset excludes e4 — a single-query profiling run should not pay a
+    // rollup. Min-of-2 reps, same discipline as every sweep entry: the
+    // r09 probe ran ONCE and its lone datum (parts=16 -> 37.7s vs parts=8
+    // at 8.9s, a 4.25x blowup where a linear per-store-commit model
+    // predicts ~2x) was indistinguishable from a contention artifact.
+    // Each rep gets a fresh session (streaming times inflate on a used
+    // session — the r6 e3 13.4s-vs-9.8s finding).
     val partsProbeReps = 2
-    // probe rep wall-times, keyed like the probe's streamMetrics entries
-    // (stream_parts_probe_$p) and merged into the map streamMetricsJson
-    // selects from — so the probe's published attribution describes the
-    // same MIN rep as stream_parts_probe.parts, not whichever rep ran
-    // last (which could be the contended one a judge would then
-    // correlate with the clean headline time)
-    val probeRepTimes =
-      scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    val partsProbe: Seq[(Int, Seq[Double])] =
-      (if (benchScale.isEmpty && only.forall(_.contains("e4_stream_rollup")))
-         partsProbeValues
-       else Seq.empty[Int])
-        .map { p =>
-          val times = (1 to partsProbeReps).map { _ =>
-            recycleSession()
-            spark.conf.set("spark.sql.shuffle.partitions", p)
-            val _ = eventRows // collect outside the timed region
-            settle()
-            try timeIt(replay(s"stream_parts_probe_$p", eventRows,
-              (ds: Dataset[graft.streaming.StreamOps.Event]) =>
-                graft.streaming.StreamOps.hourlyRollup(ds.toDF())))
-            catch { case _: Throwable => -1.0 }
-          }
-          probeRepTimes(s"stream_parts_probe_$p") = times
-          System.err.println(
-            s"[bench] stream_parts_probe e4 parts=$p -> " +
-              times.map(t => f"$t%.2f").mkString("[", ",", "]") + "s")
-          p -> times
-        }
+    val partsProbeName = s"stream_parts_probe_$partsProbeParts"
+    val partsProbe: Option[Seq[Double]] =
+      if (benchScale.nonEmpty || !only.forall(_.contains("e4_stream_rollup"))) None
+      else Some((1 to partsProbeReps).map { _ =>
+        recycleSession()
+        spark.conf.set("spark.sql.shuffle.partitions", partsProbeParts)
+        val _ = eventRows // collect outside the timed region
+        settle()
+        try timeIt(replay(partsProbeName, eventRows, rollup))
+        catch { case _: Throwable => -1.0 }
+      })
+    partsProbe.foreach(times => System.err.println(
+      s"[bench] stream_parts_probe e4 parts=$partsProbeParts -> " +
+        times.map(t => f"$t%.2f").mkString("[", ",", "]") + "s"))
 
     // ---- calibration normalization (cross-round comparability) ----
     // The r07 sweep ran its calibration probes ~1.5x slower than r06's on
     // the same code and data — pure host-state drift that, unnormalized,
     // reads as a regression band across every absolute time (the r4
     // failure mode). Reduce the probe series to one mean and one ratio
-    // against a PINNED nominal so a judge can compare rounds without
-    // hand-normalizing: times at ratio 1.5 are expected to sit ~1.5x
-    // above a ratio-1.0 round's, query-for-query. The nominal is the
-    // isolated s1_scan_project time at sf0.1 on this host class
-    // (r06 0.63-0.71s, r05 in the same band); it is only meaningful at
-    // sf0.1, so the ratio is omitted at other scale factors.
-    //
-    // The mean deliberately EXCLUDES the start probe: the nominal is an
-    // isolated STEADY-STATE time, but the start probe is the first sf-dir
-    // touch after an sf0.001-only warmup — cold I/O. The r08 sweep showed
-    // calibStart 4.48s against mid/end probes of 0.87-1.29s; folding it
-    // in reported calib_ratio 2.13 when steady state sat ~1.4, and a
-    // judge dividing by 2.13 would over-correct by ~50%, manufacturing
-    // phantom improvements. start_sec stays in the artifact as the
-    // separate cold-start datum.
+    // against a PINNED nominal ([[calibNominalSec]]) so a judge can
+    // compare rounds without hand-normalizing: times at ratio 1.5 are
+    // expected to sit ~1.5x above a ratio-1.0 round's, query-for-query.
+    // The nominal is only meaningful at sf0.1, so the ratio is omitted at
+    // other scale factors. The mean EXCLUDES the cold start probe (see
+    // warmCalibMean); start_sec stays in the artifact as its own datum.
     val calibMean = warmCalibMean(calibStart, midCalib.toSeq, calibEnd)
     val calibRatio: Option[Double] =
       if (calibMean > 0 && isNominalSf(sfDir)) Some(calibMean / calibNominalSec)
@@ -831,22 +635,9 @@ object Bench {
       .mkString("{", ",", "}")
 
     // ---- artifact emission, split across two surfaces ----
-    // The driver keeps only the LAST ~2000 chars of stdout and parses a
-    // JSON line out of that window (every BENCH_r1–r6 artifact shows
-    // `parsed: null` with the line's head truncated away — six rounds of
-    // the graded artifact carrying no machine-readable numbers). So:
-    //   - the FULL artifact (3-d.p. seconds for every query, per-query
-    //     task metrics, calibration series) is written to
-    //     BENCH_DETAIL.json in the working directory (= the repo root
-    //     under both sbt invocation paths), where the judge can read it;
-    //   - stdout gets ONE compact line, sized to fit the 2000-char tail
-    //     alongside sbt's trailing "[success] Total time ..." line, that
-    //     keeps the driver's {"metric","value","unit","queries","sf"}
-    //     contract. Its `queries` map lists entries slowest-first (the
-    //     graded heavy tail) up to the length budget and reports how
-    //     many sub-tail entries were elided; `detail` points at the full
-    //     file.
-    val detailFile = sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
+    // The FULL artifact (3-d.p. seconds for every query, per-query task
+    // metrics, calibration series) is written to the detail file; stdout
+    // gets ONE compact line ([[compactArtifact]]) that points at it.
     val repsJson = repTimes
       .map { case (k, vs) =>
         "\"" + k + "\":" + vs.map(v => f"$v%.3f").mkString("[", ",", "]")
@@ -855,18 +646,11 @@ object Bench {
     // `parts` keeps the min-of-reps contract the sweep uses; `rep_times`
     // carries every rep so a judge can see whether a sensitivity point is
     // replicated or one contended measurement
-    val partsProbeJson =
-      if (partsProbe.isEmpty) ""
-      else {
-        val mins = partsProbe.map { case (p, ts) =>
-          val ok = ts.filter(_ >= 0)
-          "\"" + p + "\":" + f"${if (ok.nonEmpty) ok.min else -1.0}%.3f"
-        }.mkString("{", ",", "}")
-        val repsArr = partsProbe.map { case (p, ts) =>
-          "\"" + p + "\":" + ts.map(t => f"$t%.3f").mkString("[", ",", "]")
-        }.mkString("{", ",", "}")
-        s""","stream_parts_probe":{"op":"e4_stream_rollup","reps":$partsProbeReps,"parts":$mins,"rep_times":$repsArr}"""
-      }
+    val partsProbeJson = partsProbe.fold("") { ts =>
+      val ok = ts.filter(_ >= 0)
+      val min = if (ok.nonEmpty) ok.min else -1.0
+      s""","stream_parts_probe":{"op":"e4_stream_rollup","reps":$partsProbeReps,"parts":{"$partsProbeParts":${f"$min%.3f"}},"rep_times":{"$partsProbeParts":${ts.map(t => f"$t%.3f").mkString("[", ",", "]")}}}"""
+    }
     // the calib replays record their per-run metrics under "stream_calib",
     // so the same min-rep selection publishes the calib's OWN sync/commit
     // split — a judge can see whether a calib move was fsync or compute.
@@ -878,42 +662,43 @@ object Bench {
     // counted time aligned with the i-th metrics entry (the positional
     // invariant minRepMetrics depends on); a FAILED warmup appended no
     // snapshot, so only a successful one is dropped.
-    if (streamCalibSeries.nonEmpty) {
-      if (streamCalibWarm >= 0)
-        streamMetrics.get("stream_calib").filter(_.nonEmpty).foreach { v =>
-          // warmup-only metrics (every counted run failed): no key at all
-          // beats an empty vector streamMetricsJson cannot select from
-          if (v.tail.nonEmpty) streamMetrics("stream_calib") = v.tail
-          else streamMetrics.remove("stream_calib")
-        }
-      probeRepTimes("stream_calib") = streamCalibSeries.toSeq
-    }
-    // sweep + probe rep times under one map: every stream_metrics entry
-    // (probe included) gets the same min-rep attribution selection
-    val streamAttrTimes = (repTimes ++ probeRepTimes): collection.Map[String, Seq[Double]]
+    if (streamCalibSeries.nonEmpty && streamCalibWarm >= 0)
+      streamMetrics.get("stream_calib").filter(_.nonEmpty).foreach { v =>
+        // warmup-only metrics (every counted run failed): no key at all
+        // beats an empty vector streamMetricsJson cannot select from
+        if (v.tail.nonEmpty) streamMetrics("stream_calib") = v.tail
+        else streamMetrics.remove("stream_calib")
+      }
+    // sweep, probe and calib rep times under one map: every
+    // stream_metrics entry gets the same min-rep attribution selection
+    val streamAttrTimes: collection.Map[String, Seq[Double]] = repTimes ++
+      partsProbe.map(partsProbeName -> _) ++
+      Option.when(streamCalibSeries.nonEmpty)("stream_calib" -> streamCalibSeries.toSeq)
     val streamMetricsField = streamMetricsJson(streamMetrics, streamAttrTimes)
     // host-normalized streaming signal (sum of min-rep addBatch compute
     // across the sweep entries): fsync-dominated wall-clock swings with
     // host state, compute does not — emitted next to stream_total so
     // round-over-round streaming comparisons stop needing prose caveats
+    val streamNames = streamDefs.map(_._1)
     val streamComputeTotal =
       if (streamDefs.isEmpty) -1.0
-      else streamComputeTotalSec(streamMetrics, streamAttrTimes,
-        streamDefs.map(_._1))
+      else streamComputeTotalSec(streamMetrics, streamAttrTimes, streamNames)
     val streamComputeCov =
-      if (streamDefs.isEmpty) None
-      else Some(streamComputeCoverage(streamMetrics, streamDefs.map(_._1)))
+      Option.when(streamDefs.nonEmpty)(streamComputeCoverage(streamMetrics, streamNames))
     val streamComputeField =
       if (streamComputeTotal >= 0)
         s""","stream_compute_total":${f"$streamComputeTotal%.3f"}${streamComputeCovField(streamComputeCov)}"""
       else ""
     val streamCalibField =
       streamCalibDetailJson(streamCalibWarm, streamCalibSeries.toSeq)
-    val scaleField = scaleDetailField(benchScale, sfDir)
+    val scaleField = scaleDetailField(benchScale, sfDir) +
+      (if (forkPerEntry)
+         scaleBandsJson(sweepNames) + ""","scale_isolation":"per_entry_jvm""""
+       else "")
     val bandField = bandGateDetailJson(bandGateEnabled,
       jvmIsolated.toSeq, bandExceeded)
     val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":${f"$streamTotal%.3f"}$streamComputeField,"state_store":"$stateStore","stream_parts":$streamParts$streamCalibField,"task_metrics":$tm$calib$partsProbeJson$streamMetricsField$errField$scaleField$bandField,"sf":"$queryDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":${f"$streamTotal%.3f"}$streamComputeField,"state_store":"$stateStore","stream_parts":$deploymentStreamParts$streamCalibField,"task_metrics":$tm$calib$partsProbeJson$streamMetricsField$errField$scaleField$bandField,"sf":"$queryDir"}"""
     try
       java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -925,14 +710,59 @@ object Bench {
       val mid = if (midCalib.isEmpty) "" else f",${midCalib.max}%.2f"
       s"[${f"$calibStart%.2f"}$mid,${f"$calibEnd%.2f"}]" // start, worst mid, end
     }
-    println(compactArtifact(all, total, streamTotal, stateStore, calibCompact,
+    println(compactArtifact(all, total, streamTotal, calibCompact,
       detailFile, errors.keys.toSeq, queryDir, calibMean, calibRatio,
       noisyRepCount(repTimes.values), streamComputeTotal, streamComputeCov,
-      streamParts, streamCalibMeanSec(streamCalibSeries.toSeq), benchScale,
+      streamCalibMeanSec(streamCalibSeries.toSeq), benchScale,
       jvmIsolated = jvmIsolated.toSeq, bandExceeded = bandExceeded))
     spark.stop()
     if (errors.nonEmpty) sys.exit(2)
   }
+
+  /** `key` parsed as an int of at least `min`; None when unset. Anything
+    * else fails at startup — a malformed or out-of-range value must never
+    * run a whole sweep (`SPARK_GRAFT_REPS=0` would run no rep and report
+    * -1 for every entry with no error and exit 0).
+    */
+  private[graft] def intAtLeast(env: collection.Map[String, String],
+      key: String, min: Int): Option[Int] =
+    env.get(key).map(t => t.trim.toIntOption.filter(_ >= min).getOrElse(
+      sys.error(s"$key must be an int >= $min, got '$t'")))
+
+  /** Queries per session before the sweep recycles it: bounds
+    * session-state growth without paying 100+ session opens.
+    */
+  private val sessionChunk = 25
+
+  /** The settle pause after each query (after a `System.gc()`). */
+  private val settleMs = 250L
+
+  /** The streaming entries' state store, named in both artifacts. */
+  private val stateStore = "rocksdb"
+
+  /** The one extra state-partition count the e4 sensitivity probe runs
+    * next to [[deploymentStreamParts]].
+    */
+  private val partsProbeParts = 16
+
+  /** Child JVM timeouts in minutes: a scale-mode entry (multi-minute 10x
+    * entries) and a band-gate re-measure of one sf0.1 entry.
+    */
+  private val scaleChildTimeoutMin = 45L
+  private val gateChildTimeoutMin = 20L
+
+  /** The program argument that marks a forked child ([[forkChild]]). */
+  private val ChildArg = "--child"
+
+  /** `e`'s message (its class name when it has none), safe inside a JSON
+    * string: quotes, backslashes and every char outside printable ASCII
+    * (any char < 0x20 is illegal in a JSON string) become spaces, capped
+    * at 200 chars.
+    */
+  private def jsonSafe(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName)
+      .replaceAll("[\"\\\\]|[^\\x20-\\x7e]", " ").take(200)
+
 
   /** Pinned nominal for calib_ratio: the isolated steady-state
     * s1_scan_project time at sf0.1 on this host class. Re-pinned
@@ -1171,30 +1001,17 @@ object Bench {
     ok.size >= 2 && ok.count(_ <= ok.min * 2.0) < 2
   }
 
-  /** The one stdout line the driver parses, sized to survive its tail
-    * capture. `queries` lists entries slowest-first up to the budget with
-    * an `omitted` count for the elided sub-tail; failed queries surface
-    * as a bounded NAME list (full messages live in the detail file —
-    * unbounded error strings must not be able to push the line past the
-    * window). BenchFormatSpec pins budget compliance, parseability, and
-    * the slowest-first ordering against adversarial inputs.
+  /** One child JVM's measurement of its entry, parsed from the detail
+    * file it wrote. `sec` < 0 means the child failed (every rep failed,
+    * it produced no detail, or it was killed on timeout) — `error` then
+    * carries the reason.
     */
-  /** One child's contribution to the merged scale artifact, parsed from
-    * the detail file it wrote. `sec` < 0 means the child failed (every
-    * rep failed, it produced no detail, or it was killed on timeout) —
-    * `error` then carries the reason.
-    */
-  private[graft] final case class ScaleChildResult(
+  private[graft] final case class ChildResult(
       sec: Double, reps: Seq[Double],
       metrics: Option[(Double, Double, Double)], error: Option[String])
 
-  private def jsonSafeMsg(e: Throwable): String =
-    (e.getClass.getSimpleName + ": " +
-      Option(e.getMessage).getOrElse(""))
-      .replaceAll("[\"\\\\]|[^\\x20-\\x7e]", " ").take(200)
-
-  /** Parses one child JVM's detail artifact into its merged-artifact
-    * contribution (see [[isolatedScaleSweep]]). Degenerate inputs map to
+  /** Parses one child JVM's detail artifact into its contribution to the
+    * parent's artifact (see [[forkChild]]). Degenerate inputs map to
     * explicit failure shapes rather than crashes: a missing `queries`
     * entry or non-numeric time reads as sec = -1 with a synthesized
     * error (the child wrote a file but not this entry's time — distinct
@@ -1207,7 +1024,7 @@ object Bench {
     * the caller catches and converts to an error result.
     */
   private[graft] def parseChildDetail(path: java.nio.file.Path,
-      name: String): ScaleChildResult = {
+      name: String): ChildResult = {
     import org.json4s._
     val j = org.json4s.jackson.JsonMethods.parse(
       java.nio.file.Files.readString(path))
@@ -1233,34 +1050,32 @@ object Bench {
       case _ if sec < 0 => Some("child reported no time and no error")
       case _ => None
     }
-    ScaleChildResult(sec, reps, tm, err)
+    ChildResult(sec, reps, tm, err)
   }
 
-  /** Fork one fresh child JVM running `graft.Bench` pinned to a single
-    * entry, wait for it (bounded), and parse its detail artifact. Same
-    * JVM args/classpath as this process; the child's stdout (compact
-    * line included) is forwarded to OUR stderr so the parent's single
-    * stdout line stays the only thing on stdout. `extraEnv` carries the
-    * mode pins (scale children: `SPARK_GRAFT_SCALE_ISOLATE=0`; full-
-    * sweep band-gate children: `SPARK_GRAFT_JVM_ISOLATE=0`, the
-    * recursion guard). Shared by [[isolatedScaleSweep]] and the sf0.1
-    * sweep's isolated-band gate.
+  /** Fork one fresh child JVM running `graft.Bench --child` pinned to a
+    * single entry, wait for it (bounded), and parse its detail artifact.
+    * Same JVM args/classpath and environment as this process, except
+    * that `SPARK_GRAFT_QUERIES` names the entry and the detail goes to a
+    * temp file; `--child` keeps the child from forking or gating in turn.
+    * The child's stdout (compact line included) is forwarded to OUR
+    * stderr so the parent's single stdout line stays the only thing on
+    * stdout. Children run one at a time — concurrent children would time
+    * each other's CPU contention.
     */
-  private def forkChild(name: String, out: java.nio.file.Path,
-      extraEnv: Map[String, String], timeoutMin: Long): ScaleChildResult = {
+  private def forkChild(name: String, timeoutMin: Long): ChildResult = {
     import scala.jdk.CollectionConverters._
     val javaBin =
       java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
       .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-Xdebug"))
-    val classpath = sys.props("java.class.path")
-    val cmd = (Seq(javaBin) ++ jvmArgs ++ Seq("-cp", classpath, "graft.Bench"))
+    val cmd = Seq(javaBin) ++ jvmArgs ++
+      Seq("-cp", sys.props("java.class.path"), "graft.Bench", ChildArg)
+    val out = java.nio.file.Files.createTempFile("graft_child_" + name, ".json")
     val pb = new ProcessBuilder(cmd.asJava)
-    val env = pb.environment()
-    env.put("SPARK_GRAFT_QUERIES", name)
-    env.put("SPARK_GRAFT_DETAIL_OUT", out.toString)
-    extraEnv.foreach { case (k, v) => env.put(k, v) }
+    pb.environment().put("SPARK_GRAFT_QUERIES", name)
+    pb.environment().put("SPARK_GRAFT_DETAIL_OUT", out.toString)
     pb.redirectErrorStream(true)
     val p = pb.start()
     val pump = new Thread(() => {
@@ -1277,15 +1092,17 @@ object Bench {
       p.waitFor(timeoutMin, java.util.concurrent.TimeUnit.MINUTES)
     if (!finished) { p.destroyForcibly(); p.waitFor() }
     pump.join(5000)
-    if (!finished)
-      ScaleChildResult(-1.0, Seq(-1.0), None,
-        Some(s"child timed out after $timeoutMin min"))
-    else
-      try parseChildDetail(out, name)
-      catch {
-        case e: Exception => ScaleChildResult(-1.0, Seq(-1.0), None,
-          Some("unreadable child detail: " + jsonSafeMsg(e)))
-      }
+    try {
+      if (!finished)
+        ChildResult(-1.0, Seq(-1.0), None,
+          Some(s"child timed out after $timeoutMin min"))
+      else
+        try parseChildDetail(out, name)
+        catch {
+          case e: Exception => ChildResult(-1.0, Seq(-1.0), None,
+            Some("unreadable child detail: " + jsonSafe(e)))
+        }
+    } finally { val _ = java.nio.file.Files.deleteIfExists(out) }
   }
 
   /** Bench-only streaming entries: MemoryStream replays with no oracle,
@@ -1345,7 +1162,7 @@ object Bench {
 
   /** The full-sweep detail file's band-gate self-description (leading
     * comma; empty when the gate was off — non-nominal sf, scale mode,
-    * or SPARK_GRAFT_JVM_ISOLATE=0): the pinned isolated bands the gate
+    * or a forked child): the pinned isolated bands the gate
     * compared against, which entries were re-measured in a fresh JVM
     * (their reported time/reps/metrics are the CHILD's), and which
     * entries still exceed their band after the gate (real regression or
@@ -1364,169 +1181,28 @@ object Bench {
       s""","isolated_bands":$bands,"jvm_isolated":${arr(jvmIsolated)},"band_exceeded":${arr(bandExceeded)}"""
     }
 
-  /** Scale mode's per-entry fresh-JVM sweep (the default; see the
-    * `SPARK_GRAFT_SCALE_ISOLATE` knob in [[main]] for the measurement
-    * that forced it). The parent builds/validates the scaled scratch
-    * corpus once and brackets the sweep with calibration probes; each
-    * heavy-family entry then runs in a freshly forked child JVM (same
-    * JVM args and classpath as the parent, `SPARK_GRAFT_QUERIES` pinned
-    * to the one entry, the SAME scale mode — the child reuses the
-    * versioned scaled-dir marker instead of rebuilding) and writes its
-    * detail artifact to a temp file the parent merges. Children run
-    * SEQUENTIALLY — concurrent children would time each other's CPU
-    * contention. The merged artifact keeps the scale-mode detail schema
-    * (BenchFormatSpec pins it against the heavy family) plus
-    * `"scale_isolation":"per_entry_jvm"` so a judge can tell which
-    * protocol produced a committed artifact. The parent's long-lived
-    * session times one WARM calibration probe between every pair of
-    * children — a per-entry host-state trace whose semantics match the
-    * pinned nominal (children's own start probes are cold and are NOT
-    * merged; see the session-lifetime comment in the body).
+  /** The one stdout line a caller parses, sized to survive a tail
+    * capture: a reader that keeps only the LAST ~2000 chars of stdout and
+    * parses a JSON line out of that window lost the line's head in
+    * BENCH_r1–r6 (`parsed: null`), so the full artifact goes to the
+    * detail file and this line keeps the
+    * {"metric","value","unit","queries","sf"} contract within
+    * `tailBudget`, next to sbt's trailing "[success] Total time ..." line.
+    * `queries` lists entries slowest-first up to the budget with an
+    * `omitted` count for the elided sub-tail; failed queries surface as a
+    * bounded NAME list (full messages live in the detail file —
+    * unbounded error strings must not be able to push the line past the
+    * window); `detail` points at the full file. BenchFormatSpec pins
+    * budget compliance, parseability, and the slowest-first ordering
+    * against adversarial inputs.
     */
-  private def isolatedScaleSweep(scale: Int): Unit = {
-    java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = SparkEntry.querySubset(sys.env.get("SPARK_GRAFT_QUERIES"))
-    val sweepNames = Registry.heavy.map(_.name).sorted
-      .filter(n => only.forall(_.contains(n)))
-    val detailFile =
-      sys.env.getOrElse("SPARK_GRAFT_DETAIL_OUT", "BENCH_DETAIL.json")
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    val childTimeoutMin =
-      sys.env.getOrElse("SPARK_GRAFT_CHILD_TIMEOUT_MIN", "45").toLong
-
-    def open(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions",
-          classOf[graft.expr.catalyst.GraftExtensions].getName)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("ERROR")
-      s
-    }
-    val calibName = "s1_scan_project"
-    def mat(s: SparkSession, dir: String): Unit =
-      graft.tools.SessionConf.restoring(s) {
-        try Registry(calibName).build(s, dir)
-          .write.format("noop").mode("overwrite").save()
-        finally s.sharedState.cacheManager.clearCache()
-      }
-    // same shape as the sweep's probes: warm the calib plan on sf0.001
-    // (untimed), then time it on the BASE sf — the nominal is only
-    // meaningful there
-    def calibRun(s: SparkSession): Double =
-      try {
-        mat(s, "/root/testdata/sf0.001")
-        val t0 = System.nanoTime(); mat(s, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    // scaled corpus built/validated ONCE; children hit the versioned
-    // marker and reuse. The parent session stays OPEN across the whole
-    // sweep: it idles while children run (zero CPU between probes) and
-    // is what keeps the calibration series WARM — a probe on a fresh
-    // session would time session startup + cold file listing, exactly
-    // the cold-start class warmCalibMean's contract excludes (the first
-    // merge attempt used each child's own cold start probe as a mid and
-    // read calib_ratio 1.91 against warm bracketing probes of 1.2-1.7,
-    // which would have over-normalized every query in the artifact).
-    val spark = open()
-    val tables = graft.tools.ScaleProbe.tablesFor(sweepNames)
-    graft.tools.ScaleProbe.assertStrides(spark, sfDir, tables)
-    val scaledDir = graft.tools.ScaleProbe.ensureScaled(spark, sfDir, scale,
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale"),
-      tables, dateShift = false)
-    val calibStart = calibRun(spark)
-
-    val tmpDir = java.nio.file.Files.createTempDirectory("graft_scale_iso")
-
-    def runChild(name: String): ScaleChildResult =
-      forkChild(name, tmpDir.resolve(s"$name.json"),
-        Map("SPARK_GRAFT_SCALE_ISOLATE" -> "0"), childTimeoutMin)
-
-    // warm probe on the parent's long-lived session — the mid series:
-    // one between every pair of children, a per-entry host-state trace
-    // with the SAME warm semantics as the nominal
-    def midProbe(): Double =
-      try {
-        val t0 = System.nanoTime(); mat(spark, sfDir)
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-
-    val midCalibBuf = scala.collection.mutable.ArrayBuffer[Double]()
-    val results = sweepNames.zipWithIndex.map { case (name, i) =>
-      if (i > 0) midCalibBuf += midProbe()
-      System.err.println(s"[bench] forking fresh JVM for $name")
-      val r = runChild(name)
-      System.err.println(
-        s"[bench] $name reps: ${r.reps.map(v => f"$v%.3f").mkString(", ")}")
-      name -> r
-    }
-    val calibEnd = midProbe()
-    spark.stop()
-
-    val all = results.map { case (n, r) => n -> r.sec }
-    val total = all.map(_._2).filter(_ >= 0).sum
-    val errors = results.collect { case (n, r) if r.sec < 0 =>
-      n -> r.error.getOrElse("unknown child failure")
-    }
-    val midCalib = midCalibBuf.toSeq.filter(_ >= 0)
-    val calibMean = warmCalibMean(calibStart, midCalib, calibEnd)
-    val calibRatio: Option[Double] =
-      if (calibMean > 0 && isNominalSf(sfDir)) Some(calibMean / calibNominalSec)
-      else None
-    val noisyReps = noisyRepCount(results.map(_._2.reps))
-
-    val qs = all.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val repsJson = results.map { case (k, r) =>
-      "\"" + k + "\":" + r.reps.map(v => f"$v%.3f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val tm = results.collect { case (k, r) if r.metrics.nonEmpty =>
-      val (sh, sp, pk) = r.metrics.get
-      "\"" + k + "\":{\"shuffle_mb\":" + f"$sh%.1f" + ",\"spill_mb\":" +
-        f"$sp%.1f" + ",\"peak_task_mem_mb\":" + f"$pk%.1f" + "}"
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val errField = if (errors.nonEmpty) s""","errors":$errJson""" else ""
-    val midJson = midCalib.map(c => f"$c%.3f").mkString("[", ",", "]")
-    val ratioJson = calibRatio.map(r =>
-      s""","ratio_vs_nominal":${f"$r%.2f"},"nominal_sec":$calibNominalSec""")
-      .getOrElse("")
-    val calib = s""","calibration":{"query":"$calibName","start_sec":${f"$calibStart%.3f"},"mid_sec":$midJson,"end_sec":${f"$calibEnd%.3f"},"warm_mean_sec":${f"$calibMean%.3f"}$ratioJson}"""
-    val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":0.000,"state_store":"$stateStore","stream_parts":$deploymentStreamParts,"task_metrics":$tm$calib$errField${scaleDetailField(Some(scale), sfDir)}${scaleBandsJson(sweepNames)},"scale_isolation":"per_entry_jvm","sf":"$scaledDir"}"""
-    try
-      java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
-        (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch {
-      case e: Exception =>
-        System.err.println(s"[bench] could not write $detailFile: $e")
-    }
-    val calibCompact = {
-      val mid = if (midCalib.isEmpty) "" else f",${midCalib.max}%.2f"
-      s"[${f"$calibStart%.2f"}$mid,${f"$calibEnd%.2f"}]"
-    }
-    println(compactArtifact(all, total, 0.0, stateStore, calibCompact,
-      detailFile, errors.map(_._1), scaledDir, calibMean, calibRatio,
-      noisyReps, -1.0, None, deploymentStreamParts, -1.0, Some(scale)))
-    if (errors.nonEmpty) sys.exit(2)
-  }
-
   private[graft] def compactArtifact(
       all: Seq[(String, Double)], total: Double, streamTotal: Double,
-      stateStore: String, calibCompact: String, detailFile: String,
+      calibCompact: String, detailFile: String,
       errorNames: Seq[String], sfDir: String,
       calibMean: Double = -1.0, calibRatio: Option[Double] = None,
       noisyReps: Int = 0, streamComputeSec: Double = -1.0,
       streamComputeCov: Option[(Int, Int)] = None,
-      streamParts: Int = deploymentStreamParts,
       streamCalibMean: Double = -1.0,
       benchScale: Option[Int] = None,
       tailBudget: Int = 1850,
@@ -1537,8 +1213,8 @@ object Bench {
       else errorNames.take(10).map("\"" + _.take(40) + "\"")
         .mkString(""","errors":[""", ",", "]") +
         (if (errorNames.size > 10) s""","errors_n":${errorNames.size}""" else "")
-    // calib_ratio = mean probe time / pinned nominal (0.70s,
-    // s1_scan_project at sf0.1): the cross-round normalizer — divide this
+    // calib_ratio = warm mean probe time / pinned nominal
+    // (calibNominalSec, s1_scan_project at sf0.1): the cross-round normalizer — divide this
     // round's per-query seconds by it before comparing to another round's
     val calibNorm = (if (calibMean >= 0) s""","calib_mean":${f"$calibMean%.2f"}""" else "") +
       calibRatio.map(r => s""","calib_ratio":${f"$r%.2f"}""").getOrElse("") +
@@ -1573,7 +1249,7 @@ object Bench {
     val bandF = nameArr("jvm_isolated", jvmIsolated) +
       nameArr("band_exceeded", bandExceeded)
     def line(entries: Seq[String], omitted: Int): String =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","stream_total":${f"$streamTotal%.3f"}$scField,"state_store":"$stateStore","stream_parts":$streamParts$scalibField$scaleF$bandF,"calib":$calibCompact$calibNorm,"detail":"$detailFile","omitted":$omitted$errField,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","stream_total":${f"$streamTotal%.3f"}$scField,"state_store":"$stateStore","stream_parts":$deploymentStreamParts$scalibField$scaleF$bandF,"calib":$calibCompact$calibNorm,"detail":"$detailFile","omitted":$omitted$errField,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     // first prefix length whose line would overflow the budget (probe
     // with the max-digits omitted count); keep everything before it
     val kept = slowestFirst.indices

@@ -2,8 +2,10 @@ package graft.catalog
 
 import java.nio.file.{Files, Path}
 
-/** Shared local-filesystem helpers for the catalog layer. */
-private[catalog] object Fs {
+/** Shared local-filesystem helpers (the catalog layer and the streaming
+  * replay's checkpoint cleanup).
+  */
+private[graft] object Fs {
 
   /** Recursive delete, closing the walk stream (Files.walk holds directory
     * descriptors until closed).

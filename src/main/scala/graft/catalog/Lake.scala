@@ -282,9 +282,15 @@ class Lake(spark: SparkSession, root: String) {
       pending.foreach { pv =>
         val sub = m.partitionKeys.zip(pv.split("/")).map { case (k, v) => s"$k=$v" }.mkString("/")
         val target = Paths.get(s"${dataDir(name)}/$sub")
+        val rewritten = Paths.get(s"$tmp/$sub")
         deleteRecursively(target)
-        Files.createDirectories(target.getParent)
-        Files.move(Paths.get(s"$tmp/$sub"), target)
+        // no rewritten partition: every row lost the dedupe to a same-key
+        // row in another partition (a key that does not determine the
+        // partition), so the partition is now empty
+        if (Files.exists(rewritten)) {
+          Files.createDirectories(target.getParent)
+          Files.move(rewritten, target)
+        }
       }
       deleteRecursively(Paths.get(tmp))
     }

@@ -1,17 +1,20 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Single definition site for the replay inputs and query parameters
-  * shared by `graft.Bench`'s streaming entries and
-  * `graft.tools.StreamProbe`. The probe exists to attribute per-batch
-  * cost for EXACTLY the query the bench wall-clocks; that attribution is
-  * only trustworthy while both derive inputs and parameters here — two
-  * hand-kept copies (the pre-round-9 state) could drift silently, leaving
-  * the probe explaining a different query than the bench times.
+/** Single definition site for the replay inputs, the query parameters and
+  * the replay itself, shared by `graft.Bench`'s streaming entries,
+  * `graft.tools.StreamProbe` and `graft.tools.StreamScaleProbe`. The
+  * probes exist to attribute per-batch cost for EXACTLY the query the
+  * bench wall-clocks; that attribution is only trustworthy while all of
+  * them derive inputs, parameters and the feed-then-drain loop here —
+  * hand-kept copies could drift silently, leaving a probe explaining a
+  * different query than the bench times.
   *
   * All loaders `.collect()` to driver rows by design: the replays feed a
-  * bounded `MemoryStream`, and both callers force the collect OUTSIDE
+  * bounded `MemoryStream`, and every caller forces the collect OUTSIDE
   * their timed regions.
   */
 object StreamBenchShapes {
@@ -73,4 +76,75 @@ object StreamBenchShapes {
       buys.toDF("b_user", "b_ts", "amount"),
       "c_user", "b_user", "c_ts", "b_ts",
       joinLookback, joinLookahead)
+
+  /** Replays `rows` through `mk` into the noop sink: `rows` is cut into
+    * chunks of `rows.length / chunks` (at least 1) rows, and each chunk is
+    * fed and then drained before the next one. Feeding everything before
+    * the first drain would collapse the replay into one micro-batch and
+    * skip the per-batch state-store load/commit and watermark advance the
+    * replay exists to measure; watermarked operators run a second,
+    * no-new-data batch per drain that advances the watermark and evicts
+    * state, and that batch is part of the measurement.
+    *
+    * `onDrain` sees the query and the drain's seconds after every drain;
+    * `atEnd` sees it and the seconds since the first feed once the last
+    * drain is done, before the query stops. The replay owns a fresh
+    * checkpoint dir and deletes it whether or not the query fails, so a
+    * run leaks no state-store files.
+    */
+  def replay[T: Encoder, R](spark: SparkSession, rows: IndexedSeq[T],
+      chunks: Int, mk: Dataset[T] => Dataset[_],
+      onDrain: (StreamingQuery, Double) => Unit = (_, _) => ())(
+      atEnd: (StreamingQuery, Double) => R): R = {
+    val in = MemoryStream[T](implicitly[Encoder[T]], spark.sqlContext)
+    drive(mk(in.toDS()), chunked(rows, chunks).map(b => () => { in.addData(b); () }),
+      onDrain, atEnd)
+  }
+
+  /** The two-input replay for stream-stream joins: both sides advance in
+    * lockstep (a left chunk and a right chunk per drain), so both
+    * watermarks move together and join-state expiry happens inside the
+    * measurement instead of buffering one whole side. Equal lengths are a
+    * precondition: a side that ran out early would stop its watermark,
+    * and under min-of-watermarks expiry the other side's join state would
+    * stop expiring for the rest of the run.
+    */
+  def replay2[A: Encoder, B: Encoder, R](spark: SparkSession,
+      left: IndexedSeq[A], right: IndexedSeq[B], chunks: Int,
+      mk: (Dataset[A], Dataset[B]) => Dataset[_],
+      onDrain: (StreamingQuery, Double) => Unit = (_, _) => ())(
+      atEnd: (StreamingQuery, Double) => R): R = {
+    require(left.length == right.length,
+      s"replay2 drives both watermarks in lockstep; got ${left.length} vs ${right.length}")
+    val li = MemoryStream[A](implicitly[Encoder[A]], spark.sqlContext)
+    val ri = MemoryStream[B](implicitly[Encoder[B]], spark.sqlContext)
+    val feeds = chunked(left, chunks).zip(chunked(right, chunks)).map {
+      case (lb, rb) => () => { li.addData(lb); ri.addData(rb); () }
+    }
+    drive(mk(li.toDS(), ri.toDS()), feeds, onDrain, atEnd)
+  }
+
+  private def chunked[T](rows: IndexedSeq[T], chunks: Int): Seq[IndexedSeq[T]] =
+    rows.grouped(math.max(1, rows.length / chunks)).toSeq
+
+  private def drive[R](query: Dataset[_], feeds: Seq[() => Unit],
+      onDrain: (StreamingQuery, Double) => Unit,
+      atEnd: (StreamingQuery, Double) => R): R = {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_replay_ckpt")
+    try {
+      val q = query.writeStream.format("noop")
+        .option("checkpointLocation", ckpt.toString)
+        .outputMode("append").start()
+      try {
+        val t0 = System.nanoTime()
+        feeds.foreach { feed =>
+          val tb = System.nanoTime()
+          feed()
+          q.processAllAvailable()
+          onDrain(q, (System.nanoTime() - tb) / 1e9)
+        }
+        atEnd(q, (System.nanoTime() - t0) / 1e9)
+      } finally q.stop()
+    } finally graft.catalog.Fs.deleteRecursively(ckpt)
+  }
 }

@@ -1,11 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.streaming.StreamBenchShapes
+
 /** Diagnostic main for the streaming bench entries: replays one StreamOps
-  * operator exactly the way `graft.Bench` does (bounded MemoryStream,
-  * ~10 real micro-batches, noop sink) and prints the per-batch
+  * operator through the same replay `graft.Bench` uses
+  * (`StreamBenchShapes.replay`: bounded MemoryStream, ~10 real
+  * micro-batches, noop sink) and prints the per-batch
   * `StreamingQueryProgress` duration breakdown plus every state
   * operator's custom metrics — the data needed to attribute wall-clock
   * between query planning, state-store load/commit, and the actual work.
@@ -44,8 +47,9 @@ object StreamProbe {
     if (stateStore == "rocksdb") {
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // measurement override, same contract as Bench's: "false" reverts
-      // to full-snapshot-upload commits (the e6 lever-table axis)
+      // measurement override (Bench always runs changelog commits):
+      // "false" reverts to full-snapshot-upload commits (the e6
+      // lever-table axis, docs/STREAM_ATTRIBUTION.md round 17)
       spark.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         sys.env.getOrElse("SPARK_GRAFT_CHANGELOG", "true"))
@@ -68,7 +72,6 @@ object StreamProbe {
     implicit val buyEnc: Encoder[(Long, java.sql.Timestamp, Double)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaDouble)
-    implicit val sc = spark.sqlContext
 
     // per-batch progress lines shared by both replay shapes: wall-clock
     // (of the whole drain — a drain covers the data batch AND the
@@ -102,62 +105,13 @@ object StreamProbe {
       fresh.lastOption.foreach(p => lastReported = p.batchId)
     }
 
-    def finish(q: StreamingQuery, ckpt: java.nio.file.Path, t0: Long): Unit = {
-      q.stop()
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(ckpt.toFile)
+    // TOTAL covers the whole replay — query start, feed, stop and
+    // checkpoint cleanup — the same span the bench wall-clocks
+    def timed(run: => Unit): Unit = {
+      val t0 = System.nanoTime()
+      run
       println(f"TOTAL ${(System.nanoTime() - t0) / 1e9}%.2fs " +
         s"op=$op store=$stateStore parts=$parts cpus=$cpus batches=$nBatches")
-    }
-
-    def replay[T](rows: IndexedSeq[T], mk: Dataset[T] => Dataset[_])(
-        implicit enc: Encoder[T]): Unit = {
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_probe_ckpt")
-      val q = mk(in.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try
-        rows.grouped(math.max(1, rows.length / nBatches)).foreach { b =>
-          val tb = System.nanoTime()
-          in.addData(b)
-          q.processAllAvailable()
-          report(q, (System.nanoTime() - tb) / 1e9)
-        }
-      finally finish(q, ckpt, t0)
-    }
-
-    // two-input twin of Bench.replay2: both sides advance in lockstep (a
-    // left chunk + a right chunk per micro-batch drain) so both
-    // watermarks move together and join-state expiry happens inside the
-    // probe — the same replay shape whose wall-clock the bench reports
-    // for e6_stream_interval_join
-    def replay2[A, B](lRows: IndexedSeq[A], rRows: IndexedSeq[B],
-        mk: (Dataset[A], Dataset[B]) => DataFrame)(
-        implicit ea: Encoder[A], eb: Encoder[B]): Unit = {
-      require(lRows.length == rRows.length,
-        "replay2 drives both watermarks in lockstep; equal-length inputs required")
-      val li = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-      val ri = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_probe_ckpt")
-      val q = mk(li.toDS(), ri.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try {
-        val lc = lRows.grouped(math.max(1, lRows.length / nBatches)).toSeq
-        val rc = rRows.grouped(math.max(1, rRows.length / nBatches)).toSeq
-        lc.zip(rc).foreach { case (lb, rb) =>
-          val tb = System.nanoTime()
-          val _ = li.addData(lb)
-          val __ = ri.addData(rb)
-          q.processAllAvailable()
-          report(q, (System.nanoTime() - tb) / 1e9)
-        }
-      } finally finish(q, ckpt, t0)
     }
 
     // each op collects only its own input (all lazy): a neardedup probe
@@ -166,14 +120,16 @@ object StreamProbe {
     // definition site shared with graft.Bench, so this probe provably
     // attributes the same query the bench wall-clocks.
     lazy val eventRows: IndexedSeq[graft.streaming.StreamOps.Event] =
-      graft.streaming.StreamBenchShapes.loadEvents(spark, sfDir)
+      StreamBenchShapes.loadEvents(spark, sfDir)
     lazy val docRows: IndexedSeq[graft.streaming.StreamOps.Doc] =
-      graft.streaming.StreamBenchShapes.loadDocs(spark, sfDir)
+      StreamBenchShapes.loadDocs(spark, sfDir)
     lazy val clickRows: IndexedSeq[(Long, java.sql.Timestamp)] =
-      graft.streaming.StreamBenchShapes.clicksOf(eventRows)
+      StreamBenchShapes.clicksOf(eventRows)
     lazy val buyRows: IndexedSeq[(Long, java.sql.Timestamp, Double)] =
-      graft.streaming.StreamBenchShapes.buysOf(eventRows)
+      StreamBenchShapes.buysOf(eventRows)
 
+    def replay[T: Encoder](rows: IndexedSeq[T], mk: Dataset[T] => Dataset[_]): Unit =
+      timed(StreamBenchShapes.replay(spark, rows, nBatches, mk, report)((_, _) => ()))
     op match {
       case "rollup" =>
         replay(eventRows,
@@ -188,10 +144,8 @@ object StreamProbe {
           (ds: Dataset[graft.streaming.StreamOps.Doc]) =>
             graft.streaming.StreamOps.streamingNearDedup(ds))
       case "intervaljoin" =>
-        replay2(clickRows, buyRows,
-          (clicks: Dataset[(Long, java.sql.Timestamp)],
-           buys: Dataset[(Long, java.sql.Timestamp, Double)]) =>
-            graft.streaming.StreamBenchShapes.intervalJoinQuery(clicks, buys))
+        timed(StreamBenchShapes.replay2(spark, clickRows, buyRows, nBatches,
+          StreamBenchShapes.intervalJoinQuery, report)((_, _) => ()))
       case other => sys.error(s"unknown SPARK_GRAFT_PROBE_OP $other")
     }
     spark.stop()

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.streaming.StreamOps
+import graft.streaming.{StreamBenchShapes, StreamOps}
 
 /** Dynamic scaling probe for the STREAMING family — the sibling of
   * [[ScaleProbe]] (which covers the batch paths). Turns the streaming
@@ -38,8 +38,9 @@ import graft.streaming.StreamOps
   *     as W*K dormant markers. The probe prints both curves; the spec
   *     (`StreamStateBoundSpec`) pins the same contrast at test size.
   *
-  * Replay discipline matches `graft.Bench`'s streaming section: bounded
-  * MemoryStream in ~10 real micro-batches (one per cohort for churn),
+  * Replay discipline is `graft.Bench`'s streaming section's, through the
+  * same `StreamBenchShapes.replay`: bounded MemoryStream in ~10 real
+  * micro-batches (one per cohort for churn),
   * noop sink, RocksDB state store + changelog checkpointing, state
   * partitions = SPARK_GRAFT_STREAM_PARTS (default 8 — the bench's
   * deployment-shaped choice), inputs collected/synthesized OUTSIDE the
@@ -151,7 +152,7 @@ object StreamScaleProbe {
     spark.sparkContext.setLogLevel("ERROR")
     if (stateStore == "rocksdb") {
       // same store shape as the bench's streaming section (see
-      // graft.Bench `stateStore` notes for the rationale of each)
+      // graft.Bench's session setup for the rationale of each)
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       spark.conf.set(
@@ -179,61 +180,15 @@ object StreamScaleProbe {
     implicit val buyEnc: Encoder[(Long, java.sql.Timestamp, Double)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP,
         Encoders.scalaDouble)
-    implicit val sc = spark.sqlContext
-
-    def replay[T](rows: IndexedSeq[T], nBatches: Int,
-        mk: Dataset[T] => Dataset[_])(implicit enc: Encoder[T]): RunStats = {
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sscale_ckpt")
-      val q = mk(in.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try {
-        rows.grouped(math.max(1, rows.length / nBatches))
-          .foreach { b => in.addData(b); q.processAllAvailable() }
-        statsOf(q, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile)
-      }
-    }
-
-    // two-input twin (same lockstep discipline as Bench.replay2: a left
-    // chunk + a right chunk per drain, so both watermarks advance
-    // together and join-state expiry stays inside the measurement)
-    def replay2[A, B](lRows: IndexedSeq[A], rRows: IndexedSeq[B], nBatches: Int,
-        mk: (Dataset[A], Dataset[B]) => org.apache.spark.sql.DataFrame)(
-        implicit ea: Encoder[A], eb: Encoder[B]): RunStats = {
-      require(lRows.length == rRows.length,
-        "replay2 drives both watermarks in lockstep; equal lengths required")
-      val li = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[A]
-      val ri = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[B]
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sscale_ckpt")
-      val q = mk(li.toDS(), ri.toDS()).writeStream.format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      try {
-        val lc = lRows.grouped(math.max(1, lRows.length / nBatches)).toSeq
-        val rc = rRows.grouped(math.max(1, rRows.length / nBatches)).toSeq
-        lc.zip(rc).foreach { case (lb, rb) =>
-          val _ = li.addData(lb)
-          val __ = ri.addData(rb)
-          q.processAllAvailable()
-        }
-        statsOf(q, (System.nanoTime() - t0) / 1e9)
-      } finally {
-        q.stop()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(ckpt.toFile)
-      }
-    }
+    // the bench's replay (StreamBenchShapes): stats cover the feed, from
+    // the first chunk to the last drain
+    def replay[T: Encoder](rows: IndexedSeq[T], nBatches: Int,
+        mk: Dataset[T] => Dataset[_]): RunStats =
+      StreamBenchShapes.replay(spark, rows, nBatches, mk)(statsOf)
+    def replay2[A: Encoder, B: Encoder](lRows: IndexedSeq[A],
+        rRows: IndexedSeq[B], nBatches: Int,
+        mk: (Dataset[A], Dataset[B]) => Dataset[_]): RunStats =
+      StreamBenchShapes.replay2(spark, lRows, rRows, nBatches, mk)(statsOf)
 
     def settle(): Unit = { System.gc(); Thread.sleep(250) }
 
@@ -250,8 +205,8 @@ object StreamScaleProbe {
       bestOf(replay(rows, nBatches, mk))
 
     // ---- base inputs (outside every timed region) ----
-    val baseEvents = graft.streaming.StreamBenchShapes.loadEvents(spark, sfDir)
-    val baseDocs = graft.streaming.StreamBenchShapes.loadDocs(spark, sfDir)
+    val baseEvents = StreamBenchShapes.loadEvents(spark, sfDir)
+    val baseDocs = StreamBenchShapes.loadDocs(spark, sfDir)
     val evMin = baseEvents.map(_.ts.getTime).min
     val evMax = baseEvents.map(_.ts.getTime).max
     // copy i shifted one full span + 2h: the margin exceeds the 30-min
@@ -312,9 +267,9 @@ object StreamScaleProbe {
     best(baseDocs.take(300), 3, neardedup)
     if (axes("e6")) {
       val warmEvents = baseEvents.take(1000)
-      replay2(graft.streaming.StreamBenchShapes.clicksOf(warmEvents),
-        graft.streaming.StreamBenchShapes.buysOf(warmEvents), 2,
-        graft.streaming.StreamBenchShapes.intervalJoinQuery)
+      replay2(StreamBenchShapes.clicksOf(warmEvents),
+        StreamBenchShapes.buysOf(warmEvents), 2,
+        StreamBenchShapes.intervalJoinQuery)
       ()
     }
 
@@ -378,8 +333,8 @@ object StreamScaleProbe {
     // rows. Inputs/parameters come from StreamBenchShapes (the one
     // definition site shared with the bench), so this measures exactly
     // the query the bench wall-clocks.
-    lazy val baseClicks = graft.streaming.StreamBenchShapes.clicksOf(baseEvents)
-    lazy val baseBuys = graft.streaming.StreamBenchShapes.buysOf(baseEvents)
+    lazy val baseClicks = StreamBenchShapes.clicksOf(baseEvents)
+    lazy val baseBuys = StreamBenchShapes.buysOf(baseEvents)
     def timeExtendedClicks(n: Int): IndexedSeq[(Long, java.sql.Timestamp)] =
       (0 until n).flatMap(i => baseClicks.map { case (u, ts) =>
         (u, new java.sql.Timestamp(ts.getTime + i * evSpanMs)) })
@@ -392,7 +347,7 @@ object StreamScaleProbe {
           IndexedSeq[(Long, java.sql.Timestamp, Double)])]("e6_volume",
         n => (timeExtendedClicks(n), timeExtendedBuys(n)), _._1.length,
         { case ((lc, rc), b) => bestOf(replay2(lc, rc, b,
-          graft.streaming.StreamBenchShapes.intervalJoinQuery)) })
+          StreamBenchShapes.intervalJoinQuery)) })
 
     // churn: one micro-batch per cohort; reps=1 — the state-row curve is
     // deterministic and is the datum (wall time is secondary here)

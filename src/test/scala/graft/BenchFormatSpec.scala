@@ -34,7 +34,7 @@ class BenchFormatSpec extends AnyFunSuite {
   test("oversubscribed sweep: fits the window, parses, keeps the slowest") {
     val many = (1 to 150)
       .map(i => (f"query_with_a_rather_long_name_$i%03d", i * 0.37))
-    val s = Bench.compactArtifact(many, 123.456, 12.3, "rocksdb", calib,
+    val s = Bench.compactArtifact(many, 123.456, 12.3, calib,
       "BENCH_DETAIL.json", Nil, sf)
     assert(s.length <= 1850, s"line is ${s.length} chars")
     assert(!s.contains("\n"))
@@ -56,7 +56,7 @@ class BenchFormatSpec extends AnyFunSuite {
 
   test("small sweep: nothing elided, all entries present") {
     val few = Seq(("q1_agg", 0.34), ("q7_nation_volume", 0.97), ("r1_union", 0.13))
-    val s = Bench.compactArtifact(few, 1.44, 0.0, "rocksdb", calib,
+    val s = Bench.compactArtifact(few, 1.44, 0.0, calib,
       "BENCH_DETAIL.json", Nil, sf)
     val j = JsonMethods.parse(s)
     assert((j \ "omitted") == JInt(0))
@@ -98,6 +98,23 @@ class BenchFormatSpec extends AnyFunSuite {
       Seq(Seq(1.0, 1.1), Seq(2.06, 18.37), Seq(0.5, 0.9))) == 1)
   }
 
+  test("intAtLeast: REPS and BENCH_SCALE reject out-of-range and malformed values at startup") {
+    val env = Map("SPARK_GRAFT_REPS" -> "0", "NEG" -> "-3", "OK" -> " 3 ",
+      "SPARK_GRAFT_BENCH_SCALE" -> "1", "JUNK" -> "2x")
+    // REPS=0 used to run no rep and report -1 for every entry with no
+    // error; it must fail before any work
+    val e = intercept[RuntimeException](Bench.intAtLeast(env, "SPARK_GRAFT_REPS", 1))
+    assert(e.getMessage.contains("SPARK_GRAFT_REPS") && e.getMessage.contains("'0'"))
+    intercept[RuntimeException](Bench.intAtLeast(env, "NEG", 1))
+    intercept[RuntimeException](Bench.intAtLeast(env, "JUNK", 1))
+    // scale mode needs a factor above 1
+    intercept[RuntimeException](Bench.intAtLeast(env, "SPARK_GRAFT_BENCH_SCALE", 2))
+    assert(Bench.intAtLeast(env, "OK", 1) == Some(3))
+    assert(Bench.intAtLeast(env, "OK", 3) == Some(3))
+    // unset: None, so the caller's default applies
+    assert(Bench.intAtLeast(env, "UNSET", 1).isEmpty)
+  }
+
   test("isNominalSf: basename match, trailing slash, other scale factors") {
     assert(Bench.isNominalSf("/root/testdata/sf0.1"))
     // a trailing slash or relative spelling must not silently drop the
@@ -117,12 +134,10 @@ class BenchFormatSpec extends AnyFunSuite {
     // BENCH_r{N}: the artifact carries the parts value next to
     // stream_total, and a silent default change would surface here
     val few = Seq(("q1_agg", 0.34))
-    val s = Bench.compactArtifact(few, 0.34, 5.0, "rocksdb", calib,
+    val s = Bench.compactArtifact(few, 0.34, 5.0, calib,
       "BENCH_DETAIL.json", Nil, sf)
     assert((JsonMethods.parse(s) \ "stream_parts") == JInt(8))
-    val custom = Bench.compactArtifact(few, 0.34, 5.0, "rocksdb", calib,
-      "BENCH_DETAIL.json", Nil, sf, streamParts = 2)
-    assert((JsonMethods.parse(custom) \ "stream_parts") == JInt(2))
+    assert((JsonMethods.parse(s) \ "state_store") == JString("rocksdb"))
     assert(Bench.deploymentStreamParts == 8,
       "changing the streaming parts default invalidates the committed " +
         "parts-vs-commit justification — update docs/STREAM_ATTRIBUTION.md " +
@@ -193,19 +208,19 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.streamComputeCovField(Some((2, 2))) == "")
     assert(Bench.streamComputeCovField(None) == "")
     val partial = Bench.compactArtifact(Seq(("q1_agg", 0.34)), 0.34, 12.3,
-      "rocksdb", calib, "BENCH_DETAIL.json", Nil, sf,
+      calib, "BENCH_DETAIL.json", Nil, sf,
       streamComputeSec = 3.0, streamComputeCov = Some((1, 2)))
     assert((JsonMethods.parse(partial) \ "stream_compute_covered") ==
       JString("1/2"))
     // the compact line carries the field next to stream_total...
     val s = Bench.compactArtifact(Seq(("q1_agg", 0.34)), 0.34, 12.3,
-      "rocksdb", calib, "BENCH_DETAIL.json", Nil, sf,
+      calib, "BENCH_DETAIL.json", Nil, sf,
       streamComputeSec = 10.5)
     val j = JsonMethods.parse(s)
     assert((j \ "stream_compute_total") == JDouble(10.5))
     // ...and omits it entirely when no streaming ran (sentinel -1)
     val s2 = Bench.compactArtifact(Seq(("q1_agg", 0.34)), 0.34, 0.0,
-      "rocksdb", calib, "BENCH_DETAIL.json", Nil, sf)
+      calib, "BENCH_DETAIL.json", Nil, sf)
     assert(!s2.contains("stream_compute_total"))
     assert(JsonMethods.parse(s2) != JNothing)
   }
@@ -235,14 +250,14 @@ class BenchFormatSpec extends AnyFunSuite {
       .contains("ratio_vs_nominal"))
     // compact line: mean + ratio travel next to stream_parts...
     val s = Bench.compactArtifact(Seq(("q1_agg", 0.34)), 0.34, 12.3,
-      "rocksdb", calib, "BENCH_DETAIL.json", Nil, sf, streamCalibMean = 1.6)
+      calib, "BENCH_DETAIL.json", Nil, sf, streamCalibMean = 1.6)
     val jc = JsonMethods.parse(s)
     assert((jc \ "stream_calib_mean") == JDouble(1.6))
     val JDouble(rc) = (jc \ "stream_calib_ratio"): @unchecked
     assert(math.abs(rc - 1.6 / Bench.streamCalibNominalSec) < 0.01)
     // ...and are absent when no streaming calib ran (sentinel -1)
     val s2 = Bench.compactArtifact(Seq(("q1_agg", 0.34)), 0.34, 0.0,
-      "rocksdb", calib, "BENCH_DETAIL.json", Nil, sf)
+      calib, "BENCH_DETAIL.json", Nil, sf)
     assert(!s2.contains("stream_calib"))
     // the calib input is part of the nominal's definition: a size change
     // without a re-pin corrupts every cross-round streaming comparison
@@ -255,11 +270,11 @@ class BenchFormatSpec extends AnyFunSuite {
     // base sf — comparing it against a full-sweep value would read as a
     // catastrophic regression, so the artifact must self-describe
     val s = Bench.compactArtifact(Seq(("w5_covar_chunked", 12.6)), 12.6, 0.0,
-      "rocksdb", calib, "BENCH_SCALE10.json", Nil, "/tmp/graft_scale_10x",
+      calib, "BENCH_SCALE10.json", Nil, "/tmp/graft_scale_10x",
       benchScale = Some(10))
     assert((JsonMethods.parse(s) \ "bench_scale") == JInt(10))
     val s2 = Bench.compactArtifact(Seq(("q1_agg", 0.34)), 0.34, 0.0,
-      "rocksdb", calib, "BENCH_DETAIL.json", Nil, sf)
+      calib, "BENCH_DETAIL.json", Nil, sf)
     assert(!s2.contains("bench_scale"))
     // detail-file self-description: bench_scale + base_sf together (the
     // fields a judge identifies a BENCH_SCALE artifact by), absent
@@ -401,10 +416,10 @@ class BenchFormatSpec extends AnyFunSuite {
       Registry.all.collect { case Query(n, _, _, _: Pinned, _) => n }.toSet)
     // compact line: the outcome names travel only when non-empty
     val entries = Seq(("q1_agg", 0.5), ("j13d_range_join_sweep", 3.2))
-    val quiet = Bench.compactArtifact(entries, 3.7, 0.0, "rocksdb", calib,
+    val quiet = Bench.compactArtifact(entries, 3.7, 0.0, calib,
       "BENCH_DETAIL.json", Nil, sf)
     assert(!quiet.contains("jvm_isolated") && !quiet.contains("band_exceeded"))
-    val loud = Bench.compactArtifact(entries, 3.7, 0.0, "rocksdb", calib,
+    val loud = Bench.compactArtifact(entries, 3.7, 0.0, calib,
       "BENCH_DETAIL.json", Nil, sf,
       jvmIsolated = Seq("j13d_range_join_sweep"),
       bandExceeded = Seq("j13b_range_join_topk"))
@@ -495,7 +510,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // carries at most 10 truncated NAMES plus a count, never messages
     val entries = (1 to 120).map(i => (f"steady_query_name_$i%03d", 0.5))
     val errs = (1 to 30).map(i => "exploding_query_name_" + ("x" * 200) + i)
-    val s = Bench.compactArtifact(entries, 60.0, 0.0, "rocksdb", calib,
+    val s = Bench.compactArtifact(entries, 60.0, 0.0, calib,
       "BENCH_DETAIL.json", errs, sf)
     assert(s.length <= 1850, s"line is ${s.length} chars")
     val j = JsonMethods.parse(s)

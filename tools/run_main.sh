@@ -4,7 +4,9 @@
 # Mirrors build.sbt's forked-JVM setup (JDK17 add-opens, UTC, no UI, -Xmx).
 # Usage: tools/run_main.sh <mainClass> [args...]   (env knobs pass through)
 set -euo pipefail
-CLASSES=/root/repo/target/scala-2.13/classes
+# the classes of the checkout this script lives in, so a second copy of the
+# tree (e.g. a parent commit next to a change) runs its own build
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
 [ -d "$CLASSES" ] || { echo "compile first: sbt compile" >&2; exit 1; }
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
