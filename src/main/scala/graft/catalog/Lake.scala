@@ -2,7 +2,10 @@ package graft.catalog
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -23,6 +26,26 @@ import org.apache.spark.sql.types.StructType
   * pending marker), using `row_number` over the PK — the standard
   * compact-and-dedupe pattern. Readers prune partitions through the
   * `partitionBy` layout, and predicate pushdown reaches the Parquet scan.
+  *
+  * Write-behind compaction: `optimize` queues the rewrite and returns, so
+  * the caller's next call (in the nightly step, the next table's `append`)
+  * runs while the rewrite finishes. Rewrites run FIFO on one JVM-wide
+  * compactor thread, registered by table directory, so two `Lake`
+  * instances over one root see the same queue.
+  *   - `append`, `optimize`, `table` and `create` on a table first wait
+  *     for that table's queued rewrite; `meta` and `exists` do not (a
+  *     rewrite never touches `_graft_meta.json`). [[sync]] waits for every
+  *     rewrite queued under this lake's root.
+  *   - A failed rewrite is rethrown, as the exception its body threw, by
+  *     the next call on that table or by [[sync]], whichever waits first.
+  *     Its `_pending` ledger stays, so a later `optimize` retries it.
+  *   - The rewrite runs with the caller's active session and local
+  *     properties as they were when `optimize` was called, so job groups,
+  *     cancellation and job tags reach its jobs.
+  *   - The crash model is unchanged: the rewrite body is the one
+  *     `optimize` ran in place before; it only runs on another thread.
+  * A frame from `table` reads the files listed when it was made; run it
+  * before the next `optimize` of that table, as before.
   */
 final case class TableMeta(
     name: String,
@@ -34,12 +57,33 @@ class Lake(spark: SparkSession, root: String) {
 
   private def dir(name: String) = s"$root/$name"
   private def metaPath(name: String) = Paths.get(s"$root/$name/_graft_meta.json")
+  private def tableKey(name: String) = Paths.get(dir(name)).toAbsolutePath.normalize
+  private def awaitRewrite(name: String): Unit = Compactor.await(tableKey(name))
 
   def exists(name: String): Boolean = Files.exists(metaPath(name))
+
+  /** Waits for every rewrite queued under this lake's root; rethrows the
+    * first failed one (later failures ride on it as suppressed).
+    */
+  def sync(): Unit = Compactor.awaitUnder(Paths.get(root).toAbsolutePath.normalize)
+
+  /** Runs `body`, then [[sync]], also when `body` throws: then `body`'s
+    * exception wins and a rewrite failure is attached to it as suppressed.
+    */
+  def syncAfter(body: => Unit): Unit = {
+    try body
+    catch {
+      case t: Throwable =>
+        try sync() catch { case s: Throwable => t.addSuppressed(s) }
+        throw t
+    }
+    sync()
+  }
 
   /** S2: create with replace/skip semantics. */
   def create(meta: TableMeta, mode: String): Unit = {
     require(mode == "replace" || mode == "skip", s"bad mode $mode")
+    awaitRewrite(meta.name)
     if (exists(meta.name)) {
       if (mode == "skip") return
       deleteRecursively(Paths.get(dir(meta.name)))
@@ -98,17 +142,37 @@ class Lake(spark: SparkSession, root: String) {
 
   private def dataDir(name: String) = s"${dir(name)}/data"
 
-  /** Canonical partition-value string for the `_pending` ledger and the
-    * optimize scope filter: null partition values are spelled the way
-    * Spark writes their directories (`__HIVE_DEFAULT_PARTITION__`), so a
-    * null-keyed partition is tracked, matched, and compacted like any
-    * other. A bare `concat_ws` would silently SKIP nulls — dropping the
-    * partition from the ledger entirely (single key) or truncating the
-    * path to the wrong arity (multi key).
+  /** `_pending` ledger entry of a partition directory Spark wrote (a path
+    * relative to the data dir, `k1=v1/k2=v2`): its values as they appear
+    * in the directory names, joined by `/`. Spark escapes every `/`, `=`
+    * and control character in a value
+    * ([[ExternalCatalogUtils.escapePathName]]) and spells a null one
+    * `__HIVE_DEFAULT_PARTITION__`, so an entry names exactly one directory
+    * and holds no newline.
     */
-  private def partitionString(keys: Seq[String]) =
-    concat_ws("/", keys.map(k =>
-      coalesce(col(k).cast("string"), lit("__HIVE_DEFAULT_PARTITION__"))): _*)
+  private def ledgerEntry(partitionDir: java.nio.file.Path): String =
+    partitionDir.iterator.asScala.map { seg =>
+      val s = seg.toString
+      s.substring(s.indexOf('=') + 1)
+    }.mkString("/")
+
+  /** The partition directory a ledger entry names. */
+  private def partitionDir(keys: Seq[String], entry: String): String =
+    keys.zip(entry.split("/")).map { case (k, v) =>
+      ExternalCatalogUtils.escapePathName(k) + "=" + v
+    }.mkString("/")
+
+  /** Rows of the partitions a ledger names: each value read back the way
+    * Spark parses a partition directory (unescaped, cast to the column's
+    * type; the default partition is null).
+    */
+  private def inPartitions(m: TableMeta, entries: Set[String]): Column =
+    entries.toSeq.map { e =>
+      m.partitionKeys.zip(e.split("/")).map { case (k, v) =>
+        if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) col(k).isNull
+        else col(k) === lit(ExternalCatalogUtils.unescapePathName(v)).cast(m.schema(k).dataType)
+      }.reduce(_ && _)
+    }.reduce(_ || _)
 
   def meta(name: String): TableMeta = {
     // minimal parse: schema json is produced by us; extract fields
@@ -123,8 +187,10 @@ class Lake(spark: SparkSession, root: String) {
   }
 
   /** S1: scan (ingest-order column hidden). */
-  def table(name: String): DataFrame =
+  def table(name: String): DataFrame = {
+    awaitRewrite(name)
     tableRaw(name).select(meta(name).schema.fieldNames.map(col).toIndexedSeq: _*)
+  }
 
   /** The read schema tags the `date` DATA column (partition columns lose
     * user-schema metadata when Spark rebuilds the partition schema) with
@@ -157,10 +223,10 @@ class Lake(spark: SparkSession, root: String) {
     * later, so fail the append instead.
     *
     * ONE Spark job per append: the input is written once to a staging
-    * directory with `observe()` metrics riding the write — the invariant
-    * violation count and the distinct partition values (bounded: one
-    * string per touched partition) — then the files are promoted into the
-    * data directory only if the invariant holds. The earlier form ran the
+    * directory with an `observe()` metric riding the write — the invariant
+    * violation count — then the files are promoted into the data
+    * directory only if the invariant holds. The dirty partitions are the
+    * directories the write made in staging ([[ledgerEntry]]). The earlier form ran the
     * input three times (guard count, write, dirty-partition distinct),
     * which triples an expensive upstream frame; staging also means a
     * violating or crashed append never leaves partial files in the table.
@@ -174,6 +240,7 @@ class Lake(spark: SparkSession, root: String) {
     * globally unique: files already moved are simply absent from staging.
     */
   def append(name: String, df: DataFrame): Unit = {
+    awaitRewrite(name)
     val m = meta(name)
     recoverStaging(name)
     val checkYear = m.partitionKeys.contains("year") &&
@@ -189,10 +256,9 @@ class Lake(spark: SparkSession, root: String) {
       if (checkYear)
         sum(when(col("year") =!= year(col("date")), 1L).otherwise(0L)).as("bad")
       else sum(lit(0L)).as("bad")
-    val partsMetric = collect_set(partitionString(m.partitionKeys)).as("parts")
     val staging = s"${dir(name)}/_append_tmp"
     deleteRecursively(Paths.get(staging))
-    aligned.observe(obs, badMetric, partsMetric)
+    aligned.observe(obs, badMetric)
       .write.mode(SaveMode.Overwrite)
       .partitionBy(m.partitionKeys: _*).parquet(staging)
     val got = obs.get
@@ -206,9 +272,7 @@ class Lake(spark: SparkSession, root: String) {
     }
     val dirty =
       if (m.partitionKeys.isEmpty) Set("ALL")
-      else Option(got("parts"))
-        .map(_.asInstanceOf[scala.collection.Seq[String]].toSet)
-        .getOrElse(Set.empty[String])
+      else partFiles(stagingPath).flatMap(p => Option(p.getParent)).map(ledgerEntry).toSet
     // the marker commits the batch: everything after this line is
     // idempotently resumable by recoverStaging
     Fs.writeAtomic(stagingPath.resolve(PromoteMarker), dirty.mkString("\n"))
@@ -232,16 +296,11 @@ class Lake(spark: SparkSession, root: String) {
     * marker's partitions into `_pending`, then drop staging.
     */
   private def promoteStaging(name: String, stagingPath: java.nio.file.Path): Unit = {
-    val stream = Files.walk(stagingPath)
-    try {
-      stream.filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.startsWith("part-"))
-        .forEach { p =>
-          val target = Paths.get(dataDir(name)).resolve(stagingPath.relativize(p))
-          Files.createDirectories(target.getParent)
-          Files.move(p, target)
-        }
-    } finally stream.close()
+    partFiles(stagingPath).foreach { rel =>
+      val target = Paths.get(dataDir(name)).resolve(rel)
+      Files.createDirectories(target.getParent)
+      Files.move(stagingPath.resolve(rel), target)
+    }
     val dirty = Files.readString(stagingPath.resolve(PromoteMarker))
       .split("\n").toSet
     val p = Paths.get(s"${dir(name)}/_pending")
@@ -250,21 +309,42 @@ class Lake(spark: SparkSession, root: String) {
     deleteRecursively(stagingPath)
   }
 
+  /** Part files under `base`, relative to it. */
+  private def partFiles(base: java.nio.file.Path): List[java.nio.file.Path] = {
+    val stream = Files.walk(base)
+    try stream.iterator.asScala.filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("part-")).map(base.relativize).toList
+    finally stream.close()
+  }
+
   /** S4: optimize = last-write-wins PK dedupe (by ingest stamp, with an
     * optional extra recency column first), rewriting only partitions that
-    * saw appends since the last optimize.
+    * saw appends since the last optimize. Write-behind: waits for the
+    * table's previous rewrite, queues this one and returns (see the class
+    * doc).
     */
   def optimize(name: String, orderCol: String = SeqCol): Unit = {
+    awaitRewrite(name)
+    Compactor.submit(spark, tableKey(name))(rewrite(name, orderCol))
+  }
+
+  /** The body of [[optimize]], run on the compactor thread. It must call
+    * nothing that waits on a queued rewrite (it would wait on itself).
+    */
+  private def rewrite(name: String, orderCol: String): Unit = {
     val m = meta(name)
     val pendingPath = Paths.get(s"${dir(name)}/_pending")
     if (!Files.exists(pendingPath)) return
     val pending = Files.readString(pendingPath).split("\n").filter(_.nonEmpty).toSet
-    if (pending.isEmpty) return
+    if (pending.isEmpty) { // appends of no rows: nothing to rewrite
+      Files.delete(pendingPath)
+      return
+    }
 
     val full = tableRaw(name)
     val scoped =
       if (m.partitionKeys.isEmpty || pending.contains("ALL")) full
-      else full.filter(partitionString(m.partitionKeys).isin(pending.toSeq: _*))
+      else full.filter(inPartitions(m, pending))
     val ordCols = if (orderCol == SeqCol) Seq(col(SeqCol).desc, col(SubCol).desc)
       else Seq(col(orderCol).desc, col(SeqCol).desc, col(SubCol).desc)
     val w = Window.partitionBy(m.primaryKeys.map(col): _*).orderBy(ordCols: _*)
@@ -280,7 +360,7 @@ class Lake(spark: SparkSession, root: String) {
       Files.move(Paths.get(tmp), Paths.get(dataDir(name)))
     } else {
       pending.foreach { pv =>
-        val sub = m.partitionKeys.zip(pv.split("/")).map { case (k, v) => s"$k=$v" }.mkString("/")
+        val sub = partitionDir(m.partitionKeys, pv)
         val target = Paths.get(s"${dataDir(name)}/$sub")
         val rewritten = Paths.get(s"$tmp/$sub")
         deleteRecursively(target)

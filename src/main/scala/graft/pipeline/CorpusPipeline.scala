@@ -52,10 +52,11 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
     * are per-language fractions; `defaultRate` covers absent languages.
     * When `evalDocs` is given, a 5-gram leakage report of that held-out
     * set against the kept (post-dedup) corpus lands in
-    * `eval_contamination`.
+    * `eval_contamination`. Returns only after every rewrite its
+    * `optimize` calls queued has landed.
     */
   def run(docs: DataFrame, rates: Map[String, Double],
-      defaultRate: Double, evalDocs: Option[DataFrame] = None): Unit = {
+      defaultRate: Double, evalDocs: Option[DataFrame] = None): Unit = lake.syncAfter {
     tables.foreach(lake.create(_, "replace"))
 
     // 1. annotate — a narrow per-row pass plus the unigram-LM score
@@ -81,6 +82,10 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
     // 2. near-dup clusters: exact dups collapse through the same pair
     // graph (identical texts share every band), so one canonicalization
     // covers both exact and near duplicates
+    // canonicalize narrows the session's shuffle width for its CC loop;
+    // land the queued annotations rewrite first so it is not planned
+    // under that width
+    lake.sync()
     val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
     val clusters = Dedup.canonicalize(docs, "doc_id", pairs)
     lake.append("doc_clusters", clusters)

@@ -22,7 +22,9 @@ import graft.stages.{Stages, Variables}
   *    optimize (reference `factor_model_flow.py:177-199` et al.)
   *
   * Persistence runs through the Lake create/append/optimize triple; all
-  * analytics are the pure transforms in [[graft.stages.Stages]].
+  * analytics are the pure transforms in [[graft.stages.Stages]]. `daily`
+  * and `writeHistory` return only after every rewrite their `optimize`
+  * calls queued has landed ([[Lake.syncAfter]]).
   */
 class DailyPipeline(spark: SparkSession, lake: Lake) {
   import spark.implicits._
@@ -61,7 +63,7 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
   /** S8/S12: minute-bar history upsert for one market date (reference
     * `pipelines/history_flow.py:63-101`).
     */
-  def writeHistory(table: String, bars: DataFrame): Unit = {
+  def writeHistory(table: String, bars: DataFrame): Unit = lake.syncAfter {
     val m = tables.find(_.name == table).get
     lake.append(table, bars.select(m.schema.fieldNames.map(col).toIndexedSeq: _*))
     lake.optimize(table)
@@ -111,7 +113,7 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
       val (w, m) = Stages.portfolio(
         lake.table("alphas"), lake.table("factor_loadings"),
         lake.table("factor_covariances"), lake.table("idio_vol"),
-        lake.table("benchmark_weights"))
+        lake.table("benchmark_weights"), cache)
       replace("portfolio_weights", w)
       replace("portfolio_metrics", m)
     }
@@ -137,8 +139,10 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
   /** Incremental daily run: trailing 2*WINDOW recompute, `date == asOf`
     * upsert — the reference's daily semantics (SURVEY §2.10).
     */
-  def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit = {
-    if (!isMarketDay(asOf)) return
+  def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit =
+    lake.syncAfter(if (isMarketDay(asOf)) dailyStep(asOf, stockPrices, etfPrices))
+
+  private def dailyStep(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit = {
     val asOfD = java.sql.Date.valueOf(asOf)
     val lookback = lake.table("calendar")
       .filter(col("date") <= asOfD)
@@ -180,7 +184,7 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
         lake.table("factor_loadings").filter(col("date") === asOfD),
         lake.table("factor_covariances").filter(col("date") === asOfD),
         lake.table("idio_vol").filter(col("date") === asOfD),
-        lake.table("benchmark_weights").filter(col("date") === asOfD))
+        lake.table("benchmark_weights").filter(col("date") === asOfD), cache)
       upsert("portfolio_weights", w)
       upsert("portfolio_metrics", m)
     }

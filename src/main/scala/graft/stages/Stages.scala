@@ -175,12 +175,16 @@ object Stages {
       .select("date", "year", "ticker")
 
   /** L1-L8: per-date calibrated portfolio optimization (reference
-    * `portfolio_weights_flow.py:17-60`).
+    * `portfolio_weights_flow.py:17-60`). Both frames project one solver
+    * output, passed through `cache` first: a caller that writes both
+    * caches it there, so the per-date QP fan-out runs once, not once per
+    * frame.
     */
   def portfolio(
       alphas: DataFrame, loadings: DataFrame, factorCov: DataFrame,
-      idioVol: DataFrame, benchmark: DataFrame): (DataFrame, DataFrame) = {
-    val out = PortfolioOpt.optimalWeights(
+      idioVol: DataFrame, benchmark: DataFrame,
+      cache: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    val out = cache(PortfolioOpt.optimalWeights(
       // the reference reads alphas through a not-null filter
       // (`utils/data.py:57-63`) — null-alpha rows exist in the table since
       // the alphas stage left-joins idio_vol, but never reach the optimizer
@@ -189,7 +193,7 @@ object Stages {
       factorCov.select("date", "factor_1", "factor_2", "covariance"),
       idioVol.select("date", "ticker", "idio_vol"),
       benchmark.select("date", "ticker", "weight"),
-      Variables.TargetActiveRisk)
+      Variables.TargetActiveRisk))
     val weights = out
       .withColumn("year", year(col("date")))
       .select("ticker", "date", "year", "weight")

@@ -1,8 +1,14 @@
 package graft.catalog
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.CountDownLatch
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -210,5 +216,163 @@ class LakeSpec extends SparkSpec {
       .map(r => (r.getAs[Int]("year"), r.getAs[String]("ticker"), r.getAs[Double]("v")))
     assert(got.toSeq == Seq((2023, "AAPL", 1.0), (2023, "MSFT", 2.0),
       (2024, "AAPL", 5.0), (2024, "MSFT", 6.0)))
+  }
+
+  test("optimize compacts partitions whose values Spark escapes in directory names") {
+    // Spark writes region=us%3Aeast for "us:east" and region=a%2Fb for
+    // "a/b"; the ledger must name those directories, and a value with a
+    // newline must not split its ledger entry
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    val sch = StructType(Seq(StructField("id", IntegerType),
+      StructField("region", StringType), StructField("v", DoubleType)))
+    lake.create(TableMeta("accounts", sch, Seq("region"), Seq("id")), "replace")
+    val regions = Seq(Some("us:east"), Some("a/b"), Some("x\ny"), None)
+    def batch(v: Double) = regions.zipWithIndex.map { case (r, i) => (i, r, v) }
+      .toDF("id", "region", "v")
+    lake.append("accounts", batch(1.0))
+    lake.append("accounts", batch(2.0))
+    lake.optimize("accounts")
+    val got = lake.table("accounts").orderBy("id").collect()
+      .map(r => (r.getAs[Int]("id"), Option(r.getAs[String]("region")), r.getAs[Double]("v")))
+    assert(got.toSeq == regions.zipWithIndex.map { case (r, i) => (i, r, 2.0) })
+    lake.sync()
+    assert(!Files.exists(root.resolve("accounts/_pending")))
+  }
+
+  private val holdKey = Paths.get("/graft-lake-spec-hold")
+
+  /** Holds the compactor thread until the returned gate opens, so a
+    * rewrite queued meanwhile stays queued.
+    */
+  private def holdCompactor(): CountDownLatch = {
+    val gate = new CountDownLatch(1)
+    Compactor.submit(spark, holdKey)(gate.await())
+    gate
+  }
+
+  /** Runs `call` on another thread, checks that it is still blocked while
+    * the compactor is held, then opens the gate and returns its result.
+    */
+  private def blockedUntilRewrite[T](gate: CountDownLatch)(call: => T): T = {
+    val f = Future(call)(ExecutionContext.global)
+    Thread.sleep(300)
+    val blocked = !f.isCompleted
+    gate.countDown()
+    Compactor.await(holdKey)
+    val out = Await.result(f, 2.minutes)
+    assert(blocked, "the call did not wait for the table's queued rewrite")
+    out
+  }
+
+  test("write-behind optimize: table waits for the rewrite, through any Lake on the root") {
+    val root = Files.createTempDirectory("graft_lake").toString
+    val lake = new Lake(spark, root)
+    lake.create(meta, "replace")
+    lake.append("prices", rows(1, 10.0))
+    lake.append("prices", rows(2, 20.0))
+    val gate = holdCompactor()
+    lake.optimize("prices", "seq") // queued behind the hold
+    val same = blockedUntilRewrite(gate)(lake.table("prices").collect())
+    assert(same.length == 2 && same.forall(_.getAs[Long]("seq") == 2L))
+    // a second instance over the same root waits on the same queue
+    lake.append("prices", rows(3, 30.0))
+    val gate2 = holdCompactor()
+    lake.optimize("prices", "seq")
+    val other = blockedUntilRewrite(gate2)(new Lake(spark, root).table("prices").collect())
+    assert(other.length == 2 && other.forall(_.getAs[Long]("seq") == 3L))
+  }
+
+  test("create(replace) waits for the table's queued rewrite") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(meta, "replace")
+    lake.append("prices", rows(1, 10.0))
+    lake.append("prices", rows(2, 20.0))
+    val gate = holdCompactor()
+    lake.optimize("prices", "seq")
+    blockedUntilRewrite(gate)(lake.create(meta, "replace"))
+    val t = root.resolve("prices")
+    assert(!Files.exists(t.resolve("_optimize_tmp")) && !Files.exists(t.resolve("_pending")))
+    assert(lake.table("prices").count() == 0)
+    lake.append("prices", rows(3, 30.0))
+    lake.optimize("prices", "seq")
+    assert(lake.table("prices").collect().map(_.getAs[Long]("seq")).toSeq == Seq(3L, 3L))
+  }
+
+  test("a failed rewrite surfaces at the next call on the table and at sync, and is retried") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(meta, "replace")
+    lake.append("prices", rows(1, 10.0))
+    val part = root.resolve("prices/data/year=2024")
+    val first = Files.list(part).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get
+    lake.append("prices", rows(2, 20.0))
+    Files.write(first, Array.fill[Byte](64)(7)) // not Parquet any more
+    def readError(e: Throwable): Unit = {
+      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException] &&
+        !e.isInstanceOf[java.util.concurrent.CompletionException], e.toString)
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains(first.getFileName.toString)), e.toString)
+    }
+    def ledger = Files.readString(root.resolve("prices/_pending"))
+    lake.optimize("prices") // queues the rewrite and returns
+    readError(intercept[Throwable](lake.table("prices")))
+    assert(ledger.split("\n").toSeq == Seq("2024")) // kept for a retry
+    lake.optimize("prices")
+    readError(intercept[Throwable](lake.sync()))
+    assert(ledger.split("\n").toSeq == Seq("2024"))
+    // a failing body wins over the rewrite failure, which rides on it
+    val primary = intercept[IllegalStateException](lake.syncAfter {
+      lake.optimize("prices")
+      throw new IllegalStateException("body failed")
+    })
+    assert(primary.getSuppressed.length == 1)
+    readError(primary.getSuppressed.head)
+    // with the bad file gone the retry lands
+    Files.delete(first)
+    lake.optimize("prices")
+    lake.sync()
+    assert(lake.table("prices").collect().map(_.getAs[Long]("seq")).toSeq == Seq(2L, 2L))
+  }
+
+  test("the rewrite's jobs carry the caller's local properties from the optimize call") {
+    val key = "graft.lake.spec.tag"
+    val sc = spark.sparkContext
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        tags.add(String.valueOf(e.properties.getProperty(key)))
+    }
+    def drained(): Seq[String] = {
+      assert(org.apache.spark.graftbench.ListenerDrain.drain(sc, 30000))
+      val out = tags.asScala.toList
+      tags.clear()
+      out
+    }
+    sc.addSparkListener(listener)
+    try {
+      val lake = newLake()
+      lake.create(meta, "replace")
+      lake.append("prices", rows(1, 10.0))
+      drained()
+      sc.setLocalProperty(key, "at-optimize")
+      lake.optimize("prices")
+      sc.setLocalProperty(key, null) // changed before the rewrite is waited on
+      lake.sync()
+      assert(drained().contains("at-optimize"))
+      // a rewrite queued with no tag runs with none, whatever the compactor
+      // thread inherited or ran before
+      lake.append("prices", rows(2, 20.0))
+      drained()
+      lake.optimize("prices")
+      lake.sync()
+      val untagged = drained()
+      assert(untagged.nonEmpty && untagged.forall(_ == "null"), untagged)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -162,7 +162,7 @@ class PipelineSpec extends SparkSpec {
     val sig = Stages.reversalSignals(stockReturns).filter(col("date").isin(lastDates: _*))
     val al = Stages.alphas(Stages.scores(sig), iv)
     val bw = Stages.benchmarkWeights(al.select("ticker", "date"))
-    val (w, m) = Stages.portfolio(al, lo, fc, iv, bw)
+    val (w, m) = Stages.portfolio(al, lo, fc, iv, bw, identity)
     val sums = w.groupBy("date").agg(sum("weight").as("s"), min("weight").as("mn")).collect()
     assert(sums.length == 3)
     sums.foreach { r =>
@@ -185,7 +185,7 @@ class PipelineSpec extends SparkSpec {
     val al = Stages.alphas(Stages.scores(sig), iv.filter(col("ticker") =!= someTicker))
     assert(al.filter(col("alpha").isNull).count() == 1)
     val bw = Stages.benchmarkWeights(al.select("ticker", "date"))
-    val (w, m) = Stages.portfolio(al, lo, fc, iv, bw)
+    val (w, m) = Stages.portfolio(al, lo, fc, iv, bw, identity)
     val weights = w.collect()
     assert(weights.nonEmpty && !weights.exists(_.getAs[String]("ticker") == someTicker))
     assert(m.count() == 1)
