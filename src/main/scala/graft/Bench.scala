@@ -70,6 +70,25 @@ object Bench {
     def peak(): Long = peakTaskMem.get
   }
 
+  /** Runs registry query `name` over `dir` to completion through the
+    * noop sink (nothing is pruned), then drops the caches and persists
+    * it left. Caches/persists created inside an operator (LSH shingle
+    * sets, the QP base frame) are dropped after every materialization:
+    * 100+ queries share one driver, and leaked blocks would both skew
+    * later timings (eviction churn) and hide each query's real
+    * first-run cost behind a neighbor's cache. Eager localCheckpoints
+    * register persistent RDDs rather than cacheManager entries, so both
+    * stores are cleared — waiting for driver GC + ContextCleaner would
+    * leave GB-scale blocks in storage memory across timed queries.
+    */
+  def materialize(spark: SparkSession, name: String, dir: String): Unit =
+    try Registry(name).build(spark, dir).write.format("noop").mode("overwrite").save()
+    finally {
+      spark.sharedState.cacheManager.clearCache()
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+    }
+
   def main(args: Array[String]): Unit = {
     // every number below is f"...%.3f"-interpolated into JSON — a
     // comma-decimal default locale would emit an unparseable artifact
@@ -143,25 +162,8 @@ object Bench {
     }
     openSession()
 
-    // Caches/persists created inside an operator (LSH shingle sets, the
-    // QP base frame) are dropped after every materialization: 100+
-    // queries share this one driver, and leaked blocks would both skew
-    // later timings (eviction churn) and hide each query's real
-    // first-run cost behind a neighbor's cache. Eager localCheckpoints
-    // register persistent RDDs rather than cacheManager entries, so both
-    // stores are cleared — waiting for driver GC + ContextCleaner would
-    // leave GB-scale blocks in storage memory across timed queries.
-    // conf restore: a query may apply an operator sizing rule to the
-    // session (RangeJoin.sizeSweepFold) — it must not re-plan neighbors
     def materialize(name: String, dir: String): Unit =
-      graft.tools.SessionConf.restoring(spark) {
-        try Registry(name).build(spark, dir).write.format("noop").mode("overwrite").save()
-        finally {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-      }
+      Bench.materialize(spark, name, dir)
 
     // between timed regions only — never inside one: the GC is what lets
     // ContextCleaner reclaim the shuffle files/broadcasts the previous

@@ -21,12 +21,7 @@ object ExplainPlans {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"========== $n ==========")
-      // queries may set session confs (e.g. j13f pins the broadcast
-      // threshold); without restoring, every LATER query in the dump is
-      // planned under the leaked conf and the printed plan lies
-      graft.tools.SessionConf.restoring(spark) {
-        Registry(n).build(spark, dir).explain("formatted")
-      }
+      Registry(n).build(spark, dir).explain("formatted")
     }
     spark.stop()
   }

@@ -22,7 +22,6 @@ object Verify {
     val subset = SparkEntry.querySubset(sys.env.get("SPARK_GRAFT_QUERIES"))
     val selected = Registry.all.filter(q => subset.forall(_.contains(q.name)))
     selected.foreach { case Query(name, build, _, _, _) =>
-      graft.tools.SessionConf.restoring(spark) {
       try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -38,7 +37,6 @@ object Verify {
         spark.sharedState.cacheManager.clearCache()
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
-      }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftconf.ScopedConf
 import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -577,7 +578,10 @@ object Dedup {
     *   - above it, `strategy` runs (see [[CcStrategy]]). The default
     *     [[CcStrategy.Auto]] ties or beats every pinned strategy on every
     *     probed cell (docs/SCALING.md, "canonicalize's distributed
-    *     default: decided by the matrix").
+    *     default: decided by the matrix"). Its loop runs at a width
+    *     derived from the edge count ([[ccLoopShufflePartitions]]) in a
+    *     clone of the caller's session; the caller's conf is never
+    *     written, so concurrent queries keep their own width.
     *
     * Either way the (typically expensive — LSH candidate generation +
     * verification) pair pipeline is evaluated exactly once: an eager
@@ -623,14 +627,14 @@ object Dedup {
         // Derive the loop's width from the measured edge count
         // instead (guide §2.2: fewer, larger partitions; the session
         // default stays the ceiling so at-scale CcProbe axes are
-        // unchanged), restore the session conf after the strategy's
-        // actions complete.
-        val spark = undirected.sparkSession
+        // unchanged). The width is a conf the loop's exchanges read when
+        // planned, so the loop runs in a session clone carrying it; the
+        // caller's session is never written.
         val key = "spark.sql.shuffle.partitions"
-        val before = spark.conf.get(key)
-        spark.conf.set(key,
-          ccLoopShufflePartitions(before.toInt, edgeCount).toString)
-        try distributedLabels(strategy, undirected) finally spark.conf.set(key, before)
+        val parts = ccLoopShufflePartitions(
+          undirected.sparkSession.conf.get(key).toInt, edgeCount)
+        distributedLabels(strategy,
+          ScopedConf.withConf(undirected, key -> parts.toString))
       }
     nodes.join(lbl, Seq("id"), "left")
       .select(col("id").as(idCol),

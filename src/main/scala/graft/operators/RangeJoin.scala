@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftconf.ScopedConf
 
 /** Non-equi interval joins re-expressed as bin-bucketed equi-joins.
   *
@@ -47,7 +48,7 @@ import org.apache.spark.sql.functions._
   *     [[pointInIntervalTopKSweep]] (a k-bounded streaming aggregate:
   *     task memory stays FLAT at any density — measured 8.7 MB, zero
   *     spill, and 36 s at the same 10× point with the fold's hash
-  *     threshold sized, an executable rule: [[sizeSweepFold]] — and no
+  *     threshold sized, which the operator does itself — and no
   *     broadcast premise, so it also covers interval sides that grow
   *     with the corpus. Since the fold moved to a generated comparator
   *     over UnsafeRow copies (round 15) the sweep is measured FASTER
@@ -181,14 +182,16 @@ object RangeJoin {
     * rank (e.g. `rand()`) draws independent values in the threshold pass
     * and in the final window/sweep ordering, so thresholding on one draw
     * could drop rows the other draw would have kept. Determinism is read
-    * off the ANALYZED projection (the unresolved tree under-reports it:
+    * off the WHOLE analyzed plan (the unresolved tree under-reports it:
     * `functions.rand()` arrives as an UnresolvedFunction whose default
-    * `deterministic` is true).
+    * `deterministic` is true), because a rank naming an interval column
+    * computed by `rand()` below is just as non-deterministic: the
+    * threshold pass re-evaluates the interval subtree.
     */
   private def rankIsIntervalOnly(intervals: DataFrame,
       rank: org.apache.spark.sql.Column): Boolean =
     scala.util.Try(intervals.select(rank).queryExecution.analyzed
-      .expressions.forall(_.deterministic)).getOrElse(false)
+      .deterministic).getOrElse(false)
 
   /** Measured-density gate for [[pruneDominatedBins]] (round 21): the
     * prune's threshold pass is a FIXED cost — one window over the
@@ -332,6 +335,12 @@ object RangeJoin {
     * the densification-regime path that never materializes the
     * enumeration.
     *
+    * Building the frame runs up to two small jobs before anything is
+    * executed: the density gate's aggregate over the interval side
+    * ([[pruneDensityGate]], only for an interval-only `rank`) and the
+    * broadcast budget's row count ([[withinBroadcastBudget]], only when
+    * the size estimate is over a positive budget).
+    *
     * `idCols` must uniquely key `points` rows (the per-point cap is
     * per KEY; duplicate keys would share one budget).
     */
@@ -414,12 +423,22 @@ object RangeJoin {
     * `idCols` must uniquely key `points` rows (the group key is the
     * full point row; a duplicate-keyed input would split what topK
     * treats as one budget). Sessions must register `GraftExtensions`
-    * (`topk_structs` resolves there). Size the fold's hash threshold
-    * with [[sizeSweepFold]] before executing — the stock 128-key
-    * default demotes the fold to a sort of the candidate stream,
-    * re-paying exactly the sort this operator exists to avoid
-    * (measured: 7.8 GB of spill and +56% time at 10× densification,
-    * docs/SCALING.md round 14).
+    * (`topk_structs` resolves there).
+    *
+    * The operator sizes its own fold: the stock 128-key hash threshold
+    * demotes the fold to a sort of the candidate stream, re-paying
+    * exactly the sort this operator exists to avoid (measured: 7.8 GB
+    * of spill and +56% time at 10× densification, docs/SCALING.md
+    * round 14), so the result is returned in a clone of the caller's
+    * session carrying [[sweepFoldThreshold]]. Frames derived from it
+    * plan under that threshold; the caller's session is never written.
+    *
+    * Building the frame runs up to three small jobs before anything is
+    * executed: the fold-sizing row count over `points`, the density
+    * gate's aggregate over the interval side ([[pruneDensityGate]],
+    * only for an interval-only `rank`) and the broadcast budget's row
+    * count ([[withinBroadcastBudget]], only when the size estimate is
+    * over budget).
     *
     * @return one row per kept (point, interval) pair — point columns
     *         then interval columns, exactly [[pointInIntervalTopK]]'s
@@ -436,6 +455,7 @@ object RangeJoin {
       s"idCols must be point columns: ${idCols.filterNot(ptCols.contains)}")
     val ivCols = intervals.columns.toSeq
     requireDisjoint(points, intervals)
+    val foldThreshold = sweepFoldThreshold(points)
     val ib0 = binnedIntervals(intervals, loCol, hiCol, binDays)
     val ib = if (rankIsIntervalOnly(intervals, rank) &&
         pruneDensityGate(intervals, loCol, hiCol, binDays, k))
@@ -455,18 +475,19 @@ object RangeJoin {
     // (rank, lo, hi) ascending with the full interval row as tie-break
     val elem = struct(rank.as("_r"), col(loCol).as("_l"), col(hiCol).as("_h"),
       struct(ivCols.map(col): _*).as("_iv"))
-    joined
+    val kept = joined
       .groupBy(ptCols.map(col): _*) // = the point key (idCols unique)
       .agg(call_function("topk_structs", elem, lit(k)).as("_tk"))
       .select((ptCols.map(col) :+ explode(col("_tk")).as("_e")): _*)
       .select(ptCols.map(col) ++
         ivCols.map(c => col("_e").getField("_iv").getField(c).as(c)): _*)
+    ScopedConf.withConf(kept,
+      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
+        foldThreshold.toString)
   }
 
-  /** The sweep-fold sizing rule, executable (apply before running a
-    * [[pointInIntervalTopKSweep]] plan): sets the session's
-    * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` to
-    * cover the sweep's group count per task and returns the value set.
+  /** The sweep fold's object-hash-aggregate fallback threshold, which
+    * [[pointInIntervalTopKSweep]] sets on its result's session clone.
     *
     * The fold is an `ObjectHashAggregate`; past the session threshold
     * (stock default 128 distinct keys per task) Spark demotes it to
@@ -477,29 +498,21 @@ object RangeJoin {
     * sized — docs/SCALING.md round 14). The rule: distinct group keys
     * per task ≈ |points| / shuffle partitions (the sweep repartitions
     * points by key up front, so tasks partition the key space), with a
-    * 2× headroom for hash-partition skew. Memory stays bounded because
-    * each buffer holds at most k elements: threshold × k × element
-    * size per task — at 10× densification, ~190 k keys/task × k=3 is
-    * tens of MB against a multi-GB task budget. On a real cluster the
-    * same rule holds per EXECUTOR core; scale partitions with the
-    * corpus (as any shuffle sizing) and keys/task stays flat.
+    * 2× headroom for hash-partition skew, floored at the stock 128.
+    * Memory stays bounded because each buffer holds at most k
+    * elements: threshold × k × element size per task — at 10×
+    * densification, ~190 k keys/task × k=3 is tens of MB against a
+    * multi-GB task budget. On a real cluster the same rule holds per
+    * EXECUTOR core; scale partitions with the corpus (as any shuffle
+    * sizing) and keys/task stays flat.
     *
     * Costs one count job over `points` (columnar metadata count —
-    * trivial next to the misplanned fold). The conf is session-wide
-    * until changed: other object-hash aggregates in the same session
-    * will also hold up to this many buffers before spilling, so
-    * multi-query harnesses should restore it between queries
-    * ([[graft.tools.SessionConf.restoring]] — Bench/Verify/ScaleProbe
-    * all run queries inside it).
+    * trivial next to the misplanned fold).
     */
-  def sizeSweepFold(points: DataFrame): Long = {
-    val spark = points.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt.max(1)
-    val threshold = math.max(128L, 2L * ((points.count() + parts - 1) / parts))
-    spark.conf.set(
-      "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      threshold.toString)
-    threshold
+  private[operators] def sweepFoldThreshold(points: DataFrame): Long = {
+    val parts = points.sparkSession.conf.get("spark.sql.shuffle.partitions")
+      .toInt.max(1)
+    math.max(128L, 2L * ((points.count() + parts - 1) / parts))
   }
 
   /** Densification cure (a), executable: per-point aggregates over the

@@ -82,10 +82,6 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
     // 2. near-dup clusters: exact dups collapse through the same pair
     // graph (identical texts share every band), so one canonicalization
     // covers both exact and near duplicates
-    // canonicalize narrows the session's shuffle width for its CC loop;
-    // land the queued annotations rewrite first so it is not planned
-    // under that width
-    lake.sync()
     val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
     val clusters = Dedup.canonicalize(docs, "doc_id", pairs)
     lake.append("doc_clusters", clusters)

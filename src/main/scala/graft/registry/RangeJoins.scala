@@ -1,6 +1,7 @@
 package graft.registry
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftconf.ScopedConf
 
 import graft.operators.RangeJoin
 import Common._
@@ -113,10 +114,11 @@ object RangeJoins {
     // changes cost, never the answer. Exists so the fallback branch has
     // a standing scale datum next to the broadcast branch's
     // (docs/SCALING.md) instead of only a plan pin.
-    Query("j13f_range_join_topk_shuffled", (s, dir) => {
-      // session conf applies at materialization; harnesses run queries
-      // under SessionConf.restoring so this never re-plans neighbors
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Query("j13f_range_join_topk_shuffled", (s0, dir) => {
+      // the tables are read through a session clone with auto-broadcast
+      // off, so the query plans without it and the caller's session is
+      // never written
+      val s = ScopedConf.session(s0, "spark.sql.autoBroadcastJoinThreshold" -> "-1")
       val iv = t(s, dir, "orders")
         .filter(col("o_orderkey") % 199 === 0)
         .select(col("o_orderkey"),
@@ -196,10 +198,9 @@ object RangeJoins {
     // against ONE oracle pins the cap semantics from both sides; the
     // sweep is the no-broadcast-premise path for interval sides that
     // grow with the corpus (probed 1x-100x in docs/SCALING.md). The
-    // query applies the operator's own fold sizing rule (sizeSweepFold:
-    // an unsized fold demotes to a sort of the candidate stream — 7.8
-    // GB of spill at 10x); harnesses restore the conf between queries
-    // (SessionConf.restoring).
+    // operator sizes its own fold (an unsized fold demotes to a sort of
+    // the candidate stream — 7.8 GB of spill at 10x) in its result's
+    // session clone.
     Query("j13d_range_join_sweep", (s, dir) => {
       val iv = t(s, dir, "orders")
         .filter(col("o_orderkey") % 199 === 0)
@@ -211,7 +212,6 @@ object RangeJoins {
         .select(col("l_orderkey").as("pk"), col("l_linenumber").as("pl"),
           to_date(col("l_shipdate")).as("sd"),
           round(col("l_extendedprice") * 100).cast("long").as("cents"))
-      RangeJoin.sizeSweepFold(pts)
       RangeJoin.pointInIntervalTopKSweep(pts, iv, "sd", "lo", "hi", 30,
           Seq("pk", "pl", "sd", "cents"),
           struct((-datediff(col("lo"), to_date(lit("1970-01-01")))).as("r"),

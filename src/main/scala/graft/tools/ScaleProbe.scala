@@ -385,19 +385,8 @@ object ScaleProbe {
     copies.foreach(n =>
       ensureScaled(spark, sfDir, n, outRoot, neededTables, dateShift))
 
-    // same materialization + cache hygiene as graft.Bench: noop sink so
-    // nothing is pruned, caches AND localCheckpoint-persisted RDDs
-    // dropped so no query inherits a neighbor's blocks
     def materialize(name: String, dir: String): Unit =
-      SessionConf.restoring(spark) {
-        try Registry(name).build(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        finally {
-          spark.sharedState.cacheManager.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-        }
-      }
+      graft.Bench.materialize(spark, name, dir)
     def settle(): Unit = { System.gc(); Thread.sleep(250) }
     def timeIt(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

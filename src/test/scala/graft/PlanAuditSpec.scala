@@ -14,13 +14,8 @@ class PlanAuditSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  // restoring: building a query may apply an operator sizing rule to
-  // the session (RangeJoin.sizeSweepFold) — audited plans must not leak
-  // one query's tuning into the next audit or suite
   private def plan(name: String): String =
-    graft.tools.SessionConf.restoring(spark) {
-      SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
-    }
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
   test("every query is oracle-backed except the documented rows-only set") {
     // a query without an oracle mirror silently downgrades to a
@@ -33,6 +28,28 @@ class PlanAuditSpec extends SparkSpec {
     }.toSet
     assert(rowsOnly == Set("l5_qp_weights"),
       s"unexpected rows-only queries: ${(rowsOnly - "l5_qp_weights").toSeq.sorted}")
+  }
+
+  test("building and planning every registry query leaves the session conf as found") {
+    // every sizing conf a query needs lives in a session clone, so no
+    // harness has to restore anything between queries. Tables.load's
+    // nanosAsLong=true is the one constant write: it is how one vintage
+    // of the events file (TIMESTAMP(NANOS)) can be read at all, not a
+    // query's sizing, so it is set before the snapshot.
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val before = spark.conf.getAll
+    Registry.all.foreach { q =>
+      try q.build(spark, sf).queryExecution.executedPlan
+      finally {
+        spark.sharedState.cacheManager.clearCache()
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(_.unpersist(blocking = false))
+      }
+      val after = spark.conf.getAll.toSet
+      val changed = (after diff before.toSet) ++ (before.toSet diff after)
+      assert(changed.isEmpty,
+        s"${q.name} wrote the caller's session conf: ${changed.mkString(", ")}")
+    }
   }
 
   test("filters reach the parquet scan; projections prune the read schema") {

@@ -447,7 +447,7 @@ class OperatorsSpec extends SparkSpec {
     assert(solo.forall(r => r.getLong(0) == r.getLong(1) && !r.getBoolean(2)))
   }
 
-  test("cc loop sizes shuffle partitions from the edge count and restores the conf") {
+  test("cc loop sizes shuffle partitions from the edge count") {
     // round 21: the iterative strategies' per-pass fixed cost is ∝
     // shuffle-partition count × pass count regardless of data volume, so
     // the loop width is derived from the materialized edge count (capped
@@ -459,20 +459,30 @@ class OperatorsSpec extends SparkSpec {
     assert(Dedup.ccLoopShufflePartitions(32, 4200000L) == 32)
     assert(Dedup.ccLoopShufflePartitions(32, 30000000L) == 32)
     assert(Dedup.ccLoopShufflePartitions(2, 300000L) == 2)
-    // and the session conf is restored after the strategy's actions: a
-    // forced-distributed run must leave the session exactly as found
-    // while still producing the exact min-label fixpoint
+    // the width lives in a session clone: while a forced-distributed run
+    // produces the exact min-label fixpoint, a second thread reading the
+    // caller's session (as a queued compaction rewrite or another query
+    // planning under it would) only ever sees the caller's width
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
+    assert(Dedup.ccLoopShufflePartitions(before.toInt, 4L).toString != before,
+      "the graph must be small enough for the loop to narrow")
     val ids = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L)).toDF("a", "b")
-    val out = Dedup.canonicalize(ids, "doc_id", pairs,
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() => while (!done.get) seen.add(spark.conf.get(key)))
+    poller.start()
+    val out = try Dedup.canonicalize(ids, "doc_id", pairs,
         Propagation(), localEdgeLimit = 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally { done.set(true); poller.join() }
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 6L, 7L -> 6L))
-    assert(spark.conf.get(key) == before,
-      "cc loop must restore the session's shuffle partitions")
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet == Set(before),
+      s"the caller's session showed widths ${seen.asScala.mkString(",")}")
+    assert(spark.conf.get(key) == before)
   }
 
   test("incrementalExact: store wins over batch order; re-ingest is idempotent") {
@@ -1511,6 +1521,14 @@ class OperatorsSpec extends SparkSpec {
       "hi", 7, Seq("pt_id"), rand(19), 3)
     assert(!windowed(randRank),
       "non-deterministic rank must veto the dominance prune")
+    // ...and so must a rank naming an interval column computed by rand():
+    // col("r") itself is deterministic, but the threshold pass re-draws
+    // the rand() when it re-evaluates the interval subtree
+    val randCol = RangeJoin.pointInIntervalTopK(pts,
+      dense.withColumn("r", rand(19)), "d", "lo", "hi", 7, Seq("pt_id"),
+      col("r"), 3)
+    assert(!windowed(randCol),
+      "a rank over a rand() interval column must veto the dominance prune")
   }
 
   test("range-join stab stats: equals the enumerate-then-reduce aggregates") {
@@ -1588,38 +1606,26 @@ class OperatorsSpec extends SparkSpec {
     assert(f.exists(_._1 == 901L))
   }
 
-  test("sizeSweepFold sets the fold threshold to 2x keys/task, floored at stock") {
-    import graft.tools.SessionConf
+  test("the sweep sizes its fold in a session clone, floored at stock") {
     val confKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val pts = (1L to 1001L).toDF("pt_id")
-    // the rule is 2 x ceil(n/parts) with a 128 floor — and it must
-    // actually LAND in the session conf (the executable part)
-    SessionConf.restoring(spark) {
-      val got = graft.operators.RangeJoin.sizeSweepFold(pts)
-      assert(got == math.max(128L, 2L * ((1001L + parts - 1) / parts)))
-      assert(spark.conf.get(confKey) == got.toString)
-      // a tiny point set never sizes BELOW stock (the floor): other
-      // object aggs in the session keep at least default behavior
-      assert(graft.operators.RangeJoin.sizeSweepFold((1L to 3L).toDF("p")) == 128L)
-    }
-    // SessionConf.restoring unwound the rule's session mutation: the
-    // conf is back to whatever the suite session had before
-    val before = spark.conf.getOption(confKey)
-    SessionConf.restoring(spark) {
-      spark.conf.set(confKey, "999999")
-      spark.conf.set("spark.sql.graft.test.ephemeral", "x") // added key
-    }
-    assert(spark.conf.getOption(confKey) == before,
-      "restoring must reset a changed conf")
-    assert(spark.conf.getOption("spark.sql.graft.test.ephemeral").isEmpty,
-      "restoring must unset an added conf")
-    // restore runs even when the block throws (the harness path: a
-    // failed query must not leave its tuning behind)
-    intercept[RuntimeException](SessionConf.restoring(spark) {
-      spark.conf.set(confKey, "7"); throw new RuntimeException("boom")
-    })
-    assert(spark.conf.getOption(confKey) == before)
+      .select(col("pt_id"), lit("1970-01-05").cast("date").as("d"))
+    // the rule is 2 x ceil(n/parts) with a 128 floor: a tiny point set
+    // never sizes BELOW stock
+    val want = math.max(128L, 2L * ((1001L + parts - 1) / parts))
+    assert(RangeJoin.sweepFoldThreshold(pts) == want)
+    assert(RangeJoin.sweepFoldThreshold((1L to 3L).toDF("p")) == 128L)
+    // the threshold rides on the returned frame's session; the caller's
+    // conf is the same after the sweep is built and executed
+    val before = spark.conf.getAll
+    val ivs = Seq((7L, "1970-01-01", "1970-01-10")).toDF("iv_id", "lo_s", "hi_s")
+      .select(col("iv_id"), to_date(col("lo_s")).as("lo"), to_date(col("hi_s")).as("hi"))
+    val swept = RangeJoin.pointInIntervalTopKSweep(pts, ivs, "d", "lo", "hi",
+      7, Seq("pt_id"), col("iv_id"), 3)
+    assert(swept.count() == 1001L)
+    assert(spark.conf.getAll == before, "the sweep must not write the caller's session")
+    assert(swept.sparkSession.conf.get(confKey) == want.toString)
   }
 
   test("range join per-point aggregate cure matches the naive reduction") {
