@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.registry.{Pinned, Query, Registry}
 import graft.streaming.{StreamBenchShapes, StreamOps}
+import graft.tools.ProbeSession
+import graft.tools.ProbeSession.settle
 
 /** Benchmark main: run every registry query against
   * SPARK_GRAFT_SF_DIR and print one JSON line with per-query seconds.
@@ -39,36 +40,6 @@ import graft.streaming.{StreamBenchShapes, StreamOps}
   * entry over its pinned band in the sf0.1 sweep (see [[forkChild]]).
   */
 object Bench {
-
-  /** Cluster-wide task-metric sums (scale telemetry): shuffle bytes
-    * written across all exchanges and bytes spilled to disk. Listener
-    * delivery is asynchronous — snapshots are taken after draining the
-    * listener bus ([[org.apache.spark.graftbench.ListenerDrain]]), so
-    * values are exact for a quiesced query unless the drain times out;
-    * they grade plan SHAPE (does this query shuffle/spill at all, and
-    * how much) round over round.
-    */
-  private final class MetricsListener extends SparkListener {
-    private val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    private val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    // max-over-tasks of peakExecutionMemory: the per-task memory high-water
-    // mark is what decides whether a partition fits an executor at scale
-    // (a sum would overstate peaks that never coexist). Reset per rep —
-    // queries run strictly one at a time, so the reset cannot race a
-    // concurrent query's tasks, only stragglers from the previous rep.
-    private val peakTaskMem = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-        peakTaskMem.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-    def snap(): (Long, Long) = (shuffleWrite.get, diskSpill.get)
-    def resetPeak(): Unit = peakTaskMem.set(0L)
-    def peak(): Long = peakTaskMem.get
-  }
 
   /** Runs registry query `name` over `dir` to completion through the
     * noop sink (nothing is pruned), then drops the caches and persists
@@ -118,7 +89,7 @@ object Bench {
     val forkPerEntry = benchScale.nonEmpty && !isChild
 
     var spark: SparkSession = null
-    var metrics: MetricsListener = null
+    var metrics: ProbeSession.TaskMetrics = null
     def openSession(): Unit = {
       spark = SparkSession.builder()
         .master(s"local[$cpus]")
@@ -129,29 +100,10 @@ object Bench {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("ERROR")
-      // streaming entries run on the RocksDB state store (the 100 TB
-      // deployment shape: per-key state off-heap, changelog checkpointing
-      // instead of full-snapshot uploads; docs/STREAM_ATTRIBUTION.md
-      // prices both levers)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // every put otherwise pays a read-modify of the row counter —
-      // pure overhead for throughput benchmarking (the count is a
-      // progress-metrics nicety, not a correctness input)
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        "false")
-      // one capped block cache shared across ALL store instances on
-      // the executor: without it each of the N state partitions keeps
-      // its own unbounded native memtable/cache, the classic
-      // many-partition executor OOM at cluster scale — benching the
-      // bounded shape prices what a deployment would actually run
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-      metrics = new MetricsListener
+      // the wall-clock bench reads no state row counts, so it sheds the
+      // row counter's per-put read-modify
+      StreamBenchShapes.useStateStore(spark, trackRows = false)
+      metrics = new ProbeSession.TaskMetrics
       spark.sparkContext.addSparkListener(metrics)
     }
     def recycleSession(): Unit = {
@@ -165,11 +117,6 @@ object Bench {
     def materialize(name: String, dir: String): Unit =
       Bench.materialize(spark, name, dir)
 
-    // between timed regions only — never inside one: the GC is what lets
-    // ContextCleaner reclaim the shuffle files/broadcasts the previous
-    // query abandoned, so a later query does not pay its neighbor's
-    // cleanup; the sleep lets cleanup and listener delivery drain
-    def settle(): Unit = { System.gc(); Thread.sleep(settleMs) }
     // listener events are delivered off-thread: block until the bus is
     // actually empty (the drain Spark's own tests use) so per-rep metric
     // deltas cannot absorb a neighbor rep's stragglers; only a wedged
@@ -269,8 +216,7 @@ object Bench {
     def timedReps(name: String)(run: () => Unit): (String, Double) = {
       var lastErr: String = null
       def oneRep(): (Double, Double, Double, Double) = {
-        val before = metrics.snap()
-        metrics.resetPeak()
+        metrics.reset()
         val t0 = System.nanoTime()
         val ok =
           try { run(); true }
@@ -283,9 +229,8 @@ object Bench {
           }
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         drainMetrics()
-        val after = metrics.snap()
-        (sec, (after._1 - before._1) / 1e6, (after._2 - before._2) / 1e6,
-          metrics.peak() / 1e6)
+        val (shuffleMb, spillMb, peakMb) = metrics.snapMb()
+        (sec, shuffleMb, spillMb, peakMb)
       }
       val first = (1 to reps).map(_ => oneRep())
       // exactly the noisyRepCount rule: run the extra rep iff the min
@@ -383,7 +328,7 @@ object Bench {
     // trigger/addBatch wall, state-commit total, and the changelog
     // file-sync share — so every round's BENCH_DETAIL classifies a
     // streaming move by itself (compute vs commit protocol vs host I/O)
-    // without a manual StreamProbe run. The round-10 deep-dive this
+    // without a manual per-batch probe run. The round-10 deep-dive this
     // automates (docs/STREAM_ATTRIBUTION.md): sync is 65-75% of
     // steady-state wall-clock, and sync latency is a host-state
     // variable — so a streaming total that moves while sync_ms moves
@@ -425,8 +370,8 @@ object Bench {
       recordRep(name,
         StreamBenchShapes.replay(spark, rows, chunks, mk)((q, _) => progressOf(q)))
     // replay inputs and e6 join parameters live in StreamBenchShapes —
-    // the ONE definition site shared with tools.StreamProbe, so the
-    // probe's per-batch attribution provably describes the query this
+    // the ONE definition site shared with tools.StreamScaleProbe, so
+    // the probe's per-batch attribution provably describes the query this
     // bench wall-clocks. Derivations run at lazy-val init, which the
     // pre-collect block below forces OUTSIDE the timed region.
     lazy val eventRows: IndexedSeq[StreamOps.Event] =
@@ -700,7 +645,7 @@ object Bench {
     val bandField = bandGateDetailJson(bandGateEnabled,
       jvmIsolated.toSeq, bandExceeded)
     val fullLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":${f"$streamTotal%.3f"}$streamComputeField,"state_store":"$stateStore","stream_parts":$deploymentStreamParts$streamCalibField,"task_metrics":$tm$calib$partsProbeJson$streamMetricsField$errField$scaleField$bandField,"sf":"$queryDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"reps":$repsJson,"stream_total":${f"$streamTotal%.3f"}$streamComputeField,"state_store":"${StreamBenchShapes.stateStore}","stream_parts":$deploymentStreamParts$streamCalibField,"task_metrics":$tm$calib$partsProbeJson$streamMetricsField$errField$scaleField$bandField,"sf":"$queryDir"}"""
     try
       java.nio.file.Files.write(java.nio.file.Paths.get(detailFile),
         (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -735,12 +680,6 @@ object Bench {
     * session-state growth without paying 100+ session opens.
     */
   private val sessionChunk = 25
-
-  /** The settle pause after each query (after a `System.gc()`). */
-  private val settleMs = 250L
-
-  /** The streaming entries' state store, named in both artifacts. */
-  private val stateStore = "rocksdb"
 
   /** The one extra state-partition count the e4 sensitivity probe runs
     * next to [[deploymentStreamParts]].
@@ -1251,7 +1190,7 @@ object Bench {
     val bandF = nameArr("jvm_isolated", jvmIsolated) +
       nameArr("band_exceeded", bandExceeded)
     def line(entries: Seq[String], omitted: Int): String =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","stream_total":${f"$streamTotal%.3f"}$scField,"state_store":"$stateStore","stream_parts":$deploymentStreamParts$scalibField$scaleF$bandF,"calib":$calibCompact$calibNorm,"detail":"$detailFile","omitted":$omitted$errField,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","stream_total":${f"$streamTotal%.3f"}$scField,"state_store":"${StreamBenchShapes.stateStore}","stream_parts":$deploymentStreamParts$scalibField$scaleF$bandF,"calib":$calibCompact$calibNorm,"detail":"$detailFile","omitted":$omitted$errField,"queries":${entries.mkString("{", ",", "}")},"sf":"$sfDir"}"""
     // first prefix length whose line would overflow the budget (probe
     // with the max-digits omitted count); keep everything before it
     val kept = slowestFirst.indices

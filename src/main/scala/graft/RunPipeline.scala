@@ -152,22 +152,11 @@ object RunPipeline {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.streaming.schemaInference", "false")
-      // production state-store shape, same as the Bench streaming
-      // entries: per-key state in RocksDB (off-heap, spill-free at large
-      // key cardinality) with changelog checkpointing (per-batch delta
-      // upload instead of full snapshots)
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      // one capped block cache shared across all store instances —
-      // unbounded per-partition native memory is the many-partition
-      // executor OOM at cluster scale
-      .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the Bench streaming entries' state store; the sessionize leg
+    // reports state rows, so the row counter stays on
+    graft.streaming.StreamBenchShapes.useStateStore(spark, trackRows = true)
     import org.apache.spark.sql.functions._
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file sources stream a DIRECTORY of arriving files

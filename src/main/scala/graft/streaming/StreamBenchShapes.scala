@@ -4,13 +4,13 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Single definition site for the replay inputs, the query parameters and
-  * the replay itself, shared by `graft.Bench`'s streaming entries,
-  * `graft.tools.StreamProbe` and `graft.tools.StreamScaleProbe`. The
-  * probes exist to attribute per-batch cost for EXACTLY the query the
-  * bench wall-clocks; that attribution is only trustworthy while all of
-  * them derive inputs, parameters and the feed-then-drain loop here —
-  * hand-kept copies could drift silently, leaving a probe explaining a
+/** Single definition site for the replay inputs, the query parameters,
+  * the state store and the replay itself, shared by `graft.Bench`'s
+  * streaming entries and `graft.tools.StreamScaleProbe`. The probe
+  * exists to attribute per-batch cost for EXACTLY the query the bench
+  * wall-clocks; that attribution is only trustworthy while both derive
+  * inputs, parameters, store and the feed-then-drain loop here —
+  * hand-kept copies could drift silently, leaving the probe explaining a
   * different query than the bench times.
   *
   * All loaders `.collect()` to driver rows by design: the replays feed a
@@ -30,6 +30,35 @@ object StreamBenchShapes {
     */
   val joinLookback = "30 minutes"
   val joinLookahead = "10 minutes"
+
+  /** The state store every replay and the streaming pipeline run on,
+    * named in the bench and probe artifacts.
+    */
+  val stateStore = "rocksdb"
+
+  /** Sets [[stateStore]]'s shape on `spark` (the 100 TB deployment
+    * shape; docs/STREAM_ATTRIBUTION.md prices each lever):
+    *   - per-key state off-heap in RocksDB;
+    *   - changelog checkpointing, a per-batch delta upload instead of a
+    *     full snapshot;
+    *   - one capped block cache shared by every store instance on an
+    *     executor: without it each state partition keeps its own
+    *     unbounded native memtable and cache, the many-partition
+    *     executor OOM at cluster scale.
+    * `trackRows` keeps the per-store row counter (`numRowsTotal`). It
+    * costs a read-modify per put, so a wall-clock bench sheds it; a
+    * caller that reads state rows needs it.
+    */
+  def useStateStore(spark: SparkSession, trackRows: Boolean): Unit = {
+    val p = "spark.sql.streaming.stateStore."
+    Seq(
+      p + "providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      p + "rocksdb.changelogCheckpointing.enabled" -> "true",
+      p + "rocksdb.trackTotalNumberOfRows" -> trackRows.toString,
+      p + "rocksdb.boundedMemoryUsage" -> "true")
+      .foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 
   def loadEvents(spark: SparkSession, sfDir: String): IndexedSeq[StreamOps.Event] =
     graft.catalog.Tables.load(spark, sfDir, "events")

@@ -207,7 +207,7 @@ object CcProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val parts = sys.env.getOrElse("SPARK_GRAFT_SCALE_PARTS", cpus)
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_CC_OUT", "/tmp/graft_cc")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_CC_REPS", "2").toInt
+    val reps = graft.Bench.intAtLeast(sys.env, "SPARK_GRAFT_CC_REPS", 1).getOrElse(2)
     def longs(env: String, dflt: String): Seq[Long] =
       sys.env.getOrElse(env, dflt).split(',').toSeq
         .map(_.trim).filter(_.nonEmpty).map(_.toLong)
@@ -244,17 +244,9 @@ object CcProbe {
     // strategies on REAL executor JVMs (socket exchanges,
     // executor-resident persist/localCheckpoint blocks, the label-map
     // broadcast crossing processes) — the shared probe contract lives
-    // in [[ProbeSession.withMasterEnv]].
-    val spark = ProbeSession.withMasterEnv(SparkSession.builder(), cpus)
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new ScaleProbe.Metrics
-    spark.sparkContext.addSparkListener(metrics)
+    // in [[ProbeSession]].
+    val probe = ProbeSession(cpus, parts)
+    val spark = probe.spark
 
     // generation outside the timed region: each graph written once
     def ensure(tag: String, nodes: => DataFrame, edges: => DataFrame): String = {
@@ -267,10 +259,6 @@ object CcProbe {
         System.err.println(s"[cc] built $dir")
       }
       dir
-    }
-    def settle(): Unit = { System.gc(); Thread.sleep(250) }
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     // the strategy under test: "local"/"dist" force canonicalize's two
     // branches via the edge budget; "star" is the alternating
@@ -332,20 +320,6 @@ object CcProbe {
         spark.sparkContext.getPersistentRDDs.values
           .foreach(_.unpersist(blocking = false))
       }
-    // (sec, shuffleMb, spillMb, peakTaskMemMb) of the min-time rep
-    def minOfReps(dir: String, mode: String, maxIter: Int): (Double, Double, Double, Double) = {
-      val ts = (1 to reps).map { _ =>
-        metrics.reset()
-        val t = try timeIt(run(dir, mode, maxIter))
-                catch { case e: Throwable =>
-                  System.err.println(s"[cc] $dir ($mode) FAILED: $e"); -1.0 }
-        org.apache.spark.graftbench.ListenerDrain.drain(spark.sparkContext, 5000)
-        val (sh, sp, pk) = metrics.snapMb()
-        settle(); (t, sh, sp, pk)
-      }
-      val ok = ts.filter(_._1 >= 0)
-      if (ok.isEmpty) (-1.0, -1.0, -1.0, -1.0) else ok.minBy(_._1)
-    }
     def fmt(tag: String, label: String,
         m: (Double, Double, Double, Double)): String = {
       System.err.println(
@@ -362,12 +336,13 @@ object CcProbe {
     // warmup (not timed): smallest star graph through every strategy
     val warm = ensure("star_100k", starNodes(spark, 100000), starEdges(spark, 100000))
     Seq("dist", "local", "star", "hybrid", "hybrid_auto")
-      .foreach(m => run(warm, m, 25)); settle()
+      .foreach(m => run(warm, m, 25)); ProbeSession.settle()
 
     def axisPoint(tag: String, dir: String, mode: String, maxIter: Int,
         expected: String): String = {
       val m = if (check(dir, mode, maxIter, expected))
-        minOfReps(dir, mode, maxIter) else (-1.0, -1.0, -1.0, -1.0)
+        probe.minOfReps(reps, s"[cc] $dir ($mode)")(run(dir, mode, maxIter))
+        else (-1.0, -1.0, -1.0, -1.0)
       fmt(tag, s"$tag $mode", m)
     }
 

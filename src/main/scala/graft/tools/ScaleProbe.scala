@@ -49,33 +49,6 @@ import graft.registry.Registry
   */
 object ScaleProbe {
 
-  /** Bench's task-metric trio, probe-sized: cluster-wide shuffle-write
-    * and disk-spill sums plus the max single-task execution-memory
-    * high-water mark, snapshotted per rep behind a listener-bus drain.
-    * This is what turns "the super-linear top segment is the shared
-    * heap, not the plan" from an argument into a column of data: a
-    * memory-pressure segment shows spill/peak climbing with scale, a
-    * plan defect shows shuffle rows climbing super-linearly.
-    * Shared with [[CcProbe]] (tools-private, not part of any pipeline).
-    */
-  private[tools] final class Metrics extends org.apache.spark.scheduler.SparkListener {
-    private val shuffle = new java.util.concurrent.atomic.AtomicLong
-    private val spill = new java.util.concurrent.atomic.AtomicLong
-    private val peak = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled)
-        peak.accumulateAndGet(m.peakExecutionMemory, Math.max(_, _))
-      }
-    }
-    def reset(): Unit = { shuffle.set(0); spill.set(0); peak.set(0) }
-    def snapMb(): (Double, Double, Double) =
-      (shuffle.get / 1e6, spill.get / 1e6, peak.get / 1e6)
-  }
-
   /** Tables the probed queries read, with their per-copy transform.
     * Key offsets use strides far above any sf0.1 key range.
     */
@@ -320,7 +293,7 @@ object ScaleProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt
+    val reps = graft.Bench.intAtLeast(sys.env, "SPARK_GRAFT_SCALE_REPS", 1).getOrElse(2)
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "/tmp/graft_scale")
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "3,10")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt)
@@ -336,11 +309,8 @@ object ScaleProbe {
 
     // SPARK_GRAFT_MASTER=local-cluster[n,cores,memMB] puts REAL
     // executor JVMs and socket exchanges under the same probe (the
-    // caveat-closing datum for "network costs are plan-asserted only").
-    // The executor-env contract — explicit classpath/add-opens/memory,
-    // the ABSOLUTE-classpath assertion, and the round-12
-    // SerializedLambda failure mode it guards — is shared with the
-    // other probes in [[ProbeSession.withMasterEnv]].
+    // caveat-closing datum for "network costs are plan-asserted only";
+    // the executor-env contract is [[ProbeSession]]'s).
     // SPARK_GRAFT_SCALE_PARTS decouples shuffle partitions from thread
     // count: at a FIXED partition count every shuffled partition grows
     // ∝ corpus, so per-task sort/agg memory grows with scale for ANY
@@ -365,20 +335,10 @@ object ScaleProbe {
     val maxPartitionMb = sys.env.get("SPARK_GRAFT_MAX_PARTITION_MB")
       .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
         s"SPARK_GRAFT_MAX_PARTITION_MB must be a positive int, got '$t'")))
-    var builder = ProbeSession.withMasterEnv(SparkSession.builder(), cpus)
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    advisoryMb.foreach(mb => builder = builder
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", s"${mb}m"))
-    maxPartitionMb.foreach(mb => builder = builder
-      .config("spark.sql.files.maxPartitionBytes", s"${mb}m"))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
+    val probe = ProbeSession(cpus, parts,
+      advisoryMb.map(mb => "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${mb}m").toSeq ++
+        maxPartitionMb.map(mb => "spark.sql.files.maxPartitionBytes" -> s"${mb}m"): _*)
+    val spark = probe.spark
 
     assertStrides(spark, sfDir, neededTables)
     def scaledDir(n: Int): String = scaledDirName(outRoot, n, dateShift)
@@ -387,26 +347,6 @@ object ScaleProbe {
 
     def materialize(name: String, dir: String): Unit =
       graft.Bench.materialize(spark, name, dir)
-    def settle(): Unit = { System.gc(); Thread.sleep(250) }
-    def timeIt(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // (sec, shuffleMb, spillMb, peakTaskMemMb) of the MIN-time rep; -1s
-    // iff every rep failed. Metrics snapshot behind a listener-bus drain
-    // so async task-end events are counted before the reset.
-    def minOfReps(name: String, dir: String): (Double, Double, Double, Double) = {
-      val ts = (1 to reps).map { _ =>
-        metrics.reset()
-        val t = try timeIt(materialize(name, dir))
-                catch { case e: Throwable =>
-                  System.err.println(s"[scale] $name @ $dir FAILED: $e"); -1.0 }
-        org.apache.spark.graftbench.ListenerDrain.drain(spark.sparkContext, 5000)
-        val (sh, sp, pk) = metrics.snapMb()
-        settle(); (t, sh, sp, pk)
-      }
-      val ok = ts.filter(_._1 >= 0)
-      if (ok.isEmpty) (-1.0, -1.0, -1.0, -1.0) else ok.minBy(_._1)
-    }
 
     // codegen/JVM warmup (not timed), smallest sf
     queryNames.foreach { n =>
@@ -417,7 +357,7 @@ object ScaleProbe {
     val results: Seq[(String, Seq[(Int, (Double, Double, Double, Double))])] =
       queryNames.map { name =>
         val pts = scales.map { case (n, dir) =>
-          val m = minOfReps(name, dir)
+          val m = probe.minOfReps(reps, s"[scale] $name @ $dir")(materialize(name, dir))
           System.err.println(
             f"[scale] $name ${n}%2dx -> ${m._1}%7.2fs  shuffle=${m._2}%8.1fMB spill=${m._3}%7.1fMB peakTask=${m._4}%6.1fMB")
           (n, m)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.{StreamBenchShapes, StreamOps}
@@ -39,41 +39,39 @@ import graft.streaming.{StreamBenchShapes, StreamOps}
   *     (`StreamStateBoundSpec`) pins the same contrast at test size.
   *
   * Replay discipline is `graft.Bench`'s streaming section's, through the
-  * same `StreamBenchShapes.replay`: bounded MemoryStream in ~10 real
-  * micro-batches (one per cohort for churn),
-  * noop sink, RocksDB state store + changelog checkpointing, state
-  * partitions = SPARK_GRAFT_STREAM_PARTS (default 8 — the bench's
-  * deployment-shaped choice), inputs collected/synthesized OUTSIDE the
-  * timed region. Doc text is salted per copy exactly like ScaleProbe's
-  * batch copies (cross-copy exact replicas would pair every doc with
-  * its N-1 clones: an xN^2 emission cliff that measures the synthetic
-  * replication, not scaling).
+  * same `StreamBenchShapes.replay` and state store: bounded MemoryStream
+  * in ~10 real micro-batches (one per cohort for churn), noop sink,
+  * state partitions = `Bench.deploymentStreamParts`, inputs
+  * collected/synthesized OUTSIDE the timed region. The 1x points of
+  * e3/e4/e5/e6 are the bench's four streaming entries. Doc text is
+  * salted per copy exactly like ScaleProbe's batch copies (cross-copy
+  * exact replicas would pair every doc with its N-1 clones: an xN^2
+  * emission cliff that measures the synthetic replication, not
+  * scaling).
   *
   * Per run the probe reports wall seconds, summed addBatch ms, summed
   * state-commit ms, max and final state rows, and max state bytes; per
   * axis it fits the ln-ln exponent of compute and of max state rows vs
   * scale. One JSON line on stdout; the committed analysis lives in
-  * docs/SCALING.md's streaming section.
+  * docs/SCALING.md's streaming section. On stderr, each point's
+  * reported rep also gets one line per micro-batch ([[BatchLog]]): the
+  * per-batch attribution docs/STREAM_ATTRIBUTION.md is built from.
   *
   * Knobs (env): SPARK_GRAFT_SF_DIR (base, default sf0.1),
-  * SPARK_GRAFT_STREAM_SCALE_COPIES (default "3,10"),
-  * SPARK_GRAFT_STREAM_SCALE_REPS (default 2), SPARK_GRAFT_STREAM_PARTS
-  * (default 8), SPARK_GRAFT_STATE_STORE (rocksdb|hdfs),
+  * SPARK_GRAFT_STREAM_SCALE_COPIES (default "3,10"; empty runs the 1x
+  * points alone), SPARK_GRAFT_STREAM_SCALE_REPS (default 2),
   * SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_CHURN_COHORTS (default
   * "5,50"), SPARK_GRAFT_CHURN_USERS (cohort size, default 500),
-  * SPARK_GRAFT_STREAM_SCALE_AXES (default "volume,users,churn,e4,e6";
-  * the extra token "e5" runs the near-dedup volume axis alone — for
-  * deep-scale points where paying e3 at the same sizes buys nothing),
+  * SPARK_GRAFT_STREAM_SCALE_AXES (the artifact sections to run, default
+  * all of [[sections]]),
   * SPARK_GRAFT_STREAM_SCALE_SPAN_BATCHES=1 (batch COUNT scales with the
   * copies at constant event-time span per batch — the trigger-interval
   * << horizon deployment shape; REQUIRED for any state-peak claim, else
   * the peak measures rows-per-batch, not the horizon),
-  * SPARK_GRAFT_BOUNDED_MEM (default true; false isolates block-cache
-  * pressure in a superlinear compute segment),
   * SPARK_GRAFT_MASTER=local-cluster[n,cores,memMB] for real executor
   * JVMs (with SPARK_GRAFT_EXECUTOR_CLASSPATH — ABSOLUTE, asserted —
   * SPARK_GRAFT_EXECUTOR_OPTS for the JDK17 add-opens list, and
-  * SPARK_GRAFT_EXECUTOR_MEM; see the master block in main).
+  * SPARK_GRAFT_EXECUTOR_MEM; see [[ProbeSession]]).
   *
   * A measurement tool, not part of any pipeline or the bench artifact.
   */
@@ -85,9 +83,58 @@ object StreamScaleProbe {
   final case class RunStats(
       wallSec: Double, addBatchMs: Long, commitMs: Long,
       batches: Int, maxStateRows: Long, finalStateRows: Long,
-      maxStateBytes: Long)
+      maxStateBytes: Long, batchLines: Seq[String])
 
-  private def statsOf(q: StreamingQuery, wallSec: Double): RunStats = {
+  /** The artifact's sections, in run order; SPARK_GRAFT_STREAM_SCALE_AXES
+    * names a subset.
+    */
+  val sections: Seq[String] = Seq("e3_volume", "e5_volume", "e3_users",
+    "e4_volume", "e6_volume", "session_churn")
+
+  /** One replay's per-batch lines, fed by `replay`'s `onDrain` hook: a
+    * line for EVERY batch run since the previous drain, because a
+    * watermarked operator's data batch (puts, removed=0) and its
+    * watermark batch (rows=0, removals) have different cost profiles and
+    * attributing commit time needs both. An idle trigger's progress
+    * entry (no `addBatch`; it repeats the id of the batch that runs
+    * next) gets no line, so each batch id gets exactly one. A line
+    * carries the drain's wall clock (on the drain's last batch; a drain
+    * covers both batches), the driver's `durationMs` phases, and every
+    * state operator's rows, `commitTimeMs` and non-zero custom metrics
+    * (stream-stream joins surface their symmetric-hash state here).
+    */
+  private[graft] final class BatchLog {
+    private var last = -1L
+    private val lines = scala.collection.mutable.ArrayBuffer[String]()
+
+    def onDrain(q: StreamingQuery, drainSec: Double): Unit = take(q, Some(drainSec))
+
+    /** Every line so far, including batches that finished after the last drain. */
+    def all(q: StreamingQuery): Seq[String] = { take(q, None); lines.toSeq }
+
+    private def take(q: StreamingQuery, drainSec: Option[Double]): Unit = {
+      val fresh = q.recentProgress
+        .filter(p => p.batchId > last && p.durationMs.containsKey("addBatch"))
+      fresh.foreach { p =>
+        val ops = p.stateOperators.map { s =>
+          import scala.jdk.CollectionConverters._
+          val custom = s.customMetrics.asScala.filter(_._2 != 0L)
+            .map { case (k, v) => s"$k=$v" }.toSeq.sorted.mkString(" ")
+          s"op=${s.operatorName} stateRows=${s.numRowsTotal} " +
+            s"updated=${s.numRowsUpdated} removed=${s.numRowsRemoved} " +
+            s"commitMs=${s.commitTimeMs} custom[$custom]"
+        }.mkString(" | ")
+        val wall = drainSec.filter(_ => p eq fresh.last)
+          .fold("       ")(d => f"$d%6.2fs")
+        lines += f"batch=${p.batchId}%3d drain=$wall " +
+          s"durationMs=${p.durationMs} rows=${p.numInputRows} $ops"
+      }
+      fresh.lastOption.foreach(p => last = p.batchId)
+    }
+  }
+
+  private[graft] def statsOf(q: StreamingQuery, wallSec: Double,
+      log: BatchLog): RunStats = {
     val ps = q.recentProgress
     def dur(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
         k: String): Long =
@@ -101,7 +148,8 @@ object StreamScaleProbe {
       if (rows.isEmpty) 0L else rows.max,
       rows.lastOption.getOrElse(0L),
       if (ps.isEmpty) 0L
-      else ps.map(_.stateOperators.map(_.memoryUsedBytes).sum).max)
+      else ps.map(_.stateOperators.map(_.memoryUsedBytes).sum).max,
+      log.all(q))
   }
 
   /** Salts every whitespace token with a per-copy suffix — the driver-side
@@ -116,61 +164,33 @@ object StreamScaleProbe {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // parts is interpolated unquoted into the JSON line — validate at
-    // startup, never after a run's worth of measurements
-    val parts: Int = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(t => t.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"SPARK_GRAFT_STREAM_PARTS must be a positive int, got '$t'")))
-      .getOrElse(8)
-    val stateStore = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE_REPS", "2").toInt
+    val parts = graft.Bench.deploymentStreamParts
+    val reps = graft.Bench.intAtLeast(sys.env, "SPARK_GRAFT_STREAM_SCALE_REPS", 1).getOrElse(2)
     val copies = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE_COPIES", "3,10")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt)
       .filter(_ > 1).sorted
     val churnCohorts = sys.env.getOrElse("SPARK_GRAFT_CHURN_COHORTS", "5,50")
       .split(',').toSeq.map(_.trim).filter(_.nonEmpty).map(_.toInt).sorted
-    val churnUsers = sys.env.getOrElse("SPARK_GRAFT_CHURN_USERS", "500").toInt
-    val axes = sys.env.getOrElse("SPARK_GRAFT_STREAM_SCALE_AXES",
-      "volume,users,churn,e4,e6")
-      .split(',').toSeq.map(_.trim).filter(_.nonEmpty).toSet
+    val churnUsers = graft.Bench.intAtLeast(sys.env, "SPARK_GRAFT_CHURN_USERS", 1).getOrElse(500)
+    val axes = sys.env.get("SPARK_GRAFT_STREAM_SCALE_AXES").fold(sections.toSet) { v =>
+      val named = v.split(',').toSeq.map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = named -- sections
+      require(unknown.isEmpty, s"SPARK_GRAFT_STREAM_SCALE_AXES: unknown " +
+        s"${unknown.mkString(",")}; sections are ${sections.mkString(",")}")
+      named
+    }
 
     // SPARK_GRAFT_MASTER=local-cluster[n,cores,memMB] puts REAL executor
     // JVMs under the streaming replays — per-executor RocksDB instances,
     // changelog/state traffic over real sockets — the streaming analog
-    // of the batch probe's round-12 exchange datum. The executor-env
-    // contract (explicit classpath/add-opens/memory, the ABSOLUTE-
-    // classpath assertion) is shared in [[ProbeSession.withMasterEnv]].
-    val spark = ProbeSession.withMasterEnv(SparkSession.builder(), cpus)
-      .config("spark.sql.extensions", classOf[graft.expr.catalyst.GraftExtensions].getName)
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    // of the batch probe's round-12 exchange datum.
+    val probe = ProbeSession(cpus, parts.toString,
       // the churn axis runs up to ~2*W batches; sums over recentProgress
       // must cover ALL of them or addBatch/commit under-report silently
-      .config("spark.sql.streaming.numRecentProgressUpdates", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    if (stateStore == "rocksdb") {
-      // same store shape as the bench's streaming section (see
-      // graft.Bench's session setup for the rationale of each)
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-        // the probe READS numRowsTotal — the row counter is the datum
-        // here, not a nicety to shed like the wall-clock bench does
-        "true")
-      spark.conf.set(
-        // default matches the bench's deployment shape; "false" is the
-        // attribution knob (same as StreamProbe's): giving every store
-        // an unbounded private cache isolates whether a superlinear
-        // compute segment is block-cache pressure or CPU-side work
-        "spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage",
-        sys.env.getOrElse("SPARK_GRAFT_BOUNDED_MEM", "true"))
-    }
+      "spark.sql.streaming.numRecentProgressUpdates" -> "2000")
+    val spark = probe.spark
+    // the probe READS numRowsTotal: the row counter is the datum here
+    StreamBenchShapes.useStateStore(spark, trackRows = true)
 
     implicit val eventEnc: Encoder[StreamOps.Event] =
       Encoders.product[StreamOps.Event]
@@ -183,26 +203,29 @@ object StreamScaleProbe {
     // the bench's replay (StreamBenchShapes): stats cover the feed, from
     // the first chunk to the last drain
     def replay[T: Encoder](rows: IndexedSeq[T], nBatches: Int,
-        mk: Dataset[T] => Dataset[_]): RunStats =
-      StreamBenchShapes.replay(spark, rows, nBatches, mk)(statsOf)
+        mk: Dataset[T] => Dataset[_]): RunStats = {
+      val log = new BatchLog
+      StreamBenchShapes.replay(spark, rows, nBatches, mk, log.onDrain)(statsOf(_, _, log))
+    }
     def replay2[A: Encoder, B: Encoder](lRows: IndexedSeq[A],
         rRows: IndexedSeq[B], nBatches: Int,
-        mk: (Dataset[A], Dataset[B]) => Dataset[_]): RunStats =
-      StreamBenchShapes.replay2(spark, lRows, rRows, nBatches, mk)(statsOf)
+        mk: (Dataset[A], Dataset[B]) => Dataset[_]): RunStats = {
+      val log = new BatchLog
+      StreamBenchShapes.replay2(spark, lRows, rRows, nBatches, mk, log.onDrain)(
+        statsOf(_, _, log))
+    }
 
-    def settle(): Unit = { System.gc(); Thread.sleep(250) }
-
-    /** min-wall rep of a replay (same min-of-reps contract as the batch
-      * probe); state-size fields come from the min rep too — they are
-      * deterministic across reps, so the choice only matters for bytes.
-      * ONE definition for every axis (single- and two-input alike): a
-      * change to the rep/settle discipline must reach them all at once.
+    /** The min-wall rep of `n` reps of a replay, with its per-batch lines
+      * on stderr; state-size fields come from that rep too (deterministic
+      * across reps, so the choice only matters for bytes). A point whose
+      * every rep failed stops the probe.
       */
-    def bestOf(run: => RunStats): RunStats =
-      (1 to reps).map { _ => val s = run; settle(); s }.minBy(_.wallSec)
-    def best[T](rows: IndexedSeq[T], nBatches: Int,
-        mk: Dataset[T] => Dataset[_])(implicit enc: Encoder[T]): RunStats =
-      bestOf(replay(rows, nBatches, mk))
+    def best(label: String, n: Int)(run: => RunStats): RunStats = {
+      val s = probe.fastest(n, s"[sscale] $label")(run)(_.wallSec)
+        .getOrElse(sys.error(s"$label: every rep failed")).result
+      s.batchLines.foreach(l => System.err.println(s"[sscale] $label $l"))
+      s
+    }
 
     // ---- base inputs (outside every timed region) ----
     val baseEvents = StreamBenchShapes.loadEvents(spark, sfDir)
@@ -262,16 +285,16 @@ object StreamScaleProbe {
     val neardedup =
       (ds: Dataset[StreamOps.Doc]) => StreamOps.streamingNearDedup(ds)
 
-    // warmup (not timed): small replay compiles the streaming plans
-    best(baseEvents.take(2000), 3, sessionizeBench)
-    best(baseDocs.take(300), 3, neardedup)
-    if (axes("e6")) {
+    // warmup (not timed): small replays compile the streaming plans
+    replay(baseEvents.take(2000), 3, sessionizeBench)
+    replay(baseDocs.take(300), 3, neardedup)
+    if (axes("e6_volume")) {
       val warmEvents = baseEvents.take(1000)
       replay2(StreamBenchShapes.clicksOf(warmEvents),
         StreamBenchShapes.buysOf(warmEvents), 2,
         StreamBenchShapes.intervalJoinQuery)
-      ()
     }
+    ProbeSession.settle()
 
     // span-batches mode: batch COUNT scales with the copies (batch SIZE
     // and event-time span per batch stay constant) — the deployment
@@ -282,14 +305,16 @@ object StreamScaleProbe {
     val spanBatches =
       sys.env.get("SPARK_GRAFT_STREAM_SCALE_SPAN_BATCHES").contains("1")
     // one per-scale loop for EVERY axis: builds rows, picks the batch
-    // count (span-batches or fixed 10), reports one LABELED stderr line
-    // per point — four visually identical unlabeled logs were
+    // count (span-batches or fixed 10), reports LABELED stderr lines per
+    // point — four visually identical unlabeled logs were
     // misattributable across axes
     def runScales[T](label: String, mkRows: Int => T, count: T => Int,
         runOne: (T, Int) => RunStats): Seq[(Int, RunStats)] =
-      (1 +: copies).map { n =>
+      if (!axes(label)) Seq.empty
+      else (1 +: copies).map { n =>
         val rows = mkRows(n)
-        val s = runOne(rows, if (spanBatches) 10 * n else 10)
+        val s = best(f"$label%-9s ${n}%3dx", reps)(
+          runOne(rows, if (spanBatches) 10 * n else 10))
         System.err.println(f"[sscale] $label%-9s ${n}%3dx rows=${count(rows)}%8d " +
           f"wall=${s.wallSec}%7.2fs addBatch=${s.addBatchMs}%7dms " +
           f"commit=${s.commitMs}%7dms stateRowsMax=${s.maxStateRows}%8d " +
@@ -297,33 +322,22 @@ object StreamScaleProbe {
         (n, s)
       }
 
-    val volumeE3 =
-      if (axes("volume")) runScales[IndexedSeq[StreamOps.Event]]("e3_volume",
-        timeExtendedEvents, _.length,
-        (r, b) => best(r, b, sessionizeBench)) else Seq.empty
-    // "e5" runs the near-dedup volume axis ALONE — the only entry with
-    // a nonzero state-rows exponent (banded signatures accumulate with
-    // distinct content), so its deep-scale points (×30/×100) get probed
-    // without paying e3's flat-state replay at the same sizes
-    val volumeE5 =
-      if (axes("volume") || axes("e5"))
-        runScales[IndexedSeq[StreamOps.Doc]]("e5_volume",
-          timeExtendedDocs, _.length,
-          (r, b) => best(r, b, neardedup)) else Seq.empty
-    val usersE3 =
-      if (axes("users")) runScales[IndexedSeq[StreamOps.Event]]("e3_users",
-        userOverlaidEvents, _.length,
-        (r, b) => best(r, b, sessionizeBench)) else Seq.empty
+    val volumeE3 = runScales[IndexedSeq[StreamOps.Event]]("e3_volume",
+      timeExtendedEvents, _.length, (r, b) => replay(r, b, sessionizeBench))
+    // e5 is the only entry with a nonzero state-rows exponent (banded
+    // signatures accumulate with distinct content): probe its deep-scale
+    // points (×30/×100) with SPARK_GRAFT_STREAM_SCALE_AXES=e5_volume
+    val volumeE5 = runScales[IndexedSeq[StreamOps.Doc]]("e5_volume",
+      timeExtendedDocs, _.length, (r, b) => replay(r, b, neardedup))
+    val usersE3 = runScales[IndexedSeq[StreamOps.Event]]("e3_users",
+      userOverlaidEvents, _.length, (r, b) => replay(r, b, sessionizeBench))
     // e4 volume: the windowed-aggregation state shape (hourly tumbling
     // windows + watermark). State rows = open windows, bounded by the
     // window/watermark span — flat under time-extension in span-batches
     // mode, batch-span-bounded otherwise (same artifact family as e5)
-    val volumeE4 =
-      if (axes("e4")) runScales[IndexedSeq[StreamOps.Event]]("e4_volume",
-        timeExtendedEvents, _.length,
-        (r, b) => best(r, b,
-          (ds: Dataset[StreamOps.Event]) => StreamOps.hourlyRollup(ds.toDF())))
-      else Seq.empty
+    val volumeE4 = runScales[IndexedSeq[StreamOps.Event]]("e4_volume",
+      timeExtendedEvents, _.length, (r, b) => replay(r, b,
+        (ds: Dataset[StreamOps.Event]) => StreamOps.hourlyRollup(ds.toDF())))
 
     // e6 volume axis: the stream-stream interval join (the bench's
     // heaviest streaming entry) over time-extended click/buy copies —
@@ -341,24 +355,20 @@ object StreamScaleProbe {
     def timeExtendedBuys(n: Int): IndexedSeq[(Long, java.sql.Timestamp, Double)] =
       (0 until n).flatMap(i => baseBuys.map { case (u, ts, v) =>
         (u, new java.sql.Timestamp(ts.getTime + i * evSpanMs), v) })
-    val volumeE6: Seq[(Int, RunStats)] =
-      if (!axes("e6")) Seq.empty
-      else runScales[(IndexedSeq[(Long, java.sql.Timestamp)],
-          IndexedSeq[(Long, java.sql.Timestamp, Double)])]("e6_volume",
-        n => (timeExtendedClicks(n), timeExtendedBuys(n)), _._1.length,
-        { case ((lc, rc), b) => bestOf(replay2(lc, rc, b,
-          StreamBenchShapes.intervalJoinQuery)) })
+    val volumeE6 = runScales[(IndexedSeq[(Long, java.sql.Timestamp)],
+        IndexedSeq[(Long, java.sql.Timestamp, Double)])]("e6_volume",
+      n => (timeExtendedClicks(n), timeExtendedBuys(n)), _._1.length,
+      { case ((lc, rc), b) => replay2(lc, rc, b, StreamBenchShapes.intervalJoinQuery) })
 
     // churn: one micro-batch per cohort; reps=1 — the state-row curve is
     // deterministic and is the datum (wall time is secondary here)
     val churn: Seq[(String, Int, RunStats)] =
-      if (!axes("churn")) Seq.empty
+      if (!axes("session_churn")) Seq.empty
       else churnCohorts.flatMap { w =>
         Seq("bounded" -> sessionizeBounded, "counter" -> sessionizeBench)
           .map { case (mode, op) =>
             val rows = churnEvents(w, churnUsers)
-            val s = replay(rows, w, op)
-            settle()
+            val s = best(f"churn $mode%7s cohorts=$w%3d", 1)(replay(rows, w, op))
             System.err.println(f"[sscale] churn $mode%7s cohorts=$w%3d " +
               f"usersEver=${w * churnUsers}%7d stateRowsFinal=${s.finalStateRows}%7d " +
               f"stateRowsMax=${s.maxStateRows}%7d wall=${s.wallSec}%6.2fs")
@@ -398,18 +408,18 @@ object StreamScaleProbe {
         // so single-measurement wall times cannot read as min-of-reps
         s""""session_churn":$body,"churn_reps":1"""
       }
-    val sections = Seq(
+    val ran = Seq(
       axisJson("e3_volume", volumeE3), axisJson("e5_volume", volumeE5),
       axisJson("e3_users", usersE3), axisJson("e4_volume", volumeE4),
       axisJson("e6_volume", volumeE6), churnJson).filter(_.nonEmpty)
     // sections may ALL be empty (axes filtered out): the separating
     // comma belongs to the join, never the fixed prefix, or the line
     // ends ",}" and the whole run's output is unparseable
-    val sectionsTail = if (sections.isEmpty) "" else "," + sections.mkString(",")
+    val sectionsTail = if (ran.isEmpty) "" else "," + ran.mkString(",")
     println(s"""{"metric":"stream_scale_probe","base_sf":"$sfDir",""" +
       s""""copies":${copies.mkString("[", ",", "]")},"reps":$reps,""" +
-      s""""parts":$parts,"store":"$stateStore","span_batches":$spanBatches""" +
-      sectionsTail + "}")
+      s""""parts":$parts,"store":"${StreamBenchShapes.stateStore}",""" +
+      s""""span_batches":$spanBatches""" + sectionsTail + "}")
     spark.stop()
   }
 }

@@ -7,10 +7,11 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 
 import graft.SparkSpec
+import graft.tools.StreamScaleProbe
 
-/** The one feed-then-drain replay behind Bench's streaming entries and
-  * both streaming probes: chunking, lockstep feeding and checkpoint
-  * cleanup.
+/** The one feed-then-drain replay and state store behind Bench's
+  * streaming entries and StreamScaleProbe: chunking, lockstep feeding,
+  * checkpoint cleanup, the probe's per-batch report and the store's conf.
   */
 class StreamReplaySpec extends SparkSpec {
   import spark.implicits._
@@ -23,20 +24,58 @@ class StreamReplaySpec extends SparkSpec {
   test("a 1-input replay of N rows in k chunks runs k data batches and removes its checkpoint") {
     var drains = 0
     var ckpt: Path = null
-    val (batches, rows) = StreamBenchShapes.replay(spark, (1 to 12), 4,
+    val log = new StreamScaleProbe.BatchLog
+    val (batches, rows, progress, stats) = StreamBenchShapes.replay(spark, (1 to 12), 4,
       (ds: Dataset[Int]) => ds.map(_ * 2),
       (q: StreamingQuery, sec: Double) => {
         assert(sec >= 0)
         drains += 1
         ckpt = checkpointOf(q)
         assert(Files.isDirectory(ckpt))
-      }) { (q, _) =>
+        log.onDrain(q, sec)
+      }) { (q, sec) =>
       val data = q.recentProgress.filter(_.numInputRows > 0)
-      (data.length, data.map(_.numInputRows).sum)
+      (data.length, data.map(_.numInputRows).sum,
+        q.recentProgress.toSeq, StreamScaleProbe.statsOf(q, sec, log))
     }
     assert(drains == 4)
     assert(batches == 4 && rows == 12)
     assert(!Files.exists(ckpt), s"checkpoint $ckpt left behind")
+    // the probe's stats count every progress entry, and its report has
+    // one line per batch run, in batch-id order, each drain's wall on its
+    // last batch (an idle trigger's entry repeats the next batch's id)
+    assert(stats.batches == progress.length)
+    val batchIds = progress.filter(_.durationMs.containsKey("addBatch")).map(_.batchId)
+    assert(batchIds.length >= 4 && batchIds == progress.map(_.batchId).distinct)
+    val Line = """batch=\s*(\d+) drain=(.{7}) durationMs=\{.*\} rows=(\d+) .*""".r
+    val parsed = stats.batchLines.map {
+      case Line(id, wall, n) => (id.toLong, wall.trim.nonEmpty, n.toLong)
+      case other => fail(s"unparseable batch line: $other")
+    }
+    assert(parsed.map(_._1) == batchIds)
+    assert(parsed.map(_._3).sum == 12)
+    assert(parsed.count(_._2) == drains)
+  }
+
+  test("the state store conf differs between the bench and the probes only in the row counter") {
+    val bench = org.apache.spark.sql.graftconf.ScopedConf.session(spark)
+    val probe = org.apache.spark.sql.graftconf.ScopedConf.session(spark)
+    StreamBenchShapes.useStateStore(bench, trackRows = false)
+    StreamBenchShapes.useStateStore(probe, trackRows = true)
+    val p = "spark.sql.streaming.stateStore."
+    // the graded bench streaming shape, as literals
+    Seq(bench, probe).foreach { s =>
+      assert(s.conf.get(p + "providerClass") ==
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      assert(s.conf.get(p + "rocksdb.changelogCheckpointing.enabled") == "true")
+      assert(s.conf.get(p + "rocksdb.boundedMemoryUsage") == "true")
+    }
+    assert(bench.conf.get(p + "rocksdb.trackTotalNumberOfRows") == "false")
+    assert(probe.conf.get(p + "rocksdb.trackTotalNumberOfRows") == "true")
+    val (b, q) = (bench.conf.getAll, probe.conf.getAll)
+    assert((b.keySet ++ q.keySet).filter(k => b.get(k) != q.get(k)) ==
+      Set(p + "rocksdb.trackTotalNumberOfRows"))
+    assert(StreamBenchShapes.stateStore == "rocksdb")
   }
 
   test("a 2-input replay feeds both sides in lockstep and rejects unequal lengths") {
