@@ -343,7 +343,7 @@ object Bench {
           k: String): Long =
         Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)
       StreamRepMetrics(
-        ps.length,
+        ps.count(StreamBenchShapes.ranBatch),
         ps.map(dur(_, "triggerExecution")).sum,
         ps.map(dur(_, "addBatch")).sum,
         ps.flatMap(_.stateOperators).map(_.commitTimeMs).sum,

@@ -14,8 +14,9 @@ import graft.stages.{Stages, Variables}
   *   calendar → universe → prices → returns → factor_model →
   *   factor_covariances → reversal → benchmark → betas → portfolio_weights
   *
-  * Two execution modes, exactly like the reference:
-  *  - `backfill`: full-history recompute, `replace` tables (reference
+  * One stage graph with two bindings of the rows it keeps and the write
+  * it makes, like the reference's two modes over the same transforms:
+  *  - `backfill`: the full history, `replace`d (reference
   *    `*_backfill_flow` entry points)
   *  - `daily(asOf)`: guard that `asOf` is a market day, recompute only a
   *    trailing `2*WINDOW` slice, keep `date == asOf` rows, append +
@@ -60,12 +61,14 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
       "high" -> F, "low" -> F, "close" -> F, "volume" -> F, "vwap" -> F,
       "trade_count" -> F)("timestamp", "ticker")())
 
+  private def meta(name: String): TableMeta = tables.find(_.name == name).getOrElse(
+    throw new IllegalArgumentException(s"DailyPipeline has no table named '$name'"))
+
   /** S8/S12: minute-bar history upsert for one market date (reference
     * `pipelines/history_flow.py:63-101`).
     */
   def writeHistory(table: String, bars: DataFrame): Unit = lake.syncAfter {
-    val m = tables.find(_.name == table).get
-    lake.append(table, bars.select(m.schema.fieldNames.map(col).toIndexedSeq: _*))
+    lake.append(table, bars.select(meta(table).schema.fieldNames.map(col).toIndexedSeq: _*))
     lake.optimize(table)
   }
 
@@ -75,8 +78,7 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
   def writeCalendar(start: LocalDate, end: LocalDate): Unit = {
     val days = Iterator.iterate(start)(_.plusDays(1)).takeWhile(!_.isAfter(end))
       .filter(_.getDayOfWeek.getValue <= 5).map(java.sql.Date.valueOf).toSeq
-    lake.create(tables.find(_.name == "calendar").get, "replace")
-    lake.append("calendar", days.toDF("date"))
+    replace("calendar", days.toDF("date"))
   }
 
   /** The reference's "was yesterday a market day" guard
@@ -86,38 +88,63 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
     lake.table("calendar").filter(col("date") === java.sql.Date.valueOf(d)).count() > 0
 
   /** Full-history backfill from price tables already in the lake. */
-  def backfill(stockPrices: DataFrame, etfPrices: DataFrame): Unit = {
+  def backfill(stockPrices: DataFrame, etfPrices: DataFrame): Unit =
+    run(stockPrices, etfPrices, identity, replace)
+
+  /** Incremental daily run: trailing 2*WINDOW recompute, `date == asOf`
+    * upsert — the reference's daily semantics (SURVEY §2.10).
+    */
+  def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit =
+    lake.syncAfter(if (isMarketDay(asOf)) {
+      val asOfD = java.sql.Date.valueOf(asOf)
+      val lookback = lake.table("calendar")
+        .filter(col("date") <= asOfD)
+        .orderBy(col("date").desc).limit(Variables.Window * 2)
+        .agg(min("date")).collect().head.getDate(0)
+      def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
+      run(trailing(stockPrices), trailing(etfPrices), _.filter(col("date") === asOfD), upsert)
+    })
+
+  /** The stage graph, once for both modes: `at` keeps the rows each table
+    * holds (of a computed frame, or of a stored table a later stage reads)
+    * and `write` persists them. Writing `sr`/`er` materializes their
+    * cache before `reg`/`sig` are cached, so those two are planned on the
+    * returns' real sizes, not estimates.
+    */
+  private def run(stockPrices: DataFrame, etfPrices: DataFrame,
+      at: DataFrame => DataFrame, write: (String, DataFrame) => Unit): Unit =
     withCache { cache =>
+      def stored(name: String) = at(lake.table(name))
       val sr = cache(Stages.returns(stockPrices))
       val er = cache(Stages.returns(etfPrices))
-      replace("stock_returns", sr)
-      replace("etf_returns", er)
+      write("stock_returns", at(sr))
+      write("etf_returns", at(er))
 
       val reg = cache(Stages.factorRegression(sr, er))
-      replace("factor_loadings", Stages.factorLoadings(reg))
-      replace("idio_vol", Stages.idioVol(reg))
-      replace("factor_covariances", Stages.factorCovariances(er))
+      write("factor_loadings", at(Stages.factorLoadings(reg)))
+      write("idio_vol", at(Stages.idioVol(reg)))
+      write("factor_covariances", at(Stages.factorCovariances(er)))
 
+      // scores z-score the rows `at` keeps: the whole history in the
+      // backfill, one date's cross-section daily (SURVEY §2.4 A6 fork)
       val sig = cache(Stages.reversalSignals(sr))
-      replace("signals", sig)
-      val sc = Stages.scores(sig)
-      replace("scores", sc)
-      replace("alphas", Stages.alphas(sc, lake.table("idio_vol")))
+      write("signals", at(sig))
+      val sc = Stages.scores(at(sig))
+      write("scores", sc)
+      write("alphas", Stages.alphas(sc, stored("idio_vol")))
 
-      val bw = Stages.benchmarkWeights(sr.select("ticker", "date"))
-      replace("benchmark_weights", bw)
-      val br = Stages.benchmarkReturns(bw, sr)
-      replace("benchmark_returns", br)
-      replace("betas", Stages.betas(sr, br))
+      val bw = Stages.benchmarkWeights(at(sr).select("ticker", "date"))
+      write("benchmark_weights", bw)
+      write("benchmark_returns", Stages.benchmarkReturns(bw, at(sr)))
+      // the stored table: a daily step computes one date's benchmark
+      // return, and the betas' regression needs the trailing window of them
+      write("betas", at(Stages.betas(sr, lake.table("benchmark_returns"))))
 
-      val (w, m) = Stages.portfolio(
-        lake.table("alphas"), lake.table("factor_loadings"),
-        lake.table("factor_covariances"), lake.table("idio_vol"),
-        lake.table("benchmark_weights"), cache)
-      replace("portfolio_weights", w)
-      replace("portfolio_metrics", m)
+      val (w, m) = Stages.portfolio(stored("alphas"), stored("factor_loadings"),
+        stored("factor_covariances"), stored("idio_vol"), stored("benchmark_weights"), cache)
+      write("portfolio_weights", w)
+      write("portfolio_metrics", m)
     }
-  }
 
   /** Runs one step with a `cache` that registers each frame it caches;
     * every one is released when the step ends, dependents first (dropping
@@ -132,62 +159,8 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
   }
 
   private def replace(name: String, df: DataFrame): Unit = {
-    lake.create(tables.find(_.name == name).get, "replace")
+    lake.create(meta(name), "replace")
     lake.append(name, df)
-  }
-
-  /** Incremental daily run: trailing 2*WINDOW recompute, `date == asOf`
-    * upsert — the reference's daily semantics (SURVEY §2.10).
-    */
-  def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit =
-    lake.syncAfter(if (isMarketDay(asOf)) dailyStep(asOf, stockPrices, etfPrices))
-
-  private def dailyStep(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit = {
-    val asOfD = java.sql.Date.valueOf(asOf)
-    val lookback = lake.table("calendar")
-      .filter(col("date") <= asOfD)
-      .orderBy(col("date").desc).limit(Variables.Window * 2)
-      .agg(min("date")).collect().head.getDate(0)
-
-    def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
-
-    withCache { cache =>
-      val sr = cache(Stages.returns(trailing(stockPrices)))
-      val er = cache(Stages.returns(trailing(etfPrices)))
-      upsert("stock_returns", sr.filter(col("date") === asOfD))
-      upsert("etf_returns", er.filter(col("date") === asOfD))
-
-      val reg = cache(Stages.factorRegression(sr, er))
-      upsert("factor_loadings", Stages.factorLoadings(reg).filter(col("date") === asOfD))
-      upsert("idio_vol", Stages.idioVol(reg).filter(col("date") === asOfD))
-      upsert("factor_covariances",
-        Stages.factorCovariances(er).filter(col("date") === asOfD))
-
-      // daily scores are a single-date cross-section (SURVEY §2.4 A6 fork)
-      val sig = cache(Stages.reversalSignals(sr))
-      upsert("signals", sig.filter(col("date") === asOfD))
-      val sc = Stages.scores(sig.filter(col("date") === asOfD))
-      upsert("scores", sc)
-      upsert("alphas",
-        Stages.alphas(sc, lake.table("idio_vol").filter(col("date") === asOfD)))
-
-      val bw = Stages.benchmarkWeights(
-        sr.filter(col("date") === asOfD).select("ticker", "date"))
-      upsert("benchmark_weights", bw)
-      upsert("benchmark_returns",
-        Stages.benchmarkReturns(bw, sr.filter(col("date") === asOfD)))
-      upsert("betas", Stages.betas(sr, lake.table("benchmark_returns"))
-        .filter(col("date") === asOfD))
-
-      val (w, m) = Stages.portfolio(
-        lake.table("alphas").filter(col("date") === asOfD),
-        lake.table("factor_loadings").filter(col("date") === asOfD),
-        lake.table("factor_covariances").filter(col("date") === asOfD),
-        lake.table("idio_vol").filter(col("date") === asOfD),
-        lake.table("benchmark_weights").filter(col("date") === asOfD), cache)
-      upsert("portfolio_weights", w)
-      upsert("portfolio_metrics", m)
-    }
   }
 
   private def upsert(name: String, df: DataFrame): Unit = {

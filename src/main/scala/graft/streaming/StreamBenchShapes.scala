@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
 /** Single definition site for the replay inputs, the query parameters,
   * the state store and the replay itself, shared by `graft.Bench`'s
@@ -59,6 +59,12 @@ object StreamBenchShapes {
       p + "rocksdb.boundedMemoryUsage" -> "true")
       .foreach { case (k, v) => spark.conf.set(k, v) }
   }
+
+  /** Whether a progress entry ran a batch. An idle trigger's entry has no
+    * `addBatch` phase and repeats the id of the batch that runs next, so
+    * counting every entry counts that batch twice.
+    */
+  def ranBatch(p: StreamingQueryProgress): Boolean = p.durationMs.containsKey("addBatch")
 
   def loadEvents(spark: SparkSession, sfDir: String): IndexedSeq[StreamOps.Event] =
     graft.catalog.Tables.load(spark, sfDir, "events")

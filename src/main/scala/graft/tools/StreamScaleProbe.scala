@@ -114,7 +114,7 @@ object StreamScaleProbe {
 
     private def take(q: StreamingQuery, drainSec: Option[Double]): Unit = {
       val fresh = q.recentProgress
-        .filter(p => p.batchId > last && p.durationMs.containsKey("addBatch"))
+        .filter(p => p.batchId > last && StreamBenchShapes.ranBatch(p))
       fresh.foreach { p =>
         val ops = p.stateOperators.map { s =>
           import scala.jdk.CollectionConverters._
@@ -144,7 +144,7 @@ object StreamScaleProbe {
       wallSec,
       ps.map(dur(_, "addBatch")).sum,
       ps.flatMap(_.stateOperators).map(_.commitTimeMs).sum,
-      ps.length,
+      ps.count(StreamBenchShapes.ranBatch),
       if (rows.isEmpty) 0L else rows.max,
       rows.lastOption.getOrElse(0L),
       if (ps.isEmpty) 0L

@@ -7,16 +7,22 @@ import graft.SparkSpec
 import graft.catalog.Lake
 import graft.connect.FixtureBarSource
 import graft.stages.Variables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DailyPipelineSpec extends SparkSpec {
 
   private val end = LocalDate.of(2024, 3, 29)
 
-  /** A fresh lake with the calendar written, and one daily step on `end`
-    * run with an empty cache.
+  /** The tables a daily step upserts. */
+  private val upserted = Seq("stock_returns", "etf_returns", "factor_loadings", "idio_vol",
+    "factor_covariances", "signals", "scores", "alphas", "benchmark_weights",
+    "benchmark_returns", "betas", "portfolio_weights", "portfolio_metrics")
+
+  /** A fresh lake with the calendar written, its pipeline, and the
+    * fixture's stock and ETF bars through `end`.
     */
-  private def dailyStep(): (Path, Lake) = {
+  private def fixture(): (Path, Lake, DailyPipeline, DataFrame, DataFrame) = {
     val root = Files.createTempDirectory("graft_daily")
     val lake = new Lake(spark, root.toString)
     val pipe = new DailyPipeline(spark, lake)
@@ -26,6 +32,14 @@ class DailyPipelineSpec extends SparkSpec {
     pipe.writeCalendar(start, end)
     val stock = source.dailyBars(spark, Seq("AAA", "BBB", "CCC"), start, end)
     val etf = source.dailyBars(spark, Variables.Factors, start, end)
+    (root, lake, pipe, stock, etf)
+  }
+
+  /** One daily step on `end` into a lake with only the calendar, run with
+    * an empty cache.
+    */
+  private def dailyStep(): (Path, Lake) = {
+    val (root, lake, pipe, stock, etf) = fixture()
     spark.sharedState.cacheManager.clearCache()
     pipe.daily(end, stock, etf)
     (root, lake)
@@ -45,11 +59,43 @@ class DailyPipelineSpec extends SparkSpec {
 
   test("daily returns only after every rewrite it queued has landed") {
     val (root, _) = dailyStep()
-    val upserted = Seq("stock_returns", "etf_returns", "factor_loadings", "idio_vol",
-      "factor_covariances", "signals", "scores", "alphas", "benchmark_weights",
-      "benchmark_returns", "betas", "portfolio_weights", "portfolio_metrics")
     val left = for (t <- upserted; f <- Seq("_optimize_tmp", "_pending")
       if Files.exists(root.resolve(s"$t/$f"))) yield s"$t/$f"
     assert(left.isEmpty, s"rewrites still outstanding after daily: $left")
+  }
+
+  test("a daily step after a backfill adds exactly its date to every upserted table") {
+    val (_, lake, pipe, stock, etf) = fixture()
+    val b = end.minusDays(1) // the market day before `end`
+    def upTo(df: DataFrame) = df.filter(col("date") <= java.sql.Date.valueOf(b))
+    pipe.backfill(upTo(stock), upTo(etf))
+    def dates(t: String) =
+      lake.table(t).select("date").distinct().collect().map(_.getDate(0).toLocalDate).toSet
+    val marketDays = dates("calendar")
+    val before = upserted.map(t => t -> dates(t)).toMap
+    pipe.daily(end, stock, etf)
+    upserted.foreach { t =>
+      // every market day from the table's first through b
+      val first = before(t).minByOption(_.toEpochDay).getOrElse(b)
+      val gaps = marketDays.filter(d => !d.isBefore(first) && !d.isAfter(b)) -- before(t)
+      val backfilled = before(t).size > 1 && gaps.isEmpty && !before(t).exists(_.isAfter(b))
+      assert(backfilled, s"$t: the backfill is not every market day from $first through $b")
+      val after = dates(t)
+      val (added, lost) = (after -- before(t), before(t) -- after)
+      assert(added == Set(end) && lost.isEmpty, s"$t: the step added $added and lost $lost")
+      val rows = lake.table(t)
+      val keys = rows.select(lake.meta(t).primaryKeys.map(col): _*).distinct()
+      assert(rows.count() == keys.count(), s"$t: duplicate primary keys")
+    }
+    val total = lake.table("portfolio_weights")
+      .filter(col("date") === java.sql.Date.valueOf(end)).agg(sum("weight")).head().getDouble(0)
+    assert(math.abs(total - 1.0) < 1e-6, s"weights on $end sum to $total")
+  }
+
+  test("writeHistory names a table the pipeline does not declare") {
+    val lake = new Lake(spark, Files.createTempDirectory("graft_daily").toString)
+    val e = intercept[IllegalArgumentException](
+      new DailyPipeline(spark, lake).writeHistory("no_such_table", spark.range(1).toDF()))
+    assert(e.getMessage.contains("no_such_table"))
   }
 }
