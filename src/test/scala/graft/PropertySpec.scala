@@ -609,16 +609,9 @@ class PropertySpec extends SparkSpec {
     // plus a disjoint 5-cycle as a second component. All strategies must
     // produce the identical min-label fixpoint: clique+tail collapse to
     // node 0, the cycle to node 100.
-    val cliqueN = 12
-    val tailLen = 14
-    val clique = for (i <- 0 until cliqueN; j <- (i + 1) until cliqueN)
-      yield (i.toLong, j.toLong)
-    val tail = (0 until tailLen).map(j =>
-      ((cliqueN - 1 + j).toLong, (cliqueN + j).toLong))
-    val cycle = (0 until 5).map(j => (100L + j, 100L + (j + 1) % 5))
-    val pairs = (clique ++ tail ++ cycle).toDF("a", "b")
-    val nodes = ((0L until (cliqueN + tailLen).toLong) ++ (100L to 104L))
-      .toDF("doc_id")
+    import PropertySpec.{cliqueN, tailLen}
+    val pairs = PropertySpec.lollipopPairs.toDF("a", "b")
+    val nodes = PropertySpec.lollipopNodes.toDF("doc_id")
     def expected(id: Long): Long = if (id >= 100L) 100L else 0L
     def run(tag: String, out: Array[(Long, Long, Boolean)]): Unit = {
       assert(out.length == cliqueN + tailLen + 5, tag)
@@ -966,4 +959,22 @@ class PropertySpec extends SparkSpec {
         s"q=$q est=${est(q)} exact=$exact width=$w")
     }
   }
+}
+
+object PropertySpec {
+  /** The lollipop graph: a K12 clique welded to a 14-hop tail, plus a
+    * disjoint 5-cycle (nodes 100-104).
+    */
+  val cliqueN = 12
+  val tailLen = 14
+  val lollipopPairs: Seq[(Long, Long)] = {
+    val clique = for (i <- 0 until cliqueN; j <- (i + 1) until cliqueN)
+      yield (i.toLong, j.toLong)
+    val tail = (0 until tailLen).map(j =>
+      ((cliqueN - 1 + j).toLong, (cliqueN + j).toLong))
+    val cycle = (0 until 5).map(j => (100L + j, 100L + (j + 1) % 5))
+    clique ++ tail ++ cycle
+  }
+  val lollipopNodes: Seq[Long] =
+    (0L until (cliqueN + tailLen).toLong) ++ (100L to 104L)
 }
