@@ -575,13 +575,13 @@ object Dedup {
     *     measured local/distributed crossover, well under the
     *     broadcast-back wall (docs/SCALING.md, "Connected components past
     *     the union-find gate"). Pass 0 to force `strategy`.
-    *   - above it, `strategy` runs (see [[CcStrategy]]). The default
-    *     [[CcStrategy.Auto]] ties or beats every pinned strategy on every
-    *     probed cell (docs/SCALING.md, "canonicalize's distributed
-    *     default: decided by the matrix"). Its loop runs at a width
-    *     derived from the edge count ([[ccLoopShufflePartitions]]) in a
-    *     clone of the caller's session; the caller's conf is never
-    *     written, so concurrent queries keep their own width.
+    *   - above it, `strategy` runs (see [[CcStrategy]]): a budget of star
+    *     rounds, then — unless they reached the star forest — a budget of
+    *     propagation passes, both driven by one loop, [[fixpoint]]. The
+    *     loop runs at a width derived from the edge count
+    *     ([[ccLoopShufflePartitions]]) in a clone of the caller's session;
+    *     the caller's conf is never written, so concurrent queries keep
+    *     their own width.
     *
     * Either way the (typically expensive — LSH candidate generation +
     * verification) pair pipeline is evaluated exactly once: an eager
@@ -604,32 +604,22 @@ object Dedup {
     val undirected = pairs
       .select(col("a").cast("long").as("src"), col("b").cast("long").as("dst"))
       // serialized store: 2-long rows cache ~3x smaller and unroll into
-      // spillable byte buffers — at 100M edges the deserialized default
-      // held ~6 GB of row objects for the whole strategy's lifetime
+      // spillable byte buffers (docs/SCALING.md, "Numbers cited by code
+      // comments")
       .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
     // one count over the checkpointed blocks (no recompute of `pairs`):
-    // it feeds BOTH the union-find gate and the loop's shuffle-partition
-    // derivation, so forced-distributed callers (localEdgeLimit = 0) now
-    // pay it too — measured trivial next to the per-pass overhead it
-    // removes (see [[ccLoopShufflePartitions]])
+    // it feeds BOTH the union-find gate and the loop's width
     val edgeCount = undirected.count()
     val lbl =
       if (localEdgeLimit > 0 && edgeCount <= localEdgeLimit)
         localLabels(undirected)
       else {
-        // Every pass/round of the iterative strategies is a handful of
-        // tiny-keyed exchanges and one convergence action; left at the
-        // session default their per-pass fixed cost is ∝ the shuffle
-        // partition count × iteration count REGARDLESS of data volume —
-        // the graded sf0.1 graphs (~10^2-10^3 edges) paid 32-way task
-        // scheduling per pass and measured ANTI-scaling
-        // (docs/SCALING.md, "Numbers cited by code comments").
-        // Derive the loop's width from the measured edge count
-        // instead (guide §2.2: fewer, larger partitions; the session
-        // default stays the ceiling so at-scale CcProbe axes are
-        // unchanged). The width is a conf the loop's exchanges read when
-        // planned, so the loop runs in a session clone carrying it; the
-        // caller's session is never written.
+        // Every level of the loop is a handful of tiny-keyed exchanges
+        // and one convergence action, so at the session default its
+        // fixed cost is ∝ partitions × levels whatever the data volume
+        // (docs/SCALING.md, "Numbers cited by code comments"). The
+        // width is a conf the loop's exchanges read when planned, so the
+        // loop runs in a session clone carrying it.
         val key = "spark.sql.shuffle.partitions"
         val parts = ccLoopShufflePartitions(
           undirected.sparkSession.conf.get(key).toInt, edgeCount)
@@ -642,13 +632,21 @@ object Dedup {
         (coalesce(col("lbl"), col("id")) =!= col("id")).as("is_dup"))
   }
 
+  /** Each strategy as a star-round budget plus an optional propagation
+    * finisher: Star is rounds with no finisher, Hybrid rounds then the
+    * finisher, Propagation the finisher alone (it starts from
+    * [[propagationEdges]] and pays for no canonical level), and Auto
+    * picks its rounds at birth ([[autoLabels]]).
+    */
   private def distributedLabels(strategy: CcStrategy,
       undirected: DataFrame): DataFrame = strategy match {
     case CcStrategy.Auto(maxIter) => autoLabels(undirected, maxIter)
-    case CcStrategy.Propagation(maxIter) => propagatedLabels(undirected, maxIter)
-    case CcStrategy.Star(maxRounds) => starLabels(undirected, maxRounds)
+    case CcStrategy.Propagation(maxIter) =>
+      propagateOver(propagationEdges(undirected), maxIter)
+    case CcStrategy.Star(maxRounds) =>
+      starThenPropagate(canonical(undirected), maxRounds, None)
     case CcStrategy.Hybrid(starRounds, maxIter) =>
-      hybridLabels(undirected, starRounds, maxIter)
+      starThenPropagate(canonical(undirected), starRounds, Some(maxIter))
   }
 
   /** Edges per shuffle partition inside the iterative CC loops: the
@@ -682,6 +680,62 @@ object Dedup {
 
   private def trace(msg: String): Unit = traceSink(msg)
 
+  /** The CC loop: up to `budget` levels from `start`, each `step` of the
+    * level before it, stopping at the first level whose `signature`
+    * equals its predecessor's and passes `confirm`.
+    *
+    * It owns level residency: `start` and every level are made resident
+    * ([[residentLevel]]), a plan-truncating checkpoint every
+    * `truncateEvery`-th level; the signature is the action that
+    * materializes each level, after which the level before it is
+    * released — `freeSource`, the frame `start` was read from, counts as
+    * level −1. It returns the last level, still resident, with its
+    * release hook, the levels run, and whether the stop rule fired.
+    *
+    * Star rounds ([[starRound]]) and propagation passes ([[propagateOver]])
+    * both run here. An unchanged signature is exact for propagation
+    * (labels only decrease, so an unchanged label sum is an unchanged
+    * labeling); for star rounds it is a 2^-64 hash test that
+    * [[isStarForest]] confirms.
+    */
+  private def fixpoint(start: DataFrame, budget: Int, truncateEvery: Int,
+      step: DataFrame => DataFrame, signature: DataFrame => Seq[Any],
+      confirm: DataFrame => Boolean = _ => true,
+      freeSource: () => Unit = () => ()): Fixpoint = {
+    var (level, free) = residentLevel(start, truncate = false)
+    var prev = signature(level)
+    freeSource()
+    var steps = 0
+    var converged = false
+    while (!converged && steps < budget) {
+      val (next, freeNext) = residentLevel(step(level),
+        truncate = (steps + 1) % truncateEvery == 0)
+      val cur = signature(next)
+      converged = cur == prev && confirm(next)
+      free()
+      level = next
+      free = freeNext
+      prev = cur
+      steps += 1
+    }
+    Fixpoint(level, free, steps, converged)
+  }
+
+  private final case class Fixpoint(level: DataFrame, free: () => Unit,
+      steps: Int, converged: Boolean)
+
+  /** A level's signature in ONE aggregate action: the `lead` aggregates,
+    * then the sum of `x` in decimal(38,0) — full-range xxhash64 values
+    * overflow a long sum under ANSI mode — with an empty level's null
+    * sum read as 0.
+    */
+  private def sumSignature(level: DataFrame, x: Column, lead: Column*): Seq[Any] = {
+    val aggs = lead :+ sum(x.cast("decimal(38,0)"))
+    val r = level.agg(aggs.head, aggs.tail: _*).first()
+    r.toSeq.init :+
+      (if (r.isNullAt(lead.size)) java.math.BigDecimal.ZERO else r.getDecimal(lead.size))
+  }
+
   /** Canonical undirected edge form for the star-contraction machinery:
     * (a, b) with a < b, deduped — self-loops (a node already wired to
     * its minimum emits (m, m)-shaped links from small-star) drop out.
@@ -691,9 +745,15 @@ object Dedup {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b")).distinct()
 
+  /** The canonical level Star, Hybrid and the warm-start fallback start
+    * their rounds from.
+    */
+  private def canonical(undirected: DataFrame): DataFrame =
+    starNorm(undirected.select(col("src"), col("dst")))
+
   /** Large-star: m(u) over the FULL neighborhood (both directions), each
     * strictly larger neighbor re-linked to it. One groupBy-min plus one
-    * join — no neighbor lists, skew-immune (see [[contract]]).
+    * join — no neighbor lists, skew-immune (see [[starRound]]).
     */
   private def largeStar(edges: DataFrame): DataFrame = {
     val directed = edges.select(col("a").as("u"), col("b").as("v"))
@@ -715,23 +775,22 @@ object Dedup {
       .unionByName(mins.select(col("u").as("src"), col("m").as("dst")))
   }
 
-  /** One alternating contraction round in canonical (a, b) form. */
+  /** One alternating contraction round in canonical (a, b) form. Each
+    * star op is ONE groupBy-min plus ONE join on the edge list — no
+    * per-node neighbor lists (a `collect_list` would concentrate a
+    * popular node's whole neighborhood in one task; the min-join form is
+    * skew-immune):
+    *   - '''large-star''': every node u links each STRICTLY LARGER
+    *     neighbor v to m(u) = min(N(u) ∪ {u});
+    *   - '''small-star''': every node u links each neighbor v ≤ u (and
+    *     itself) to the minimum among them.
+    * Both preserve connectivity and only ever decrease the edge set's
+    * potential; the fixpoint is a star forest whose centers are exactly
+    * the component minima (Kiveris et al., SoCC 2014, Thm 1-3). Each
+    * round at least halves every component's diameter.
+    */
   private def starRound(edges: DataFrame): DataFrame =
     starNorm(smallStar(starNorm(largeStar(edges))))
-
-  /** (count, order-independent hash sum) of a canonical edge set: equal
-    * signatures across a round mean an unchanged set with ~2^-64 error —
-    * cheap enough to run every round; the structural confirmation runs
-    * once. The sum runs in decimal(38,0): full-range xxhash64 values
-    * overflow a long sum under ANSI mode (same shape as propagation's
-    * labelSum).
-    */
-  private def edgeSignature(e: DataFrame): (Long, java.math.BigDecimal) = {
-    val r = e.agg(count(lit(1)),
-      sum(xxhash64(col("a"), col("b")).cast("decimal(38,0)"))).first()
-    (r.getLong(0),
-      if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
-  }
 
   /** Structural star-forest test on a canonical (a < b) edge set: no
     * node appears as both a center (a) and a leaf (b), and every leaf
@@ -752,63 +811,6 @@ object Dedup {
       e.groupBy(col("b")).agg(count(lit(1)).as("_n"))
         .filter(col("_n") > 1).isEmpty
 
-  /** Up to `budget` alternating contraction rounds over a resident
-    * canonical level (`prev0` = its signature), shared by every star
-    * path. Each round applies two per-node rewirings, both ONE
-    * groupBy-min plus ONE join on the edge list — no per-node neighbor
-    * lists (a `collect_list` would concentrate a popular node's whole
-    * neighborhood in one task; the min-join form is skew-immune):
-    *   - '''large-star''': every node u links each STRICTLY LARGER
-    *     neighbor v to m(u) = min(N(u) ∪ {u});
-    *   - '''small-star''': every node u links each neighbor v ≤ u (and
-    *     itself) to the minimum among them.
-    * Both preserve connectivity and only ever decrease the edge set's
-    * potential; the fixpoint is a star forest whose centers are exactly
-    * the component minima (Kiveris et al., SoCC 2014, Thm 1-3). Each
-    * round at least halves every component's diameter.
-    *
-    * Convergence is detected by an unchanged [[edgeSignature]] — one
-    * tiny aggregate per round — and CONFIRMED by the structural
-    * [[isStarForest]] test, which certifies the labeling itself. On a
-    * 2^-64 signature collision the test reads false: `strict` callers
-    * abort loudly instead of mislabeling, the others keep contracting
-    * (propagation finishes their job regardless). Returns the last
-    * level, its release hook, the rounds run, and whether the forest
-    * was reached.
-    */
-  private def contract(edges0: DataFrame, free0: () => Unit,
-      prev0: (Long, java.math.BigDecimal), budget: Int,
-      strict: Boolean): (DataFrame, () => Unit, Int, Boolean) = {
-    var edges = edges0
-    var freeEdges = free0
-    var prev = prev0
-    var it = 0
-    var forest = false
-    // star rounds truncate every 2 levels, not [[truncateLevels]]: one
-    // round's plan references its input edge set ~12 times (directed
-    // view twice per star op, each joined against a min-aggregate of
-    // itself, twice per round), so the per-round tree fan-out is ~12x
-    // against propagation's 2x — untruncated, 7 rounds already built a
-    // ~12^7-node plan string and OOM'd the 22-chain spec
-    while (!forest && it < budget) {
-      val (next, freeNext) = residentLevel(
-        starRound(edges), truncate = (it + 1) % 2 == 0)
-      val cur = edgeSignature(next) // fully materializes `next`
-      if (cur == prev) {
-        forest = isStarForest(next)
-        require(forest || !strict, "edge-set hash signature converged on a " +
-          "non-star-forest (hash collision): raise maxRounds or report — " +
-          "this is a 2^-64 event")
-      }
-      freeEdges()
-      edges = next
-      freeEdges = freeNext
-      prev = cur
-      it += 1
-    }
-    (edges, freeEdges, it, forest)
-  }
-
   /** Labels read off a star forest (a = component min, b = member):
     * members label to their center, centers to themselves (via the
     * caller's coalesce); groupBy-min rather than a bare projection so a
@@ -817,59 +819,51 @@ object Dedup {
   private def forestLabels(edges: DataFrame): DataFrame =
     edges.groupBy(col("b").as("id")).agg(min(col("a")).as("lbl"))
 
-  /** The resident canonical level the pinned star paths start from. */
-  private def canonicalLevel(undirected: DataFrame): (DataFrame, () => Unit) =
-    residentLevel(starNorm(undirected.select(col("src"), col("dst"))),
-      truncate = false)
-
-  /** [[CcStrategy.Star]]: contraction rounds to the star-forest
-    * fixpoint; returns a resident (id, lbl) frame over edge-touched
-    * nodes.
+  /** The shared strategy path: up to `rounds` star rounds from the
+    * canonical `start` level, then labels off the star forest if they
+    * reached it, else the propagation finisher capped at `finish`
+    * passes. With no finisher (Star's settings) a round budget that ends
+    * short of the forest fails loudly, and so does a signature that
+    * converges on a non-forest (a hash collision); with one, both hand
+    * off to propagation, which finishes the job regardless.
+    *
+    * Star rounds truncate every 2 levels, not [[truncateLevels]]: a
+    * round's plan references its input ~12 times (the directed view
+    * twice per star op, each joined against a min-aggregate of itself),
+    * against a propagation pass's 2 (docs/SCALING.md, "Numbers cited by
+    * code comments"). `onRounds` sees the rounds run and whether they
+    * reached the forest before the labels are built.
     */
-  private def starLabels(undirected: DataFrame, maxRounds: Int): DataFrame = {
-    val (e0, f0) = canonicalLevel(undirected)
-    val (edges, _, _, done) =
-      contract(e0, f0, edgeSignature(e0), maxRounds, strict = true)
-    require(done,
-      s"star contraction did not converge within $maxRounds rounds")
-    forestLabels(edges)
-  }
-
-  /** [[CcStrategy.Hybrid]]: `starRounds` contraction rounds, then
-    * min-label propagation on the flattened edge set. Reaching the star
-    * forest inside the budget skips propagation; otherwise the
-    * contracted edges go to [[propagatedLabels]], whose exhaustion
-    * fallback (→ [[warmStartFallback]]) bounds the worst case.
-    */
-  private def hybridLabels(undirected: DataFrame, starRounds: Int,
-      maxIter: Int): DataFrame = {
-    val (e0, f0) = canonicalLevel(undirected)
-    val (edges, freeEdges, _, forest) =
-      contract(e0, f0, edgeSignature(e0), starRounds, strict = false)
-    if (forest) forestLabels(edges)
-    else finishWithPropagation(edges, freeEdges, maxIter)
-  }
-
-  /** Hand a diameter-collapsed edge set to the propagation finisher as
-    * a FLAT LogicalRDD leaf: after an odd (or zero) round budget the
-    * frame is cache-resident but its plan is still the nested
-    * star-round tree, and every propagation level's AQE plan
-    * description would re-render that whole nest (its measured cost:
-    * docs/SCALING.md, "Numbers cited by code comments"). The
-    * propagation loop runs entirely inside the call (every level
-    * action included), so the contracted frame is released as soon as
-    * it returns.
-    */
-  private def finishWithPropagation(edges: DataFrame, freeEdges: () => Unit,
-      maxIter: Int): DataFrame = {
-    val flat = edges.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => edges
-      case _ => edges.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+  private def starThenPropagate(start: DataFrame, rounds: Int,
+      finish: Option[Int], freeSource: () => Unit = () => (),
+      onRounds: (Int, Boolean) => Unit = (_, _) => ()): DataFrame = {
+    val confirm: DataFrame => Boolean = e => isStarForest(e) || {
+      require(finish.isDefined, "edge-set hash signature converged on a " +
+        "non-star-forest (hash collision): raise maxRounds or report — " +
+        "this is a 2^-64 event")
+      false
     }
-    val lbl = propagatedLabels(
-      flat.select(col("a").as("src"), col("b").as("dst")), maxIter)
-    freeEdges()
-    lbl
+    val r = fixpoint(start, rounds, truncateEvery = 2, starRound,
+      e => sumSignature(e, xxhash64(col("a"), col("b")), count(lit(1))),
+      confirm, freeSource)
+    onRounds(r.steps, r.converged)
+    if (r.converged) forestLabels(r.level)
+    else {
+      require(finish.isDefined,
+        s"star contraction did not converge within $rounds rounds")
+      // the finisher gets a FLAT LogicalRDD leaf: an odd (or zero) round
+      // budget leaves the nested star-round plan under the cache, and
+      // every propagation level's AQE plan description would re-render it
+      val flat = r.level.queryExecution.analyzed match {
+        case _: org.apache.spark.sql.execution.LogicalRDD => r.level
+        case _ => r.level.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      }
+      val lbl = propagateOver(
+        propagationEdges(flat.select(col("a").as("src"), col("b").as("dst"))),
+        finish.get)
+      r.free()
+      lbl
+    }
   }
 
   /** Structural telemetry of a canonical (a < b) edge set, one
@@ -982,86 +976,50 @@ object Dedup {
     */
   private val autoHandOffIter = 2 + 2 * autoCollapseTarget.toInt
 
-  /** [[CcStrategy.Auto]], the measured-budget hybrid: ONE
-    * [[forestStats]] telemetry aggregate at birth — FUSED with the
-    * propagation finisher's own edge-frame materialization,
-    * so the common zero-round hand-off pays no dedicated telemetry
-    * chain — yields the residual-diameter estimate D (max of the
-    * ordered and degree proxies —
-    * [[ForestStats.diameterEstimate]]); `round(log2 D) − 2`
-    * star rounds are scheduled from it and then propagation finishes
-    * unconditionally — re-measuring mid-flight is deliberately absent
-    * because both proxies read SIZE, not depth, on contracted trees
-    * (docs/SCALING.md, "Numbers cited by code comments"),
-    * while the per-round halving the schedule leans on is the SoCC'14
-    * guarantee. Rounds materialize through the same cheap
-    * [[edgeSignature]] aggregate as the fixed path, with the
-    * comparison seeded by the birth signature so a round-1 fixpoint is
-    * detectable; an unchanged signature is a candidate fixpoint —
-    * confirmed structurally, it reads labels off the forest and skips
-    * propagation (the path an overestimated D on cliques/bushy graphs
-    * exits through). Every decision is traced through [[traceSink]]
-    * (stderr by default) — the observable the no-knob spec pins.
+  /** [[CcStrategy.Auto]], the measured-budget hybrid. ONE [[forestStats]]
+    * aggregate at birth is also the action that populates the
+    * [[propagationEdges]] frame the finisher consumes, so the common
+    * zero-round hand-off pays no telemetry pass of its own. From the
+    * residual-diameter estimate D ([[ForestStats.diameterEstimate]]) it
+    * schedules `round(log2 D) − 2` star rounds on the shared path
+    * ([[starThenPropagate]]), whose start level is a shuffle-free filter
+    * of that frame (released once the level is material), with the
+    * finisher capped at [[autoHandOffIter]]. D is not re-measured
+    * mid-flight: both proxies read SIZE, not depth, on contracted trees
+    * (docs/SCALING.md, "Numbers cited by code comments"), while the
+    * per-round halving the schedule leans on is the SoCC'14 guarantee.
+    * An already-certified forest reads its labels straight off the
+    * frame, and zero scheduled rounds hand the frame to the finisher
+    * as-is. Every decision is traced through [[traceSink]] (stderr by
+    * default) — the observable the no-knob spec pins.
     */
   private def autoLabels(undirected: DataFrame, maxIter: Int): DataFrame = {
-    // FUSED birth telemetry: the telemetry has no materialization
-    // chain of its own. The auto path builds the SAME
-    // [[propagationEdges]] frame the propagation finisher consumes
-    // (canonical dedup + self-loops, bidirectional, dst-partitioned,
-    // persisted), and [[forestStats]]' dst-aligned aggregate is the
-    // action that populates it, so the zero-round hand-off (the common
-    // near-dup case) passes the frame to [[propagateOver]] as-is and
-    // the default caller's premium over pure propagation is one
-    // in-cache aggregate (docs/SCALING.md, "Numbers cited by code comments").
     val bidir = propagationEdges(undirected)
     val stats = forestStats(bidir) // the action that populates the cache
     trace(
       f"[graft] hybrid auto: residual-diameter estimate " +
         f"${stats.diameterEstimate}%.1f at birth")
-    if (stats.isForest) {
-      // already a min-centered star forest (certified by the same
-      // telemetry): read the labels off — zero rounds, zero propagation
-      // passes, one dst-aligned aggregate over the resident frame
-      trace(
-        "[graft] hybrid auto: star-forest fixpoint after 0 star round(s)")
-      return bidir.filter(col("src") < col("dst"))
-        .groupBy(col("dst").as("id")).agg(min(col("src")).as("lbl"))
-    }
+    val finish = math.min(maxIter, autoHandOffIter)
     val scheduled = math.min(autoMaxStarRounds, math.max(0,
       math.round(math.log(stats.diameterEstimate) / math.log(2.0)).toInt - 2))
-    if (scheduled == 0) {
-      // the common near-dup hand-off: the finisher consumes the
-      // telemetry frame directly — no canonical level, no re-checkpoint
-      trace(
-        "[graft] hybrid auto: hand-off to propagation after 0 star " +
-          "round(s) (scheduled 0 from the birth estimate)")
-      return propagateOver(bidir, math.min(maxIter, autoHandOffIter))
-    }
-    // star rounds scheduled (the deep-graph path): the canonical a < b
-    // form is a shuffle-free filter off the resident bidirectional
-    // frame; the birth signature doubles as the action that
-    // materializes the canonical level, after which the bidirectional
-    // frame is released
-    val (e0, f0) = residentLevel(
-      bidir.filter(col("src") < col("dst"))
-        .select(col("src").as("a"), col("dst").as("b")), truncate = false)
-    // seeded with the BIRTH signature so a round-1 fixpoint is
-    // detectable by the same two-consecutive-reads comparison as every
-    // later round
-    val birth = edgeSignature(e0)
-    bidir.unpersist()
-    val (edges, freeEdges, rounds, forest) =
-      contract(e0, f0, birth, scheduled, strict = false)
-    if (forest) {
-      trace(
+    def decided(rounds: Int, forest: Boolean): Unit =
+      if (forest) trace(
         s"[graft] hybrid auto: star-forest fixpoint after $rounds star round(s)")
-      forestLabels(edges)
-    } else {
-      trace(
+      else trace(
         s"[graft] hybrid auto: hand-off to propagation after $rounds star " +
           s"round(s) (scheduled $scheduled from the birth estimate)")
-      finishWithPropagation(edges, freeEdges, math.min(maxIter, autoHandOffIter))
-    }
+    if (stats.isForest) {
+      decided(0, forest = true)
+      bidir.filter(col("src") < col("dst"))
+        .groupBy(col("dst").as("id")).agg(min(col("src")).as("lbl"))
+    } else if (scheduled == 0) {
+      decided(0, forest = false)
+      propagateOver(bidir, finish)
+    } else
+      starThenPropagate(
+        bidir.filter(col("src") < col("dst"))
+          .select(col("src").as("a"), col("dst").as("b")),
+        scheduled, Some(finish), () => { bidir.unpersist(); () }, decided)
   }
 
   /** Driver-side union-find over a collected edge list: (id, lbl) for
@@ -1090,23 +1048,15 @@ object Dedup {
     broadcast(spark.createDataFrame(labels).toDF("id", "lbl"))
   }
 
-  /** Distributed min-label propagation (see [[canonicalize]]); returns a
-    * persisted (id, lbl) frame over edge-touched nodes.
-    */
-  private def propagatedLabels(undirected: DataFrame, maxIter: Int): DataFrame =
-    propagateOver(propagationEdges(undirected), maxIter)
-
-  /** The propagation loop's edge frame, built in one pipeline over the
-    * checkpointed pair list: canonical dedup PLUS one (n, n) self-loop
-    * per edge-touched node — folded into the same distinct, so the node
-    * set costs no pass of its own — then both directions of every real
-    * edge, hash-partitioned by the propagation join key and persisted
-    * (every iteration joins on dst; without the resident partitioning
-    * the large-at-scale edge set would re-shuffle once per iteration).
-    * The self-loops are what let each pass be ONE join + ONE aggregate:
-    * they fold a node's own label into the per-node minimum, so no
-    * join-back against the previous level is needed (see
-    * [[propagateOver]]).
+  /** The propagation finisher's edge frame, built in one pipeline over
+    * the checkpointed pair list: canonical dedup PLUS one (n, n)
+    * self-loop per edge-touched node — folded into the same distinct, so
+    * the node set costs no pass of its own — then both directions of
+    * every real edge, hash-partitioned by the propagation join key and
+    * persisted (every pass joins on dst; without the resident
+    * partitioning the large-at-scale edge set would re-shuffle once per
+    * pass). The self-loops are what let each pass be ONE join + ONE
+    * aggregate (see [[propagateOver]]).
     */
   private def propagationEdges(undirected: DataFrame): DataFrame =
     undirected
@@ -1130,58 +1080,28 @@ object Dedup {
       .repartition(col("dst"))
       .persist()
 
-  /** The propagation loop proper, over a [[propagationEdges]] frame —
-    * built by [[propagatedLabels]], or handed over already-materialized
-    * by the fused-telemetry auto path ([[autoLabels]]'s zero-round
-    * hand-off, which reuses its telemetry frame instead of paying a
-    * second materialization chain). Owns the frame: every exit path
-    * unpersists it once the labels no longer need it.
-    *
-    * Each pass attaches the current labels on dst (reusing the frame's
-    * resident hash partitioning) and takes the per-src minimum; the
-    * self-loop rows fold each node's OWN label into that minimum, so
-    * one join + one aggregate per pass replaces the old neighbor-min +
-    * left-join-back shape (two shuffle ops per pass, not three) — and,
-    * decisive for the driver at high iteration counts, each level's
-    * plan references its predecessor ONCE, so plan trees grow LINEARLY
-    * in the pass count between [[residentLevel]] truncations instead of
-    * doubling per pass (the round-20 heap-pressure fix: the 2^k tree
-    * OOM'd an 8 GB driver at 8 untruncated levels once the level base
-    * carried the fused telemetry frame's deeper subtree).
+  /** The propagation finisher over a [[propagationEdges]] frame, which it
+    * owns: every exit path unpersists it once the labels no longer need
+    * it. Its [[fixpoint]] starts from each node labeled by itself (read
+    * off the self-loop rows — a shuffle-free filter that keeps the
+    * frame's dst partitioning) and truncates every [[truncateLevels]]
+    * passes. Each pass attaches the current labels on dst and takes the
+    * per-src minimum; the self-loop rows fold each node's OWN label into
+    * that minimum, so a pass is one join + one aggregate and references
+    * the level before it ONCE — plan trees grow linearly between
+    * truncations. Labels only decrease, so an unchanged label sum is the
+    * fixpoint. An exhausted budget takes [[warmStartFallback]].
     */
   private def propagateOver(edges: DataFrame, maxIter: Int): DataFrame = {
-    // propagate only over edge-touched nodes: the label frame scales with
-    // the DUP population (tiny next to the corpus), and the untouched
-    // majority joins back in once at the end as its own canonical id
-    def propagate(cur: DataFrame): DataFrame =
-      edges.join(cur, col("dst") === col("id"))
-        .groupBy(col("src").as("id")).agg(min(col("lbl")).as("lbl"))
-    // the initial level reads the node set off the self-loop rows — a
-    // shuffle-free filter of the resident frame whose dst-partitioning
-    // survives the alias into (id, lbl)
-    var (lbl, freeLbl) = residentLevel(
+    val r = fixpoint(
       edges.filter(col("src") === col("dst"))
-        .select(col("dst").as("id"), col("dst").as("lbl")), truncate = false)
-    // labels only decrease; decimal sum avoids overflow on wide id spaces
-    def labelSum(d: DataFrame): java.math.BigDecimal = {
-      val v = d.agg(sum(col("lbl").cast("decimal(38,0)"))).first().getDecimal(0)
-      if (v == null) java.math.BigDecimal.ZERO else v
-    }
-    var prev = labelSum(lbl)
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      val (next, freeNext) = residentLevel(
-        propagate(lbl), truncate = (it + 1) % truncateLevels == 0)
-      val cur = labelSum(next) // fully materializes `next`
-      freeLbl() // level k-1's blocks are no longer referenced
-      lbl = next
-      freeLbl = freeNext
-      done = cur.compareTo(prev) == 0
-      prev = cur
-      it += 1
-    }
-    if (!done) {
+        .select(col("dst").as("id"), col("dst").as("lbl")),
+      maxIter, truncateLevels,
+      cur => edges.join(cur, col("dst") === col("id"))
+        .groupBy(col("src").as("id")).agg(min(col("lbl")).as("lbl")),
+      l => sumSignature(l, col("lbl")))
+    if (r.converged) { edges.unpersist(); r.level }
+    else {
       // A diameter past maxIter is a GRAPH-SHAPE surprise, not a reason
       // to kill a 100 TB pipeline: the switch is loud on stderr because
       // hitting it usually means the caller's pair graph is chain-shaped
@@ -1189,8 +1109,8 @@ object Dedup {
       trace(s"[graft] min-label propagation did not converge " +
         s"within $maxIter iterations (component diameter exceeds it); " +
         "falling back to star contraction of the label-contracted residue")
-      warmStartFallback(edges, lbl, freeLbl)
-    } else { edges.unpersist(); lbl }
+      warmStartFallback(edges, r.level, r.free)
+    }
   }
 
   /** Edge budget under which the warm-start fallback's residual
@@ -1203,11 +1123,9 @@ object Dedup {
 
   /** WARM-START exhaustion fallback: when the propagation budget
     * exhausts, the passes already paid are not discarded — the graph is
-    * CONTRACTED BY THE PARTIAL LABELS and only the residue is re-solved.
-    * Restarting [[starLabels]] on the WHOLE edge set would re-contract
-    * every converged component to fix one deep chain (CcProbe's mixture
-    * axis: one 64-chain hiding in 5M two-edge paths; docs/SCALING.md
-    * round 20).
+    * CONTRACTED BY THE PARTIAL LABELS and only the residue is re-solved,
+    * instead of re-contracting every converged component to fix one deep
+    * chain (CcProbe's mixture axis, docs/SCALING.md round 20).
     *
     * Why the quotient is exact: labels only flow along edges, so two
     * nodes sharing a partial label are provably connected, and mapping
@@ -1226,13 +1144,13 @@ object Dedup {
     * diameter-D component leaves ~D/maxIter quotient nodes — any
     * realistic exhaustion leaves a residue orders of magnitude under
     * the union-find gate and is solved on the driver in milliseconds;
-    * a residue past [[warmStartLocalEdges]] takes the star contraction,
-    * so the bound survives adversarial shapes. The quotient itself
-    * costs ONE dst-aligned join against the resident label frame plus
-    * one shuffle of undirected edge keys (the bidirectional frame
-    * carries each edge once per direction, so grouping by the
-    * undirected key collects both endpoint labels without a second
-    * pass over the edge set).
+    * a residue past [[warmStartLocalEdges]] takes the shared star path
+    * with Star's settings, so the bound survives adversarial shapes. The
+    * quotient itself costs ONE dst-aligned join against the resident
+    * label frame plus one shuffle of undirected edge keys (the
+    * bidirectional frame carries each edge once per direction, so
+    * grouping by the undirected key collects both endpoint labels
+    * without a second pass over the edge set).
     */
   private def warmStartFallback(edges: DataFrame, lbl: DataFrame,
       freeLbl: () => Unit): DataFrame = {
@@ -1256,7 +1174,7 @@ object Dedup {
         "label-space edge(s)")
       val resLbl =
         if (n <= warmStartLocalEdges) localLabels(res)
-        else starLabels(res, maxRounds = 50)
+        else starThenPropagate(canonical(res), 50, None)
       val composed = lbl.join(
           resLbl.select(col("id").as("rid"), col("lbl").as("rlbl")),
           col("lbl") === col("rid"), "left")
@@ -1268,8 +1186,8 @@ object Dedup {
     }
   }
 
-  /** Iterations between plan-truncating checkpoints in the iterative
-    * component algorithms (see [[residentLevel]]).
+  /** Propagation passes between plan-truncating checkpoints (see
+    * [[residentLevel]]).
     */
   private val truncateLevels = 8
 
@@ -1278,49 +1196,32 @@ object Dedup {
     d.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
 
-  /** Level residency for the iterative component algorithms
-    * ([[propagatedLabels]], [[contract]]), measured on CcProbe's axes
-    * (docs/SCALING.md, "Numbers cited by code comments") — each level
-    * is made resident one of two ways, and the returned thunk releases
-    * it; callers free level k−1 as soon as level k is material (the
-    * earlier retain-until-exit shape persisted every level of a deep
-    * propagation at once):
+  /** How [[fixpoint]] makes a level resident; the returned thunk
+    * releases it. Measured on CcProbe's axes (docs/SCALING.md, "Numbers
+    * cited by code comments"):
     *   - persist(): columnar, compact, partitioning-aware — the common
-    *     case. But caching does not truncate the plan TREE: level k's
-    *     analyzed plan embeds its (multiple) references to level k−1's,
-    *     so tree size (and the plan string AQE renders per job) grows
-    *     exponentially in the iteration count — the driver OOM'd at ~17
-    *     levels on the probe's chain axis, a shape near-dup graphs
-    *     (diameter ≤ ~3) never reach but a correct operator must survive.
-    *   - localCheckpoint(true) every [[truncateLevels]]-th level:
-    *     flattens the plan to a LogicalRDD, so tree size is bounded by
-    *     ~2^truncateLevels copies of a flat segment base, constant in
-    *     the iteration count. Checkpointing EVERY level instead was
-    *     measured strictly worse on both big-graph axes: the row-object
-    *     block store is ~3x fatter than the columnar cache and the
-    *     LogicalRDD's lost hash partitioning re-shuffles the label frame
-    *     every iteration.
+    *     case. LAZY: the caller's next action must scan the level in
+    *     full before its predecessor is released. Caching does not
+    *     truncate the plan TREE, though: level k's analyzed plan embeds
+    *     its references to level k−1's, so the tree (and the plan
+    *     string AQE renders per job) grows with every level.
+    *   - localCheckpoint(true) (`truncate`): eager, flattens the plan to
+    *     a LogicalRDD, so tree size stays bounded in the level count.
+    *     Checkpointing EVERY level was strictly worse on both big-graph
+    *     axes: the row-object block store is ~3x fatter than the
+    *     columnar cache and the LogicalRDD's lost hash partitioning
+    *     re-shuffles the label frame every pass. The store is
+    *     MEMORY_AND_DISK_SER: deep star levels stay near-full-size
+    *     (contraction halves diameter long before it shrinks the edge
+    *     count), and serialized blocks unroll into chunked byte buffers
+    *     that spill incrementally where row objects blew the heap.
     * Both block stores spill to disk, so "released level while a
     * survivor's partition was evicted" cannot strand a recompute: blocks
-    * are never silently dropped. The checkpoint store is
-    * MEMORY_AND_DISK_SER, not the default deserialized level — the
-    * deep-cell runs (100M edges × diameter 16) OOM'd a 32 GB heap
-    * through the DESERIALIZED store: on a deep graph the star
-    * rounds' outputs stay near-full-size (contraction halves diameter
-    * long before it shrinks the edge count), and unrolling ~200M-row
-    * levels as row OBJECTS both triples the resident bytes and allocates
-    * giant doubling arrays that blow the heap before eviction can react;
-    * serialized blocks unroll into chunked byte buffers and spill
-    * incrementally (same run completes in the same heap, table in
-    * docs/SCALING.md round 17). The persist() branch is LAZY — the
-    * caller must run an action that scans the level in full (the
-    * convergence aggregate, in both algorithms) before releasing its
-    * predecessor.
+    * are never silently dropped.
     */
   private def residentLevel(df: DataFrame,
       truncate: Boolean): (DataFrame, () => Unit) =
     if (truncate) {
-      // eager: blocks exist on return
       val c = df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
       (c, () => checkpointBlocks(c).foreach(_.unpersist(false)))
     } else {
@@ -1462,7 +1363,8 @@ object Dedup {
 }
 
 /** The distributed strategy [[Dedup.canonicalize]] runs above its
-  * `localEdgeLimit`. Every strategy reaches the same unique min-label
+  * `localEdgeLimit`: a budget of star rounds plus, except for [[Star]], a
+  * propagation finisher. Every strategy reaches the same unique min-label
   * fixpoint, and the budgets tune cost, never correctness: a component
   * past a propagation budget takes the warm-start fallback (a star
   * contraction of the label-contracted residue), and a pure star run

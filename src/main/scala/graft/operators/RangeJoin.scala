@@ -293,6 +293,26 @@ object RangeJoin {
     }
   }
 
+  /** The shared prologue of [[pointInIntervalTopK]] and
+    * [[pointInIntervalTopKSweep]]: the argument checks (the per-point cap
+    * partitions by `idCols`, so they must be point columns), then the
+    * bin-exploded interval side, dominance-pruned when `rank` reads only
+    * interval columns and the density gate says the prune pays.
+    */
+  private def topKIntervals(points: DataFrame, intervals: DataFrame,
+      loCol: String, hiCol: String, binDays: Int, idCols: Seq[String],
+      rank: org.apache.spark.sql.Column, k: Int): DataFrame = {
+    require(k > 0, "k must be positive")
+    require(idCols.nonEmpty, "idCols must name the point key")
+    require(idCols.forall(points.columns.contains),
+      s"idCols must be point columns: ${idCols.filterNot(points.columns.contains)}")
+    requireDisjoint(points, intervals)
+    val ib = binnedIntervals(intervals, loCol, hiCol, binDays)
+    if (rankIsIntervalOnly(intervals, rank) &&
+        pruneDensityGate(intervals, loCol, hiCol, binDays, k))
+      pruneDominatedBins(ib, loCol, hiCol, binDays, rank, k) else ib
+  }
+
   /** Densification cure (b), executable: the containment join capped at
     * the `k` best-ranked intervals per point (ordered by `rank`
     * ascending, interval start/end as deterministic tie-breaks), so
@@ -348,13 +368,8 @@ object RangeJoin {
       ptCol: String, loCol: String, hiCol: String, binDays: Int,
       idCols: Seq[String], rank: org.apache.spark.sql.Column,
       k: Int, broadcastBudgetBytes: Long = -1L): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(idCols.nonEmpty, "idCols must name the point key")
-    requireDisjoint(points, intervals)
-    val ib0 = binnedIntervals(intervals, loCol, hiCol, binDays)
-    val ib = if (rankIsIntervalOnly(intervals, rank) &&
-        pruneDensityGate(intervals, loCol, hiCol, binDays, k))
-      pruneDominatedBins(ib0, loCol, hiCol, binDays, rank, k) else ib0
+    val ib = topKIntervals(points, intervals, loCol, hiCol, binDays,
+      idCols, rank, k)
     // NOT sized from the candidate count: a round-20 experiment derived
     // this repartition's width from the measured per-bin candidate
     // volume (Σ|points_b|·|ib_b| / 32 MB per task) — sort spill went to
@@ -434,9 +449,9 @@ object RangeJoin {
     * plan under that threshold; the caller's session is never written.
     *
     * Building the frame runs up to three small jobs before anything is
-    * executed: the fold-sizing row count over `points`, the density
-    * gate's aggregate over the interval side ([[pruneDensityGate]],
-    * only for an interval-only `rank`) and the broadcast budget's row
+    * executed: the density gate's aggregate over the interval side
+    * ([[pruneDensityGate]], only for an interval-only `rank`), the
+    * fold-sizing row count over `points` and the broadcast budget's row
     * count ([[withinBroadcastBudget]], only when the size estimate is
     * over budget).
     *
@@ -448,18 +463,11 @@ object RangeJoin {
       ptCol: String, loCol: String, hiCol: String, binDays: Int,
       idCols: Seq[String], rank: org.apache.spark.sql.Column,
       k: Int): DataFrame = {
-    require(k > 0, "k must be positive")
-    require(idCols.nonEmpty, "idCols must name the point key")
+    val ib = topKIntervals(points, intervals, loCol, hiCol, binDays,
+      idCols, rank, k)
     val ptCols = points.columns.toSeq
-    require(idCols.forall(ptCols.contains),
-      s"idCols must be point columns: ${idCols.filterNot(ptCols.contains)}")
     val ivCols = intervals.columns.toSeq
-    requireDisjoint(points, intervals)
     val foldThreshold = sweepFoldThreshold(points)
-    val ib0 = binnedIntervals(intervals, loCol, hiCol, binDays)
-    val ib = if (rankIsIntervalOnly(intervals, rank) &&
-        pruneDensityGate(intervals, loCol, hiCol, binDays, k))
-      pruneDominatedBins(ib0, loCol, hiCol, binDays, rank, k) else ib0
     // the prune subtree (a window + a thresholds join) inflates the
     // optimizer's size ESTIMATE of the interval side; left alone the
     // planner can flip the build side and broadcast the POINTS — fatal

@@ -1221,6 +1221,27 @@ class OperatorsSpec extends SparkSpec {
       once.select("user", "lo", "hi").collect().toSet)
   }
 
+  test("range join top-k rejects idCols that name an interval column, on every branch") {
+    // a per-INTERVAL cap would come back silently: the over-budget branch
+    // windows the joined stream by whatever idCols names
+    val ivs = Seq((1L, "2024-01-01", "2024-03-01")).toDF("iv_id", "lo_s", "hi_s")
+      .select(col("iv_id"), to_date(col("lo_s")).as("lo"), to_date(col("hi_s")).as("hi"))
+    val pts = Seq((0L, "2024-02-01")).toDF("pt_id", "d_s")
+      .select(col("pt_id"), to_date(col("d_s")).as("d"))
+    val rank = col("lo")
+    val forms = Seq[(String, () => Unit)](
+      "broadcast" -> (() => RangeJoin.pointInIntervalTopK(pts, ivs, "d", "lo",
+        "hi", 7, Seq("iv_id"), rank, 3, broadcastBudgetBytes = Long.MaxValue)),
+      "over budget" -> (() => RangeJoin.pointInIntervalTopK(pts, ivs, "d", "lo",
+        "hi", 7, Seq("iv_id"), rank, 3, broadcastBudgetBytes = 0L)),
+      "sweep" -> (() => RangeJoin.pointInIntervalTopKSweep(pts, ivs, "d", "lo",
+        "hi", 7, Seq("iv_id"), rank, 3)))
+    forms.foreach { case (name, build) =>
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains("idCols must be point columns"), name)
+    }
+  }
+
   test("range join top-k size gate: over-budget side takes the shuffled fallback, same answer") {
     val ivs = (1L to 6L).map(i =>
       (i, f"2024-01-${i}%02d", "2024-03-01")).toDF("iv_id", "lo_s", "hi_s")
