@@ -21,11 +21,48 @@ import org.apache.spark.sql.types.StructType
   *     reference's upsert
   *
   * Scale notes: appends land as new Parquet files inside `year=` partition
-  * directories (no read-modify-write); `optimize` rewrites ONLY the
-  * partitions that received appends since the last optimize (tracked via a
-  * pending marker), using `row_number` over the PK — the standard
+  * directories (no read-modify-write); `optimize` rewrites at most the
+  * partitions that received appends since the last optimize (tracked in
+  * the `_pending` ledger), using `row_number` over the PK — the standard
   * compact-and-dedupe pattern. Readers prune partitions through the
   * `partitionBy` layout, and predicate pushdown reaches the Parquet scan.
+  *
+  * Collision gate: an upsert that only adds new keys rewrites nothing.
+  * `append` decides on its one write job (observed aggregates, no extra
+  * job) whether its batch is collision-free, i.e. can change no row's
+  * dedupe:
+  *   - its primary keys are distinct, checked exactly on the collected
+  *     keys, observed up to [[KeyCap]] rows (a larger batch is not
+  *     collision-free), and
+  *   - some date, timestamp or integral primary-key column has no null in
+  *     the batch and a batch minimum above the table's recorded maximum
+  *     of that column, so no batch key equals a stored one.
+  * The recorded maxima live in the `_graft_bounds` sidecar, one line per
+  * gate column. It is table-wide, not per partition, so the verdict holds
+  * when a key does not determine its partition. `create` writes it empty
+  * (no stored row); `append` only ever raises it, and writes it before
+  * the batch's `_graft_promote` marker, so it may read too high (a batch
+  * that crashed before its marker) but never too low. A table without
+  * the sidecar (written before it existed) never has a collision-free
+  * batch. The verdict rides in the marker into `_pending`: a ledger line
+  * is the partition's entry, followed by a tab and `free` when every
+  * batch it took since the last optimize was collision-free.
+  *
+  * `optimize` then rewrites every pending partition when any of them took
+  * a batch that was not collision-free: a colliding row may sit in any
+  * pending partition when the key does not determine the partition, and
+  * the dedupe scope stays the one it always was. When every pending
+  * partition is collision-free, their deduped contents are already what
+  * they hold, so it rewrites only, as a bin-pack, those whose part-file
+  * count has passed [[MaxPartFiles]] — and with none of those it clears
+  * the ledger without queuing a rewrite or starting a Spark job. Anything
+  * the gate does not know (no sidecar, a ledger line without a verdict,
+  * a key type whose collected values it cannot compare exactly) falls
+  * back to the rewrite. The one state in which skipping differs from rewriting is a
+  * table that already holds one key in two partitions (a key that does
+  * not determine its partition, upserted by two separate optimizes): a
+  * rewrite of both pending partitions would merge them, a skip leaves
+  * them until a colliding batch reaches either.
   *
   * Write-behind compaction: `optimize` queues the rewrite and returns, so
   * the caller's next call (in the nightly step, the next table's `append`)
@@ -42,8 +79,13 @@ import org.apache.spark.sql.types.StructType
   *   - The rewrite runs with the caller's active session and local
   *     properties as they were when `optimize` was called, so job groups,
   *     cancellation and job tags reach its jobs.
-  *   - The crash model is unchanged: the rewrite body is the one
-  *     `optimize` ran in place before; it only runs on another thread.
+  *
+  * Crash model: an append commits at its marker (see [[append]]); a
+  * crash after it rolls forward with the marker's verdict, and a crash
+  * before it discards the batch and at worst leaves the sidecar raised.
+  * An optimize that skips only deletes the ledger, so a crash leaves the
+  * ledger or none. The rewrite body is the one `optimize` always ran; it
+  * only runs on another thread, and its swap is no safer than before.
   * A frame from `table` reads the files listed when it was made; run it
   * before the next `optimize` of that table, as before.
   */
@@ -98,6 +140,7 @@ class Lake(spark: SparkSession, root: String) {
       "\"primaryKeys\":" + arrJson(meta.primaryKeys)
     ).mkString("{", ",", "}")
     Fs.writeAtomic(metaPath(meta.name), json)
+    Fs.writeAtomic(boundsPath(meta.name), "") // no stored row: no bound yet
     // empty frame with declared schema so reads of a fresh table work
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.schema)
       .withColumn(SeqCol, lit(0L)).withColumn(SubCol, lit(0L))
@@ -223,21 +266,24 @@ class Lake(spark: SparkSession, root: String) {
     * later, so fail the append instead.
     *
     * ONE Spark job per append: the input is written once to a staging
-    * directory with an `observe()` metric riding the write — the invariant
-    * violation count — then the files are promoted into the data
-    * directory only if the invariant holds. The dirty partitions are the
-    * directories the write made in staging ([[ledgerEntry]]). The earlier form ran the
+    * directory with `observe()` metrics riding the write — the invariant
+    * violation count and the collision gate's aggregates (row count, key
+    * list, per gate column min, max and null count; see the class doc) —
+    * then the files are promoted into the data directory only if the
+    * invariant holds. The dirty partitions are the directories the write
+    * made in staging ([[ledgerEntry]]). The earlier form ran the
     * input three times (guard count, write, dirty-partition distinct),
     * which triples an expensive upstream frame; staging also means a
     * violating or crashed append never leaves partial files in the table.
     *
-    * Crash model: part files are promoted only after a `_graft_promote`
-    * marker (holding the batch's dirty-partition strings) lands in
-    * staging, so the next append can tell a validated half-promoted batch
-    * (marker present → finish the move and merge the marker's partitions
-    * into `_pending`) from an unvalidated partial write (no marker →
-    * discard). Promotion is resumable because part file names are
-    * globally unique: files already moved are simply absent from staging.
+    * Crash model: the sidecar is raised to the batch's maxima first; part
+    * files are promoted only after a `_graft_promote` marker (holding the
+    * batch's dirty-partition strings with its verdict) lands in staging,
+    * so the next append can tell a validated half-promoted batch (marker
+    * present → finish the move and merge the marker's lines into
+    * `_pending`) from an unvalidated partial write (no marker → discard).
+    * Promotion is resumable because part file names are globally unique:
+    * files already moved are simply absent from staging.
     */
   def append(name: String, df: DataFrame): Unit = {
     awaitRewrite(name)
@@ -256,9 +302,10 @@ class Lake(spark: SparkSession, root: String) {
       if (checkYear)
         sum(when(col("year") =!= year(col("date")), 1L).otherwise(0L)).as("bad")
       else sum(lit(0L)).as("bad")
+    val gate = gateColumns(m)
     val staging = s"${dir(name)}/_append_tmp"
     deleteRecursively(Paths.get(staging))
-    aligned.observe(obs, badMetric)
+    aligned.observe(obs, badMetric, gateMetrics(m, gate): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy(m.partitionKeys: _*).parquet(staging)
     val got = obs.get
@@ -273,13 +320,130 @@ class Lake(spark: SparkSession, root: String) {
     val dirty =
       if (m.partitionKeys.isEmpty) Set("ALL")
       else partFiles(stagingPath).flatMap(p => Option(p.getParent)).map(ledgerEntry).toSet
+    val bound = bounds(name)
+    val free = bound.exists(collisionFree(gate, got, _))
+    bound.foreach(b => raiseBounds(name, gate, got, b))
     // the marker commits the batch: everything after this line is
     // idempotently resumable by recoverStaging
-    Fs.writeAtomic(stagingPath.resolve(PromoteMarker), dirty.mkString("\n"))
+    Fs.writeAtomic(stagingPath.resolve(PromoteMarker),
+      ledgerText(dirty.map(_ -> free).toMap))
     promoteStaging(name, stagingPath)
   }
 
   private val PromoteMarker = "_graft_promote"
+
+  import Lake.{KeyCap, MaxPartFiles}
+
+  private def boundsPath(name: String) = Paths.get(s"${dir(name)}/_graft_bounds")
+
+  /** The sidecar: each gate column's recorded maximum (a column with no
+    * line has no stored non-null value). None when the file is missing,
+    * so no batch is collision-free.
+    */
+  private def bounds(name: String): Option[Map[String, Long]] =
+    scala.util.Try(Files.readAllLines(boundsPath(name)).asScala.filter(_.nonEmpty).map { l =>
+      val t = l.lastIndexOf('\t')
+      l.substring(0, t) -> l.substring(t + 1).toLong
+    }.toMap).toOption
+
+  /** Raises the sidecar to the batch's maxima (it never goes down). */
+  private def raiseBounds(name: String, gate: Seq[String], got: Map[String, Any],
+      old: Map[String, Long]): Unit = {
+    val raised = old ++ gate.indices.flatMap { i =>
+      Option(got(s"_hi$i")).map(h =>
+        gate(i) -> math.max(h.asInstanceOf[Long], old.getOrElse(gate(i), Long.MinValue)))
+    }
+    if (raised != old)
+      Fs.writeAtomic(boundsPath(name), raised.map { case (c, v) => s"$c\t$v" }.mkString("\n"))
+  }
+
+  /** The primary-key columns the gate can bound: date, timestamp and
+    * integral ones. None when some key column's collected `Row`
+    * equality may disagree with the dedupe's grouping (floating point's
+    * -0.0 and 0.0, collated strings, nested types): then the distinct
+    * check would not be exact, and no batch is collision-free.
+    */
+  private def gateColumns(m: TableMeta): Seq[String] = {
+    import org.apache.spark.sql.types._
+    def exact(t: DataType) = t match {
+      case StringType | BooleanType | DateType | TimestampType |
+          ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val types = m.primaryKeys.map(k => m.schema(k).dataType)
+    if (!types.forall(exact)) Nil
+    else m.primaryKeys.filter(k => gateValue(k, m.schema(k).dataType).isDefined)
+  }
+
+  /** A gate column's value as a BIGINT with the column's order. */
+  private def gateValue(c: String, t: org.apache.spark.sql.types.DataType): Option[Column] = {
+    import org.apache.spark.sql.types._
+    t match {
+      case DateType => Some(unix_date(col(c)).cast(LongType))
+      case TimestampType => Some(unix_micros(col(c)))
+      case ByteType | ShortType | IntegerType | LongType => Some(col(c).cast(LongType))
+      case _ => None
+    }
+  }
+
+  /** The gate's observed aggregates: row count, the first [[KeyCap]] keys
+    * in key order, and per gate column its min, max and null count.
+    */
+  private def gateMetrics(m: TableMeta, gate: Seq[String]): Seq[Column] =
+    if (gate.isEmpty) Nil
+    else {
+      import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+      import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Literal}
+      val keys = graft.expr.catalyst.TopKStructsAgg(
+        CreateStruct(m.primaryKeys.map(UnresolvedAttribute.quoted)), Literal(KeyCap))
+      Seq(count(lit(1)).as("_n"), org.apache.spark.sql.graftconf.ExpressionColumn(
+        keys.toAggregateExpression()).as("_keys")) ++
+        gate.zipWithIndex.flatMap { case (c, i) =>
+          val v = gateValue(c, m.schema(c).dataType).get
+          Seq(min(v).as(s"_lo$i"), max(v).as(s"_hi$i"),
+            sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"_nul$i"))
+        }
+    }
+
+  /** The gate's verdict on a batch from its observed aggregates `got` and
+    * the sidecar `bound` (see the class doc).
+    */
+  private def collisionFree(gate: Seq[String], got: Map[String, Any],
+      bound: Map[String, Long]): Boolean = gate.nonEmpty && {
+    val n = got("_n").asInstanceOf[Long]
+    def distinctKeys = {
+      val keys = got("_keys").asInstanceOf[Seq[org.apache.spark.sql.Row]]
+      keys.distinct.size == keys.size
+    }
+    n == 0L || n <= KeyCap && distinctKeys && gate.indices.exists { i =>
+      got(s"_nul$i") == 0L &&
+        bound.get(gate(i)).forall(got(s"_lo$i").asInstanceOf[Long] > _)
+    }
+  }
+
+  private def pendingPath(name: String) = Paths.get(s"${dir(name)}/_pending")
+
+  /** `_pending` (or marker) lines, merged per partition entry: true when
+    * every batch the partition took was collision-free. A line without
+    * the [[FreeTag]] (a batch that was not, or a line written before the
+    * gate existed) makes its partition false.
+    */
+  private def mergeLedger(lines: Seq[String]): Map[String, Boolean] =
+    lines.filter(_.nonEmpty)
+      .groupMapReduce(_.stripSuffix(FreeTag))(_.endsWith(FreeTag))(_ && _)
+
+  private def ledgerText(ledger: Map[String, Boolean]): String =
+    ledger.map { case (e, free) => if (free) e + FreeTag else e }.mkString("\n")
+
+  /** Follows a collision-free partition's entry; an entry holds no tab
+    * (Spark escapes control characters in partition directory names).
+    */
+  private val FreeTag = "\tfree"
+
+  private def ledgerLines(name: String): Seq[String] = {
+    val p = pendingPath(name)
+    if (Files.exists(p)) Files.readString(p).split("\n").toSeq else Nil
+  }
 
   /** Finish (or discard) a staging dir left by a crashed append. */
   private def recoverStaging(name: String): Unit = {
@@ -293,7 +457,7 @@ class Lake(spark: SparkSession, root: String) {
 
   /** Move every staged part file under the same relative path (part file
     * names are globally unique, so this is a pure add), merge the
-    * marker's partitions into `_pending`, then drop staging.
+    * marker's lines into `_pending`, then drop staging.
     */
   private def promoteStaging(name: String, stagingPath: java.nio.file.Path): Unit = {
     partFiles(stagingPath).foreach { rel =>
@@ -301,11 +465,8 @@ class Lake(spark: SparkSession, root: String) {
       Files.createDirectories(target.getParent)
       Files.move(stagingPath.resolve(rel), target)
     }
-    val dirty = Files.readString(stagingPath.resolve(PromoteMarker))
-      .split("\n").toSet
-    val p = Paths.get(s"${dir(name)}/_pending")
-    val prev = if (Files.exists(p)) Files.readString(p).split("\n").toSet else Set.empty[String]
-    Fs.writeAtomic(p, (prev ++ dirty).filter(_.nonEmpty).mkString("\n"))
+    val batch = Files.readString(stagingPath.resolve(PromoteMarker)).split("\n").toSeq
+    Fs.writeAtomic(pendingPath(name), ledgerText(mergeLedger(ledgerLines(name) ++ batch)))
     deleteRecursively(stagingPath)
   }
 
@@ -317,34 +478,55 @@ class Lake(spark: SparkSession, root: String) {
     finally stream.close()
   }
 
+  /** Part files directly in the partition directory a ledger entry names
+    * (the data dir itself for `ALL`).
+    */
+  private def partFileCount(m: TableMeta, entry: String): Int = {
+    val d = if (entry == "ALL") Paths.get(dataDir(m.name))
+      else Paths.get(dataDir(m.name), partitionDir(m.partitionKeys, entry))
+    if (!Files.isDirectory(d)) 0
+    else {
+      val s = Files.list(d)
+      try s.iterator.asScala.count(f => Files.isRegularFile(f) &&
+          f.getFileName.toString.startsWith("part-"))
+      finally s.close()
+    }
+  }
+
   /** S4: optimize = last-write-wins PK dedupe (by ingest stamp, with an
-    * optional extra recency column first), rewriting only partitions that
-    * saw appends since the last optimize. Write-behind: waits for the
-    * table's previous rewrite, queues this one and returns (see the class
-    * doc).
+    * optional extra recency column first) over the partitions that saw
+    * appends since the last optimize, gated by their batches' verdicts:
+    *   - any pending partition took a batch that was not collision-free:
+    *     rewrite every pending partition;
+    *   - otherwise: rewrite (bin-pack) only the pending partitions holding
+    *     more than [[MaxPartFiles]] part files; with none, clear the ledger
+    *     here, with no rewrite queued and no Spark job.
+    * Write-behind: waits for the table's previous rewrite, queues this one
+    * and returns (see the class doc, which also gives the crash model).
     */
   def optimize(name: String, orderCol: String = SeqCol): Unit = {
     awaitRewrite(name)
-    Compactor.submit(spark, tableKey(name))(rewrite(name, orderCol))
+    val ledger = mergeLedger(ledgerLines(name))
+    val targets =
+      if (ledger.values.exists(free => !free)) ledger.keySet
+      else {
+        val m = meta(name)
+        ledger.keySet.filter(e => partFileCount(m, e) > MaxPartFiles)
+      }
+    if (targets.isEmpty) Files.deleteIfExists(pendingPath(name))
+    else Compactor.submit(spark, tableKey(name))(rewrite(name, orderCol, targets))
   }
 
-  /** The body of [[optimize]], run on the compactor thread. It must call
-    * nothing that waits on a queued rewrite (it would wait on itself).
+  /** The body of [[optimize]], run on the compactor thread: dedupes the
+    * rows of the `targets` partitions among themselves, swaps them in and
+    * clears the ledger. It must call nothing that waits on a queued
+    * rewrite (it would wait on itself).
     */
-  private def rewrite(name: String, orderCol: String): Unit = {
+  private def rewrite(name: String, orderCol: String, targets: Set[String]): Unit = {
     val m = meta(name)
-    val pendingPath = Paths.get(s"${dir(name)}/_pending")
-    if (!Files.exists(pendingPath)) return
-    val pending = Files.readString(pendingPath).split("\n").filter(_.nonEmpty).toSet
-    if (pending.isEmpty) { // appends of no rows: nothing to rewrite
-      Files.delete(pendingPath)
-      return
-    }
-
+    val whole = m.partitionKeys.isEmpty || targets.contains("ALL")
     val full = tableRaw(name)
-    val scoped =
-      if (m.partitionKeys.isEmpty || pending.contains("ALL")) full
-      else full.filter(inPartitions(m, pending))
+    val scoped = if (whole) full else full.filter(inPartitions(m, targets))
     val ordCols = if (orderCol == SeqCol) Seq(col(SeqCol).desc, col(SubCol).desc)
       else Seq(col(orderCol).desc, col(SeqCol).desc, col(SubCol).desc)
     val w = Window.partitionBy(m.primaryKeys.map(col): _*).orderBy(ordCols: _*)
@@ -355,11 +537,11 @@ class Lake(spark: SparkSession, root: String) {
     // rewrite affected partitions atomically-ish: write to a temp dir then swap
     val tmp = s"${dir(name)}/_optimize_tmp"
     deduped.write.mode(SaveMode.Overwrite).partitionBy(m.partitionKeys: _*).parquet(tmp)
-    if (m.partitionKeys.isEmpty || pending.contains("ALL")) {
+    if (whole) {
       deleteRecursively(Paths.get(dataDir(name)))
       Files.move(Paths.get(tmp), Paths.get(dataDir(name)))
     } else {
-      pending.foreach { pv =>
+      targets.foreach { pv =>
         val sub = partitionDir(m.partitionKeys, pv)
         val target = Paths.get(s"${dataDir(name)}/$sub")
         val rewritten = Paths.get(s"$tmp/$sub")
@@ -374,8 +556,21 @@ class Lake(spark: SparkSession, root: String) {
       }
       deleteRecursively(Paths.get(tmp))
     }
-    Files.deleteIfExists(pendingPath)
+    Files.deleteIfExists(pendingPath(name))
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = Fs.deleteRecursively(p)
+}
+
+private[graft] object Lake {
+
+  /** Rows a batch may hold and still be collision-free: its keys are
+    * observed up to this many, so the distinct check is exact below it.
+    */
+  val KeyCap = 4096
+
+  /** Part files a collision-free pending partition may hold before
+    * `optimize` bin-packs it anyway.
+    */
+  val MaxPartFiles = 16
 }

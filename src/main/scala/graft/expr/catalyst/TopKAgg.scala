@@ -91,14 +91,17 @@ case class TopKStructsAgg(
   // comparisons (interpreted only under the codegen-factory fallback
   // conf). Ascending/nulls-first per field — the same total order the
   // interpreted TypeUtils ordering defines, so kept sets are identical.
-  private lazy val ordering: Ordering[InternalRow] = RowOrdering.create(
+  // The three lazy vals holding generated code are @transient: an
+  // observed metric's accumulator serializes the expression after use,
+  // and generated classes are not serializable.
+  @transient private lazy val ordering: Ordering[InternalRow] = RowOrdering.create(
     Seq(SortOrder(BoundReference(0, child.dataType, nullable = false),
       Ascending)), Nil)
 
   // owns the bytes of an admitted element: one generated projection to
   // a fresh UnsafeRow (values handed to update/deserialize may be views
   // into reused or transient buffers)
-  private lazy val wrapProj =
+  @transient private lazy val wrapProj =
     UnsafeProjection.create(Array[DataType](child.dataType))
   private def own(r: InternalRow): InternalRow = wrapProj(r).copy()
 
@@ -129,7 +132,7 @@ case class TopKStructsAgg(
     new GenericArrayData(
       buf.sortedRows(ordering).map(_.get(0, child.dataType)))
 
-  private lazy val serProj =
+  @transient private lazy val serProj =
     UnsafeProjection.create(Array[DataType](dataType))
 
   override def serialize(buf: TopKHeap): Array[Byte] = {

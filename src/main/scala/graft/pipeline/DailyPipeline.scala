@@ -81,29 +81,30 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
     replace("calendar", days.toDF("date"))
   }
 
-  /** The reference's "was yesterday a market day" guard
-    * (`pipelines/utils/calendar.py:8-12`).
-    */
-  def isMarketDay(d: LocalDate): Boolean =
-    lake.table("calendar").filter(col("date") === java.sql.Date.valueOf(d)).count() > 0
-
   /** Full-history backfill from price tables already in the lake. */
   def backfill(stockPrices: DataFrame, etfPrices: DataFrame): Unit =
     run(stockPrices, etfPrices, identity, replace)
 
   /** Incremental daily run: trailing 2*WINDOW recompute, `date == asOf`
-    * upsert — the reference's daily semantics (SURVEY §2.10).
+    * upsert — the reference's daily semantics (SURVEY §2.10). One calendar
+    * query gives both the reference's "was yesterday a market day" guard
+    * (`pipelines/utils/calendar.py:8-12`) and the lookback: over the
+    * trailing 2*WINDOW calendar dates up to `asOf`, `asOf` is a market day
+    * exactly when it is the latest, and the lookback starts at the first.
     */
   def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit =
-    lake.syncAfter(if (isMarketDay(asOf)) {
+    lake.syncAfter {
       val asOfD = java.sql.Date.valueOf(asOf)
-      val lookback = lake.table("calendar")
+      val span = lake.table("calendar")
         .filter(col("date") <= asOfD)
         .orderBy(col("date").desc).limit(Variables.Window * 2)
-        .agg(min("date")).collect().head.getDate(0)
-      def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
-      run(trailing(stockPrices), trailing(etfPrices), _.filter(col("date") === asOfD), upsert)
-    })
+        .agg(min("date"), max("date")).collect().head
+      if (Option(span.getDate(1)).exists(_.toLocalDate == asOf)) {
+        val lookback = span.getDate(0)
+        def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
+        run(trailing(stockPrices), trailing(etfPrices), _.filter(col("date") === asOfD), upsert)
+      }
+    }
 
   /** The stage graph, once for both modes: `at` keeps the rows each table
     * holds (of a computed frame, or of a stored table a later stage reads)

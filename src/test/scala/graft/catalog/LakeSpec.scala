@@ -240,6 +240,203 @@ class LakeSpec extends SparkSpec {
     assert(!Files.exists(root.resolve("accounts/_pending")))
   }
 
+  // --- the collision gate: an upsert that only adds new keys skips its
+  // rewrite; every case below fails if the gate skips where it must not
+
+  private val dated = TableMeta("dated", StructType(Seq(
+    StructField("ticker", StringType), StructField("date", DateType),
+    StructField("year", IntegerType), StructField("v", DoubleType))),
+    Seq("year"), Seq("ticker", "date"))
+
+  /** One row per ticker on `d`. */
+  private def day(d: String, v: Double, tickers: Seq[String] = Seq("A", "B")) =
+    tickers.map(t => (t, java.sql.Date.valueOf(d), d.take(4).toInt, v))
+      .toDF("ticker", "date", "year", "v")
+
+  private def datedRows(lake: Lake) = lake.table("dated").collect()
+    .map(r => (r.getAs[String]("ticker"), r.getAs[java.sql.Date]("date").toString,
+      r.getAs[Double]("v"))).toSet
+
+  /** A table whose key (`id`) does not determine its partition (`region`). */
+  private val accounts = TableMeta("accounts", StructType(Seq(
+    StructField("id", IntegerType), StructField("region", StringType),
+    StructField("v", DoubleType))), Seq("region"), Seq("id"))
+
+  private def acct(rows: (Option[Int], String, Double)*) = rows.toDF("id", "region", "v")
+
+  private def acctRows(lake: Lake) = lake.table("accounts").collect()
+    .map(r => (Option(r.getAs[Integer]("id")).map(_.toInt), r.getAs[String]("region"),
+      r.getAs[Double]("v"))).toSet
+
+  private val jobKey = "graft.lake.spec.jobs"
+
+  /** Spark jobs `body` starts, on this thread or on the compactor (a
+    * rewrite runs with the local properties of its `optimize` call).
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(jobKey) == tag) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(jobKey, tag)
+    try {
+      body
+      assert(org.apache.spark.graftbench.ListenerDrain.drain(sc, 30000))
+      n.get
+    } finally {
+      sc.setLocalProperty(jobKey, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def optimizeJobs(lake: Lake, t: String): Int = jobsOf { lake.optimize(t); lake.sync() }
+
+  test("gate: optimize after a collision-free append starts no Spark job") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(dated, "replace")
+    lake.append("dated", day("2024-01-02", 1.0))
+    assert(optimizeJobs(lake, "dated") == 0)
+    assert(!Files.exists(root.resolve("dated/_pending")))
+    lake.append("dated", day("2024-01-03", 2.0))
+    assert(optimizeJobs(lake, "dated") == 0)
+    // the listener sees a rewrite when there is one
+    lake.append("dated", day("2024-01-03", 3.0))
+    assert(optimizeJobs(lake, "dated") > 0)
+    assert(datedRows(lake) == Set(("A", "2024-01-02", 1.0), ("B", "2024-01-02", 1.0),
+      ("A", "2024-01-03", 3.0), ("B", "2024-01-03", 3.0)))
+  }
+
+  test("gate: re-upserting the same date dedupes to the last write") {
+    val lake = newLake()
+    lake.create(dated, "replace")
+    lake.append("dated", day("2024-01-02", 1.0))
+    lake.optimize("dated")
+    lake.append("dated", day("2024-01-02", 2.0)) // min == recorded max: a collision
+    lake.optimize("dated")
+    assert(datedRows(lake) == Set(("A", "2024-01-02", 2.0), ("B", "2024-01-02", 2.0)))
+  }
+
+  test("gate: a key that does not determine its partition still dedupes across partitions") {
+    val lake = newLake()
+    lake.create(accounts, "replace")
+    lake.append("accounts", acct((Some(1), "a", 1.0), (Some(2), "a", 1.0))) // collision-free
+    lake.append("accounts", acct((Some(3), "c", 1.0))) // collision-free
+    lake.append("accounts", acct((Some(1), "b", 2.0))) // id 1 is stored in region a
+    lake.optimize("accounts")
+    assert(acctRows(lake) == Set((Some(2), "a", 1.0), (Some(3), "c", 1.0), (Some(1), "b", 2.0)))
+  }
+
+  test("gate: a batch with an internal duplicate still dedupes") {
+    val lake = newLake()
+    lake.create(dated, "replace")
+    lake.append("dated", day("2024-01-02", 1.0))
+    lake.optimize("dated")
+    // a new date only, but one key twice: the later row in batch order wins
+    val d = java.sql.Date.valueOf("2024-01-03")
+    lake.append("dated", Seq(("A", d, 2024, 2.0), ("B", d, 2024, 2.0), ("A", d, 2024, 3.0))
+      .toDF("ticker", "date", "year", "v"))
+    lake.optimize("dated")
+    assert(lake.table("dated").count() == 4)
+    assert(datedRows(lake) == Set(("A", "2024-01-02", 1.0), ("B", "2024-01-02", 1.0),
+      ("A", "2024-01-03", 3.0), ("B", "2024-01-03", 2.0)))
+  }
+
+  test("gate: a batch over the row cap that holds a duplicate still dedupes") {
+    val lake = newLake()
+    lake.create(accounts, "replace")
+    val n = Lake.KeyCap + 10
+    // the duplicate is the LARGEST key, so the first KeyCap keys in key
+    // order are distinct
+    val rows = (1 to n).map(i => (Option(i), "a", 1.0)) :+ ((Option(n), "a", 2.0))
+    lake.append("accounts", acct(rows: _*))
+    lake.optimize("accounts")
+    val out = lake.table("accounts")
+    assert(out.count() == n)
+    assert(out.select("id").distinct().count() == n)
+  }
+
+  test("gate: a null in the gate column still dedupes against a stored null-key row") {
+    val lake = newLake()
+    lake.create(accounts, "replace")
+    lake.append("accounts", acct((Some(1), "a", 1.0), (None, "a", 1.0)))
+    lake.optimize("accounts")
+    // the non-null ids are all above the recorded max, but the null key
+    // collides with the stored null key
+    lake.append("accounts", acct((Some(5), "a", 2.0), (None, "a", 2.0)))
+    lake.optimize("accounts")
+    assert(acctRows(lake) == Set((Some(1), "a", 1.0), (None, "a", 2.0), (Some(5), "a", 2.0)))
+  }
+
+  test("gate: a table with no sidecar (written before it existed) still dedupes") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(accounts, "replace")
+    lake.append("accounts", acct((Some(1), "a", 1.0)))
+    lake.optimize("accounts")
+    Files.delete(root.resolve("accounts/_graft_bounds"))
+    lake.append("accounts", acct((Some(1), "a", 2.0)))
+    lake.optimize("accounts")
+    assert(acctRows(lake) == Set((Some(1), "a", 2.0)))
+    assert(!Files.exists(root.resolve("accounts/_graft_bounds")))
+  }
+
+  test("gate: staging left after the marker rolls forward with the same verdict") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(accounts, "replace")
+    lake.append("accounts", acct((Some(1), "a", 1.0))) // collision-free, pending
+    // a regular file where region b's directory goes: the append writes
+    // its marker, then dies moving its files in
+    val blocker = root.resolve("accounts/data/region=b")
+    Files.writeString(blocker, "x")
+    intercept[java.nio.file.FileAlreadyExistsException](
+      lake.append("accounts", acct((Some(1), "b", 2.0))))
+    val staging = root.resolve("accounts/_append_tmp")
+    assert(Files.readString(staging.resolve("_graft_promote")) == "b") // not collision-free
+    Files.delete(blocker)
+    lake.append("accounts", acct((Some(7), "c", 3.0))) // rolls the crashed batch forward
+    assert(!Files.exists(staging))
+    assert(Files.readString(root.resolve("accounts/_pending")).split("\n").toSet ==
+      Set("a\tfree", "b", "c\tfree"))
+    lake.optimize("accounts")
+    assert(acctRows(lake) == Set((Some(1), "b", 2.0), (Some(7), "c", 3.0)))
+  }
+
+  test("gate: create(replace) resets the bound") {
+    val lake = newLake()
+    lake.create(dated, "replace")
+    lake.append("dated", day("2024-06-03", 1.0))
+    lake.create(dated, "replace")
+    // below the old table's max, above the new (empty) table's
+    lake.append("dated", day("2024-01-02", 2.0))
+    assert(optimizeJobs(lake, "dated") == 0)
+    assert(datedRows(lake) == Set(("A", "2024-01-02", 2.0), ("B", "2024-01-02", 2.0)))
+  }
+
+  test("gate: a collision-free partition past the file bound is bin-packed") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(dated, "replace")
+    val part = root.resolve("dated/data/year=2024")
+    def files = Files.list(part).iterator.asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+    val days = Iterator.iterate(java.time.LocalDate.of(2024, 1, 1))(_.plusDays(1))
+      .take(Lake.MaxPartFiles + 1).map(_.toString).toSeq
+    days.foreach { d =>
+      lake.append("dated", day(d, 1.0, Seq("A")))
+      val before = files
+      val jobs = optimizeJobs(lake, "dated")
+      assert((jobs > 0) == (before > Lake.MaxPartFiles), s"$d: $before files, $jobs jobs")
+      assert(files <= Lake.MaxPartFiles)
+    }
+    assert(datedRows(lake) == days.map(d => ("A", d, 1.0)).toSet)
+  }
+
   private val holdKey = Paths.get("/graft-lake-spec-hold")
 
   /** Holds the compactor thread until the returned gate opens, so a

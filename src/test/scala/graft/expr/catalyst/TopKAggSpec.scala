@@ -83,6 +83,22 @@ class TopKAggSpec extends SparkSpec {
     }
   }
 
+  test("topk_structs works as an observed metric") {
+    // an observation's accumulator serializes the expression after use:
+    // the aggregate's generated ordering and projections must not ride
+    // along (they are not serializable)
+    GraftExtensions.register(spark)
+    val rnd = new scala.util.Random(16)
+    val rows = (0 until 300).map(i => (rnd.nextInt(100000), i.toLong))
+    val obs = org.apache.spark.sql.Observation()
+    rows.toDF("r", "i").repartition(4)
+      .observe(obs, call_function("topk_structs", struct(col("r"), col("i")), lit(3)).as("tk"))
+      .write.format("noop").mode("overwrite").save()
+    val got = obs.get("tk").asInstanceOf[Seq[org.apache.spark.sql.Row]]
+      .map(x => (x.getInt(0), x.getLong(1)))
+    assert(got == rows.sorted.take(3))
+  }
+
   test("topk_structs rejects non-positive or non-foldable k") {
     GraftExtensions.register(spark)
     val df = Seq(("g", 1)).toDF("g", "r")

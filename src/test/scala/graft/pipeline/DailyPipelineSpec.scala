@@ -3,6 +3,8 @@ package graft.pipeline
 import java.nio.file.{Files, Path}
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import graft.catalog.Lake
 import graft.connect.FixtureBarSource
@@ -90,6 +92,49 @@ class DailyPipelineSpec extends SparkSpec {
     val total = lake.table("portfolio_weights")
       .filter(col("date") === java.sql.Date.valueOf(end)).agg(sum("weight")).head().getDouble(0)
     assert(math.abs(total - 1.0) < 1e-6, s"weights on $end sum to $total")
+  }
+
+  test("daily on a day that is not a market day writes nothing") {
+    val (root, lake, pipe, stock, etf) = fixture()
+    // a Saturday, and a day before the calendar's first
+    Seq(LocalDate.of(2024, 3, 23), LocalDate.of(2021, 12, 31)).foreach { d =>
+      pipe.daily(d, stock, etf)
+      upserted.foreach { t =>
+        assert(lake.table(t).count() == 0, s"$t: rows written for $d")
+        assert(!Files.exists(root.resolve(s"$t/_pending")), s"$t: appended for $d")
+      }
+    }
+  }
+
+  test("20 daily steps after a backfill keep part files bounded and keys unique") {
+    val (root, lake, pipe, stock, etf) = fixture()
+    val steps = lake.table("calendar").select("date").collect()
+      .map(_.getDate(0).toLocalDate).sortBy(_.toEpochDay).takeRight(20)
+    val b = java.sql.Date.valueOf(steps.head.minusDays(1))
+    pipe.backfill(stock.filter(col("date") <= b), etf.filter(col("date") <= b))
+    /** Part files per partition directory of every upserted table. */
+    def partFiles(): Map[Path, Set[Path]] = upserted.flatMap { t =>
+      val s = Files.walk(root.resolve(s"$t/data"))
+      try s.iterator.asScala.filter(_.getFileName.toString.startsWith("part-")).toList
+      finally s.close()
+    }.groupBy(_.getParent).map { case (d, fs) => d -> fs.toSet }
+    steps.foreach { d =>
+      val before = partFiles()
+      pipe.daily(d, stock, etf)
+      partFiles().foreach { case (dir, fs) =>
+        // the step's own append may land on a partition at the bound
+        val added = (fs -- before.getOrElse(dir, Set.empty)).size
+        assert(fs.size <= Lake.MaxPartFiles + added,
+          s"$d: ${root.relativize(dir)} holds ${fs.size} part files, $added new")
+      }
+    }
+    upserted.foreach { t =>
+      val rows = lake.table(t)
+      val keys = rows.select(lake.meta(t).primaryKeys.map(col): _*).distinct()
+      assert(rows.count() == keys.count(), s"$t: duplicate primary keys")
+      assert(rows.filter(col("date") >= java.sql.Date.valueOf(steps.head))
+        .select("date").distinct().count() == steps.length, s"$t: a step's date is missing")
+    }
   }
 
   test("writeHistory names a table the pipeline does not declare") {

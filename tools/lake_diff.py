@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Compare the rows of every table in two lakes.
 
-Usage: python3 tools/lake_diff.py ROOT_A ROOT_B
+Usage: python3 tools/lake_diff.py [--files] ROOT_A [ROOT_B]
 
 A lake root holds one directory per table: `_graft_meta.json` declares the
 table's columns, and `data/` holds its rows as hive-partitioned Parquet
@@ -12,6 +12,12 @@ ingest-order columns (`_graft_ingest_seq`, `_graft_ingest_sub`) are not
 declared, so they are not compared. Files and directories whose names
 start with `_` or `.` are skipped, as Spark skips them; a table with no
 part files reads as empty.
+
+With `--files`, first print every table's part files in each root: the
+total and the most in any one partition directory (`Lake.optimize`
+bin-packs a partition past a fixed count, so the second number stays
+bounded however many upserts the lake took). With `--files` the second root
+is optional; without one, only the file counts are printed.
 
 Exit status: 0 when every table has the same rows on both sides; 1 when
 any table differs or exists on one side only.
@@ -42,6 +48,22 @@ def part_files(root, table):
     return files
 
 
+def file_counts(root, table):
+    """(part files, the most part files in one partition directory)."""
+    per_dir = {}
+    for f in part_files(root, table):
+        per_dir[os.path.dirname(f)] = per_dir.get(os.path.dirname(f), 0) + 1
+    return sum(per_dir.values()), max(per_dir.values(), default=0)
+
+
+def print_files(roots):
+    for root in roots:
+        for t in sorted(tables(root)):
+            total, most = file_counts(root, t)
+            print(f"[FILES] {root} {t}: {total} part files, "
+                  f"at most {most} in one partition")
+
+
 def rows_sql(files, cols):
     """The declared columns of `files`, or None for a table with no part files."""
     if not files:
@@ -68,9 +90,15 @@ def compare(con, a, b, table):
 
 
 def main(argv):
-    if len(argv) != 3:
+    files = "--files" in argv[1:2]
+    roots = argv[1 + files:]
+    if len(roots) != 2 and not (files and len(roots) == 1):
         sys.exit(__doc__.strip().splitlines()[2])
-    a, b = argv[1], argv[2]
+    if files:
+        print_files(roots)
+        if len(roots) == 1:
+            return 0
+    a, b = roots
     ta, tb = tables(a), tables(b)
     con = duckdb.connect()
     differ = 0
