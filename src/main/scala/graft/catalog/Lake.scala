@@ -31,9 +31,11 @@ import org.apache.spark.sql.types.StructType
   * `append` decides on its one write job (observed aggregates, no extra
   * job) whether its batch is collision-free, i.e. can change no row's
   * dedupe:
-  *   - its primary keys are distinct, checked exactly on the collected
-  *     keys, observed up to [[KeyCap]] rows (a larger batch is not
-  *     collision-free), and
+  *   - its primary keys are distinct, checked exactly by an observed
+  *     aggregate that keeps at most [[KeyCap]] keys (a larger batch, or
+  *     one whose rows are skewed past one write task's share of the cap,
+  *     is not collision-free; a task past its share sends the driver a
+  *     flag, not its keys), and
   *   - some date, timestamp or integral primary-key column has no null in
   *     the batch and a batch minimum above the table's recorded maximum
   *     of that column, so no batch key equals a stored one.
@@ -57,7 +59,7 @@ import org.apache.spark.sql.types.StructType
   * count has passed [[MaxPartFiles]] — and with none of those it clears
   * the ledger without queuing a rewrite or starting a Spark job. Anything
   * the gate does not know (no sidecar, a ledger line without a verdict,
-  * a key type whose collected values it cannot compare exactly) falls
+  * a key type whose stored values it cannot compare exactly) falls
   * back to the rewrite. The one state in which skipping differs from rewriting is a
   * table that already holds one key in two partitions (a key that does
   * not determine its partition, upserted by two separate optimizes): a
@@ -267,8 +269,9 @@ class Lake(spark: SparkSession, root: String) {
     *
     * ONE Spark job per append: the input is written once to a staging
     * directory with `observe()` metrics riding the write — the invariant
-    * violation count and the collision gate's aggregates (row count, key
-    * list, per gate column min, max and null count; see the class doc) —
+    * violation count and the collision gate's aggregates (row count,
+    * bounded key distinctness, per gate column min, max and null count;
+    * see the class doc) —
     * then the files are promoted into the data directory only if the
     * invariant holds. The dirty partitions are the directories the write
     * made in staging ([[ledgerEntry]]). The earlier form ran the
@@ -358,20 +361,25 @@ class Lake(spark: SparkSession, root: String) {
   }
 
   /** The primary-key columns the gate can bound: date, timestamp and
-    * integral ones. None when some key column's collected `Row`
-    * equality may disagree with the dedupe's grouping (floating point's
-    * -0.0 and 0.0, collated strings, nested types): then the distinct
-    * check would not be exact, and no batch is collision-free.
+    * integral ones. None when the batch's key bytes may disagree with the
+    * stored keys' dedupe grouping, so the distinct check would not be
+    * exact and no batch is collision-free:
+    *   - a key column of another type (floating point's -0.0 and 0.0,
+    *     collated strings, nested types);
+    *   - a key column that is also a partition column and whose directory
+    *     name may not read back as the value written: a string one (Spark
+    *     writes "" and null both to the default partition, which reads
+    *     back null) or a timestamp one (the name is a local time, which a
+    *     daylight-saving change repeats).
     */
   private def gateColumns(m: TableMeta): Seq[String] = {
     import org.apache.spark.sql.types._
-    def exact(t: DataType) = t match {
-      case StringType | BooleanType | DateType | TimestampType |
-          ByteType | ShortType | IntegerType | LongType => true
+    def exact(k: String) = m.schema(k).dataType match {
+      case StringType | TimestampType => !m.partitionKeys.contains(k)
+      case BooleanType | DateType | ByteType | ShortType | IntegerType | LongType => true
       case _ => false
     }
-    val types = m.primaryKeys.map(k => m.schema(k).dataType)
-    if (!types.forall(exact)) Nil
+    if (!m.primaryKeys.forall(exact)) Nil
     else m.primaryKeys.filter(k => gateValue(k, m.schema(k).dataType).isDefined)
   }
 
@@ -386,18 +394,20 @@ class Lake(spark: SparkSession, root: String) {
     }
   }
 
-  /** The gate's observed aggregates: row count, the first [[KeyCap]] keys
-    * in key order, and per gate column its min, max and null count.
+  /** The gate's observed aggregates: row count, whether the batch's keys
+    * are distinct within [[KeyCap]] rows (its task results carry at most
+    * KeyCap keys plus one per task, see [[graft.expr.catalyst.DistinctKeysAgg]]),
+    * and per gate column its min, max and null count.
     */
   private def gateMetrics(m: TableMeta, gate: Seq[String]): Seq[Column] =
     if (gate.isEmpty) Nil
     else {
       import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      import org.apache.spark.sql.catalyst.expressions.{CreateStruct, Literal}
-      val keys = graft.expr.catalyst.TopKStructsAgg(
-        CreateStruct(m.primaryKeys.map(UnresolvedAttribute.quoted)), Literal(KeyCap))
+      import org.apache.spark.sql.catalyst.expressions.CreateStruct
+      val keys = graft.expr.catalyst.DistinctKeysAgg(
+        CreateStruct(m.primaryKeys.map(UnresolvedAttribute.quoted)), KeyCap)
       Seq(count(lit(1)).as("_n"), org.apache.spark.sql.graftconf.ExpressionColumn(
-        keys.toAggregateExpression()).as("_keys")) ++
+        keys.toAggregateExpression()).as("_distinct")) ++
         gate.zipWithIndex.flatMap { case (c, i) =>
           val v = gateValue(c, m.schema(c).dataType).get
           Seq(min(v).as(s"_lo$i"), max(v).as(s"_hi$i"),
@@ -410,12 +420,7 @@ class Lake(spark: SparkSession, root: String) {
     */
   private def collisionFree(gate: Seq[String], got: Map[String, Any],
       bound: Map[String, Long]): Boolean = gate.nonEmpty && {
-    val n = got("_n").asInstanceOf[Long]
-    def distinctKeys = {
-      val keys = got("_keys").asInstanceOf[Seq[org.apache.spark.sql.Row]]
-      keys.distinct.size == keys.size
-    }
-    n == 0L || n <= KeyCap && distinctKeys && gate.indices.exists { i =>
+    got("_n") == 0L || got("_distinct") == true && gate.indices.exists { i =>
       got(s"_nul$i") == 0L &&
         bound.get(gate(i)).forall(got(s"_lo$i").asInstanceOf[Long] > _)
     }
@@ -564,13 +569,19 @@ class Lake(spark: SparkSession, root: String) {
 
 private[graft] object Lake {
 
-  /** Rows a batch may hold and still be collision-free: its keys are
-    * observed up to this many, so the distinct check is exact below it.
+  /** Rows a batch may hold and still be collision-free: the distinct
+    * check keeps at most this many keys (plus one per write task) and
+    * sends no more to the driver.
     */
   val KeyCap = 4096
 
   /** Part files a collision-free pending partition may hold before
-    * `optimize` bin-packs it anyway.
+    * `optimize` bin-packs it anyway. It bounds file build-up, not step
+    * time: over 30 nightly steps on a 4-core host, bounds of 8, 16 and
+    * 32 and no bin-pack at all gave the same step times within
+    * run-to-run noise (with no bin-pack a partition reached 117 files),
+    * and a step that bin-packed took no longer than one that did not.
+    * With 16, some table was bin-packed on 11 of 29 steps (8: 21, 32: 6).
     */
   val MaxPartFiles = 16
 }

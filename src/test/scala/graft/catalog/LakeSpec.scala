@@ -8,7 +8,7 @@ import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -358,6 +358,72 @@ class LakeSpec extends SparkSpec {
     val out = lake.table("accounts")
     assert(out.count() == n)
     assert(out.select("id").distinct().count() == n)
+  }
+
+  /** The largest serialized result of a task `body` runs: an observed
+    * metric's partial buffer rides in it to the driver.
+    */
+  private def maxTaskResult(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val max = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(jobKey) == tag)
+          e.stageIds.foreach(stages.add)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          max.accumulateAndGet(e.taskMetrics.resultSize, math.max)
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(jobKey, tag)
+    try {
+      body
+      assert(org.apache.spark.graftbench.ListenerDrain.drain(sc, 30000))
+      max.get
+    } finally {
+      sc.setLocalProperty(jobKey, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("gate: a batch over the row cap over many partitions sends no keys to the driver") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    lake.create(accounts, "replace")
+    def over8(rows: Seq[(Option[Int], String, Double)]) =
+      spark.sparkContext.parallelize(rows, 8).toDF("id", "region", "v")
+    val small = maxTaskResult(lake.append("accounts",
+      over8((1 to 8).map(i => (Option(i), "a", 1.0)))))
+    lake.optimize("accounts")
+    // 1,024 rows per task, past each task's share (KeyCap / 8) though
+    // under KeyCap; id 5 is stored, and id 101 is in the batch twice
+    val n = 2 * Lake.KeyCap
+    val big = over8((5 +: (101 until 100 + n)).map(i => (Option(i), "a", 2.0)) :+
+      ((Option(101), "b", 3.0)))
+    val bigMax = maxTaskResult(lake.append("accounts", big))
+    assert(bigMax < small + 1024, s"task results of $bigMax bytes against $small")
+    assert(Files.readString(root.resolve("accounts/_pending")).split("\n").toSet == Set("a", "b"))
+    lake.optimize("accounts")
+    val out = acctRows(lake)
+    assert(out.size == n + 7)
+    assert(out.contains((Some(5), "a", 2.0)) && out.contains((Some(101), "b", 3.0)))
+    assert(!out.exists(r => r._1.contains(101) && r._2 == "a"))
+  }
+
+  test("gate: a string key that is also a partition column is not gated") {
+    // "" and null both land in the default partition and read back null,
+    // so two keys distinct in the batch are one key once stored
+    val named = TableMeta("named", StructType(Seq(
+      StructField("name", StringType), StructField("id", IntegerType),
+      StructField("v", DoubleType))), Seq("name"), Seq("name", "id"))
+    val lake = newLake()
+    lake.create(named, "replace")
+    lake.append("named", Seq(("", 1, 1.0), (null, 1, 2.0)).toDF("name", "id", "v"))
+    lake.optimize("named")
+    assert(lake.table("named").collect().map(r => (Option(r.getString(0)), r.getInt(1),
+      r.getDouble(2))).toSeq == Seq((None, 1, 2.0)))
   }
 
   test("gate: a null in the gate column still dedupes against a stored null-key row") {
