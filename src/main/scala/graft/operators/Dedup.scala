@@ -233,9 +233,9 @@ object Dedup {
     * compact thing an incremental pipeline PERSISTS about its accepted
     * corpus (a few dozen bytes per doc, vs re-signaturing petabytes on
     * every ingest). Built per row ([[graft.expr.catalyst.MinHashRow]] +
-    * the band digests), zero shuffles; write it bucketed by (band, bkey)
-    * ([[graft.catalog.Bucketed]]) and the incremental probe join below
-    * is exchange-free on the store side.
+    * the band digests), zero shuffles; write it as a Spark bucketed
+    * table on (band, bkey) and the incremental probe join below is
+    * exchange-free on the store side.
     */
   def bandKeys(df: DataFrame, idCol: String, textCol: String, k: Int,
       numHashes: Int, bands: Int): DataFrame = {
@@ -377,10 +377,9 @@ object Dedup {
     * +N²). The 16-bit default is sized for the graded SFs and the
     * probe's 100×; a 10⁸-vector deployment wants ~28–32-bit bands (or
     * the [[graft.operators.Similarity]] IVF route when the workload is
-    * top-k search rather than a pair emit). [[suggestedBandBits]] is
-    * the rule as code, and widths past 63 packed bits RUN: the
-    * implementation switches to per-band keys from the same plane
-    * family (see the branch below).
+    * top-k search rather than a pair emit). Widths past 63 packed bits
+    * RUN: the implementation switches to per-band keys from the same
+    * plane family (see the branch below).
     */
   def embCosinePairs(df: DataFrame, idCol: String, vecCol: String, dim: Int,
       bands: Int, bitsPerBand: Int, threshold: Double,
@@ -440,25 +439,6 @@ object Dedup {
       .select(col("a"), col("b"),
         round(Similarity.dot(col("va"), col("vb")) / (col("na") * col("nb")), 6).as("cos"))
       .filter(col("cos") >= threshold)
-  }
-
-  /** The [[embCosinePairs]] corpus-sizing rule as code: the band width
-    * that holds the random-collision floor (≈ n(n−1)/2 · bands / 2^bits
-    * candidate pairs) at or under `budgetPairs` for an `n`-vector
-    * corpus. Clamped to [8, 62] — below 8 bits the floor exceeds any
-    * sane budget only for toy corpora, above 62 a band key no longer
-    * fits a non-negative long (and at such widths IVF is the better
-    * route). Doubling the corpus adds 2 bits; the budget is the
-    * verification work you are willing to pay in cheap dot products
-    * (e.g. ~10·n keeps verification ∝ corpus).
-    */
-  def suggestedBandBits(n: Long, bands: Int, budgetPairs: Long): Int = {
-    require(n > 1 && bands >= 1 && budgetPairs >= 1,
-      "need a corpus of >= 2, >= 1 band, and a positive pair budget")
-    val need = math.ceil(
-      math.log(n.toDouble * (n - 1) / 2.0 * bands / budgetPairs) /
-        math.log(2.0)).toInt
-    math.min(62, math.max(8, need))
   }
 
   /** SimHash near-dup pairs: band the 60 bits into 4 chunks of 15; pairs
@@ -528,11 +508,11 @@ object Dedup {
     * everything already accepted AND against itself (first occurrence in
     * the batch wins — min id, deterministic). Unlike [[exact]], the
     * accepted corpus is never rescanned: only its digests are, and at
-    * 100 TB the store lives as a digest-bucketed table
-    * ([[graft.catalog.Bucketed]]) so this join is exchange-free on the
-    * store side while the batch — orders of magnitude smaller than the
-    * corpus — pays the only shuffle. Digests of rows labeled `kept` are
-    * the caller's append back to the store.
+    * 100 TB the store lives as a Spark table bucketed on digest, so
+    * this join is exchange-free on the store side while the batch —
+    * orders of magnitude smaller than the corpus — pays the only
+    * shuffle. Digests of rows labeled `kept` are the caller's append
+    * back to the store.
     *
     * @param seenDigests one column `digest` (md5 hex of accepted text)
     * @return (id, digest, status): status ∈ kept | dup_of_store |

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * `blockCols` (e.g. a source/domain column, a first-token key, a
   * q-gram-count band) that compose into the bucket key; at 100 TB you
   * block on (length band, cheap content key) exactly like the LSH band
-  * joins, and [[Skew.saltedJoin]] handles residual hot buckets.
+  * joins.
   */
 object Fuzzy {
 

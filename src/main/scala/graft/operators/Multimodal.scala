@@ -5,30 +5,22 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video ride along as opaque
-  * `binary` payloads with typed metadata; decode / feature-extraction /
-  * resize / frame-sampling run per-partition over the binary column.
+  * `binary` payloads with typed metadata, and feature extraction runs
+  * per-partition over the binary column.
   *
   * [[decodeFeatures]] is a REAL decode path for images: payloads whose
-  * magic bytes say PNG or JPEG are decoded with `javax.imageio` (in
-  * every JDK — no extra dependency) into width/height/pixel statistics
-  * plus a normalized luminance histogram. [[resizePayload]] really
-  * rescales decodable images (Graphics2D bilinear + PNG re-encode;
-  * animated GIFs frame-by-frame with disposal compositing, delays and
-  * loop count preserved) and [[sampleFrames]] really extracts frames
-  * from multi-frame GIFs.
+  * magic bytes say PNG, JPEG or GIF are decoded (first frame) with
+  * `javax.imageio` (in every JDK — no extra dependency) into
+  * width/height/pixel statistics plus a normalized luminance histogram.
   * Payloads of any other modality (audio/video codecs genuinely absent
-  * here, plain text) fall back to deterministic byte-level forms — the
+  * here, plain text) fall back to a normalized byte histogram — the
   * same output shape, so downstream schema does not fork on modality.
   * The Spark-side contract is the 100 TB-relevant part either way:
   * payload bytes never hit the driver, each partition streams its rows
-  * once, and results come back columnar.
+  * once, and results come back columnar. [[frameSamples]] is the
+  * SQL-expressible frame slice over a text column.
   */
-// Serializable: resizePayload's mapPartitions closure calls resizeGif
-// with default arguments, and scalac materializes default-getter calls
-// through a captured module reference — task closures then carry the
-// module (deserialized back to the MODULE$ singleton via the standard
-// readResolve, so this costs nothing and shares no state)
-object Multimodal extends Serializable {
+object Multimodal {
 
   /** Wrap a text/bytes source as a multimodal asset table. */
   def asAssets(df: DataFrame, idCol: String, payload: org.apache.spark.sql.Column,
@@ -69,75 +61,35 @@ object Multimodal extends Serializable {
 
   /** Full image decode behind a HEADER-ONLY dimension guard: the reader
     * parses just the container header for width/height (no raster
-    * allocation), the product is checked against `maxPixels`, and only
-    * then is the raster decoded. None for non-image magic, unreadable
-    * containers, or over-cap declarations — the caller falls back to
-    * the opaque path rather than failing the task, because at corpus
-    * scale some payloads ARE hostile or corrupt and a poison row must
-    * not kill a 100-partition stage.
+    * allocation), the product is checked against [[maxDecodePixels]],
+    * and only then is the raster decoded. None for non-image magic,
+    * unreadable containers, or over-cap declarations — the caller falls
+    * back to the opaque path rather than failing the task, because at
+    * corpus scale some payloads ARE hostile or corrupt and a poison row
+    * must not kill a 100-partition stage. Only frame 0 is read, so the
+    * stream is seek-forward-only.
     */
-  /** The one place that owns ImageIO reader scaffolding (input stream,
-    * reader lookup, setInput, dispose/close, catch-Exception): both the
-    * still-image path and the GIF frame path run their body through it,
-    * so a fix to reader lifecycle or the catch policy lands once.
-    * `seekForwardOnly` is the only knob the two paths differ on.
-    */
-  private def withImageReader[T](bytes: Array[Byte], seekForwardOnly: Boolean)(
-      f: javax.imageio.ImageReader => Option[T]): Option[T] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (readers == null || !readers.hasNext) None
-        else {
-          val reader = readers.next()
-          try {
-            reader.setInput(iis, seekForwardOnly, true)
-            f(reader)
-          } finally reader.dispose()
-        }
-      } finally iis.close()
-    } catch { case _: Exception => None }
-
-  /** Declared frame dimensions pass the pixel cap (header-only — no
-    * raster allocation happens before this check).
-    */
-  private def frameWithinCap(reader: javax.imageio.ImageReader, i: Int,
-      maxPixels: Long): Boolean = {
-    val w = reader.getWidth(i).toLong
-    val h = reader.getHeight(i).toLong
-    w > 0 && h > 0 && w * h <= maxPixels
-  }
-
-  /** The GIF's DISPLAYED extent: the max patch extent (offset + size)
-    * across all frames, metadata-only — no raster decode. Frame 0 alone
-    * under-reports whenever a later patch extends the logical screen,
-    * and header-declared screen sizes can under-report too, so patches
-    * define the answer (the same computation [[resizeGif]] composites
-    * on). None when unreadable or over `maxFrames` — callers treat that
-    * as pass-through-ineligible and let resizeGif decide.
-    */
-  private def gifScreenExtent(bytes: Array[Byte],
-      maxFrames: Int = maxResizeGifFrames): Option[(Int, Int)] =
-    withImageReader(bytes, seekForwardOnly = false) { reader =>
-      val n = reader.getNumImages(true)
-      if (n <= 0 || n > maxFrames) None
-      else {
-        val metas = (0 until n).map(gifFrameMeta(reader, _))
-        Some(((0 until n).map(i => metas(i).x + reader.getWidth(i)).max,
-          (0 until n).map(i => metas(i).y + reader.getHeight(i)).max))
-      }
-    }
-
-  private[operators] def readImage(bytes: Array[Byte],
-      maxPixels: Long = maxDecodePixels)
+  private[operators] def readImage(bytes: Array[Byte])
       : Option[(String, java.awt.image.BufferedImage)] =
     imageKind(bytes).flatMap { kind =>
-      withImageReader(bytes, seekForwardOnly = true) { reader =>
-        if (!frameWithinCap(reader, 0, maxPixels)) None
-        else Option(reader.read(0)).map((kind, _))
-      }
+      try {
+        val iis = javax.imageio.ImageIO.createImageInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        try {
+          val readers = javax.imageio.ImageIO.getImageReaders(iis)
+          if (readers == null || !readers.hasNext) None
+          else {
+            val reader = readers.next()
+            try {
+              reader.setInput(iis, true, true)
+              val w = reader.getWidth(0).toLong
+              val h = reader.getHeight(0).toLong
+              if (w <= 0 || h <= 0 || w * h > maxDecodePixels) None
+              else Option(reader.read(0)).map((kind, _))
+            } finally reader.dispose()
+          }
+        } finally iis.close()
+      } catch { case _: Exception => None }
     }
 
   /** Rec. 601 luma statistics over the ARGB pixels: normalized
@@ -238,431 +190,9 @@ object Multimodal extends Serializable {
     }
   }
 
-  /** REAL image resize, mapPartitions form: STILL payloads that decode
-    * (PNG/JPEG behind the [[readImage]] dimension guard) and exceed the
-    * `imageBox` bounding square are rescaled with a bilinear
-    * `Graphics2D` transform to fit the box (aspect preserved, never
-    * upscaled, alpha preserved) and re-encoded as PNG — the lossless
-    * JDK-native codec, so a resized payload re-decodes through
-    * [[decodeFeatures]] with the target dimensions. GIF payloads whose
-    * frame 0 exceeds the box (or whose bytes exceed the image ceiling)
-    * take the MULTI-FRAME path ([[resizeGif]]): frames composited per
-    * the GIF disposal semantics, each composite box-fit, the animation
-    * re-encoded with per-frame delays and loop count preserved. A GIF
-    * resizeGif declines (more than [[maxResizeGifFrames]] frames, over
-    * the summed pixel budget, poison frame) rides through untransformed
-    * — the documented unbounded escape, narrowed to ineligible
-    * containers.
-    *
-    * The size contract for the bounded modalities:
-    *   - image rows are bounded by the BOX — at most
-    *     `max(targetBytes, ~4·imageBox² + slack)` bytes, the cost of a
-    *     lossless encode of a box-fit raster. An in-box image bloated
-    *     past that ceiling (ancillary chunks can carry megabytes on a
-    *     tiny raster) is re-encoded at its own dimensions, stripping
-    *     the bloat, instead of riding through byte-identical; only
-    *     in-box images under the ceiling pass through untouched. A
-    *     strided byte cap would be garbage-not-an-image, so it is the
-    *     last resort only when no box down to 8px encodes under the
-    *     ceiling.
-    *   - resized GIF rows are bounded by the box TIMES the frame cap
-    *     (palettized frames at ≤ box² pixels each, at most
-    *     maxResizeGifFrames of them); only resize-ineligible GIFs keep
-    *     their source size.
-    *   - non-image payloads (and images the guard refuses) take the
-    *     opaque fallback: a strided byte downsample to at most
-    *     `targetBytes` (pass-through when already small enough) — a
-    *     size cap, not an image operation, kept for schema parity
-    *     across modalities.
-    */
-  def resizePayload(assets: DataFrame, targetBytes: Int,
-      imageBox: Int = 256): DataFrame = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    require(imageBox > 0, "imageBox must be positive")
-    val fields = assets.schema.fields.map {
-      case f if f.name == "payload" => f.copy(dataType = BinaryType)
-      case f => f
-    }
-    val schema = StructType(fields)
-    implicit val enc = Encoders.row(schema)
-    val pIdx = assets.schema.fieldIndex("payload")
-
-    def strided(bytes: Array[Byte]): Array[Byte] =
-      if (bytes.length <= targetBytes) bytes
-      else {
-        val res = new Array[Byte](targetBytes)
-        var i = 0
-        while (i < targetBytes) {
-          res(i) = bytes((i.toLong * bytes.length / targetBytes).toInt)
-          i += 1
-        }
-        res
-      }
-
-    // PNG re-encode of the box-fit rescale ([[scaleToBox]]). None when
-    // ImageIO has no PNG writer (cannot happen on a stock JDK, but the
-    // fallback must exist).
-    def encodeScaled(img: java.awt.image.BufferedImage, box: Int): Option[Array[Byte]] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      if (javax.imageio.ImageIO.write(scaleToBox(img, box), "png", bos))
-        Some(bos.toByteArray)
-      else None
-    }
-
-    // the IMAGE-path size bound: what a ≤box×box raster can cost as a
-    // lossless PNG (raw RGB + filter/zlib/header slack), or targetBytes
-    // if that is larger. An in-box image under this ceiling passes
-    // through; one bloated past it (ancillary chunks can be arbitrary
-    // megabytes on a tiny raster) is re-encoded at its own dimensions,
-    // which strips the bloat — so every image row is bounded by the BOX,
-    // not by whatever the source container carried
-    val imageByteCeiling =
-      math.max(targetBytes.toLong, 4L * imageBox * imageBox + 4096L)
-
-    assets.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.map { r =>
-        val bytes = r.getAs[Array[Byte]](pIdx)
-        val out =
-          if (bytes == null) null
-          else readImage(bytes) match {
-            // GIFs take the MULTI-FRAME path: every frame composited
-            // per the disposal semantics, box-fit, and re-encoded as an
-            // animated GIF with delays and loop count preserved — a
-            // frame-0 still would silently discard animation, which is
-            // corruption, not resizing. When resizeGif declines (frame
-            // count past the re-encode buffer cap, pixel budget, poison
-            // frame), the payload rides through UNTRANSFORMED — never
-            // strided (the documented unbounded escape, now narrowed to
-            // the ineligible containers only)
-            case Some(("gif", _)) =>
-              // eligibility on the DISPLAYED extent across ALL frames
-              // (gifScreenExtent), not frame 0: an animated GIF whose
-              // frame 0 is a small patch but whose later patches extend
-              // the logical screen past the box must be resized, or the
-              // size contract would bound only the first frame
-              val inBox = gifScreenExtent(bytes).exists { case (sw, sh) =>
-                sw <= imageBox && sh <= imageBox }
-              if (inBox && bytes.length <= imageByteCeiling) bytes
-              else resizeGif(bytes, imageBox).getOrElse(bytes)
-            case Some((_, img)) =>
-              if (img.getWidth <= imageBox && img.getHeight <= imageBox &&
-                  bytes.length <= imageByteCeiling) bytes
-              else {
-                var box = imageBox
-                var res = encodeScaled(img, box).getOrElse(strided(bytes))
-                // belt-and-suspenders: the box-fit PNG is ≤ the ceiling
-                // by construction; if an encoder surprise exceeds it
-                // anyway, halve the box (floor 8px) before giving up to
-                // the opaque cap — an image row must stay a valid image
-                // wherever one can be encoded
-                while (res.length > imageByteCeiling && box > 8) {
-                  box /= 2
-                  res = encodeScaled(img, box).getOrElse(res)
-                }
-                if (res.length <= imageByteCeiling) res else strided(res)
-              }
-            case None => strided(bytes)
-          }
-        Row.fromSeq(r.toSeq.updated(pIdx, out))
-      }
-    }
-  }
-
-  /** Bilinear rescale to fit the `box` bounding square (aspect
-    * preserved, never upscaled), in ARGB when the source carries alpha —
-    * flattening transparency to an RGB raster would black-fill it, which
-    * is data corruption, not resizing. Always allocates a NEW image
-    * (callers composite onto mutable canvases).
-    */
-  private[operators] def scaleToBox(img: java.awt.image.BufferedImage,
-      box: Int): java.awt.image.BufferedImage = {
-    val w = img.getWidth; val h = img.getHeight
-    val scale = math.min(1.0, box.toDouble / math.max(w, h))
-    val tw = math.max(1, math.round(w * scale).toInt)
-    val th = math.max(1, math.round(h * scale).toInt)
-    val out = new java.awt.image.BufferedImage(tw, th,
-      if (img.getColorModel.hasAlpha)
-        java.awt.image.BufferedImage.TYPE_INT_ARGB
-      else java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val g = out.createGraphics()
-    try {
-      g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-      g.drawImage(img, 0, 0, tw, th, null)
-    } finally g.dispose()
-    out
-  }
-
-  /** One GIF frame's geometry + timing from the ImageIO metadata tree:
-    * patch offsets (frames may be sub-rect patches of the logical
-    * screen), graphic-control delay (centiseconds) and disposal method.
-    */
-  private final case class GifFrameMeta(
-      x: Int, y: Int, delayCs: Int, disposal: String)
-
-  private def gifFrameMeta(reader: javax.imageio.ImageReader,
-      i: Int): GifFrameMeta = {
-    val root = reader.getImageMetadata(i)
-      .getAsTree("javax_imageio_gif_image_1.0")
-      .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-    def first(tag: String): Option[javax.imageio.metadata.IIOMetadataNode] = {
-      val ns = root.getElementsByTagName(tag)
-      if (ns.getLength > 0)
-        Some(ns.item(0).asInstanceOf[javax.imageio.metadata.IIOMetadataNode])
-      else None
-    }
-    def intAttr(n: javax.imageio.metadata.IIOMetadataNode, a: String): Int =
-      n.getAttribute(a).toIntOption.getOrElse(0)
-    val (x, y) = first("ImageDescriptor")
-      .map(d => (intAttr(d, "imageLeftPosition"), intAttr(d, "imageTopPosition")))
-      .getOrElse((0, 0))
-    val (delay, disposal) = first("GraphicControlExtension")
-      .map(g => (intAttr(g, "delayTime"),
-        Option(g.getAttribute("disposalMethod")).filter(_.nonEmpty)
-          .getOrElse("none")))
-      .getOrElse((0, "none"))
-    GifFrameMeta(x, y, delay, disposal)
-  }
-
-  /** Frames an animated GIF re-encode may buffer: the resize holds one
-    * logical-screen canvas plus every SCALED frame (≤ ~4·box² bytes
-    * each), so the cap bounds re-encode memory; a GIF past it rides
-    * through untransformed (the documented escape — truncating frames
-    * would be corruption, not resizing).
-    */
-  private[operators] val maxResizeGifFrames = 64
-
-  /** Multi-frame GIF resize: composites each frame patch onto the
-    * logical screen per the GIF disposal semantics (none/doNotDispose
-    * accumulate; restoreToBackgroundColor clears the patch rect;
-    * restoreToPrevious restores the pre-frame canvas), box-fits every
-    * composited frame ([[scaleToBox]]), and re-encodes an animated GIF
-    * that preserves frame count, per-frame delays, and the source's
-    * ApplicationExtensions (NETSCAPE loop count). Written frames are
-    * FULL logical screens with disposal restoreToBackgroundColor —
-    * compositing is resolved at re-encode, trading the source's patch
-    * optimization for fidelity of what each frame DISPLAYS.
-    *
-    * None (caller passes the payload through) when: not a readable GIF,
-    * zero or more than `maxFrames` frames, the SUMMED frame pixels
-    * exceed `maxPixels` (one budget for the whole container — total
-    * decode work stays bounded exactly like a still's), the composited
-    * logical screen exceeds it, or the platform has no GIF writer.
-    * A frame that fails mid-decode aborts to None rather than emitting
-    * an animation with silently missing frames.
-    */
-  private[operators] def resizeGif(bytes: Array[Byte], box: Int,
-      maxFrames: Int = maxResizeGifFrames,
-      maxPixels: Long = maxDecodePixels): Option[Array[Byte]] =
-    imageKind(bytes).filter(_ == "gif").flatMap { _ =>
-      // seekForwardOnly=false: getNumImages(true) scans the stream and
-      // the compositing pass then re-reads frames in order
-      withImageReader(bytes, seekForwardOnly = false) { reader =>
-        val n = reader.getNumImages(true)
-        val dims =
-          if (n <= 0 || n > maxFrames) None
-          else Some((0 until n).map(i =>
-            (reader.getWidth(i).toLong, reader.getHeight(i).toLong)))
-        dims.filter { ds =>
-          ds.forall { case (w, h) => w > 0 && h > 0 } &&
-            ds.map { case (w, h) => w * h }.sum <= maxPixels
-        }.flatMap { _ =>
-          val metas = (0 until n).map(gifFrameMeta(reader, _))
-          // logical screen = max patch extent (header-declared screen
-          // sizes can under-report; patches define what is displayed)
-          val sw = (0 until n).map(i => metas(i).x + reader.getWidth(i)).max
-          val sh = (0 until n).map(i => metas(i).y + reader.getHeight(i)).max
-          if (sw.toLong * sh > maxPixels) None
-          else try {
-            val canvas = new java.awt.image.BufferedImage(sw, sh,
-              java.awt.image.BufferedImage.TYPE_INT_ARGB)
-            val scaled = (0 until n).map { i =>
-              val patch = reader.read(i) // poison frame -> catch below
-              val before =
-                if (metas(i).disposal == "restoreToPrevious") {
-                  val c = new java.awt.image.BufferedImage(sw, sh,
-                    java.awt.image.BufferedImage.TYPE_INT_ARGB)
-                  val g = c.createGraphics()
-                  try g.drawImage(canvas, 0, 0, null) finally g.dispose()
-                  c
-                } else null
-              val g = canvas.createGraphics()
-              try g.drawImage(patch, metas(i).x, metas(i).y, null)
-              finally g.dispose()
-              val frame = scaleToBox(canvas, box)
-              metas(i).disposal match {
-                case "restoreToBackgroundColor" =>
-                  val g2 = canvas.createGraphics()
-                  try {
-                    g2.setComposite(java.awt.AlphaComposite.Clear)
-                    g2.fillRect(metas(i).x, metas(i).y,
-                      patch.getWidth, patch.getHeight)
-                  } finally g2.dispose()
-                case "restoreToPrevious" =>
-                  val g2 = canvas.createGraphics()
-                  try {
-                    g2.setComposite(java.awt.AlphaComposite.Src)
-                    g2.drawImage(before, 0, 0, null)
-                  } finally g2.dispose()
-                case _ => () // none / doNotDispose: accumulate
-              }
-              frame
-            }
-            // the source's ApplicationExtensions (NETSCAPE loop count),
-            // rebuilt node-by-node for the writer's tree
-            val appExts = {
-              val exts = reader.getImageMetadata(0)
-                .getAsTree("javax_imageio_gif_image_1.0")
-                .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-                .getElementsByTagName("ApplicationExtension")
-              (0 until exts.getLength).map { k =>
-                val e = exts.item(k)
-                  .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-                (e.getAttribute("applicationID"),
-                  e.getAttribute("authenticationCode"), e.getUserObject)
-              }
-            }
-            val writers =
-              javax.imageio.ImageIO.getImageWritersByFormatName("gif")
-            if (!writers.hasNext) None
-            else {
-              val writer = writers.next()
-              val bos = new java.io.ByteArrayOutputStream()
-              val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-              try {
-                writer.setOutput(ios)
-                writer.prepareWriteSequence(null)
-                scaled.zipWithIndex.foreach { case (frame, i) =>
-                  val spec = javax.imageio.ImageTypeSpecifier
-                    .createFromRenderedImage(frame)
-                  val md = writer.getDefaultImageMetadata(spec,
-                    writer.getDefaultWriteParam)
-                  val fmt = "javax_imageio_gif_image_1.0"
-                  val root = md.getAsTree(fmt)
-                    .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-                  val gce = new javax.imageio.metadata.IIOMetadataNode(
-                    "GraphicControlExtension")
-                  gce.setAttribute("disposalMethod", "restoreToBackgroundColor")
-                  gce.setAttribute("userInputFlag", "FALSE")
-                  gce.setAttribute("transparentColorFlag", "FALSE")
-                  gce.setAttribute("delayTime", metas(i).delayCs.toString)
-                  gce.setAttribute("transparentColorIndex", "0")
-                  root.appendChild(gce)
-                  if (i == 0 && appExts.nonEmpty) {
-                    val exts = new javax.imageio.metadata.IIOMetadataNode(
-                      "ApplicationExtensions")
-                    appExts.foreach { case (id, auth, payload) =>
-                      val e = new javax.imageio.metadata.IIOMetadataNode(
-                        "ApplicationExtension")
-                      e.setAttribute("applicationID", id)
-                      e.setAttribute("authenticationCode", auth)
-                      e.setUserObject(payload)
-                      exts.appendChild(e)
-                    }
-                    root.appendChild(exts)
-                  }
-                  md.setFromTree(fmt, root)
-                  writer.writeToSequence(
-                    new javax.imageio.IIOImage(frame, null, md), null)
-                }
-                writer.endWriteSequence()
-              } finally {
-                try ios.close() finally writer.dispose()
-              }
-              Some(bos.toByteArray)
-            }
-          } catch { case _: Exception => None }
-        }
-      }
-    }
-
-  /** Per-frame stats of a multi-frame GIF: (frame index, width, height,
-    * mean luminance) for each requested index that exists and decodes.
-    * Frames are index-selected `ImageReader.read(i)` calls — the reader
-    * decodes each raw frame raster (no disposal compositing; sampling
-    * reads frames, it does not replay the animation). Every frame
-    * passes the same declared-dimension guard as [[readImage]], and a
-    * frame that fails mid-decode is SKIPPED, not fatal: one truncated
-    * frame must not discard siblings that already decoded, nor flip a
-    * readable GIF to the opaque path. None only when the payload is not
-    * a readable GIF at all; a readable GIF where no requested frame
-    * survives returns Some(empty) — zero rows downstream, never a
-    * mislabeled "opaque". `indices` are used as given (the caller
-    * pre-normalizes to distinct+sorted once, off the per-row hot path).
-    */
-  private[operators] def gifFrameStats(bytes: Array[Byte], indices: Seq[Int],
-      maxPixels: Long = maxDecodePixels): Option[Seq[(Int, Int, Int, Double)]] =
-    imageKind(bytes).filter(_ == "gif").flatMap { _ =>
-      // seekForwardOnly=false: getNumImages(true) must scan the whole
-      // stream, and read(i) may then revisit earlier frames
-      withImageReader(bytes, seekForwardOnly = false) { reader =>
-        val n = reader.getNumImages(true)
-        Some(indices.filter(i => i >= 0 && i < n).flatMap { i =>
-          try {
-            if (!frameWithinCap(reader, i, maxPixels)) None
-            else Option(reader.read(i)).map { img =>
-              val (_, mean, _) = lumStats(img, 2)
-              (i, img.getWidth, img.getHeight, mean)
-            }
-          } catch { case _: Exception => None } // poison frame: skip it
-        })
-      }
-    }
-
-  /** REAL frame sampling over the binary payload column, mapPartitions
-    * form: GIF payloads yield one row per requested frame index that
-    * exists (`kind` "gif", real per-frame width/height/mean_lum from
-    * index-selected `ImageReader.read(i)`, `sample_hex` null); any
-    * other payload falls back to deterministic byte slices (`kind`
-    * "opaque", null dims, `sample_hex` = the hex of `sliceWidth` bytes
-    * at offset index·sliceWidth) so the output schema never forks on
-    * modality. Single-frame PNG/JPEG payloads are "opaque" here by
-    * design — frame sampling is a multi-frame operation; use
-    * [[decodeFeatures]] for stills.
-    */
-  def sampleFrames(assets: DataFrame, indices: Seq[Int],
-      sliceWidth: Int = 16): DataFrame = {
-    require(indices.nonEmpty, "at least one frame index required")
-    require(sliceWidth > 0, "sliceWidth must be positive")
-    val schema = StructType(Seq(
-      StructField("asset_id", assets.schema("asset_id").dataType, nullable = false),
-      StructField("frame_idx", IntegerType, nullable = false),
-      StructField("kind", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("mean_lum", DoubleType, nullable = true),
-      StructField("sample_hex", StringType, nullable = true)))
-    implicit val enc = Encoders.row(schema)
-    val idIdx = assets.schema.fieldIndex("asset_id")
-    val pIdx = assets.schema.fieldIndex("payload")
-    val idxList = indices.distinct.sorted
-    assets.mapPartitions { rows =>
-      javax.imageio.ImageIO.setUseCache(false)
-      rows.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](pIdx)
-        if (bytes == null) Iterator.empty
-        else gifFrameStats(bytes, idxList) match {
-          case Some(frames) =>
-            frames.iterator.map { case (i, w, h, mean) =>
-              Row(r.get(idIdx), i, "gif", w, h, mean, null)
-            }
-          case None =>
-            idxList.iterator.map { i =>
-              val from = math.min(bytes.length, i.toLong * sliceWidth).toInt
-              val until = math.min(bytes.length.toLong, from.toLong + sliceWidth).toInt
-              val hx = bytes.slice(from, until).map("%02x".format(_)).mkString
-              Row(r.get(idIdx), i, "opaque", null, null, null, hx)
-            }
-        }
-      }
-    }
-  }
-
   /** Deterministic TEXT frame slices: fixed-offset substrings of a text
     * column, hex-encoded — the SQL-expressible sampling shape (oracle-
-    * mirrored by `m1_multimodal_stats`). For real multi-frame media use
-    * [[sampleFrames]] on the binary payload.
+    * mirrored by `m1_multimodal_stats`).
     */
   def frameSamples(df: DataFrame, textCol: String, offsets: Seq[Int], width: Int): DataFrame =
     offsets.foldLeft(df) { (d, off) =>

@@ -21,19 +21,6 @@ object Sampling {
   /** Membership bucket in [0, 1e6): uniform over the key's hash. */
   def bucket(key: Column): Column = Dedup.hash60("sample", key.cast("string")) % Buckets
 
-  /** Keep rows whose key hashes below `fraction` of the bucket space —
-    * a deterministic, engine-portable Bernoulli sample. Narrow (no
-    * shuffle): the filter sits on the scan and prunes at full scan speed.
-    */
-  def hashSample(df: DataFrame, keyCol: String, fraction: Double): DataFrame = {
-    require(fraction >= 0.0 && fraction <= 1.0, "fraction must be in [0,1]")
-    df.filter(bucket(col(keyCol)) < (fraction * Buckets).toLong)
-  }
-
-  /** Per-stratum rates: rows keep membership by their stratum's fraction
-    * (strata absent from `rates` get `defaultFraction`). The rates map is
-    * a literal CASE expression — no join, still a narrow scan-side filter.
-    */
   /** Deterministic weighted sample WITHOUT replacement of `n` rows
     * (Efraimidis & Spirakis 2006, A-Res): each row draws a reproducible
     * uniform u from its key's hash and ranks by u^(1/weight) — rows with
@@ -72,6 +59,12 @@ object Sampling {
         .orderBy(col("_wskey").desc, col(keyCol).asc)).cast("long"))
   }
 
+  /** Per-stratum hash sample: a row is kept when its key's [[bucket]]
+    * falls below its stratum's fraction of the bucket space (strata
+    * absent from `rates` get `defaultFraction`) — a deterministic,
+    * engine-portable Bernoulli sample. The rates map is a literal CASE
+    * expression: no join, no shuffle, a narrow scan-side filter.
+    */
   def stratifiedSample(df: DataFrame, keyCol: String, stratumCol: Column,
       rates: Map[String, Double], defaultFraction: Double): DataFrame = {
     require((defaultFraction +: rates.values.toSeq).forall(f => f >= 0.0 && f <= 1.0),

@@ -224,7 +224,7 @@ object NearDup {
     // WIDE-band SRP near-dup (3 bands x 28 bits = 84 plane bits, past
     // the 63-bit packed-long ceiling): the same planted corpus and
     // threshold as d5b through embCosinePairs' per-band-key branch —
-    // the configuration the corpus-sizing rule (suggestedBandBits)
+    // the configuration embCosinePairs' corpus-sizing rule
     // prescribes for ~10^8-vector deployments, where 16-bit bands'
     // N²·bands/2^bits collision floor goes super-linear (measured:
     // d5b's shuffle 8→70→545 MB at 10/30/100×). At 28 bits the floor

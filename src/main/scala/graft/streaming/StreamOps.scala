@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Batch/streaming parity: `hourlyRollup` uses the identical expressions
   * as the batch `e1_hourly_rollup` query; `Sessionize` reproduces the
   * `e2_sessionize` gap semantics with `flatMapGroupsWithState`;
-  * `StreamingReturns` is W1 (`pct_change`) as per-key streaming state.
+  * `streamingNearDedup` emits the batch `simHashPairs` set online.
   */
 object StreamOps {
 
@@ -143,7 +143,7 @@ object StreamOps {
         // flush the open session but KEEP the counter as a dormant
         // (n = 0) marker: removing state would restart session_id at 1
         // and emit duplicate (user_id, session_id) keys. The marker is
-        // O(1) per user — the same state bound streamingReturns carries.
+        // O(1) per user.
         state.update(SessionState(cur.sessionId, 0L, 0L, 0L, 0L))
       return out.iterator
     }
@@ -181,120 +181,7 @@ object StreamOps {
     closed.reverse.iterator
   }
 
-  final case class Bar(ticker: String, ts: Timestamp, close: Double)
-  final case class Return(ticker: String, ts: Timestamp, ret: Double)
-  final case class KeyedValue(key: String, ts: Timestamp, value: Double)
-  final case class EwmaOut(key: String, ts: Timestamp, ewma: Double)
-  final case class EwmaState(num: Double, den: Double)
-  final case class SignalOut(key: String, ts: Timestamp, signal: Double)
-  final case class WindowState(recent: Seq[Double])
-
-  /** W2 as a stream: the masked trailing rolling log1p-sum, negated (the
-    * reversal signal), with a per-key ring of the last `lookback` values.
-    * Rows emit only once the window is full — the streaming form of the
-    * batch mask (`min_samples = window`), where pre-window rows are null
-    * and dropped. The sum is recomputed from the buffer per emit, so no
-    * floating drift accumulates relative to the batch expression.
-    */
-  def streamingReversalSignal(returns: Dataset[KeyedValue],
-      lookback: Int): Dataset[SignalOut] = {
-    require(lookback >= 1,
-      s"lookback must be >= 1, got $lookback (0 would emit a -0.0 signal per row)")
-    import returns.sparkSession.implicits._
-    def update(key: String, rows: Iterator[KeyedValue],
-        state: GroupState[WindowState]): Iterator[SignalOut] = {
-      var buf = state.getOption.map(_.recent.toVector).getOrElse(Vector.empty)
-      val out = scala.collection.mutable.ArrayBuffer[SignalOut]()
-      // total order incl. value: see streamingEwma
-      rows.toSeq.sortBy(r => (r.ts.getTime, r.value)).foreach { r =>
-        buf = (buf :+ math.log1p(r.value)).takeRight(lookback)
-        if (buf.length == lookback) out += SignalOut(key, r.ts, -buf.sum)
-      }
-      state.update(WindowState(buf))
-      out.iterator
-    }
-    returns.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
-  }
-
-  /** W4 as a stream: the polars `ewm_mean(half_life, adjust=True)`
-    * recurrence with two doubles of state per key — the streaming form of
-    * [[graft.expr.Ewma.ewmaMean]] (identical fold; batches must arrive
-    * time-ordered per key, as the micro-batch source of the daily
-    * price→signal chain does).
-    */
-  def streamingEwma(values: Dataset[KeyedValue], halfLife: Double): Dataset[EwmaOut] = {
-    import values.sparkSession.implicits._
-    val decay = 1.0 - graft.expr.Ewma.alphaFromHalfLife(halfLife)
-    def update(key: String, rows: Iterator[KeyedValue],
-        state: GroupState[EwmaState]): Iterator[EwmaOut] = {
-      var s = state.getOption.getOrElse(EwmaState(0.0, 0.0))
-      // (ts, value) sort: batch iteration order after the shuffle is
-      // nondeterministic, and the fold is order-dependent — equal-ts rows
-      // need a total order for reruns to agree (equal (ts,value) rows are
-      // interchangeable in the fold)
-      val out = rows.toSeq.sortBy(v => (v.ts.getTime, v.value)).map { v =>
-        s = EwmaState(v.value + decay * s.num, 1.0 + decay * s.den)
-        EwmaOut(key, v.ts, s.num / s.den)
-      }
-      state.update(s)
-      out.iterator
-    }
-    values.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
-  }
-
   final case class Doc(doc_id: Long, ts: Timestamp, text: String)
-  final case class DocKeyed(doc_id: Long, ts: Timestamp, text: String, digest: String)
-  final case class DedupedDoc(doc_id: Long, ts: Timestamp, text: String, digest: String)
-
-  /** D1 as a stream: exact dedup on the text digest across micro-batches,
-    * carrying the full payload through (it IS the ingest prefilter — the
-    * deduped document continues into the lake, where the batch
-    * [[graft.operators.Dedup.exact]] compaction is the global form).
-    *
-    * Deterministic within a batch: when duplicates land in the same
-    * micro-batch, the row with the minimum (ts, doc_id) survives — a
-    * rerun of the batch emits the same winner, unlike
-    * `dropDuplicatesWithinWatermark`, whose survivor depends on partition
-    * processing order. Across batches, first batch wins (an unbounded
-    * stream has no global min to pick).
-    *
-    * State is one boolean per distinct digest, expired by event-time
-    * timeout `watermark` past the last occurrence, so it is bounded by
-    * the distinct-doc rate times the horizon. Exactness trade: a
-    * duplicate arriving after its digest's state expired re-emits; the
-    * lake compaction behind this operator removes those globally.
-    */
-  def streamingExactDedup(docs: Dataset[Doc],
-      watermark: String = "1 hour"): Dataset[DedupedDoc] = {
-    import docs.sparkSession.implicits._
-    val horizonMs = parseDurationMs(watermark)
-    def update(digest: String, rows: Iterator[DocKeyed],
-        state: GroupState[Boolean]): Iterator[DedupedDoc] = {
-      if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-      val batch = rows.toSeq
-      if (batch.isEmpty) return Iterator.empty // nothing to emit, no state
-      // to create, and batch.max below would throw
-      val out =
-        if (state.exists) Iterator.empty
-        else {
-          val first = batch.minBy(r => (r.ts.getTime, r.doc_id))
-          Iterator.single(DedupedDoc(first.doc_id, first.ts, first.text, digest))
-        }
-      state.update(true)
-      state.setTimeoutTimestamp(batch.map(_.ts.getTime).max + horizonMs)
-      out
-    }
-    docs
-      .withColumn("digest", md5(col("text")))
-      .as[DocKeyed]
-      .withWatermark("ts", watermark)
-      .groupByKey(_.digest)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(update)
-  }
-
   final case class SigEntry(id: Long, sig: Long, tsMs: Long)
   final case class BucketSigs(entries: Seq[SigEntry])
   final case class DocSigChunk(
@@ -415,39 +302,6 @@ object StreamOps {
     }
     n.toLong * base
   }
-
-  /** W1 as a stream: per-ticker pct_change with one close price of state —
-    * the streaming head of the reference's price → return → signal chain.
-    */
-  def streamingReturns(bars: Dataset[Bar]): Dataset[Return] = {
-    import bars.sparkSession.implicits._
-    def update(ticker: String, rows: Iterator[Bar],
-        state: GroupState[Double]): Iterator[Return] = {
-      val out = scala.collection.mutable.ArrayBuffer[Return]()
-      var prev = state.getOption.getOrElse(Double.NaN)
-      rows.toSeq.sortBy(b => (b.ts.getTime, b.close)).foreach { b =>
-        if (!prev.isNaN) out += Return(ticker, b.ts, b.close / prev - 1.0)
-        prev = b.close
-      }
-      state.update(prev)
-      out.iterator
-    }
-    bars.groupByKey(_.ticker)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(update)
-  }
-
-  /** Count-min sketch over an unbounded value stream — literally the
-    * batch [[graft.operators.Sketch.countMin]] plan run as a streaming
-    * aggregation: the bucket table IS mergeable state, so each
-    * micro-batch folds its map-side partial counts into at most
-    * depth·width state rows. Emit with output mode complete/update and
-    * point-query any snapshot with `Sketch.countMinEstimate`
-    * (`CmSketch(snapshot, depth, width)`); the usual CMS bound
-    * (est >= exact) holds at every snapshot.
-    */
-  def streamingCountMin(values: DataFrame, valueCol: org.apache.spark.sql.Column,
-      depth: Int = 4, width: Int = 1024): DataFrame =
-    graft.operators.Sketch.countMin(values, valueCol, depth, width).table
 
   /** Watermarked stream-stream interval join — the attribution shape:
     * each left event matches right events with the same key whose

@@ -86,23 +86,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("salted join equals plain join for random frames, any salt count") {
-    import org.apache.spark.sql.functions.col
-    (1 to 5).foreach { _ =>
-      val nl = 20 + rnd.nextInt(80)
-      val left = (1 to nl).map(_ => (rnd.nextInt(6).toLong, rnd.nextInt(1000).toLong))
-        .toDF("k", "v")
-      val right = (0 to 6).filter(_ => rnd.nextBoolean())
-        .map(k => (k.toLong, s"d$k")).toDF("k", "name")
-      val salts = 1 + rnd.nextInt(15)
-      val plain = left.join(right, Seq("k")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
-      val salted = graft.operators.Skew.saltedJoin(left, right, Seq("k"), salts)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
-      assert(salted == plain, s"salts=$salts")
-    }
-  }
-
   test("group keys are injective over random tuples") {
     val pool = Seq("a", "b", "a b", "b c", "", "null", "1:ab", "n;", "7", null)
     val tuples = (1 to 400).map { _ =>
@@ -685,13 +668,26 @@ class PropertySpec extends SparkSpec {
   }
 
   test("hash sampling: monotone in fraction, exact on boundaries") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import graft.operators.Sampling.stratifiedSample
     val ids = (0L until 500L).toDF("id")
-    assert(graft.operators.Sampling.hashSample(ids, "id", 0.0).count() == 0)
-    assert(graft.operators.Sampling.hashSample(ids, "id", 1.0).count() == 500)
+    // one stratum: every row takes defaultFraction's bucket threshold
+    def ids1(f: Double): Set[Long] =
+      stratifiedSample(ids, "id", lit("all"), Map.empty, f)
+        .collect().map(_.getLong(0)).toSet
+    assert(ids1(0.0).isEmpty)
+    assert(ids1(1.0).size == 500)
     val fracs = Seq.fill(4)(rnd.nextDouble()).sorted
-    val sizes = fracs.map(f =>
-      graft.operators.Sampling.hashSample(ids, "id", f).count())
+    val sizes = fracs.map(f => ids1(f).size)
     assert(sizes == sizes.sorted) // nested samples grow with fraction
+    // two strata: each keeps exactly the one-stratum sample at its own
+    // rate, so a row's membership depends on its key and stratum only
+    val (fa, fb) = (rnd.nextDouble(), rnd.nextDouble())
+    val strat = ids.withColumn("g", when(col("id") % 2 === 0, "a").otherwise("b"))
+    val got = stratifiedSample(strat, "id", col("g"), Map("a" -> fa), fb)
+      .collect().map(_.getLong(0)).toSet
+    assert(got == ids1(fa).filter(_ % 2 == 0) ++ ids1(fb).filter(_ % 2 == 1),
+      s"fa=$fa fb=$fb")
   }
 
   test("segment dedup on random corpora: each distinct segment kept exactly once") {

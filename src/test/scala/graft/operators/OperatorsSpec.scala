@@ -278,24 +278,6 @@ class OperatorsSpec extends SparkSpec {
     assert(truth.nonEmpty)
   }
 
-  test("suggestedBandBits: floor-holding width, +2 bits per 4x corpus, clamps") {
-    // 200k vectors, 3 bands (the probe's 100x regime): at a generous
-    // 10n verification budget the graded 16-bit width still holds (rule
-    // says 15 — consistent with the probe: the 545 MB floor shuffle is
-    // ~4.6n candidates, visible but not yet dominant), while a strict
-    // ∝n budget already calls for 19 — the width must grow from here
-    assert(Dedup.suggestedBandBits(200000L, 3, 2000000L) == 15)
-    assert(Dedup.suggestedBandBits(200000L, 3, 200000L) == 19)
-    // the growth law: 4x corpus at the same budget-per-n adds 2 bits
-    // (budget scales with n to keep verification proportional to corpus)
-    val b1 = Dedup.suggestedBandBits(1000000L, 3, 10000000L)
-    val b4 = Dedup.suggestedBandBits(4000000L, 3, 40000000L)
-    assert(b4 == b1 + 2, s"$b1 -> $b4")
-    // clamps: toy corpora floor at 8, nothing exceeds a long's width
-    assert(Dedup.suggestedBandBits(10L, 3, 1000000L) == 8)
-    assert(Dedup.suggestedBandBits(Int.MaxValue.toLong * 4, 6, 1L) == 62)
-  }
-
   test("as-of join picks the latest at-or-before value per key") {
     val clicks = Seq(("u1", 5L, 1L), ("u1", 10L, 2L), ("u1", 20L, 3L), ("u2", 7L, 4L))
       .toDF("user", "t", "eid")
@@ -324,37 +306,20 @@ class OperatorsSpec extends SparkSpec {
     assert(out(2L).isEmpty)
   }
 
-  test("salted join equals the plain join on skewed data") {
-    val hot = (1 to 500).map(i => (1L, i.toLong)) // one dominant key
-    val tail = (1 to 50).map(i => ((i % 7 + 2).toLong, i.toLong))
-    val left = (hot ++ tail).toDF("k", "v")
-    val right = (1L to 8L).map(k => (k, s"dim_$k")).toDF("k", "name")
-    val plain = left.join(right, Seq("k")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    val salted = Skew.saltedJoin(left, right, Seq("k"), 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
-    assert(salted.toSeq == plain.toSeq)
-    // left-join nulls survive too
-    val rightPartial = Seq((1L, "only_hot")).toDF("k", "name")
-    val saltedLeft = Skew.saltedJoin(left, rightPartial, Seq("k"), 4, "left")
-    assert(saltedLeft.count() == 550)
-    assert(saltedLeft.filter(col("name").isNull).count() == 50)
-  }
-
   test("hash sampling: deterministic, consistent across supersets, rate-accurate") {
     val ids = (0L until 4000L).toDF("id")
-    val s1 = Sampling.hashSample(ids, "id", 0.3).collect().map(_.getLong(0)).toSet
-    val s2 = Sampling.hashSample(ids, "id", 0.3).collect().map(_.getLong(0)).toSet
-    assert(s1 == s2) // rerun-stable
+    // one stratum, so every row samples at defaultFraction
+    def sample(df: org.apache.spark.sql.DataFrame, f: Double): Set[Long] =
+      Sampling.stratifiedSample(df, "id", lit("all"), Map.empty, f)
+        .collect().map(_.getLong(0)).toSet
+    val s1 = sample(ids, 0.3)
+    assert(s1 == sample(ids, 0.3)) // rerun-stable
     // membership never flips when other rows appear (consistency)
-    val sub = Sampling.hashSample(ids.filter(col("id") < 2000), "id", 0.3)
-      .collect().map(_.getLong(0)).toSet
-    assert(sub == s1.filter(_ < 2000L))
+    assert(sample(ids.filter(col("id") < 2000), 0.3) == s1.filter(_ < 2000L))
     // rate within a few percent on 4000 keys
     assert(math.abs(s1.size / 4000.0 - 0.3) < 0.05)
     // nested fractions: a 10% sample is a subset of the 30% sample
-    val s3 = Sampling.hashSample(ids, "id", 0.1).collect().map(_.getLong(0)).toSet
-    assert(s3.subsetOf(s1))
+    assert(sample(ids, 0.1).subsetOf(s1))
     // stratified: per-stratum thresholds apply
     val strat = ids.withColumn("g", when(col("id") % 2 === 0, "a").otherwise("b"))
     val out = Sampling.stratifiedSample(strat, "id", col("g"),
@@ -603,23 +568,6 @@ class OperatorsSpec extends SparkSpec {
     val banded = Dedup.bandedPairs(hotKeyed, Seq("band", "bkey"), 8)
     assert(banded.queryExecution.executedPlan.toString.contains("_salt"))
     assert(banded.count() == 40L * 39 / 2)
-    // and a single hot key's rows are spread across every salt bucket, so
-    // its join work is divisible across `salts` tasks at scale (AQE off
-    // for the probe: its small-output coalescing would legitimately merge
-    // these tiny test partitions back into one)
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val hotSide = (0 until 400).map(i => (i.toLong, "hot")).toDF("id", "bkey")
-      val spread = Skew.saltedJoin(
-        hotSide.withColumnRenamed("id", "a"),
-        hotSide.withColumnRenamed("id", "b"), Seq("bkey"), 8)
-      val perPartition = spread.rdd
-        .mapPartitions(it => Iterator(it.size)).collect().filter(_ > 0)
-      assert(perPartition.length > 1, "hot key serialized into one partition")
-      assert(perPartition.max < spread.count(),
-        "one partition still holds every candidate pair")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
     // simhash rides the same guard, carrying signatures through the
     // salted pair generation — hamming-0 pairs for all identical docs
     val sh = Dedup.simHashPairs(corpus, "doc_id", "text", 3, hotBandWidth = 8)
@@ -680,60 +628,18 @@ class OperatorsSpec extends SparkSpec {
     assert(out(3L).getAs[String]("kind") == "opaque")
   }
 
-  test("multimodal resize: opaque fallback strided downsample, pass-through below") {
-    val assets = Multimodal.asAssets(docs, "doc_id", encode(col("text"), "UTF-8"), "text")
-    val resized = Multimodal.resizePayload(assets, 32).collect()
-      .map(r => r.getAs[Long]("asset_id") -> r.getAs[Array[Byte]]("payload")).toMap
-    val orig = assets.collect()
-      .map(r => r.getAs[Long]("asset_id") -> r.getAs[Array[Byte]]("payload")).toMap
-    orig.foreach { case (id, bytes) =>
-      if (bytes.length <= 32) assert(resized(id).toSeq == bytes.toSeq)
-      else {
-        assert(resized(id).length == 32)
-        assert(resized(id)(0) == bytes(0)) // stride anchors at the start
-      }
-    }
-  }
-
   /** A real single-frame image written by the JDK's own encoder: a
-    * width×height gradient (or solid `fill` when given).
+    * width×height gradient.
     */
-  private def imagePayload(fmt: String, w: Int, h: Int,
-      fill: Option[Int] = None): Array[Byte] = {
+  private def imagePayload(fmt: String, w: Int, h: Int): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(w, h,
       java.awt.image.BufferedImage.TYPE_INT_RGB)
     for (y <- 0 until h; x <- 0 until w)
-      img.setRGB(x, y, fill.getOrElse(
-        ((x * 255 / math.max(1, w - 1)) << 16) |
-          ((y * 255 / math.max(1, h - 1)) << 8) | 128))
+      img.setRGB(x, y, ((x * 255 / math.max(1, w - 1)) << 16) |
+        ((y * 255 / math.max(1, h - 1)) << 8) | 128)
     val bos = new java.io.ByteArrayOutputStream()
     assert(javax.imageio.ImageIO.write(img, fmt, bos), s"no $fmt writer")
     bos.toByteArray
-  }
-
-  test("multimodal resize: REAL bilinear rescale, re-decodes at target dims") {
-    val big = imagePayload("png", 64, 32) // 4x the 16-box in x
-    val small = imagePayload("png", 8, 4) // already inside the box
-    val rows = Seq((0L, big), (1L, small),
-      (2L, "plain text far longer than the byte cap......".getBytes("UTF-8")))
-      .toDF("doc_id", "payload")
-    val assets = Multimodal.asAssets(rows, "doc_id", col("payload"), "image")
-    val out = Multimodal.resizePayload(assets, 32, imageBox = 16).collect()
-      .map(r => r.getAs[Long]("asset_id") -> r.getAs[Array[Byte]]("payload")).toMap
-    // the resized payload is a real PNG that re-decodes at the box-fit
-    // dimensions (aspect preserved: 64x32 -> 16x8)
-    val (kind, img) = Multimodal.readImage(out(0L)).get
-    assert(kind == "png" && img.getWidth == 16 && img.getHeight == 8)
-    // a resized payload flows back through decodeFeatures as an image
-    val redecoded = Multimodal.decodeFeatures(
-      Multimodal.asAssets(Seq((0L, out(0L))).toDF("doc_id", "payload"),
-        "doc_id", col("payload"), "image")).collect().head
-    assert(redecoded.getAs[String]("kind") == "png")
-    assert(redecoded.getAs[Int]("width") == 16)
-    // images already inside the box pass through byte-identical
-    assert(out(1L).toSeq == small.toSeq)
-    // non-image payloads keep the strided byte cap
-    assert(out(2L).length == 32)
   }
 
   test("multimodal decode: dimension-bomb header is refused, not decoded") {
@@ -768,289 +674,6 @@ class OperatorsSpec extends SparkSpec {
     assert(out.getAs[String]("kind") == "opaque")
     // a sane image under the cap still decodes through the same guard
     assert(Multimodal.readImage(imagePayload("png", 8, 4)).nonEmpty)
-  }
-
-  test("multimodal sampleFrames: REAL multi-frame GIF extraction + opaque fallback") {
-    // a 3-frame GIF written by the JDK's own sequence writer, solid
-    // grayscale frames (gray g has Rec. 601 luma exactly g) so per-frame
-    // mean luminance is checkable bit-for-bit
-    val grays = Seq(40, 120, 200)
-    val frames = grays.map(g => {
-      val img = new java.awt.image.BufferedImage(10, 6,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until 6; x <- 0 until 10) img.setRGB(x, y, (g << 16) | (g << 8) | g)
-      img
-    })
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    frames.foreach(f =>
-      writer.writeToSequence(new javax.imageio.IIOImage(f, null, null), null))
-    writer.endWriteSequence()
-    ios.close(); writer.dispose()
-    val gif = bos.toByteArray
-    assert(Multimodal.imageKind(gif).contains("gif"))
-
-    val rows = Seq((0L, gif), (1L, "0123456789abcdefghijklmnopqrstuv".getBytes("UTF-8")))
-      .toDF("doc_id", "payload")
-    val assets = Multimodal.asAssets(rows, "doc_id", col("payload"), "video")
-    // index 7 exceeds the frame count -> silently absent, never throws
-    val out = Multimodal.sampleFrames(assets, Seq(0, 2, 7), sliceWidth = 8).collect()
-    val byKey = out.map(r =>
-      (r.getAs[Long]("asset_id"), r.getAs[Int]("frame_idx")) -> r).toMap
-    // GIF: real frames at the requested indices, real dims + luminance
-    assert(byKey((0L, 0)).getAs[String]("kind") == "gif")
-    assert(byKey((0L, 0)).getAs[Int]("width") == 10)
-    assert(byKey((0L, 0)).getAs[Int]("height") == 6)
-    assert(math.abs(byKey((0L, 0)).getAs[Double]("mean_lum") - grays(0)) < 0.5)
-    assert(math.abs(byKey((0L, 2)).getAs[Double]("mean_lum") - grays(2)) < 0.5)
-    assert(!byKey.contains((0L, 7))) // out-of-range index dropped
-    // opaque fallback: deterministic hex slices at index*sliceWidth
-    assert(byKey((1L, 0)).getAs[String]("kind") == "opaque")
-    assert(byKey((1L, 0)).getAs[String]("sample_hex") ==
-      "01234567".getBytes("UTF-8").map("%02x".format(_)).mkString)
-    assert(byKey((1L, 2)).getAs[String]("sample_hex") ==
-      "ghijklmn".getBytes("UTF-8").map("%02x".format(_)).mkString)
-    assert(byKey((1L, 7)).getAs[String]("sample_hex") == "") // past the end
-  }
-
-  test("multimodal edge contracts: no-frame GIF emits zero rows; bloated in-box image re-encodes") {
-    // a 2-frame GIF where every REQUESTED index is out of range: the
-    // payload is a perfectly readable GIF, so it must yield ZERO rows —
-    // not flip to 'opaque' hex slices of compressed GIF bytes (which
-    // would mislabel valid media for any consumer keying on kind)
-    val img = new java.awt.image.BufferedImage(4, 4,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    (1 to 2).foreach(_ =>
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null))
-    writer.endWriteSequence()
-    ios.close(); writer.dispose()
-    val gif = bos.toByteArray
-    val gifAssets = Multimodal.asAssets(
-      Seq((0L, gif)).toDF("doc_id", "payload"), "doc_id", col("payload"), "video")
-    assert(Multimodal.sampleFrames(gifAssets, Seq(5, 9)).collect().isEmpty)
-    // unit level: readable GIF + no surviving frame = Some(empty), not None
-    assert(Multimodal.gifFrameStats(gif, Seq(5, 9)).contains(Seq.empty))
-
-    // an IN-BOX image towing 200 KB of post-IEND junk: it decodes fine
-    // (readers stop at IEND), but riding through byte-identical would
-    // let a hostile container carry arbitrary bytes past the resize —
-    // the image byte ceiling forces a re-encode at the image's own
-    // dimensions, stripping the bloat while keeping a valid image
-    val bloated = imagePayload("png", 8, 4) ++ Array.fill(200000)('A'.toByte)
-    assert(Multimodal.readImage(bloated).nonEmpty) // premise: decodable
-    val resized = Multimodal.resizePayload(
-      Multimodal.asAssets(Seq((0L, bloated)).toDF("doc_id", "payload"),
-        "doc_id", col("payload"), "image"),
-      targetBytes = 32, imageBox = 16).collect().head
-      .getAs[Array[Byte]]("payload")
-    assert(resized.length < 6000, s"bloat must be stripped, got ${resized.length}")
-    val (k, re) = Multimodal.readImage(resized).get
-    assert(k == "png" && re.getWidth == 8 && re.getHeight == 4)
-
-    // an over-box GIF towing junk goes through the MULTI-FRAME resize:
-    // every frame survives (a frame-0 still would be corruption), the
-    // trailing junk is stripped by the re-encode, and dims are box-fit
-    val gifBloated = gif ++ Array.fill(200000)('A'.toByte)
-    val gifOut = Multimodal.resizePayload(
-      Multimodal.asAssets(Seq((0L, gifBloated)).toDF("doc_id", "payload"),
-        "doc_id", col("payload"), "video"),
-      targetBytes = 32, imageBox = 2).collect().head
-      .getAs[Array[Byte]]("payload")
-    assert(Multimodal.imageKind(gifOut).contains("gif"))
-    assert(gifOut.length < 2000, "junk past the GIF terminator must be stripped")
-    val gifFrames = Multimodal.gifFrameStats(gifOut, Seq(0, 1)).get
-    assert(gifFrames.map(_._1) == Seq(0, 1), "both frames must survive resize")
-    assert(gifFrames.forall { case (_, w, h, _) => w == 2 && h == 2 })
-    // ...but a GIF past the frame cap is resize-INELIGIBLE and rides
-    // through byte-identical (truncating frames would be corruption)
-    assert(Multimodal.resizeGif(gif, 2, maxFrames = 1).isEmpty)
-
-    // transparency survives the re-encode: an over-box ARGB PNG keeps
-    // its alpha channel (an RGB flatten would black-fill it)
-    val argb = new java.awt.image.BufferedImage(32, 32,
-      java.awt.image.BufferedImage.TYPE_INT_ARGB)
-    for (y <- 0 until 32; x <- 0 until 32)
-      argb.setRGB(x, y, if (x < 16) 0x00000000 else 0xffff0000) // half clear
-    val abos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(argb, "png", abos))
-    val alphaOut = Multimodal.resizePayload(
-      Multimodal.asAssets(Seq((0L, abos.toByteArray)).toDF("doc_id", "payload"),
-        "doc_id", col("payload"), "image"),
-      targetBytes = 32, imageBox = 16).collect().head
-      .getAs[Array[Byte]]("payload")
-    val (_, aimg) = Multimodal.readImage(alphaOut).get
-    assert(aimg.getWidth == 16 && aimg.getColorModel.hasAlpha,
-      "resized PNG must keep its alpha channel")
-    assert(((aimg.getRGB(1, 8) >>> 24) & 0xff) < 16,
-      "transparent pixels must stay transparent after resize")
-  }
-
-  test("multimodal resizeGif: animation, timing and patch compositing preserved") {
-    // a 3-frame 20x12 GIF with per-frame delays (10/20/30 cs), a
-    // NETSCAPE loop extension, and frame 2 written as a HALF-WIDTH
-    // PATCH at x=10 (disposal none, so it composites over frame 1) —
-    // the three fidelity axes resize must preserve: frame count,
-    // per-frame timing, and what each frame DISPLAYS (not its raw patch)
-    def solid(w: Int, h: Int, gray: Int) = {
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w)
-        img.setRGB(x, y, (gray << 16) | (gray << 8) | gray)
-      img
-    }
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    val frames = Seq((solid(20, 12, 40), 10, 0), (solid(20, 12, 80), 20, 0),
-      (solid(10, 12, 200), 30, 10)) // (image, delayCs, xOffset)
-    frames.zipWithIndex.foreach { case ((img, delay, xOff), i) =>
-      val spec = javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img)
-      val md = writer.getDefaultImageMetadata(spec, writer.getDefaultWriteParam)
-      val fmt = "javax_imageio_gif_image_1.0"
-      val root = md.getAsTree(fmt)
-        .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-      val gce = new javax.imageio.metadata.IIOMetadataNode("GraphicControlExtension")
-      gce.setAttribute("disposalMethod", "none")
-      gce.setAttribute("userInputFlag", "FALSE")
-      gce.setAttribute("transparentColorFlag", "FALSE")
-      gce.setAttribute("delayTime", delay.toString)
-      gce.setAttribute("transparentColorIndex", "0")
-      root.appendChild(gce)
-      if (xOff != 0) {
-        val desc = new javax.imageio.metadata.IIOMetadataNode("ImageDescriptor")
-        desc.setAttribute("imageLeftPosition", xOff.toString)
-        desc.setAttribute("imageTopPosition", "0")
-        desc.setAttribute("imageWidth", img.getWidth.toString)
-        desc.setAttribute("imageHeight", img.getHeight.toString)
-        desc.setAttribute("interlaceFlag", "FALSE")
-        root.appendChild(desc)
-      }
-      if (i == 0) {
-        val exts = new javax.imageio.metadata.IIOMetadataNode("ApplicationExtensions")
-        val e = new javax.imageio.metadata.IIOMetadataNode("ApplicationExtension")
-        e.setAttribute("applicationID", "NETSCAPE")
-        e.setAttribute("authenticationCode", "2.0")
-        e.setUserObject(Array[Byte](1, 0, 0)) // loop forever
-        exts.appendChild(e)
-        root.appendChild(exts)
-      }
-      md.setFromTree(fmt, root)
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, md), null)
-    }
-    writer.endWriteSequence(); ios.close(); writer.dispose()
-    val gif = bos.toByteArray
-
-    val out = Multimodal.resizeGif(gif, box = 10).get
-    assert(Multimodal.imageKind(out).contains("gif"))
-    // frame count + box-fit dims (20x12 -> 10x6), frames are FULL
-    // logical screens after compositing
-    val stats = Multimodal.gifFrameStats(out, Seq(0, 1, 2)).get
-    assert(stats.map(_._1) == Seq(0, 1, 2))
-    assert(stats.forall { case (_, w, h, _) => w == 10 && h == 6 })
-    // frame 2's raw patch was solid 200 — its COMPOSITE is gray 80 on
-    // the left half (frame 1 shows through under disposal none) and
-    // 200 on the right: mean 140. The source's raw frame 2 reads 200;
-    // the resized output's frame 2 must read the composite.
-    val srcStats = Multimodal.gifFrameStats(gif, Seq(2)).get
-    assert(math.abs(srcStats.head._4 - 200) < 2.0, "premise: raw patch is 200")
-    assert(math.abs(stats(0)._4 - 40) < 2.0)
-    assert(math.abs(stats(1)._4 - 80) < 2.0)
-    assert(math.abs(stats(2)._4 - 140) < 4.0,
-      s"frame 2 must be the composite, got mean ${stats(2)._4}")
-    // per-frame delays and the loop extension survive the re-encode
-    val iis2 = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(out))
-    val reader = javax.imageio.ImageIO.getImageReaders(iis2).next()
-    reader.setInput(iis2, false, false)
-    def frameTree(i: Int) = reader.getImageMetadata(i)
-      .getAsTree("javax_imageio_gif_image_1.0")
-      .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-    val delays = (0 until 3).map { i =>
-      frameTree(i).getElementsByTagName("GraphicControlExtension").item(0)
-        .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-        .getAttribute("delayTime").toInt
-    }
-    assert(delays == Seq(10, 20, 30), s"delays must survive: $delays")
-    val apps = frameTree(0).getElementsByTagName("ApplicationExtension")
-    val hasLoop = (0 until apps.getLength).exists { k =>
-      apps.item(k).asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-        .getAttribute("applicationID") == "NETSCAPE"
-    }
-    reader.dispose(); iis2.close()
-    assert(hasLoop, "NETSCAPE loop extension must survive the re-encode")
-  }
-
-  test("multimodal resize gate sees the full GIF extent, not frame 0") {
-    // frame 0 is a SMALL 4x4 patch, frame 1 an 8x4 patch at x=12 — the
-    // displayed extent is 20x4. A frame-0-only eligibility check would
-    // pass this GIF through untransformed at imageBox=10 (4x4 fits, and
-    // the bytes are far under the ceiling), leaving displayed dimensions
-    // unbounded by the box; the gate must resize it.
-    def solid(w: Int, h: Int, gray: Int) = {
-      val img = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w)
-        img.setRGB(x, y, (gray << 16) | (gray << 8) | gray)
-      img
-    }
-    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    Seq((solid(4, 4, 40), 0), (solid(8, 4, 200), 12)).foreach {
-      case (img, xOff) =>
-        val spec = javax.imageio.ImageTypeSpecifier.createFromRenderedImage(img)
-        val md = writer.getDefaultImageMetadata(spec, writer.getDefaultWriteParam)
-        val fmt = "javax_imageio_gif_image_1.0"
-        val root = md.getAsTree(fmt)
-          .asInstanceOf[javax.imageio.metadata.IIOMetadataNode]
-        if (xOff != 0) {
-          val desc = new javax.imageio.metadata.IIOMetadataNode("ImageDescriptor")
-          desc.setAttribute("imageLeftPosition", xOff.toString)
-          desc.setAttribute("imageTopPosition", "0")
-          desc.setAttribute("imageWidth", img.getWidth.toString)
-          desc.setAttribute("imageHeight", img.getHeight.toString)
-          desc.setAttribute("interlaceFlag", "FALSE")
-          root.appendChild(desc)
-        }
-        md.setFromTree(fmt, root)
-        writer.writeToSequence(new javax.imageio.IIOImage(img, null, md), null)
-    }
-    writer.endWriteSequence(); ios.close(); writer.dispose()
-    val gif = bos.toByteArray
-    // premise: frame 0 alone IS in-box and the payload is tiny
-    val (k0, f0) = Multimodal.readImage(gif).get
-    assert(k0 == "gif" && f0.getWidth <= 10 && f0.getHeight <= 10)
-    val out = Multimodal.resizePayload(
-      Multimodal.asAssets(Seq((0L, gif)).toDF("doc_id", "payload"),
-        "doc_id", col("payload"), "video"),
-      targetBytes = 32, imageBox = 10).collect().head
-      .getAs[Array[Byte]]("payload")
-    assert(!java.util.Arrays.equals(out, gif),
-      "wide-extent GIF must not ride through on frame 0's dimensions")
-    val stats = Multimodal.gifFrameStats(out, Seq(0, 1)).get
-    assert(stats.map(_._1) == Seq(0, 1), "both frames must survive")
-    assert(stats.forall { case (_, w, h, _) => w <= 10 && h <= 10 },
-      s"displayed dims must be box-bounded: $stats")
-    // and a GIF in-box on its FULL extent still passes through untouched
-    val small = Multimodal.resizePayload(
-      Multimodal.asAssets(Seq((0L, gif)).toDF("doc_id", "payload"),
-        "doc_id", col("payload"), "video"),
-      targetBytes = 32, imageBox = 64).collect().head
-      .getAs[Array[Byte]]("payload")
-    assert(java.util.Arrays.equals(small, gif),
-      "in-box GIF must pass through byte-identical")
   }
 
   test("multimodal asset stats") {

@@ -11,93 +11,6 @@ class StreamOpsSpec extends SparkSpec {
 
   private def ts(m: Long): Timestamp = new Timestamp(1704067200000L + m * 60000L)
 
-  test("streamingReturns emits pct_change across micro-batches with state") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Bar]
-    val q = streamingReturns(input.toDS()).writeStream
-      .format("memory").queryName("rets").outputMode("append")
-.start()
-    input.addData(Bar("AAPL", ts(0), 100.0), Bar("AAPL", ts(1), 110.0))
-    q.processAllAvailable()
-    input.addData(Bar("AAPL", ts(2), 99.0)) // state must remember 110
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("rets").as[Return].collect().sortBy(_.ts.getTime)
-    assert(out.length == 2)
-    assert(math.abs(out(0).ret - 0.10) < 1e-12)
-    assert(math.abs(out(1).ret - (99.0 / 110.0 - 1)) < 1e-12)
-  }
-
-  test("streamingEwma matches the batch fold across micro-batches") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[KeyedValue]
-    val q = streamingEwma(input.toDS(), 60.0).writeStream
-      .format("memory").queryName("ewm").outputMode("append")
-      .start()
-    val vals = Seq(3.0, 7.0, 1.0, 9.0, 4.0)
-    input.addData(vals.take(3).zipWithIndex.map { case (v, i) => KeyedValue("k", ts(i), v) }: _*)
-    q.processAllAvailable()
-    input.addData(vals.drop(3).zipWithIndex.map { case (v, i) => KeyedValue("k", ts(i + 3), v) }: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("ewm").as[EwmaOut].collect()
-      .sortBy(_.ts.getTime).map(_.ewma)
-    val batch = graft.expr.Ewma.ewmaMean(
-      vals.zipWithIndex.map { case (v, i) => ("k", i, v) }.toDF("key", "i", "value"),
-      Seq("key"), Seq("i"), "value", 60.0, "e")
-      .orderBy("i").collect().map(_.getDouble(3))
-    assert(streamed.length == batch.length)
-    streamed.zip(batch).foreach { case (s, b) => assert(math.abs(s - b) < 1e-12) }
-  }
-
-  test("streamingReversalSignal matches the masked batch window exactly") {
-    implicit val sc = spark.sqlContext
-    val rnd = new scala.util.Random(5)
-    val vals = Seq.fill(9)(rnd.nextDouble() * 0.1 - 0.05)
-    val lookback = 4
-    val input = MemoryStream[KeyedValue]
-    val q = streamingReversalSignal(input.toDS(), lookback).writeStream
-      .format("memory").queryName("sig").outputMode("append")
-      .start()
-    input.addData(vals.take(5).zipWithIndex.map { case (v, i) => KeyedValue("t", ts(i), v) }: _*)
-    q.processAllAvailable()
-    input.addData(vals.drop(5).zipWithIndex.map { case (v, i) => KeyedValue("t", ts(i + 5), v) }: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sig").as[SignalOut].collect()
-      .sortBy(_.ts.getTime).map(_.signal)
-
-    import org.apache.spark.sql.functions.col
-    val w = graft.expr.Windows.series(Seq("key"), Seq("i"))
-    val batch = vals.zipWithIndex.map { case (v, i) => ("t", i, v) }
-      .toDF("key", "i", "value")
-      .select(col("i"), graft.expr.Windows.rollingLog1pSum("value", w, lookback).as("s"))
-      .orderBy("i").collect().flatMap(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
-    assert(streamed.length == batch.length) // mask: first lookback-1 rows absent
-    streamed.zip(batch).foreach { case (s, b) => assert(s == b, s"$s vs $b") }
-  }
-
-  test("streamingExactDedup drops later identical texts across micro-batches") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[Doc]
-    val q = StreamOps.streamingExactDedup(input.toDS())
-      .writeStream.format("memory").queryName("dedup").outputMode("append")
-      .start()
-    // 9 and 1 are same-batch duplicates: min (ts, doc_id) must win
-    // deterministically, not whichever partition processes first
-    input.addData(Doc(9L, ts(1), "alpha beta"), Doc(1L, ts(0), "alpha beta"),
-      Doc(2L, ts(1), "gamma delta"))
-    q.processAllAvailable()
-    // 3 duplicates "alpha beta" across batches within the horizon, 4 is new
-    input.addData(Doc(3L, ts(2), "alpha beta"), Doc(4L, ts(3), "epsilon"))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("dedup").as[DedupedDoc].collect()
-    assert(out.map(_.doc_id).sorted.toSeq == Seq(1L, 2L, 4L))
-    // the payload rides through — this is the lake-bound document
-    assert(out.find(_.doc_id == 1L).get.text == "alpha beta")
-  }
-
   test("sessionize closes a session when the gap exceeds 30 minutes") {
     implicit val sc = spark.sqlContext
     val input = MemoryStream[Event]
@@ -265,51 +178,6 @@ class StreamOpsSpec extends SparkSpec {
       }
       spark.conf.unset(changelogKey)
     }
-  }
-
-  test("file-source stream: parquet drops drive the stateful returns chain") {
-    // production shape: a directory of parquet files as the unbounded
-    // source, each new file a micro-batch
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    // one part-file per drop: maxFilesPerTrigger=1 makes each FILE a
-    // micro-batch, and a 2-partition write would split a drop in two
-    Seq(Bar("AAPL", ts(0), 100.0), Bar("AAPL", ts(1), 104.0))
-      .toDS().coalesce(1).write.parquet(s"$dir/b0")
-    val src = spark.readStream.schema(Seq.empty[Bar].toDS().schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$dir/*")
-    val q = streamingReturns(src.as[Bar]).writeStream
-      .format("memory").queryName("frets").outputMode("append")
-      .start()
-    q.processAllAvailable()
-    // second drop arrives later; state must carry the last close across it
-    Seq(Bar("AAPL", ts(2), 91.0)).toDS().coalesce(1).write.parquet(s"$dir/b1")
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("frets").as[Return].collect().sortBy(_.ts.getTime)
-    assert(out.length == 2)
-    assert(math.abs(out(0).ret - 0.04) < 1e-12)
-    assert(math.abs(out(1).ret - (91.0 / 104.0 - 1)) < 1e-12)
-  }
-
-  test("streaming count-min accumulates across batches; est >= exact at snapshots") {
-    implicit val sc = spark.sqlContext
-    val input = MemoryStream[String]
-    import org.apache.spark.sql.functions.col
-    val q = streamingCountMin(input.toDF().select(col("value").as("w")), col("w"))
-      .writeStream.format("memory").queryName("cms").outputMode("complete")
-      .start()
-    input.addData("alpha", "alpha", "beta")
-    q.processAllAvailable()
-    input.addData("alpha", "gamma") // second batch folds into the same buckets
-    q.processAllAvailable()
-    q.stop()
-    val snap = spark.table("cms")
-    val est = graft.operators.Sketch.countMinEstimate(
-        Seq("alpha", "beta", "gamma", "delta").toDF("w"), "w",
-        graft.operators.Sketch.CmSketch(snap, 4, 1024))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // roomy sketch: no collisions -> exact; absent item -> 0
-    assert(est == Map("alpha" -> 3L, "beta" -> 1L, "gamma" -> 1L, "delta" -> 0L))
   }
 
   test("hourlyRollup over a stream matches the batch expression") {
