@@ -598,10 +598,37 @@ class OperatorsSpec extends SparkSpec {
     }
     val png = imageBytes("png")
     val jpg = imageBytes("jpg")
+    // a 2-frame GIF written by the JDK's own sequence writer: solid
+    // grayscale 10x6 frames (gray g has Rec. 601 luma exactly g), so
+    // the frame-0 decode is checkable against the first frame's gray
+    val grays = Seq(40, 200)
+    val gifWriter = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
+    val gifBos = new java.io.ByteArrayOutputStream()
+    val gifOut = javax.imageio.ImageIO.createImageOutputStream(gifBos)
+    gifWriter.setOutput(gifOut)
+    gifWriter.prepareWriteSequence(null)
+    grays.foreach { g =>
+      val img = new java.awt.image.BufferedImage(10, 6,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      for (y <- 0 until 6; x <- 0 until 10) img.setRGB(x, y, (g << 16) | (g << 8) | g)
+      gifWriter.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+    }
+    gifWriter.endWriteSequence()
+    gifOut.close(); gifWriter.dispose()
+    val gif = gifBos.toByteArray
+    assert(Multimodal.imageKind(gif).contains("gif"))
+    // readImage decodes frame 0 of the multi-frame container
+    val (gifKind, gifFrame0) = Multimodal.readImage(gif).get
+    assert(gifKind == "gif" && gifFrame0.getWidth == 10 && gifFrame0.getHeight == 6)
+    // a PNG towing 200 KB of junk past IEND still decodes (readers stop
+    // at IEND; the trailing bytes are never read)
+    val bloated = png ++ Array.fill(200000)('A'.toByte)
+    assert(Multimodal.readImage(bloated).nonEmpty)
     val rows = Seq(
       (0L, png), (1L, jpg),
       (2L, "plain text payload".getBytes("UTF-8")),
-      (3L, png.take(12))) // valid PNG magic, truncated container
+      (3L, png.take(12)), // valid PNG magic, truncated container
+      (4L, gif), (5L, bloated))
       .toDF("doc_id", "payload")
     val assets = Multimodal.asAssets(rows, "doc_id", col("payload"), "image")
     val out = Multimodal.decodeFeatures(assets, 16).collect()
@@ -626,6 +653,14 @@ class OperatorsSpec extends SparkSpec {
     assert(math.abs(out(2L).getSeq[Double](1).sum - 1.0) < 1e-9)
     // image magic with a truncated body degrades to opaque, never throws
     assert(out(3L).getAs[String]("kind") == "opaque")
+    // GIF: frame 0's dims and luminance through the same dispatch
+    assert(out(4L).getAs[String]("kind") == "gif")
+    assert(out(4L).getAs[Int]("width") == 10 && out(4L).getAs[Int]("height") == 6)
+    assert(math.abs(out(4L).getAs[Double]("mean_lum") - grays.head) < 0.5)
+    // post-IEND junk: the PNG decodes as the PNG it carries
+    assert(out(5L).getAs[String]("kind") == "png")
+    assert(out(5L).getAs[Int]("width") == 8 && out(5L).getAs[Int]("height") == 4)
+    assert(math.abs(out(5L).getAs[Double]("mean_lum") - expMean) < 1e-9)
   }
 
   /** A real single-frame image written by the JDK's own encoder: a
