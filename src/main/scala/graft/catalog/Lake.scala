@@ -19,6 +19,8 @@ import org.apache.spark.sql.types.StructType
   *   - `append`: blind row append (S3)
   *   - `optimize`: primary-key dedupe, last-write-wins (S4) — together the
   *     reference's upsert
+  *   - `replace`: a whole table written once, as `create(replace)` then
+  *     one deduped `append` (a backfill)
   *
   * Scale notes: appends land as new Parquet files inside `year=` partition
   * directories (no read-modify-write); `optimize` rewrites at most the
@@ -66,30 +68,15 @@ import org.apache.spark.sql.types.StructType
   * rewrite of both pending partitions would merge them, a skip leaves
   * them until a colliding batch reaches either.
   *
-  * Write-behind compaction: `optimize` queues the rewrite and returns, so
-  * the caller's next call (in the nightly step, the next table's `append`)
-  * runs while the rewrite finishes. Rewrites run FIFO on one JVM-wide
-  * compactor thread, registered by table directory, so two `Lake`
-  * instances over one root see the same queue.
-  *   - `append`, `optimize`, `table` and `create` on a table first wait
-  *     for that table's queued rewrite; `meta` and `exists` do not (a
-  *     rewrite never touches `_graft_meta.json`). [[sync]] waits for every
-  *     rewrite queued under this lake's root.
-  *   - A failed rewrite is rethrown, as the exception its body threw, by
-  *     the next call on that table or by [[sync]], whichever waits first.
-  *     Its `_pending` ledger stays, so a later `optimize` retries it.
-  *   - The rewrite runs with the caller's active session and local
-  *     properties as they were when `optimize` was called, so job groups,
-  *     cancellation and job tags reach its jobs.
-  *
   * Crash model: an append commits at its marker (see [[append]]); a
   * crash after it rolls forward with the marker's verdict, and a crash
   * before it discards the batch and at worst leaves the sidecar raised.
   * An optimize that skips only deletes the ledger, so a crash leaves the
-  * ledger or none. The rewrite body is the one `optimize` always ran; it
-  * only runs on another thread, and its swap is no safer than before.
-  * A frame from `table` reads the files listed when it was made; run it
-  * before the next `optimize` of that table, as before.
+  * ledger or none; a failed rewrite keeps the ledger, so the next
+  * `optimize` retries it. A `replace` that crashes between its append's
+  * marker and dropping the ledger leaves the ledger, and the next
+  * `optimize` clears it or rewrites the same rows. A frame from `table` reads the files listed when it
+  * was made; run it before the next `optimize` of that table.
   */
 final case class TableMeta(
     name: String,
@@ -101,33 +88,12 @@ class Lake(spark: SparkSession, root: String) {
 
   private def dir(name: String) = s"$root/$name"
   private def metaPath(name: String) = Paths.get(s"$root/$name/_graft_meta.json")
-  private def tableKey(name: String) = Paths.get(dir(name)).toAbsolutePath.normalize
-  private def awaitRewrite(name: String): Unit = Compactor.await(tableKey(name))
 
   def exists(name: String): Boolean = Files.exists(metaPath(name))
-
-  /** Waits for every rewrite queued under this lake's root; rethrows the
-    * first failed one (later failures ride on it as suppressed).
-    */
-  def sync(): Unit = Compactor.awaitUnder(Paths.get(root).toAbsolutePath.normalize)
-
-  /** Runs `body`, then [[sync]], also when `body` throws: then `body`'s
-    * exception wins and a rewrite failure is attached to it as suppressed.
-    */
-  def syncAfter(body: => Unit): Unit = {
-    try body
-    catch {
-      case t: Throwable =>
-        try sync() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-    sync()
-  }
 
   /** S2: create with replace/skip semantics. */
   def create(meta: TableMeta, mode: String): Unit = {
     require(mode == "replace" || mode == "skip", s"bad mode $mode")
-    awaitRewrite(meta.name)
     if (exists(meta.name)) {
       if (mode == "skip") return
       deleteRecursively(Paths.get(dir(meta.name)))
@@ -148,6 +114,28 @@ class Lake(spark: SparkSession, root: String) {
       .withColumn(SeqCol, lit(0L)).withColumn(SubCol, lit(0L))
       .write.mode(SaveMode.Append)
       .partitionBy(meta.partitionKeys: _*).parquet(dataDir(meta.name))
+  }
+
+  /** S2 then S3 for a whole table: `create(meta, "replace")`, then one
+    * [[append]] of `df` deduped by primary key, the later batch row winning
+    * (the order a rewrite gets from the ingest sub-stamp). The table then
+    * holds what an `optimize` would leave, so the ledger is dropped, and
+    * the sidecar holds the batch's maxima: a backfilled table is written
+    * once, and its first upsert is gated like any other.
+    */
+  def replace(meta: TableMeta, df: DataFrame): Unit = {
+    create(meta, "replace")
+    append(meta.name, dedupe(meta, df.withColumn(SubCol, monotonically_increasing_id()),
+      Seq(col(SubCol).desc)))
+    Files.deleteIfExists(pendingPath(meta.name))
+  }
+
+  /** Keeps, of each primary key's rows, the one that sorts first under
+    * `order`.
+    */
+  private def dedupe(m: TableMeta, df: DataFrame, order: Seq[Column]): DataFrame = {
+    val w = Window.partitionBy(m.primaryKeys.map(col): _*).orderBy(order: _*)
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
   /** Internal ingest-order columns: each appended batch gets the next value
@@ -233,7 +221,6 @@ class Lake(spark: SparkSession, root: String) {
 
   /** S1: scan (ingest-order column hidden). */
   def table(name: String): DataFrame = {
-    awaitRewrite(name)
     tableRaw(name).select(meta(name).schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -289,7 +276,6 @@ class Lake(spark: SparkSession, root: String) {
     * files already moved are simply absent from staging.
     */
   def append(name: String, df: DataFrame): Unit = {
-    awaitRewrite(name)
     val m = meta(name)
     recoverStaging(name)
     val checkYear = m.partitionKeys.contains("year") &&
@@ -505,12 +491,9 @@ class Lake(spark: SparkSession, root: String) {
     *     rewrite every pending partition;
     *   - otherwise: rewrite (bin-pack) only the pending partitions holding
     *     more than [[MaxPartFiles]] part files; with none, clear the ledger
-    *     here, with no rewrite queued and no Spark job.
-    * Write-behind: waits for the table's previous rewrite, queues this one
-    * and returns (see the class doc, which also gives the crash model).
+    *     with no rewrite and no Spark job.
     */
   def optimize(name: String, orderCol: String = SeqCol): Unit = {
-    awaitRewrite(name)
     val ledger = mergeLedger(ledgerLines(name))
     val targets =
       if (ledger.values.exists(free => !free)) ledger.keySet
@@ -519,13 +502,11 @@ class Lake(spark: SparkSession, root: String) {
         ledger.keySet.filter(e => partFileCount(m, e) > MaxPartFiles)
       }
     if (targets.isEmpty) Files.deleteIfExists(pendingPath(name))
-    else Compactor.submit(spark, tableKey(name))(rewrite(name, orderCol, targets))
+    else rewrite(name, orderCol, targets)
   }
 
-  /** The body of [[optimize]], run on the compactor thread: dedupes the
-    * rows of the `targets` partitions among themselves, swaps them in and
-    * clears the ledger. It must call nothing that waits on a queued
-    * rewrite (it would wait on itself).
+  /** The rewrite of [[optimize]]: dedupes the rows of the `targets`
+    * partitions among themselves, swaps them in and clears the ledger.
     */
   private def rewrite(name: String, orderCol: String, targets: Set[String]): Unit = {
     val m = meta(name)
@@ -534,9 +515,7 @@ class Lake(spark: SparkSession, root: String) {
     val scoped = if (whole) full else full.filter(inPartitions(m, targets))
     val ordCols = if (orderCol == SeqCol) Seq(col(SeqCol).desc, col(SubCol).desc)
       else Seq(col(orderCol).desc, col(SeqCol).desc, col(SubCol).desc)
-    val w = Window.partitionBy(m.primaryKeys.map(col): _*).orderBy(ordCols: _*)
-    val deduped = scoped
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+    val deduped = dedupe(m, scoped, ordCols)
       .select((m.schema.fieldNames :+ SeqCol :+ SubCol).map(col).toIndexedSeq: _*)
 
     // rewrite affected partitions atomically-ish: write to a temp dir then swap

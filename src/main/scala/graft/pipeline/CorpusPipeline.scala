@@ -23,8 +23,8 @@ import graft.operators.{Dedup, Sampling, TextAnalysis}
   *     → (optional) eval-set decontamination report vs the scrubbed corpus
   *
   * All stages are the already-oracle-verified operators; the pipeline
-  * persists through the same Lake create/append/optimize triple as the
-  * financial DAG, so curation output is a queryable lakehouse table set.
+  * writes each table once through [[Lake.replace]], like the financial
+  * DAG's backfill, so curation output is a queryable lakehouse table set.
   * Every stage is shuffle-bounded (hash shuffles + banded joins, no
   * all-pairs work) — the 100 TB shape end to end.
   */
@@ -48,17 +48,17 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
     tm("eval_contamination", "doc_id" -> L, "n_grams" -> L, "n_hits" -> L,
       "ratio" -> F)("doc_id"))
 
+  private def meta(name: String): TableMeta = tables.find(_.name == name).get
+  private def replace(name: String, df: DataFrame): Unit = lake.replace(meta(name), df)
+
   /** Run the full curation DAG over `docs` (doc_id, text). Sample rates
     * are per-language fractions; `defaultRate` covers absent languages.
     * When `evalDocs` is given, a 5-gram leakage report of that held-out
     * set against the kept (post-dedup) corpus lands in
-    * `eval_contamination`. Returns only after every rewrite its
-    * `optimize` calls queued has landed.
+    * `eval_contamination`; without it that table is created empty.
     */
   def run(docs: DataFrame, rates: Map[String, Double],
-      defaultRate: Double, evalDocs: Option[DataFrame] = None): Unit = lake.syncAfter {
-    tables.foreach(lake.create(_, "replace"))
-
+      defaultRate: Double, evalDocs: Option[DataFrame] = None): Unit = {
     // 1. annotate — a narrow per-row pass plus the unigram-LM score
     // (vocabulary join; see TextAnalysis.unigramLogProb's scale notes)
     val annotated = TextAnalysis.qualityFeatures(docs, "text").select(
@@ -76,16 +76,14 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
       // a doc with NULL text yields no gram rows and no repetition row;
       // null is NOT repetitive (the gate below must not silently drop it)
       .withColumn("repetitive", coalesce(col("repetitive"), lit(false)))
-    lake.append("doc_annotations", annotated)
-    lake.optimize("doc_annotations")
+    replace("doc_annotations", annotated)
 
     // 2. near-dup clusters: exact dups collapse through the same pair
     // graph (identical texts share every band), so one canonicalization
     // covers both exact and near duplicates
     val pairs = Dedup.minHashLsh(docs, "doc_id", "text", 3, 64, 16, 0.5)
     val clusters = Dedup.canonicalize(docs, "doc_id", pairs)
-    lake.append("doc_clusters", clusters)
-    lake.optimize("doc_clusters")
+    replace("doc_clusters", clusters)
 
     // 3. keep one representative per cluster, drop repetitious docs
     // (Gopher-style filter), then language-stratified deterministic
@@ -108,8 +106,7 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
     val kept2 = kept.drop("text").join(scrubbed, "doc_id")
     val sampled = Sampling.stratifiedSample(
       kept2, "doc_id", col("lang"), rates, defaultRate)
-    lake.append("corpus_sample", sampled.select("doc_id", "lang", "text"))
-    lake.optimize("corpus_sample")
+    replace("corpus_sample", sampled.select("doc_id", "lang", "text"))
 
     // 4. rollup: corpus → kept → sampled funnel per language
     val ann = lake.table("doc_annotations")
@@ -123,16 +120,15 @@ class CorpusPipeline(spark: SparkSession, lake: Lake) {
           .as("n_kept"),
         sum(when(col("s").isNotNull, 1L).otherwise(0L)).as("n_sampled"),
         sum(col("n_tokens")).as("sum_tokens"))
-    lake.append("corpus_stats", stats)
-    lake.optimize("corpus_stats")
+    replace("corpus_stats", stats)
 
     // 5. split hygiene: report each eval doc's 5-gram leakage against the
     // kept training corpus (the set a model would actually train on)
-    evalDocs.foreach { ev =>
+    evalDocs match {
       // the scrubbed corpus is what a model would actually train on
-      val report = Dedup.contamination(kept2, ev, "doc_id", "text", 5)
-      lake.append("eval_contamination", report)
-      lake.optimize("eval_contamination")
+      case Some(ev) => replace("eval_contamination",
+        Dedup.contamination(kept2, ev, "doc_id", "text", 5))
+      case None => lake.create(meta("eval_contamination"), "replace")
     }
   }
 }

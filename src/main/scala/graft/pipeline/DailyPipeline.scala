@@ -16,16 +16,14 @@ import graft.stages.{Stages, Variables}
   *
   * One stage graph with two bindings of the rows it keeps and the write
   * it makes, like the reference's two modes over the same transforms:
-  *  - `backfill`: the full history, `replace`d (reference
-  *    `*_backfill_flow` entry points)
+  *  - `backfill`: the full history, each table written once by
+  *    [[Lake.replace]] (reference `*_backfill_flow` entry points)
   *  - `daily(asOf)`: guard that `asOf` is a market day, recompute only a
   *    trailing `2*WINDOW` slice, keep `date == asOf` rows, append +
   *    optimize (reference `factor_model_flow.py:177-199` et al.)
   *
   * Persistence runs through the Lake create/append/optimize triple; all
-  * analytics are the pure transforms in [[graft.stages.Stages]]. `daily`
-  * and `writeHistory` return only after every rewrite their `optimize`
-  * calls queued has landed ([[Lake.syncAfter]]).
+  * analytics are the pure transforms in [[graft.stages.Stages]].
   */
 class DailyPipeline(spark: SparkSession, lake: Lake) {
   import spark.implicits._
@@ -67,10 +65,8 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
   /** S8/S12: minute-bar history upsert for one market date (reference
     * `pipelines/history_flow.py:63-101`).
     */
-  def writeHistory(table: String, bars: DataFrame): Unit = lake.syncAfter {
-    lake.append(table, bars.select(meta(table).schema.fieldNames.map(col).toIndexedSeq: _*))
-    lake.optimize(table)
-  }
+  def writeHistory(table: String, bars: DataFrame): Unit =
+    upsert(table, bars.select(meta(table).schema.fieldNames.map(col).toIndexedSeq: _*))
 
   def initTables(mode: String = "skip"): Unit = tables.foreach(t => lake.create(t, mode))
 
@@ -92,19 +88,18 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
     * trailing 2*WINDOW calendar dates up to `asOf`, `asOf` is a market day
     * exactly when it is the latest, and the lookback starts at the first.
     */
-  def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit =
-    lake.syncAfter {
-      val asOfD = java.sql.Date.valueOf(asOf)
-      val span = lake.table("calendar")
-        .filter(col("date") <= asOfD)
-        .orderBy(col("date").desc).limit(Variables.Window * 2)
-        .agg(min("date"), max("date")).collect().head
-      if (Option(span.getDate(1)).exists(_.toLocalDate == asOf)) {
-        val lookback = span.getDate(0)
-        def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
-        run(trailing(stockPrices), trailing(etfPrices), _.filter(col("date") === asOfD), upsert)
-      }
+  def daily(asOf: LocalDate, stockPrices: DataFrame, etfPrices: DataFrame): Unit = {
+    val asOfD = java.sql.Date.valueOf(asOf)
+    val span = lake.table("calendar")
+      .filter(col("date") <= asOfD)
+      .orderBy(col("date").desc).limit(Variables.Window * 2)
+      .agg(min("date"), max("date")).collect().head
+    if (Option(span.getDate(1)).exists(_.toLocalDate == asOf)) {
+      val lookback = span.getDate(0)
+      def trailing(df: DataFrame) = df.filter(col("date").between(lookback, asOfD))
+      run(trailing(stockPrices), trailing(etfPrices), _.filter(col("date") === asOfD), upsert)
     }
+  }
 
   /** The stage graph, once for both modes: `at` keeps the rows each table
     * holds (of a computed frame, or of a stored table a later stage reads)
@@ -159,10 +154,7 @@ class DailyPipeline(spark: SparkSession, lake: Lake) {
     finally cached.reverseIterator.foreach(_.unpersist())
   }
 
-  private def replace(name: String, df: DataFrame): Unit = {
-    lake.create(meta(name), "replace")
-    lake.append(name, df)
-  }
+  private def replace(name: String, df: DataFrame): Unit = lake.replace(meta(name), df)
 
   private def upsert(name: String, df: DataFrame): Unit = {
     lake.append(name, df)

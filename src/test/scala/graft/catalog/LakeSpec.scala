@@ -1,10 +1,7 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
-import java.util.concurrent.CountDownLatch
+import java.nio.file.Files
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
@@ -72,6 +69,11 @@ class LakeSpec extends SparkSpec {
     assert(lake.table("prices").count() == 2)
     lake.create(meta, "replace") // must clear
     assert(lake.table("prices").count() == 0)
+    // replace over a table with rows drops them and writes only its batch
+    lake.append("prices", rows(1, 10.0, 2023))
+    lake.replace(meta, rows(2, 20.0))
+    assert(lake.table("prices").collect()
+      .map(r => (r.getAs[Int]("year"), r.getAs[Long]("seq"))).toSeq == Seq((2024, 2L), (2024, 2L)))
   }
 
   test("append accumulates duplicates; optimize dedupes last-write-wins") {
@@ -119,17 +121,37 @@ class LakeSpec extends SparkSpec {
   }
 
   test("intra-batch primary-key duplicates resolve to the later batch row") {
-    val lake = newLake()
-    lake.create(meta, "replace")
     val dup = Seq(
       ("AAPL", "2024-01-02", 2024, 1.0, 9L),
       ("AAPL", "2024-01-02", 2024, 2.0, 9L)) // same PK twice in one append
       .toDF("ticker", "date", "year", "v", "seq")
-    lake.append("prices", dup)
-    lake.optimize("prices")
-    val out = lake.table("prices").collect()
-    assert(out.length == 1)
-    assert(out.head.getAs[Double]("v") == 2.0) // later row in batch order
+    // optimize resolves it after an append, replace before its one write
+    val appended = newLake()
+    appended.create(meta, "replace")
+    appended.append("prices", dup)
+    appended.optimize("prices")
+    val replaced = newLake()
+    replaced.replace(meta, dup)
+    Seq(appended, replaced).foreach { lake =>
+      val out = lake.table("prices").collect()
+      assert(out.length == 1)
+      assert(out.head.getAs[Double]("v") == 2.0) // later row in batch order
+    }
+    // a replaced table needs no rewrite: no ledger, the sidecar at the
+    // batch's maximum, and the next date's upsert is gated
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    val (d2, d3) = (java.sql.Date.valueOf("2024-01-02"), java.sql.Date.valueOf("2024-01-03"))
+    lake.replace(dated, Seq(("A", d2, 2024, 1.0), ("A", d3, 2024, 2.0), ("A", d3, 2024, 3.0))
+      .toDF("ticker", "date", "year", "v"))
+    assert(datedRows(lake) == Set(("A", "2024-01-02", 1.0), ("A", "2024-01-03", 3.0)))
+    assert(!Files.exists(root.resolve("dated/_pending")))
+    assert(Files.readString(root.resolve("dated/_graft_bounds")) ==
+      s"date\t${d3.toLocalDate.toEpochDay}")
+    lake.append("dated", day("2024-01-04", 4.0, Seq("A")))
+    assert(optimizeJobs(lake, "dated") == 0)
+    assert(datedRows(lake) == Set(("A", "2024-01-02", 1.0), ("A", "2024-01-03", 3.0),
+      ("A", "2024-01-04", 4.0)))
   }
 
   test("date-range filters derive year partition pruning via the optimizer rule") {
@@ -236,7 +258,6 @@ class LakeSpec extends SparkSpec {
     val got = lake.table("accounts").orderBy("id").collect()
       .map(r => (r.getAs[Int]("id"), Option(r.getAs[String]("region")), r.getAs[Double]("v")))
     assert(got.toSeq == regions.zipWithIndex.map { case (r, i) => (i, r, 2.0) })
-    lake.sync()
     assert(!Files.exists(root.resolve("accounts/_pending")))
   }
 
@@ -270,8 +291,8 @@ class LakeSpec extends SparkSpec {
 
   private val jobKey = "graft.lake.spec.jobs"
 
-  /** Spark jobs `body` starts, on this thread or on the compactor (a
-    * rewrite runs with the local properties of its `optimize` call).
+  /** Spark jobs `body` starts on this thread: those that carry its local
+    * property.
     */
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -293,7 +314,7 @@ class LakeSpec extends SparkSpec {
     }
   }
 
-  private def optimizeJobs(lake: Lake, t: String): Int = jobsOf { lake.optimize(t); lake.sync() }
+  private def optimizeJobs(lake: Lake, t: String): Int = jobsOf(lake.optimize(t))
 
   test("gate: optimize after a collision-free append starts no Spark job") {
     val root = Files.createTempDirectory("graft_lake")
@@ -503,67 +524,7 @@ class LakeSpec extends SparkSpec {
     assert(datedRows(lake) == days.map(d => ("A", d, 1.0)).toSet)
   }
 
-  private val holdKey = Paths.get("/graft-lake-spec-hold")
-
-  /** Holds the compactor thread until the returned gate opens, so a
-    * rewrite queued meanwhile stays queued.
-    */
-  private def holdCompactor(): CountDownLatch = {
-    val gate = new CountDownLatch(1)
-    Compactor.submit(spark, holdKey)(gate.await())
-    gate
-  }
-
-  /** Runs `call` on another thread, checks that it is still blocked while
-    * the compactor is held, then opens the gate and returns its result.
-    */
-  private def blockedUntilRewrite[T](gate: CountDownLatch)(call: => T): T = {
-    val f = Future(call)(ExecutionContext.global)
-    Thread.sleep(300)
-    val blocked = !f.isCompleted
-    gate.countDown()
-    Compactor.await(holdKey)
-    val out = Await.result(f, 2.minutes)
-    assert(blocked, "the call did not wait for the table's queued rewrite")
-    out
-  }
-
-  test("write-behind optimize: table waits for the rewrite, through any Lake on the root") {
-    val root = Files.createTempDirectory("graft_lake").toString
-    val lake = new Lake(spark, root)
-    lake.create(meta, "replace")
-    lake.append("prices", rows(1, 10.0))
-    lake.append("prices", rows(2, 20.0))
-    val gate = holdCompactor()
-    lake.optimize("prices", "seq") // queued behind the hold
-    val same = blockedUntilRewrite(gate)(lake.table("prices").collect())
-    assert(same.length == 2 && same.forall(_.getAs[Long]("seq") == 2L))
-    // a second instance over the same root waits on the same queue
-    lake.append("prices", rows(3, 30.0))
-    val gate2 = holdCompactor()
-    lake.optimize("prices", "seq")
-    val other = blockedUntilRewrite(gate2)(new Lake(spark, root).table("prices").collect())
-    assert(other.length == 2 && other.forall(_.getAs[Long]("seq") == 3L))
-  }
-
-  test("create(replace) waits for the table's queued rewrite") {
-    val root = Files.createTempDirectory("graft_lake")
-    val lake = new Lake(spark, root.toString)
-    lake.create(meta, "replace")
-    lake.append("prices", rows(1, 10.0))
-    lake.append("prices", rows(2, 20.0))
-    val gate = holdCompactor()
-    lake.optimize("prices", "seq")
-    blockedUntilRewrite(gate)(lake.create(meta, "replace"))
-    val t = root.resolve("prices")
-    assert(!Files.exists(t.resolve("_optimize_tmp")) && !Files.exists(t.resolve("_pending")))
-    assert(lake.table("prices").count() == 0)
-    lake.append("prices", rows(3, 30.0))
-    lake.optimize("prices", "seq")
-    assert(lake.table("prices").collect().map(_.getAs[Long]("seq")).toSeq == Seq(3L, 3L))
-  }
-
-  test("a failed rewrite surfaces at the next call on the table and at sync, and is retried") {
+  test("a failed rewrite throws from optimize, keeps the ledger, and is retried") {
     val root = Files.createTempDirectory("graft_lake")
     val lake = new Lake(spark, root.toString)
     lake.create(meta, "replace")
@@ -573,69 +534,15 @@ class LakeSpec extends SparkSpec {
       .findFirst().get
     lake.append("prices", rows(2, 20.0))
     Files.write(first, Array.fill[Byte](64)(7)) // not Parquet any more
-    def readError(e: Throwable): Unit = {
-      assert(!e.isInstanceOf[java.util.concurrent.ExecutionException] &&
-        !e.isInstanceOf[java.util.concurrent.CompletionException], e.toString)
-      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-        .exists(c => String.valueOf(c.getMessage).contains(first.getFileName.toString)), e.toString)
-    }
-    def ledger = Files.readString(root.resolve("prices/_pending"))
-    lake.optimize("prices") // queues the rewrite and returns
-    readError(intercept[Throwable](lake.table("prices")))
-    assert(ledger.split("\n").toSeq == Seq("2024")) // kept for a retry
-    lake.optimize("prices")
-    readError(intercept[Throwable](lake.sync()))
-    assert(ledger.split("\n").toSeq == Seq("2024"))
-    // a failing body wins over the rewrite failure, which rides on it
-    val primary = intercept[IllegalStateException](lake.syncAfter {
-      lake.optimize("prices")
-      throw new IllegalStateException("body failed")
-    })
-    assert(primary.getSuppressed.length == 1)
-    readError(primary.getSuppressed.head)
+    // optimize itself throws the read error, which names the bad file
+    val e = intercept[Throwable](lake.optimize("prices"))
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains(first.getFileName.toString)), e.toString)
+    // the ledger is kept for a retry
+    assert(Files.readString(root.resolve("prices/_pending")).split("\n").toSeq == Seq("2024"))
     // with the bad file gone the retry lands
     Files.delete(first)
     lake.optimize("prices")
-    lake.sync()
     assert(lake.table("prices").collect().map(_.getAs[Long]("seq")).toSeq == Seq(2L, 2L))
-  }
-
-  test("the rewrite's jobs carry the caller's local properties from the optimize call") {
-    val key = "graft.lake.spec.tag"
-    val sc = spark.sparkContext
-    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        tags.add(String.valueOf(e.properties.getProperty(key)))
-    }
-    def drained(): Seq[String] = {
-      assert(org.apache.spark.graftbench.ListenerDrain.drain(sc, 30000))
-      val out = tags.asScala.toList
-      tags.clear()
-      out
-    }
-    sc.addSparkListener(listener)
-    try {
-      val lake = newLake()
-      lake.create(meta, "replace")
-      lake.append("prices", rows(1, 10.0))
-      drained()
-      sc.setLocalProperty(key, "at-optimize")
-      lake.optimize("prices")
-      sc.setLocalProperty(key, null) // changed before the rewrite is waited on
-      lake.sync()
-      assert(drained().contains("at-optimize"))
-      // a rewrite queued with no tag runs with none, whatever the compactor
-      // thread inherited or ran before
-      lake.append("prices", rows(2, 20.0))
-      drained()
-      lake.optimize("prices")
-      lake.sync()
-      val untagged = drained()
-      assert(untagged.nonEmpty && untagged.forall(_ == "null"), untagged)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
   }
 }

@@ -9,33 +9,13 @@ import graft.SparkSpec
 import graft.catalog.Lake
 import graft.connect.FixtureBarSource
 import graft.stages.Variables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 class DailyPipelineSpec extends SparkSpec {
+  import DailyPipelineSpec.{end, upserted}
 
-  private val end = LocalDate.of(2024, 3, 29)
-
-  /** The tables a daily step upserts. */
-  private val upserted = Seq("stock_returns", "etf_returns", "factor_loadings", "idio_vol",
-    "factor_covariances", "signals", "scores", "alphas", "benchmark_weights",
-    "benchmark_returns", "betas", "portfolio_weights", "portfolio_metrics")
-
-  /** A fresh lake with the calendar written, its pipeline, and the
-    * fixture's stock and ETF bars through `end`.
-    */
-  private def fixture(): (Path, Lake, DailyPipeline, DataFrame, DataFrame) = {
-    val root = Files.createTempDirectory("graft_daily")
-    val lake = new Lake(spark, root.toString)
-    val pipe = new DailyPipeline(spark, lake)
-    val source = new FixtureBarSource(7L)
-    val start = LocalDate.of(2022, 1, 3)
-    pipe.initTables("replace")
-    pipe.writeCalendar(start, end)
-    val stock = source.dailyBars(spark, Seq("AAA", "BBB", "CCC"), start, end)
-    val etf = source.dailyBars(spark, Variables.Factors, start, end)
-    (root, lake, pipe, stock, etf)
-  }
+  private def fixture() = DailyPipelineSpec.fixture(spark)
 
   /** One daily step on `end` into a lake with only the calendar, run with
     * an empty cache.
@@ -59,7 +39,7 @@ class DailyPipelineSpec extends SparkSpec {
       "daily left cached frames behind")
   }
 
-  test("daily returns only after every rewrite it queued has landed") {
+  test("daily leaves no `_pending` or `_optimize_tmp`") {
     val (root, _) = dailyStep()
     val left = for (t <- upserted; f <- Seq("_optimize_tmp", "_pending")
       if Files.exists(root.resolve(s"$t/$f"))) yield s"$t/$f"
@@ -67,10 +47,13 @@ class DailyPipelineSpec extends SparkSpec {
   }
 
   test("a daily step after a backfill adds exactly its date to every upserted table") {
-    val (_, lake, pipe, stock, etf) = fixture()
+    val (root, lake, pipe, stock, etf) = fixture()
     val b = end.minusDays(1) // the market day before `end`
     def upTo(df: DataFrame) = df.filter(col("date") <= java.sql.Date.valueOf(b))
     pipe.backfill(upTo(stock), upTo(etf))
+    // the backfill leaves no rewrite for the step
+    val pending = upserted.filter(t => Files.exists(root.resolve(s"$t/_pending")))
+    assert(pending.isEmpty, s"tables holding _pending after the backfill: $pending")
     def dates(t: String) =
       lake.table(t).select("date").distinct().collect().map(_.getDate(0).toLocalDate).toSet
     val marketDays = dates("calendar")
@@ -142,5 +125,31 @@ class DailyPipelineSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       new DailyPipeline(spark, lake).writeHistory("no_such_table", spark.range(1).toDF()))
     assert(e.getMessage.contains("no_such_table"))
+  }
+}
+
+object DailyPipelineSpec {
+
+  val end: LocalDate = LocalDate.of(2024, 3, 29)
+
+  /** The tables a daily step upserts. */
+  val upserted = Seq("stock_returns", "etf_returns", "factor_loadings", "idio_vol",
+    "factor_covariances", "signals", "scores", "alphas", "benchmark_weights",
+    "benchmark_returns", "betas", "portfolio_weights", "portfolio_metrics")
+
+  /** A fresh lake with the calendar written, its pipeline, and the
+    * fixture's stock and ETF bars through `end`.
+    */
+  def fixture(spark: SparkSession): (Path, Lake, DailyPipeline, DataFrame, DataFrame) = {
+    val root = Files.createTempDirectory("graft_daily")
+    val lake = new Lake(spark, root.toString)
+    val pipe = new DailyPipeline(spark, lake)
+    val source = new FixtureBarSource(7L)
+    val start = LocalDate.of(2022, 1, 3)
+    pipe.initTables("replace")
+    pipe.writeCalendar(start, end)
+    val stock = source.dailyBars(spark, Seq("AAA", "BBB", "CCC"), start, end)
+    val etf = source.dailyBars(spark, Variables.Factors, start, end)
+    (root, lake, pipe, stock, etf)
   }
 }
