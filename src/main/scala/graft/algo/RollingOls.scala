@@ -9,9 +9,11 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * per-ticker 252-day factor regression (`pipelines/factor_model_flow.py:13-73`,
   * `pipelines/betas_flow.py:14-56`, statsmodels `RollingOLS`).
   *
-  * Runs as a per-key streaming fold (`flatMapSortedGroups`): one shuffle by
-  * key, secondary sort by time, a ring buffer of the trailing `window` rows
-  * and running normal-equation sums (X'X, X'y) updated in O(k²) per row.
+  * Runs as a per-key streaming fold (`flatMapSortedGroups` over the key
+  * columns): at most one shuffle by key, none when the input is already
+  * partitioned by it; secondary sort by time, a ring buffer of the
+  * trailing `window` rows and running normal-equation sums (X'X, X'y)
+  * updated in O(k²) per row.
   * The reference loops tickers serially on the driver
   * (`factor_model_flow.py:24-57`); here every key runs in parallel on
   * executors and series length is unbounded — the 100 TB shape.
@@ -43,12 +45,10 @@ object RollingOls {
           xCols.map(x => StructField(s"beta_$x", DoubleType, nullable = true))))
     val yIdx = inSchema.fieldIndex(yCol)
     val xIdxs = xCols.map(inSchema.fieldIndex).toArray
-    val keyIdxs = keys.map(inSchema.fieldIndex)
-
-    implicit val keyEnc = Encoders.STRING
     implicit val rowEnc = Encoders.row(outSchema)
 
-    df.groupByKey(r => graft.expr.GroupKey.of(r, keyIdxs))
+    df.groupBy(keys.map(col): _*)
+      .as[Row, Row](Encoders.row(StructType(keys.map(inSchema(_)))), Encoders.row(inSchema))
       .flatMapSortedGroups(order.map(col): _*) { (_, rows) =>
         val d = k + 1 // intercept + k regressors
         // ring buffer of trailing rows: [y, x1..xk]

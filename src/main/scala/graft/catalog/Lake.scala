@@ -121,12 +121,17 @@ class Lake(spark: SparkSession, root: String) {
     * (the order a rewrite gets from the ingest sub-stamp). The table then
     * holds what an `optimize` would leave, so the ledger is dropped, and
     * the sidecar holds the batch's maxima: a backfilled table is written
-    * once, and its first upsert is gated like any other.
+    * once, and its first upsert is gated like any other. The deduped
+    * rows are rebalanced by the partition columns, so a partition that
+    * fits the advisory size gets one part file.
     */
   def replace(meta: TableMeta, df: DataFrame): Unit = {
     create(meta, "replace")
-    append(meta.name, dedupe(meta, df.withColumn(SubCol, monotonically_increasing_id()),
-      Seq(col(SubCol).desc)))
+    val deduped = dedupe(meta, df.withColumn(SubCol, monotonically_increasing_id()),
+      Seq(col(SubCol).desc))
+    append(meta.name,
+      if (meta.partitionKeys.isEmpty) deduped
+      else deduped.hint("rebalance", meta.partitionKeys.map(col): _*))
     Files.deleteIfExists(pendingPath(meta.name))
   }
 

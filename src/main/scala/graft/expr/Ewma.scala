@@ -1,8 +1,13 @@
 package graft.expr
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.graftconf.ExpressionColumn
+
+import graft.expr.catalyst.EwmaAgg
 
 /** W4: exponentially-weighted mean, polars `ewm_mean(half_life=h)` with
   * `adjust=True`, `min_samples=1`, nulls ignored (weights do not advance
@@ -11,12 +16,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *
   *   y_t = Σ_i w_i·x_{t-i} / Σ_i w_i,  w_i = (1−α)^i,  α = 1−exp(−ln2/h)
   *
-  * No Catalyst built-in exists (the recurrence is order-dependent), so this
-  * runs as a per-key streaming fold over `flatMapSortedGroups`: one shuffle
-  * by key, secondary sort by the order columns, O(1) state per key
-  * (numerator/denominator accumulators). Group iterators stream — nothing
-  * is materialized per group — so key cardinality and series length are
-  * both unbounded; this is the 100 TB-safe shape of the computation.
+  * The recurrence is order-dependent, so it runs as the [[EwmaAgg]] window
+  * aggregate over a running frame: one window column partitioned by key
+  * and ordered by time, with O(1) state per key. It shuffles at most once
+  * by key, and not at all when the input is already partitioned by it.
   */
 object Ewma {
 
@@ -34,31 +37,9 @@ object Ewma {
       valueCol: String,
       halfLife: Double,
       outCol: String = "ewma"): DataFrame = {
-    val spark = df.sparkSession
-    val decay = 1.0 - alphaFromHalfLife(halfLife)
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields :+ StructField(outCol, DoubleType, nullable = true))
-    val valueIdx = inSchema.fieldIndex(valueCol)
-    val keyIdxs = keys.map(inSchema.fieldIndex)
-
-    implicit val keyEnc = Encoders.STRING
-    implicit val rowEnc = Encoders.row(outSchema)
-
-    df.groupByKey(r => GroupKey.of(r, keyIdxs))
-      .flatMapSortedGroups(order.map(col): _*) { (_, rows) =>
-        var num = 0.0
-        var den = 0.0
-        rows.map { r =>
-          val out =
-            if (r.isNullAt(valueIdx)) null
-            else {
-              val x = r.getAs[Number](valueIdx).doubleValue()
-              num = x + decay * num
-              den = 1.0 + decay * den
-              java.lang.Double.valueOf(num / den)
-            }
-          Row.fromSeq(r.toSeq :+ out)
-        }
-      }
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order.map(col): _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val ewma = EwmaAgg(UnresolvedAttribute.quoted(valueCol), Literal(halfLife))
+    df.withColumn(outCol, ExpressionColumn(ewma.toAggregateExpression()).over(w))
   }
 }

@@ -4,19 +4,20 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, NumericType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
-/** W4 as a native Catalyst window aggregate — the SURVEY §7 "v2" path.
-  *
-  * `ewma(x, halfLife)` over `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT
-  * ROW` computes the polars `ewm_mean(half_life, adjust=True)` recurrence
-  * with O(1) buffer state per partition, entirely inside the window
-  * operator: no `groupByKey`, no row re-encoding, no object churn beyond
-  * the 16-byte buffer. This is the 100 TB form of [[graft.expr.Ewma]] —
-  * same semantics, window-operator execution.
+import graft.expr.Ewma
+
+/** W4 as a Catalyst window aggregate: `ewma(x, halfLife)` over `ROWS
+  * BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW` computes the polars
+  * `ewm_mean(half_life, adjust=True)` recurrence with O(1) buffer state,
+  * inside the window operator. [[graft.expr.Ewma.ewmaMean]] builds it
+  * directly; SQL reaches it as `ewma` once [[GraftExtensions]] is
+  * registered. Both arguments are cast to double, so any numeric `x` is
+  * accepted; the half-life must be a literal.
   *
   * Order dependence means the aggregate is NOT mergeable: using it in a
   * grouped aggregation (which needs partial merge) raises, window frames
@@ -27,12 +28,16 @@ case class EwmaAgg(
     right: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Double]] with BinaryLike[Expression] {
+  extends TypedImperativeAggregate[Array[Double]] with BinaryLike[Expression]
+  with ImplicitCastInputTypes {
 
-  private lazy val decay: Double = right match {
-    case Literal(h, _) =>
-      math.exp(-math.log(2.0) / h.toString.toDouble)
-    case _ => throw new IllegalArgumentException("ewma half-life must be a literal")
+  // both arguments cast to double (`AbstractDataType` is private to Spark)
+  override def inputTypes = Seq(DoubleType, DoubleType)
+
+  private lazy val decay: Double = {
+    val h = if (right.foldable) right.eval() else null
+    if (h == null) throw new IllegalArgumentException("ewma half-life must be a literal")
+    1.0 - Ewma.alphaFromHalfLife(h.asInstanceOf[Double])
   }
 
   override def prettyName: String = "ewma"
@@ -41,13 +46,13 @@ case class EwmaAgg(
 
   // buffer = (numerator, denominator, current-row-was-null flag): a null
   // input leaves the accumulators untouched but must surface as a null
-  // OUTPUT for that row (same contract as [[graft.expr.Ewma.ewmaMean]]).
+  // OUTPUT for that row.
   override def createAggregationBuffer(): Array[Double] = Array(0.0, 0.0, 0.0)
 
   override def update(buf: Array[Double], input: org.apache.spark.sql.catalyst.InternalRow): Array[Double] = {
     val v = left.eval(input)
     if (v != null) {
-      val x = v.asInstanceOf[Number].doubleValue()
+      val x = v.asInstanceOf[Double]
       buf(0) = x + decay * buf(0)
       buf(1) = 1.0 + decay * buf(1)
       buf(2) = 0.0

@@ -95,7 +95,7 @@ object TimeSeries {
     }, Oracle(w5CovarSql),
       band = Exempt.Codegen, heavy = Some(Heavy(Seq("lineitem")))),
 
-    // W4 EWMA (half-life 60, adjust=true) — custom per-key streaming fold.
+    // W4 EWMA (half-life 60, adjust=true) — Ewma.ewmaMean, the EwmaAgg window column.
     Query("w4_ewma", (s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("user_id"), col("ts"), col("event_id"), col("value"))
@@ -113,9 +113,8 @@ object TimeSeries {
         |FROM s
         |WINDOW win AS (PARTITION BY user_id ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)""".stripMargin)),
 
-    // W4 again through the native Catalyst window aggregate (SURVEY §7 v2):
-    // same recurrence, executed inside the window operator via
-    // SparkSessionExtensions-registered `ewma(x, halfLife)`.
+    // W4 again, the same EwmaAgg through SQL: `ewma(x, halfLife)`, registered
+    // by SparkSessionExtensions.
     Query("w4_ewma_native", (s, dir) => {
       graft.expr.catalyst.GraftExtensions.register(s)
       t(s, dir, "events")

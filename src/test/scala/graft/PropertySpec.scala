@@ -86,16 +86,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("group keys are injective over random tuples") {
-    val pool = Seq("a", "b", "a b", "b c", "", "null", "1:ab", "n;", "7", null)
-    val tuples = (1 to 400).map { _ =>
-      Seq.fill(1 + rnd.nextInt(3))(pool(rnd.nextInt(pool.length)))
-    }.distinct
-    val keys = tuples.map(t =>
-      graft.expr.GroupKey.of(org.apache.spark.sql.Row(t: _*), t.indices))
-    assert(keys.distinct.length == tuples.length)
-  }
-
   test("simhash is invariant to word order and duplication") {
     (1 to 5).foreach { _ =>
       val words = Seq.fill(5 + rnd.nextInt(20))(s"w${rnd.nextInt(30)}")

@@ -64,4 +64,20 @@ class RollingOlsSpec extends SparkSpec {
     assert(math.abs(out(10).getDouble(5) - 1.0) < 1e-8)
     assert(math.abs(out(30).getDouble(5) - 10.0) < 1e-8)
   }
+
+  test("each distinct two-column key gets its own fold, spaces and nulls included") {
+    // group g fits y = (g+1)·x exactly over its own 3 rows; two keys folded
+    // together would fill the window early and mix their slopes
+    val keys = Seq[(String, String)](("a b", "c"), ("a", "b c"), (null, "x"), ("null", "x"))
+    val df = keys.zipWithIndex.flatMap { case ((k1, k2), g) =>
+      (0 until 3).map(i => (k1, k2, i, (g + 1) * i.toDouble, i.toDouble))
+    }.toDF("k1", "k2", "i", "y", "x")
+    val fitted = RollingOls.fit(df, Seq("k1", "k2"), Seq("i"), "y", Seq("x"), 3)
+      .filter($"beta_x".isNotNull).collect()
+      .map(r => ((Option(r.getString(0)), r.getString(1)), r.getAs[Double]("beta_x")))
+    assert(fitted.map(_._1).sortBy(_.toString).toSeq ==
+      keys.map { case (k1, k2) => (Option(k1), k2) }.sortBy(_.toString))
+    val slope = keys.zipWithIndex.map { case ((k1, k2), g) => (Option(k1), k2) -> (g + 1.0) }.toMap
+    fitted.foreach { case (k, beta) => assert(math.abs(beta - slope(k)) < 1e-9, s"$k: $beta") }
+  }
 }

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat, date_add, lit, rand, year}
 import org.apache.spark.sql.types._
 
 class LakeSpec extends SparkSpec {
@@ -522,6 +522,25 @@ class LakeSpec extends SparkSpec {
       assert(files <= Lake.MaxPartFiles)
     }
     assert(datedRows(lake) == days.map(d => ("A", d, 1.0)).toSet)
+  }
+
+  test("replace writes one part file per partition directory") {
+    val root = Files.createTempDirectory("graft_lake")
+    val lake = new Lake(spark, root.toString)
+    // big enough that AQE keeps the dedupe's 2 shuffle partitions, each
+    // holding rows of both years
+    val batch = spark.range(200000).select(
+      concat(lit("T"), (col("id") % 1000).cast("string")).as("ticker"),
+      date_add(lit(java.sql.Date.valueOf("2023-07-01")), (col("id") / 1000).cast("int")).as("date"),
+      rand(7).as("v"))
+      .withColumn("year", year(col("date")))
+    lake.replace(dated, batch)
+    val files = Seq(2023, 2024).map { y =>
+      Files.list(root.resolve(s"dated/data/year=$y")).iterator.asScala
+        .count(_.getFileName.toString.startsWith("part-"))
+    }
+    assert(files == Seq(1, 1), s"part files per year: $files")
+    assert(lake.table("dated").count() == 200000)
   }
 
   test("a failed rewrite throws from optimize, keeps the ledger, and is retried") {

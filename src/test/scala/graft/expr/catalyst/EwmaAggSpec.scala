@@ -1,28 +1,10 @@
 package graft.expr.catalyst
 
 import graft.SparkSpec
-import graft.expr.Ewma
 import org.apache.spark.sql.functions._
 
 class EwmaAggSpec extends SparkSpec {
   import spark.implicits._
-
-  test("native window ewma matches the flatMapSortedGroups implementation") {
-    GraftExtensions.register(spark)
-    val rnd = new scala.util.Random(9)
-    val df = (for (k <- Seq("a", "b"); i <- 0 until 200)
-      yield (k, i, rnd.nextDouble() * 100)).toDF("k", "i", "x")
-
-    val native = df.withColumn("e",
-      expr("ewma(x, 60.0) OVER (PARTITION BY k ORDER BY i " +
-        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"))
-      .orderBy("k", "i").collect().map(_.getDouble(3))
-    val fold = Ewma.ewmaMean(df, Seq("k"), Seq("i"), "x", 60.0, "e")
-      .orderBy("k", "i").collect().map(_.getDouble(3))
-    native.zip(fold).foreach { case (n, f) =>
-      assert(math.abs(n - f) < 1e-12, s"$n vs $f")
-    }
-  }
 
   test("native ewma emits null on null input without advancing weights") {
     GraftExtensions.register(spark)
